@@ -365,7 +365,7 @@ def _sql_pq_ctes() -> str:
     of the sampled vec_id, sliced into 8 subvectors of 8 dims), then the
     exact-integer quantized distance Σ_i floor((x_i−c_i)²·10⁴+0.5) from
     every vector to every (subspace, code) — mirrors S.pq_codebooks /
-    S._pq_qdist. ``d`` holds all distances; ``codes`` the argmin
+    S._pq_nearest_codes. ``d`` holds all distances; ``codes`` the argmin
     (min-code tie-break) per (vec, subspace)."""
     return f"""
 cb0 AS (
@@ -1073,10 +1073,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # embedding_near_dup): the matmul paths sum floats in a different
     # order than the oracle's sequential fold, so a plane dot or centroid
     # ranking within ~1e-13 of a tie COULD bucket differently. The
-    # path-agreement tests pin exactness on the driver corpus; if the
-    # corpus is ever regenerated and a tie appears, switch these queries
-    # to signature_path/assign_path="expr" (bit-identical with the SQL
-    # fold by construction) and keep Arrow for production entry points.
+    # kernel-level agreement tests against the expression kernels
+    # (lsh_banded_signatures, ivf_assign, _cell_ranking — bit-identical
+    # with the SQL fold by construction) pin exactness on the driver
+    # corpus; if the corpus is ever regenerated, rerun them to locate a
+    # tie before trusting a mismatch here.
     def lsh_ann_topk(spark, sf_dir):
         emb = read_table(spark, sf_dir, "embeddings")
         probes = emb.where(F.col("vec_id") < 10)
@@ -1509,47 +1510,45 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # entries of queries() each round.  With >50 registered queries, front-load
 # the ones with the fewest driver rows so every query gets a driver-verified
 # CORRECTNESS row at least every other round:
-#   - round 4 sampled positions 1-50 of the round-4 ordering (all 50 green
-#     in CORRECTNESS_r04.json), leaving the 28 below unsampled — all of them
-#     last driver-checked in round 3;
-#   - round 5 therefore fronts those 28 (+ any new round-5 queries, which
-#     are appended to this list as they are registered);
-#   - next round, update this list to front whatever round 5 left unsampled
-#     (the tail of the round-5 ordering past the driver's sample window).
+#   - round 5 sampled positions 1-50 of the round-5 ordering, leaving the
+#     29 queries from document_features onward unsampled;
+#   - round 6 therefore fronts those 29, led by the ANN/PQ queries whose
+#     Arrow kernels are now their only code path (the expression and join
+#     alternatives were removed, so these rows re-check what runs);
+#   - next round, update this list to front whatever round 6 left unsampled
+#     (the tail of the round-6 ordering past the driver's sample window).
 _DRIVER_FRONT = [
-    # new in round 5 (never driver-checked); note pq_ann_topk /
-    # pq_rerank_topk (fresh r4 rows) now route through the Arrow scan
-    # kernel by default — their oracles verify the Arrow path from here on
-    "dedup_index_probe",
-    # last driver-checked in round 3 (outside the r4 50-query window)
-    "split_assign",
-    "stratified_sample",
-    "pack_sequences",
-    "repetition_signals",
-    "line_repetition",
-    "corpus_stats",
-    "source_mix_stats",
-    "temperature_mix",
-    "domain_affinity",
-    "quality_filter_funnel",
-    "exact_dedup",
-    "line_dedup",
-    "repeated_passages",
-    "gram_novelty",
-    "decontaminate",
-    "decontaminate_join",
-    "minhash_signatures",
-    "minhash_candidates",
-    "ngram_jaccard",
-    "minhash_verified_dedup",
-    "source_dedup_matrix",
-    "dedup_against_index",
-    "simhash_signatures",
-    "simhash_near_pairs",
-    "dedup_components",
-    "cosine_topk",
-    "knn_label_vote",
-    "lsh_signatures",
+    # only path is the Arrow kernel since round 6
+    "pq_ann_topk",
+    "pq_rerank_topk",
+    "ivfpq_topk",
+    "semantic_dedup",
+    "lsh_ann_topk",
+    # the rest of the round-5 ordering past position 50
+    "document_features",
+    "scrub_pii",
+    "chunk_documents",
+    "ivf_cells",
+    "ivf_kmeans_cells",
+    "ivf_ann_topk",
+    "lsh_ann_topk_indexed",
+    "ivf_ann_topk_indexed",
+    "pq_codes",
+    "embedding_near_dup",
+    "semantic_dedup_kmeans",
+    "media_features",
+    "frame_samples",
+    "resize_media",
+    "transcript_enrichment",
+    "pricing_summary",
+    "nation_revenue",
+    "top_events_per_user",
+    "sessionization",
+    "event_funnel",
+    "asof_latest_order",
+    "pivot_event_counts",
+    "events_hourly",
+    "events_percentiles",
 ]
 
 

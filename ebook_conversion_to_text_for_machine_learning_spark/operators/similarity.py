@@ -188,6 +188,7 @@ def knn_label_vote(
     )
 
 
+# Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
 def lsh_bucket_signatures(
     df: DataFrame,
     dim: int,
@@ -207,6 +208,7 @@ def lsh_bucket_signatures(
     )
 
 
+# Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
 def lsh_banded_signatures(
     df: DataFrame,
     dim: int,
@@ -352,6 +354,7 @@ def ivf_centroids(
     return sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
 
 
+# Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
 def _cell_ranking(vec: Column, centroids: list) -> Column:
     """array<struct<neg_cos,centroid_id>> sorted best-first (cos DESC, id ASC)."""
     import math
@@ -368,6 +371,7 @@ def _cell_ranking(vec: Column, centroids: list) -> Column:
     return F.sort_array(F.array(*entries))
 
 
+# Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
 def ivf_assign(
     corpus: DataFrame,
     centroids: list,
@@ -499,23 +503,6 @@ def _probe_cell_assign(rows, centroids, nprobe: int):
     return ids[top]
 
 
-def _probe_cells_local(spark, rows, centroids, *, nprobe: int, id_type: str):
-    """Driver-side twin of ``ivf_probe_cells_arrow`` over pre-collected
-    ``(id, vec)`` rows (``_probe_cell_assign`` math — bit-identical).
-    Exists purely to delete a fixed per-pass Spark job when the caller
-    has already collected the probe batch for the ADC LUT
-    (``ivfpq_topk`` — the probe batch is driver-bounded by design
-    there). Emits (probe_id, probe_cell), ``nprobe`` rows per probe."""
-    schema = f"probe_id {id_type}, probe_cell long"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    cells = _probe_cell_assign(rows, centroids, nprobe)
-    data = [
-        (r[0], int(c)) for r, row_cells in zip(rows, cells) for c in row_cells
-    ]
-    return spark.createDataFrame(data, schema)
-
-
 def ivf_kmeans_centroids(
     corpus: DataFrame,
     *,
@@ -557,7 +544,7 @@ def ivf_kmeans_centroids(
     fold order and then amplify through later Lloyd iterations (same
     class of window as the Arrow-vs-expression sign agreement in
     ``lsh_banded_signatures_arrow``, NOT the exact-integer convention
-    ``_pq_qdist`` uses). Unobserved on the driver corpora (path-
+    of ``_pq_nearest_codes``). Unobserved on the driver corpora (path-
     agreement and oracle tests pin current behavior); if a production
     corpus ever trips it, quantize per-component contributions with the
     x10k floor-round pattern before summation at the cost of one extra
@@ -626,7 +613,6 @@ def ivf_ann_topk(
     stride: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign_path: str = "arrow",
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine over the probe's ``nprobe`` cells.
@@ -636,12 +622,9 @@ def ivf_ann_topk(
     assignment — tighter cells, same plan shape downstream.
 
     Plan shape at scale: corpus→cell assignment AND probe→cell ranking are
-    one numpy matmul per Arrow batch (``assign_path="arrow"``, the
-    production default — the plan stays constant-size in the codebook, so
-    the advertised 65536-cell setting actually runs; pass ``"expr"`` for
-    the interpreted expression twin that is bit-identical to the SQL
-    oracle's fold order and only viable for small codebooks). The search
-    then joins the cell-tagged corpus against a broadcast of
+    one numpy matmul per Arrow batch — the plan stays constant-size in the
+    codebook, so the advertised 65536-cell setting actually runs. The
+    search then joins the cell-tagged corpus against a broadcast of
     (probe × nprobe) rows keyed on cell_id, so the corpus is never
     shuffled and each item is scored at most once per probe (an item
     lives in exactly one cell).
@@ -651,33 +634,16 @@ def ivf_ann_topk(
         corpus, iters=kmeans_iters, target_cells=target_cells,
         stride=stride, vec_col=vec_col, id_col=id_col,
     )
-    if assign_path == "arrow":
-        c = ivf_assign_arrow(
-            corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
-        ).select(
-            F.col("vec_id").alias("item_id"),
-            F.col(vec_col).alias("item_vec"),
-            "cell_id",
-        )
-        probe_cells = ivf_probe_cells_arrow(
-            probes, centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("item_id"),
-            F.col(vec_col).alias("item_vec"),
-            F.element_at(_cell_ranking(F.col(vec_col), centroids), 1)["centroid_id"].alias("cell_id"),
-        )
-        probe_cells = probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            F.explode(
-                F.transform(
-                    F.slice(_cell_ranking(F.col(vec_col), centroids), 1, nprobe),
-                    lambda s: s["centroid_id"],
-                )
-            ).alias("probe_cell"),
-        )
+    c = ivf_assign_arrow(
+        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
+    ).select(
+        F.col("vec_id").alias("item_id"),
+        F.col(vec_col).alias("item_vec"),
+        "cell_id",
+    )
+    probe_cells = ivf_probe_cells_arrow(
+        probes, centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
+    )
     return _ivf_topk_from_cells(c, probe_cells, k)
 
 
@@ -716,7 +682,6 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, banded-LSH blocked.
 
@@ -727,16 +692,10 @@ def embedding_near_dup(
     product), then exact cosine verifies candidates only. Bucket
     cardinality is 2^band_planes per table, so selectivity is tuned to
     corpus size by widening bands — the single-table 2^8 layout this
-    replaces degenerated at scale.
-
-    ``signature_path="arrow"`` (default) computes bucket bits with one
-    numpy matmul per Arrow batch; ``"expr"`` is the interpreted
-    higher-order-function twin with oracle-exact fold order.
+    replaces degenerated at scale. Bucket bits come from one numpy matmul
+    per Arrow batch (``lsh_banded_signatures_arrow``).
     """
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
-    bands = sig_fn(
+    bands = lsh_banded_signatures_arrow(
         df, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
     )
     left, right = bands.alias("l"), bands.alias("r")
@@ -812,7 +771,6 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranked over banded-LSH candidates.
 
@@ -822,17 +780,14 @@ def lsh_ann_topk(
     (a single 2^8 table degenerates to scanning ~N/256 items per probe at
     lake scale). The probe side is broadcast; the corpus side is touched
     once to band and once to fetch candidate vectors by id. Signatures
-    default to the Arrow matmul path (``"expr"`` = oracle fold-order twin).
-    For repeated probe workloads persist the banding once with
-    ``write_ann_index`` and query through ``lsh_ann_topk_indexed``.
+    are the Arrow matmul path. For repeated probe workloads persist the
+    banding once with ``write_ann_index`` and query through
+    ``lsh_ann_topk_indexed``.
     """
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
-    c_bands = sig_fn(
+    c_bands = lsh_banded_signatures_arrow(
         corpus, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
     ).select(F.col("vec_id").alias("item_id"), "band_id", "bucket")
-    p_bands = sig_fn(
+    p_bands = lsh_banded_signatures_arrow(
         probes, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
     ).select(F.col("vec_id").alias("probe_id"), "band_id", "bucket")
     items = corpus.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"))
@@ -895,7 +850,6 @@ def write_ann_index(
     band_planes: int = BAND_PLANES,
     target_cells: int = IVF_TARGET_CELLS,
     stride: int | None = None,
-    signature_path: str = "arrow",
     centroids: list | None = None,
 ) -> None:
     """Persist the reusable halves of both ANN structures:
@@ -934,7 +888,6 @@ def write_ann_index(
         corpus, dim, path, 0, centroids, dynamic=False,
         vec_col=vec_col, id_col=id_col,
         n_bands=n_bands, band_planes=band_planes,
-        signature_path=signature_path,
     )
     spark = corpus.sparkSession
     spark.createDataFrame(
@@ -957,21 +910,17 @@ def _write_ann_batch(
     id_col: str,
     n_bands: int,
     band_planes: int,
-    signature_path: str,
 ) -> None:
     # The full build (dynamic=False) STATICALLY overwrites — truncating
     # the table dir, so a rebuild over a stale/older layout can never
     # leave conflicting partition dirs behind. Appends (dynamic=True)
     # replace only their own batch partitions.
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
     bid = F.lit(batch_id).cast("int")
     # Cluster on the partition key before each partitioned write — one
     # file per partition dir instead of one per (task × dir); see
     # dedup.write_minhash_index for the measured small-files blowup.
     bands = (
-        sig_fn(
+        lsh_banded_signatures_arrow(
             corpus, dim, vec_col=vec_col, id_col=id_col,
             n_bands=n_bands, band_planes=band_planes,
         )
@@ -1015,7 +964,6 @@ def append_to_ann_index(
     batch_id: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    signature_path: str = "arrow",
 ) -> None:
     """Grow a ``write_ann_index`` index by one batch — O(batch).
 
@@ -1041,7 +989,6 @@ def append_to_ann_index(
         corpus_batch, idx.dim, path, batch_id, idx.centroids, dynamic=True,
         vec_col=vec_col, id_col=id_col,
         n_bands=idx.n_bands, band_planes=idx.band_planes,
-        signature_path=signature_path,
     )
 
 
@@ -1068,7 +1015,6 @@ def lsh_ann_topk_indexed(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """``lsh_ann_topk`` against a persisted index: only the (small) probe
     side is banded; the corpus-side signatures and vectors come from the
@@ -1081,11 +1027,8 @@ def lsh_ann_topk_indexed(
     ``cells/`` scan stays full: it is the id→vector fetch table here and
     band-collision candidates can live in any cell.
     """
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
     p_bands = (
-        sig_fn(
+        lsh_banded_signatures_arrow(
             probes, index.dim, vec_col=vec_col, id_col=id_col,
             n_bands=index.n_bands, band_planes=index.band_planes,
         )
@@ -1122,7 +1065,6 @@ def semantic_dedup(
     stride: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    path: str = "arrow",
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """SemDeDup: IVF-cluster embeddings, mark within-cell semantic dups.
@@ -1148,12 +1090,6 @@ def semantic_dedup(
     ``md5(vector bytes)`` *before* this operator, same contract as
     ``ngram_jaccard_pairs``'s blocking.
 
-    ``path="arrow"`` (production default) rides ``ivf_assign_arrow`` and
-    the gram matrix; ``path="expr"`` is the interpreted twin — expression
-    cell assignment plus a within-cell self-join with oracle-exact
-    sequential fold order (small codebooks only; the two paths agree on
-    the driver corpus, pinned by a path-agreement test).
-
     Returns (vec_id, cell_id, is_semantic_dup) — one row per input row.
     ``kmeans_iters > 0`` refines the codebook first (the paper's actual
     k-means clustering) via ``ivf_kmeans_centroids``; ``0`` (default)
@@ -1163,63 +1099,33 @@ def semantic_dedup(
         corpus, iters=kmeans_iters, target_cells=target_cells,
         stride=stride, vec_col=vec_col, id_col=id_col,
     )
-    if path == "arrow":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        assign = ivf_assign_arrow(
-            corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
+    assign = ivf_assign_arrow(
+        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
+    )
+
+    def mark(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", ignore_index=True)
+        vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        norms = np.linalg.norm(vecs, axis=1, keepdims=True)
+        norms[norms == 0.0] = 1.0
+        unit = vecs / norms
+        cos = np.round(unit @ unit.T, 4)
+        # dup[i] = any strictly-lower-id row within tau: strict lower
+        # triangle of the thresholded gram matrix, any per row.
+        dup = np.tril(cos >= tau, -1).any(axis=1)
+        return pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"],
+                "cell_id": pdf["cell_id"],
+                "is_semantic_dup": dup,
+            }
         )
 
-        def mark(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("vec_id", ignore_index=True)
-            vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            unit = vecs / norms
-            cos = np.round(unit @ unit.T, 4)
-            # dup[i] = any strictly-lower-id row within tau: strict lower
-            # triangle of the thresholded gram matrix, any per row.
-            dup = np.tril(cos >= tau, -1).any(axis=1)
-            return pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell_id": pdf["cell_id"],
-                    "is_semantic_dup": dup,
-                }
-            )
-
-        return assign.groupBy("cell_id").applyInPandas(
-            mark, schema="vec_id long, cell_id long, is_semantic_dup boolean"
-        )
-
-    assign = ivf_assign(corpus, centroids, vec_col=vec_col, id_col=id_col)
-    withv = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("vec")
-    ).join(assign, "vec_id")
-    left = withv.select(
-        F.col("vec_id").alias("id_l"), "cell_id", F.col("vec").alias("vec_l")
-    )
-    right = withv.select(
-        F.col("vec_id").alias("id_r"), "cell_id", F.col("vec").alias("vec_r")
-    )
-    cosine = F.round(
-        _dot(F.col("vec_l"), F.col("vec_r"))
-        / (_norm(F.col("vec_l")) * _norm(F.col("vec_r"))),
-        4,
-    )
-    dups = (
-        left.join(right, "cell_id")
-        .where(F.col("id_l") < F.col("id_r"))
-        .where(cosine >= tau)
-        .select(F.col("id_r").alias("vec_id"))
-        .distinct()
-        .withColumn("dup", F.lit(True))
-    )
-    return assign.join(dups, "vec_id", "left").select(
-        "vec_id",
-        "cell_id",
-        F.coalesce(F.col("dup"), F.lit(False)).alias("is_semantic_dup"),
+    return assign.groupBy("cell_id").applyInPandas(
+        mark, schema="vec_id long, cell_id long, is_semantic_dup boolean"
     )
 
 
@@ -1231,35 +1137,18 @@ def ivf_ann_topk_indexed(
     nprobe: int = IVF_NPROBE,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    probe_path: str = "arrow",
 ) -> DataFrame:
     """``ivf_ann_topk`` against a persisted index: cell assignment comes
-    from the index; only probe→cell ranking runs per query batch
-    (``probe_path="expr"`` is the literal-expression twin — small
-    codebooks only).
+    from the index; only probe→cell ranking runs per query batch.
 
     The ``cells/`` scan partition-prunes on the probed cells' partition
     keys (probes × nprobe ids, bounded by ``_CELL_PARTITIONS``): at the
     advertised 65536-cell setting a probe batch reads only the cell
     groups it actually ranks, not the corpus-scale table.
     """
-    if probe_path == "arrow":
-        probe_cells = ivf_probe_cells_arrow(
-            probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-        )
-    else:
-        probe_cells = probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            F.explode(
-                F.transform(
-                    F.slice(
-                        _cell_ranking(F.col(vec_col), index.centroids), 1, nprobe
-                    ),
-                    lambda s: s["centroid_id"],
-                )
-            ).alias("probe_cell"),
-        )
+    probe_cells = ivf_probe_cells_arrow(
+        probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
+    )
     cells = index.cells
     if "cell_pfx" in cells.columns:
         probe_cells = probe_cells.localCheckpoint()
@@ -1399,10 +1288,7 @@ def pq_kmeans_codebooks(
                 x = np.stack(
                     [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
                 )
-                xs = x.reshape(len(x), m, 1, d0)
-                diff = xs - _cb[None, :, :, :]
-                q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
-                codes = np.argmin(q, axis=2)  # (n, m)
+                codes = _pq_nearest_codes(x, _cb)  # (n, m)
                 sub = x.reshape(len(x), m, d0)
                 frames = []
                 for s in range(m):
@@ -1452,69 +1338,6 @@ def pq_kmeans_codebooks(
     return books
 
 
-def _pq_qdist(sub: Column, centroid: list) -> Column:
-    """Quantized squared L2 distance between a subvector column and a
-    codebook entry: ``Σ_i floor((x_i − c_i)² · 10⁴ + 0.5)`` as BIGINT.
-
-    Quantizing PER COMPONENT before the sum makes the distance an exact
-    integer in every engine — a float Σ(x−c)² rounded at the end would
-    inherit the engine's summation order (numpy sums pairwise, SQL
-    engines fold left), and ADC then ranks by SUMS of these quantities,
-    compounding the noise. Integer addition is associative; the only
-    residual parity window is a product landing within one ulp of a
-    .5 quantization boundary, the same accepted class as every other
-    x10k operator in this module.
-    """
-    lit = F.array(*[F.lit(float(c)) for c in centroid])
-    return F.aggregate(
-        F.zip_with(
-            sub,
-            lit,
-            lambda x, c: F.floor(
-                (x.cast("double") - c) * (x.cast("double") - c) * F.lit(10000.0)
-                + F.lit(0.5)
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def pq_encode_expr(
-    corpus: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Expression-twin PQ encoder — oracle-parity path, small codebooks
-    only (the plan inlines one struct per (subspace, code); at the
-    production 8×256 setting use ``pq_encode``, whose plan is constant
-    size). Code choice per subspace: min quantized distance, ties to the
-    smaller code."""
-    m = len(codebooks)
-    d0 = len(codebooks[0][0][1])
-    subspaces = []
-    for s, book in enumerate(codebooks):
-        sub = F.slice(F.col(vec_col), s * d0 + 1, d0)
-        ranking = F.sort_array(
-            F.array(
-                *[
-                    F.struct(
-                        _pq_qdist(sub, cvec).alias("q"),
-                        F.lit(code).cast("int").alias("code"),
-                    )
-                    for code, cvec in book
-                ]
-            )
-        )
-        subspaces.append(F.element_at(ranking, 1)["code"])
-    return corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.array(*subspaces).alias("codes"),
-    )
-
-
 def _codebook_tensor(codebooks: list):
     """(m, k, d0) float64 tensor from ``pq_codebooks`` output."""
     import numpy as np
@@ -1524,18 +1347,40 @@ def _codebook_tensor(codebooks: list):
     )
 
 
+def _pq_nearest_codes(x, cb):
+    """(n, m) nearest code per subspace for an (n, dim) float64 matrix and
+    a ``_codebook_tensor``; ties go to the smaller code (argmin's first
+    match).
+
+    The distance is the quantized squared L2 ``Σ_i floor((x_i − c_i)² ·
+    10⁴ + 0.5)`` as int64. Quantizing PER COMPONENT before the sum makes
+    it an exact integer in every engine — a float Σ(x−c)² rounded at the
+    end would inherit the engine's summation order (numpy sums pairwise,
+    SQL engines fold left), and ADC ranks by SUMS of these quantities,
+    compounding the noise. Integer addition is associative; the only
+    residual parity window is a product landing within one ulp of a .5
+    quantization boundary, the same accepted class as every other x10k
+    operator in this module.
+    """
+    import numpy as np
+
+    m, _, d0 = cb.shape
+    diff = x.reshape(len(x), m, 1, d0) - cb[None, :, :, :]  # (n, m, k, d0)
+    q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
+    return np.argmin(q, axis=2)
+
+
 def _adc_lut(rows, cb):
     """(sorted probe ids, probes × m × k int64 LUT) for the Arrow ADC
     kernels, from collected ``(id, vec)`` rows and a ``_codebook_tensor``.
 
-    Quantization is the per-dimension ``_pq_qdist`` exact-integer rule
-    (floor(d²·10⁴ + 0.5) per dimension, int64 sum), identical in both
-    kernels and the SQL oracle. Built CHUNKED with in-place ufuncs: the
-    one-shot ``(P, m, k, d0)`` broadcast formulation allocated ~800 MB
-    of temporaries and cost 2.5-3.5 s of serial DRIVER time per pass at
-    1024 probes (measured; the single largest fixed cost in the r4 ANN
-    scaling series) — 64-probe chunks keep temporaries cache-resident
-    at ~0.12 s, bit-identical output."""
+    Quantization is the exact-integer rule of ``_pq_nearest_codes``,
+    identical in both kernels and the SQL oracle. Built CHUNKED with
+    in-place ufuncs: the one-shot ``(P, m, k, d0)`` broadcast
+    formulation allocated ~800 MB of temporaries and cost 2.5-3.5 s of
+    serial DRIVER time per pass at 1024 probes (measured; the single
+    largest fixed cost in the r4 ANN scaling series) — 64-probe chunks
+    keep temporaries cache-resident at ~0.12 s, bit-identical output."""
     import numpy as np
 
     m, k, d0 = cb.shape
@@ -1577,9 +1422,8 @@ def pq_encode(
     constant in the codebook (the round-2 IVF literal-expression lesson,
     applied from the start). Emits (vec_id, codes array<int>).
 
-    The quantized per-component distance (``_pq_qdist``) is an exact
-    integer, so this path and ``pq_encode_expr`` agree EXACTLY — not
-    just within float noise (pinned by the path-agreement test).
+    Code choice is ``_pq_nearest_codes``: an exact-integer distance, so
+    the codes match the SQL oracle's exactly, not just within float noise.
     """
     from typing import Iterator
 
@@ -1587,17 +1431,13 @@ def pq_encode(
     import pandas as pd
 
     cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, _, d0 = cb.shape
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in it:
             x = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
             )  # (n, dim)
-            xs = x.reshape(len(x), m, 1, d0)  # (n, m, 1, d0)
-            diff = xs - cb[None, :, :, :]  # (n, m, k, d0)
-            q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
-            codes = np.argmin(q, axis=2).astype(np.int32)  # first-match = min code
+            codes = _pq_nearest_codes(x, cb).astype(np.int32)
             yield pd.DataFrame(
                 {
                     "vec_id": batch[id_col].astype("int64"),
@@ -1610,79 +1450,51 @@ def pq_encode(
     )
 
 
-def pq_probe_tables_arrow(
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Production path for the per-probe ADC tables: one numpy pass per
-    Arrow batch, plan CONSTANT-size in the codebook. The expression twin
-    (``pq_probe_tables``) inlines one struct per (subspace, code) — at
-    the production 8×256 setting that is thousands of plan nodes and
-    planning dominated wall time 86s vs ~1s (measured, 20k corpus; the
-    same lesson as the round-2 IVF probe-ranking verdict). The quantized
-    distances are exact integers, so the two paths agree EXACTLY (pinned
-    by the path-agreement test)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, k, d0 = cb.shape
-    for book in codebooks:
-        if [c for c, _ in book] != list(range(k)):
-            raise ValueError(
-                "pq_probe_tables_arrow: codebook codes must be dense ranks "
-                "0..k-1 (pq_codebooks guarantees this)"
-            )
-    id_type = dict(probes.dtypes)[id_col]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            if not len(batch):
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            xs = x.reshape(len(x), m, 1, d0)
-            diff = xs - cb[None, :, :, :]
-            q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
-            n = len(batch)
-            yield pd.DataFrame(
-                {
-                    "probe_id": batch[id_col].to_numpy().repeat(m * k),
-                    "subspace": np.tile(
-                        np.repeat(np.arange(m, dtype=np.int32), k), n
-                    ),
-                    "code": np.tile(
-                        np.tile(np.arange(k, dtype=np.int32), m), n
-                    ),
-                    "q": q.reshape(n, m * k).ravel(),
-                }
-            )
-
-    return probes.select(id_col, vec_col).mapInPandas(
-        batches, schema=f"probe_id {id_type}, subspace int, code int, q long"
-    )
-
-
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
 def _require_integral_id(df: DataFrame, col: str, where: str) -> None:
-    """The Arrow ADC kernels index numpy LUTs by probe id (searchsorted)
-    and lexsort item ids inside the selection loop — both require integer
-    ids. Fail fast with a usable message instead of a mid-job numpy
+    """The Arrow ADC kernels compare probe ids with item ids as int64
+    arrays and lexsort item ids inside the selection loop — both require
+    integer ids. Fail fast with a usable message instead of a mid-job numpy
     ValueError (string-keyed frames should factorize to dense positions
     first, e.g. ``F.xxhash64`` or a zipWithIndex-style dense id)."""
     dtype = dict(df.dtypes).get(col)
     if dtype not in _INTEGRAL_TYPES:
         raise TypeError(
             f"{where}: id column '{col}' must be an integral type for the "
-            f"Arrow LUT path (got {dtype!r}); map arbitrary ids to dense "
-            "integer positions first, or use the join formulation"
+            f"Arrow LUT kernels (got {dtype!r}); map arbitrary ids to dense "
+            "integer positions first, e.g. with F.xxhash64 or a dense id"
         )
+
+
+#: Rows per ADC kernel call. The session's ``arrow.maxRecordsPerBatch``
+#: is tuned small (512) to bound giant-DOCUMENT batches, but code rows are
+#: ~50 bytes: at 512 rows the per-batch Python overhead dominates (~2 ms ×
+#: 31k batches on the scaling corpus) and per-chunk top-R pruning never
+#: prunes (a batch already holds ≤ R rows per probe). Accumulating inside
+#: the kernel makes it independent of the session knob.
+_ADC_CHUNK_ROWS = 65536
+
+
+def _score_chunks(batches, score):
+    """Yield ``score`` over runs of at least ``_ADC_CHUNK_ROWS`` rows
+    concatenated from a ``mapInPandas`` batch iterator (the last run may
+    be shorter); empty batches are skipped."""
+    import pandas as pd
+
+    buf: list = []
+    n = 0
+    for batch in batches:
+        if not len(batch):
+            continue
+        buf.append(batch)
+        n += len(batch)
+        if n >= _ADC_CHUNK_ROWS:
+            yield score(pd.concat(buf, ignore_index=True))
+            buf, n = [], 0
+    if buf:
+        yield score(pd.concat(buf, ignore_index=True))
 
 
 def pq_adc_scan_arrow(
@@ -1696,9 +1508,7 @@ def pq_adc_scan_arrow(
 ) -> DataFrame:
     """Brute-force ADC scan: every corpus code row scored against ALL
     probes with one numpy LUT gather per accumulated Arrow batch — the
-    full-scan sibling of ``pq_adc_scores_arrow`` (which requires
-    pre-paired (probe, item) candidates and so can't serve the non-IVF
-    scan).
+    full-scan sibling of the inverted-list ``pq_adc_cell_scan_arrow``.
 
     Per accumulated chunk the kernel gathers ``LUT[probe, s, code]`` for
     the whole chunk × a block of probes at once (probe blocks sized so
@@ -1712,15 +1522,13 @@ def pq_adc_scan_arrow(
     is EXACTLY unchanged while output shrinks from |corpus| × |probes|
     to chunks × probes × R rows.
 
-    Scores use the ``_pq_qdist`` exact-integer rule: bit-identical to
-    the join formulation and the SQL oracle (path-agreement pinned by
-    test). Probe vectors are collected to build the LUT (probes × m × k
-    int64 — 16 MB at 1024×8×256), bounded by the probe batch by design.
+    Scores use the ``_pq_nearest_codes`` exact-integer distance, so they
+    match the SQL oracle bit for bit. Probe vectors are collected to
+    build the LUT (probes × m × k int64 — 16 MB at 1024×8×256), bounded
+    by the probe batch by design.
 
     Returns (probe_id, item_id, adc_x10k) candidate rows.
     """
-    from typing import Iterator
-
     import numpy as np
     import pandas as pd
 
@@ -1775,159 +1583,11 @@ def pq_adc_scan_arrow(
             }
         )
 
-    # Same batch-accumulation rationale as pq_adc_scores_arrow: the
-    # session Arrow batch size is PDF-tuned small; code rows are narrow.
-    _TARGET = 65536
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list = []
-        n = 0
-        for batch in it:
-            if not len(batch):
-                continue
-            buf.append(batch)
-            n += len(batch)
-            if n >= _TARGET:
-                yield score(pd.concat(buf, ignore_index=True))
-                buf, n = [], 0
-        if buf:
-            yield score(pd.concat(buf, ignore_index=True))
-
     p_type = dict(probes.dtypes)[id_col]
     i_type = dict(codes.dtypes)["vec_id"]
     return codes.select(F.col("vec_id").alias("item_id"), "codes").mapInPandas(
-        batches,
+        lambda it: _score_chunks(it, score),
         schema=f"probe_id {p_type}, item_id {i_type}, adc_x10k long",
-    )
-
-
-def pq_adc_scores_arrow(
-    cands_with_codes: DataFrame,
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    prune_per_batch: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    probe_rows: list | None = None,
-) -> DataFrame:
-    """Production-rate ADC scoring: one numpy LUT *gather* per Arrow
-    batch over (probe_id, item_id, codes) candidate rows — the memory
-    path real IVFADC engines use, here as the Arrow twin of the join
-    formulation.
-
-    Why it exists (measured on the scaling corpus, 1024 probes × 16M
-    candidates): the join path explodes candidates ×m (131M rows),
-    probes a 2M-entry broadcast hash relation per row (cache-hostile —
-    the relation is ~100× L2), and re-aggregates with a 16M-key hash
-    groupBy; cores stall on DRAM instead of computing. This path reads
-    each candidate row ONCE, gathers ``LUT[probe, subspace, code]``
-    vectorized (the LUT tensor is probes × m × k int64 — 16 MB at
-    1024×8×256, shipped once per executor), and needs no explode, no
-    broadcast hash join, no re-aggregation.
-
-    Quantization is the ``_pq_qdist`` exact-integer rule, so scores are
-    BIT-IDENTICAL to the join path and the SQL oracle (path-agreement
-    pinned by test). ``prune_per_batch=R`` keeps only each batch's
-    top-R rows per probe by the global ordering ``(adc ASC, item ASC)``
-    — the global top-R is a subset of the union of batch top-Rs, so
-    downstream shortlist selection is EXACTLY unchanged while the
-    shortlist shuffle shrinks from |candidates| to ≈ batches × probes
-    × R rows (the standard partial-top-k trick, same spirit as
-    map-side combine).
-
-    Probe vectors are collected to the driver to build the LUT — the
-    same data volume the join path ships through its broadcast, bounded
-    by the probe batch by design. A caller that already holds the
-    collected ``(id, vec)`` rows passes them via ``probe_rows`` to skip
-    the second collect job — one of the measured fixed per-pass costs
-    in the r4 ANN scaling series.
-
-    Standalone kernel for callers with their OWN candidate generation
-    (pre-paired rows). ``ivfpq_topk`` itself no longer pairs candidates
-    as Spark rows — it defaults to the inverted-list
-    ``pq_adc_cell_scan_arrow``, which moves the pairing inside the
-    kernel and cuts the Arrow channel ~100× (measured rationale there).
-
-    Returns (probe_id, item_id, adc_x10k).
-    """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    _require_integral_id(probes, id_col, "pq_adc_scores_arrow")
-    cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, k, d0 = cb.shape
-    rows = (
-        probe_rows
-        if probe_rows is not None
-        else probes.select(id_col, vec_col).collect()
-    )
-    probe_ids, lut = _adc_lut(rows, cb)
-    bc = cands_with_codes.sparkSession.sparkContext.broadcast((probe_ids, lut))
-    sub = np.arange(m, dtype=np.int64)
-
-    def score(chunk: pd.DataFrame) -> pd.DataFrame:
-        pids, table = bc.value
-        bp = chunk["probe_id"].to_numpy()
-        pidx = np.searchsorted(pids, bp)
-        if not np.array_equal(pids[np.clip(pidx, 0, len(pids) - 1)], bp):
-            raise ValueError(
-                "pq_adc_scores_arrow: candidate rows reference probe "
-                "ids absent from the probe frame"
-            )
-        codes_mat = np.stack(
-            [np.asarray(c, dtype=np.int64) for c in chunk["codes"]]
-        )
-        # int64 accumulation regardless of the LUT's storage dtype
-        # (int32 when values fit — see _adc_lut): identical scores.
-        q = table[pidx[:, None], sub[None, :], codes_mat].sum(
-            axis=1, dtype=np.int64
-        )
-        out = pd.DataFrame(
-            {
-                "probe_id": chunk["probe_id"].to_numpy(),
-                "item_id": chunk["item_id"].to_numpy(),
-                "adc_x10k": q,
-            }
-        )
-        if prune_per_batch is not None:
-            out = (
-                out.sort_values(["probe_id", "adc_x10k", "item_id"])
-                .groupby("probe_id", sort=False)
-                .head(prune_per_batch)
-            )
-        return out
-
-    # Accumulate incoming Arrow batches to ~64k rows before scoring: the
-    # session's arrow.maxRecordsPerBatch is tuned small (512) to bound
-    # giant-DOCUMENT batches, but candidate rows are ~50 bytes — at 512
-    # rows/batch the per-batch Python overhead dominates (~2ms × 31k
-    # batches on the scaling corpus) and per-batch pruning never prunes
-    # (a batch holds ≤ R rows per probe already). Chunking inside the
-    # generator makes the operator independent of the session knob.
-    _TARGET = 65536
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list = []
-        n = 0
-        for batch in it:
-            if not len(batch):
-                continue
-            buf.append(batch)
-            n += len(batch)
-            if n >= _TARGET:
-                yield score(pd.concat(buf, ignore_index=True))
-                buf, n = [], 0
-        if buf:
-            yield score(pd.concat(buf, ignore_index=True))
-
-    id_type = dict(cands_with_codes.dtypes).get("item_id", "bigint")
-    p_type = dict(cands_with_codes.dtypes).get("probe_id", "bigint")
-    return cands_with_codes.select("probe_id", "item_id", "codes").mapInPandas(
-        batches,
-        schema=f"probe_id {p_type}, item_id {id_type}, adc_x10k long",
     )
 
 
@@ -1948,9 +1608,9 @@ def pq_adc_cell_scan_arrow(
     expands it against the probes probing that cell in numpy — the
     (probe × candidate) pairing never exists as Spark rows.
 
-    Why it replaces the pre-paired formulation in ``ivfpq_topk``
-    (measured, 131k-vector scaling corpus, 1024 probes, nprobe 8/64):
-    generating candidates as a JVM join emitted |candidates| =
+    Why the pairing happens in numpy (measured, 131k-vector scaling
+    corpus, 1024 probes, nprobe 8/64): generating candidates as a JVM
+    join emitted |candidates| =
     |corpus| × probes-per-cell ≈ 16.7M rows and shipped them through
     the JVM→Python Arrow channel (~1.5 GB/pass with the code arrays) —
     the per-pass cost the ANN scaling series kept paying after every
@@ -1961,21 +1621,19 @@ def pq_adc_cell_scan_arrow(
     drops ~100× while the gather count (the actual ADC math) is
     unchanged.
 
-    Exactness: quantization is the ``_pq_qdist`` integer rule via the
-    shared ``_adc_lut``; probe→cell assignment is the bit-identical
+    Exactness: quantization is the ``_pq_nearest_codes`` integer rule via
+    the shared ``_adc_lut``; probe→cell assignment is the bit-identical
     ``_probe_cell_assign``; self-matches mask to a sentinel exactly as
     ``pq_adc_scan_arrow``. Per (cell, chunk) block the kernel keeps,
     per probe, every pair whose score ties-or-beats the block's R-th
     smallest — a SUPERSET of the block's (adc ASC, item ASC) top-R, and
     each (probe, item) pair exists in exactly one block, so the union
     provably contains the global per-probe top-R and the downstream
-    ``row_number`` shortlist is EXACTLY the join path's (path-agreement
-    pinned by test).
+    ``row_number`` shortlist is EXACTLY that of an unpruned scan over the
+    probed cells (pinned by the superset test).
 
     Returns (probe_id, item_id, adc_x10k) candidate rows.
     """
-    from typing import Iterator
-
     import numpy as np
     import pandas as pd
 
@@ -2063,58 +1721,12 @@ def pq_adc_cell_scan_arrow(
             {"probe_id": p[keep], "item_id": i[keep], "adc_x10k": q[keep]}
         )
 
-    # Same batch-accumulation rationale as the sibling kernels.
-    _TARGET = 65536
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list = []
-        n = 0
-        for batch in it:
-            if not len(batch):
-                continue
-            buf.append(batch)
-            n += len(batch)
-            if n >= _TARGET:
-                yield score(pd.concat(buf, ignore_index=True))
-                buf, n = [], 0
-        if buf:
-            yield score(pd.concat(buf, ignore_index=True))
-
     p_type = dict(probes.dtypes)[id_col]
     i_type = dict(codes_with_cells.dtypes)["item_id"]
     return codes_with_cells.select("item_id", "cell_id", "codes").mapInPandas(
-        batches,
+        lambda it: _score_chunks(it, score),
         schema=f"probe_id {p_type}, item_id {i_type}, adc_x10k long",
     )
-
-
-def pq_probe_tables(
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Expression twin of ``pq_probe_tables_arrow``: (probe_id, subspace,
-    code, q) built as literal structs — the oracle-parity path, small
-    codebooks only (the plan grows one struct per codebook entry)."""
-    m = len(codebooks)
-    d0 = len(codebooks[0][0][1])
-    entries = []
-    for s, book in enumerate(codebooks):
-        sub = F.slice(F.col(vec_col), s * d0 + 1, d0)
-        for code, cvec in book:
-            entries.append(
-                F.struct(
-                    F.lit(s).cast("int").alias("subspace"),
-                    F.lit(code).cast("int").alias("code"),
-                    _pq_qdist(sub, cvec).alias("q"),
-                )
-            )
-    return probes.select(
-        F.col(id_col).cast("long").alias("probe_id"),
-        F.explode(F.array(*entries)).alias("t"),
-    ).select("probe_id", "t.subspace", "t.code", "t.q")
 
 
 def pq_adc_topk(
@@ -2126,8 +1738,6 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     codes: DataFrame | None = None,
-    probe_path: str = "arrow",
-    scan_path: str = "arrow",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes — the scan that reads
     8-byte codes instead of 256-byte vectors. The corpus' raw embeddings
@@ -2135,24 +1745,14 @@ def pq_adc_topk(
     ``pq_encode`` table) to skip encoding entirely. Ranking is
     (adc_x10k ASC, item_id ASC); self-matches are excluded.
 
-    ``scan_path="arrow"`` (production default) scores each accumulated
-    Arrow batch of code rows against the full probe LUT in one numpy
-    gather (``pq_adc_scan_arrow``) with per-chunk partial top-k — no
-    explode, no broadcast hash probe per row, no |probes| × |corpus|-key
-    re-aggregation. ``scan_path="join"`` is the JVM-join twin the SQL
-    oracle mirrors: corpus codes explode to ``m`` narrow int rows per
-    vector, the per-probe (m × k)-row tables broadcast, the join keys on
-    (subspace, code) and a partial-agg integer sum collapses back to one
-    ADC distance per (probe, vector). Measured (scaling corpus, 1024
-    probes × 16M candidates, see ``pq_adc_scores_arrow``): the join
-    formulation stalls cores on DRAM probing a ~100×-L2 broadcast
-    relation per exploded row — the gather path reads each code row
-    once. Exact-integer quantization makes the two paths agree
-    bit-for-bit (path-agreement test).
-
-    ``probe_path`` selects the join path's probe-table construction:
-    "arrow" = constant-size Arrow kernel, "expr" = literal-expression
-    oracle twin (small codebooks only — identical integers).
+    Each accumulated Arrow batch of code rows is scored against the full
+    probe LUT in one numpy gather (``pq_adc_scan_arrow``) with per-chunk
+    partial top-k — no explode, no broadcast hash probe per row, no
+    |probes| × |corpus|-key re-aggregation. Measured (scaling corpus,
+    1024 probes × 16M candidates): a JVM-join formulation (codes
+    exploded ×m, joined against broadcast per-probe tables, re-summed)
+    stalls cores on DRAM probing a ~100×-L2 broadcast relation per
+    exploded row — the gather reads each code row once.
 
     Returns (probe_id, item_id, adc_x10k, rank).
     """
@@ -2160,42 +1760,13 @@ def pq_adc_topk(
 
     if codes is None:
         codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    if scan_path == "arrow":
-        cand = pq_adc_scan_arrow(
-            codes, probes, codebooks,
-            per_probe_r=k, vec_col=vec_col, id_col=id_col,
-        )
-        w = Window.partitionBy("probe_id").orderBy(
-            F.asc("adc_x10k"), F.asc("item_id")
-        )
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("probe_id", "item_id", "adc_x10k", "rank")
-        )
-    m = len(codebooks)
-    exploded = codes.select(
-        F.col("vec_id").alias("item_id"),
-        F.posexplode("codes").alias("subspace", "code"),
-    )
-    table_fn = pq_probe_tables_arrow if probe_path == "arrow" else pq_probe_tables
-    tables = table_fn(probes, codebooks, vec_col=vec_col, id_col=id_col)
-    adc = (
-        exploded.join(
-            F.broadcast(tables),
-            ["subspace", "code"],
-        )
-        .where(F.col("item_id") != F.col("probe_id"))
-        .groupBy("probe_id", "item_id")
-        .agg(F.sum("q").alias("adc_x10k"), F.count("*").alias("_n"))
-        # A (probe, item) pair survives only with all m subspace terms —
-        # count acts as a correctness tripwire against partial joins.
-        .where(F.col("_n") == m)
-        .drop("_n")
+    cand = pq_adc_scan_arrow(
+        codes, probes, codebooks,
+        per_probe_r=k, vec_col=vec_col, id_col=id_col,
     )
     w = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
     return (
-        adc.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("probe_id", "item_id", "adc_x10k", "rank")
     )
@@ -2211,8 +1782,6 @@ def pq_adc_rerank_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     codes: DataFrame | None = None,
-    probe_path: str = "arrow",
-    scan_path: str = "arrow",
 ) -> DataFrame:
     """ADC shortlist → exact cosine re-rank: the production PQ search
     architecture (Jégou et al.'s IVFADC+R). Raw ADC cannot order
@@ -2238,7 +1807,7 @@ def pq_adc_rerank_topk(
     r = shortlist if shortlist is not None else 5 * k
     sl = pq_adc_topk(
         corpus, probes, codebooks, k=r, vec_col=vec_col, id_col=id_col,
-        codes=codes, probe_path=probe_path, scan_path=scan_path,
+        codes=codes,
     ).select("probe_id", "item_id")
     return _exact_rerank(corpus, probes, sl, k, vec_col=vec_col, id_col=id_col)
 
@@ -2404,21 +1973,15 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     cells: DataFrame | None = None,
     codes: DataFrame | None = None,
-    adc_path: str = "arrow",
 ) -> DataFrame:
     """IVFADC — the canonical billion-scale ANN composition (Jégou et
     al.): IVF cells prune WHICH vectors to score, PQ codes decide HOW
     CHEAPLY to score them, exact re-rank restores ordering fidelity.
 
-    ``adc_path="arrow"`` (production default) runs the inverted-list
-    scan ``pq_adc_cell_scan_arrow``: each code row ships once with its
-    cell id and the kernel expands it against that cell's probes in
-    numpy with per-block top-R pruning — the candidate pairing never
-    exists as Spark rows; ``"join"`` is the JVM-join twin (broadcast
-    probe→cell candidate join, explode ×m + broadcast probe tables +
-    hash re-aggregate) whose plan the SQL oracle mirrors —
-    exact-integer quantization makes the two paths agree bit-for-bit
-    (path-agreement test).
+    ADC runs the inverted-list scan ``pq_adc_cell_scan_arrow``: each
+    code row ships once with its cell id and the kernel expands it
+    against that cell's probes in numpy with per-block top-R pruning —
+    the candidate pairing never exists as Spark rows.
 
     Cost model at lake scale: the ADC sum touches only vectors in the
     ``nprobe`` probed cells (≈ nprobe/cells of the corpus) and reads m
@@ -2428,12 +1991,11 @@ def ivfpq_topk(
     ``write_ann_index``/``write_pq_index`` output so a probe batch runs
     three broadcast-joined narrow scans and zero Arrow encodes.
 
-    Candidate generation joins the cell table against the broadcast
-    probe→cell list; ADC joins the candidates' exploded codes against
-    the broadcast per-probe tables on (probe_id, subspace, code) and
-    partial-agg sums; ranking/tie rules are identical to
-    ``pq_adc_rerank_topk`` (shortlist sizing rule documented there
-    applies unchanged).
+    The code table joins the cell table on item id (both corpus-size,
+    no probe side); the kernel's pruned candidates then go through one
+    per-probe ``row_number`` shortlist of R rows. Ranking/tie rules are
+    identical to ``pq_adc_rerank_topk`` (shortlist sizing rule
+    documented there applies unchanged).
 
     Returns (probe_id, item_id, cosine, rank).
     """
@@ -2451,51 +2013,16 @@ def ivfpq_topk(
     # probe-side Arrow stage and the ADC kernel's own collect) with
     # one. Assignment math is bit-identical to ``ivf_probe_cells_arrow``
     # (same helpers, same rounding/tie-break).
-    spark = probes.sparkSession
     probe_rows = probes.select(id_col, vec_col).collect()
-    if adc_path == "arrow":
-        # Inverted-list scan: the (probe × candidate) pairing happens
-        # inside the kernel, never as Spark rows — see
-        # pq_adc_cell_scan_arrow for the measured reasons.
-        cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
-            cells.select(F.col("vec_id").alias("item_id"), "cell_id"),
-            "item_id",
-        )
-        adc = pq_adc_cell_scan_arrow(
-            cwc, probes, centroids, codebooks,
-            nprobe=nprobe, per_probe_r=r,
-            vec_col=vec_col, id_col=id_col, probe_rows=probe_rows,
-        )
-    else:
-        probe_cells = _probe_cells_local(
-            spark, probe_rows, centroids,
-            nprobe=nprobe, id_type=dict(probes.dtypes)[id_col],
-        )
-        cand = (
-            cells.join(
-                F.broadcast(probe_cells),
-                cells.cell_id == probe_cells.probe_cell,
-            )
-            .where(F.col("vec_id") != F.col("probe_id"))
-            .select("probe_id", F.col("vec_id").alias("item_id"))
-        )
-        cwc = cand.join(
-            codes.select(F.col("vec_id").alias("item_id"), "codes"), "item_id"
-        )
-        m = len(codebooks)
-        cand_codes = cwc.select(
-            "probe_id", "item_id", F.posexplode("codes").alias("subspace", "code")
-        )
-        tables = pq_probe_tables_arrow(
-            probes, codebooks, vec_col=vec_col, id_col=id_col
-        )
-        adc = (
-            cand_codes.join(F.broadcast(tables), ["probe_id", "subspace", "code"])
-            .groupBy("probe_id", "item_id")
-            .agg(F.sum("q").alias("adc_x10k"), F.count("*").alias("_n"))
-            .where(F.col("_n") == m)
-            .drop("_n")
-        )
+    cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
+        cells.select(F.col("vec_id").alias("item_id"), "cell_id"),
+        "item_id",
+    )
+    adc = pq_adc_cell_scan_arrow(
+        cwc, probes, centroids, codebooks,
+        nprobe=nprobe, per_probe_r=r,
+        vec_col=vec_col, id_col=id_col, probe_rows=probe_rows,
+    )
     wsl = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
     sl = (
         adc.withColumn("_r", F.row_number().over(wsl))

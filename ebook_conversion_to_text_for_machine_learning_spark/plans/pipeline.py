@@ -139,64 +139,61 @@ def run_extraction_job(
     # plan from the path entirely (swap in reliable checkpoint() with a
     # checkpoint dir for multi-hour production runs, where an executor
     # loss should recompute from durable storage rather than fail).
+    # Checkpointed blocks are released by the ContextCleaner once
+    # ``extracted`` goes out of scope; nothing to unpersist.
     extracted = extracted.localCheckpoint()
-    try:
-        _append(extracted.select("doc_id", "fmt", "spans"), output_path, catalog)
+    _append(extracted.select("doc_id", "fmt", "spans"), output_path, catalog)
 
-        # Metrics counters (docs in/dropped, chapters, media, per format).
-        # Collected BEFORE the lineage append: writing into lineage_path
-        # invalidates any cached plan that reads it (the resume anti-join),
-        # and a recompute after the append would see its own commit.
-        metrics_rows = (
-            extracted.groupBy("fmt", "status")
-            .agg(
-                F.count("*").alias("docs"),
-                F.sum(F.when(F.col("n_spans") == 0, 1).otherwise(0)).alias("docs_empty"),
-                F.sum("n_spans").alias("spans_out"),
-                F.sum("n_media").alias("media_spans"),
-            )
-            .withColumn("run_id", F.lit(run_id))
+    # Metrics counters (docs in/dropped, chapters, media, per format).
+    # Collected BEFORE the lineage append: writing into lineage_path
+    # invalidates any cached plan that reads it (the resume anti-join),
+    # and a recompute after the append would see its own commit.
+    metrics_rows = (
+        extracted.groupBy("fmt", "status")
+        .agg(
+            F.count("*").alias("docs"),
+            F.sum(F.when(F.col("n_spans") == 0, 1).otherwise(0)).alias("docs_empty"),
+            F.sum("n_spans").alias("spans_out"),
+            F.sum("n_media").alias("media_spans"),
         )
-        collected = metrics_rows.collect()
-        if metrics_path:
-            # write the already-collected handful of rows instead of
-            # re-running the aggregation job for the sink
-            _append(
-                spark.createDataFrame(collected, metrics_rows.schema),
-                metrics_path,
-                catalog,
-            )
-        metrics = [row.asDict() for row in collected]
+        .withColumn("run_id", F.lit(run_id))
+    )
+    collected = metrics_rows.collect()
+    if metrics_path:
+        # write the already-collected handful of rows instead of
+        # re-running the aggregation job for the sink
+        _append(
+            spark.createDataFrame(collected, metrics_rows.schema),
+            metrics_path,
+            catalog,
+        )
+    metrics = [row.asDict() for row in collected]
 
-        # Per-partition lineage: partition id, doc/span counts, commit id.
-        # Written LAST — committing lineage marks the run complete, so a
-        # crash before this point simply reprocesses the run's documents.
-        lineage = (
-            extracted.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("doc_count"),
-                F.sum("n_spans").alias("span_count"),
-                # Fold CPU time per partition — the skew signal that matters
-                # (doc_count alone hides a partition of giant PDFs).
-                F.sum("elapsed_us").alias("cpu_us"),
-            )
-            .withColumn("status", F.lit("committed"))
-            .withColumn("run_id", F.lit(run_id))
+    # Per-partition lineage: partition id, doc/span counts, commit id.
+    # Written LAST — committing lineage marks the run complete, so a
+    # crash before this point simply reprocesses the run's documents.
+    lineage = (
+        extracted.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.count("*").alias("doc_count"),
+            F.sum("n_spans").alias("span_count"),
+            # Fold CPU time per partition — the skew signal that matters
+            # (doc_count alone hides a partition of giant PDFs).
+            F.sum("elapsed_us").alias("cpu_us"),
         )
-        doc_lineage = extracted.select(
-            "doc_id",
-            F.lit("committed").alias("status"),
-            F.lit(run_id).alias("run_id"),
-        )
-        if lineage_path:
-            # Partition stats first: the doc_lineage append into lineage_path
-            # is the commit point and also invalidates the cached plan.
-            _append(lineage, lineage_path + "_partitions", catalog)
-            _append(doc_lineage, lineage_path, catalog)
-    finally:
-        # checkpointed RDD blocks are released by the ContextCleaner once
-        # this DataFrame goes out of scope; nothing to unpersist.
-        pass
+        .withColumn("status", F.lit("committed"))
+        .withColumn("run_id", F.lit(run_id))
+    )
+    doc_lineage = extracted.select(
+        "doc_id",
+        F.lit("committed").alias("status"),
+        F.lit(run_id).alias("run_id"),
+    )
+    if lineage_path:
+        # Partition stats first: the doc_lineage append into lineage_path
+        # is the commit point and also invalidates the cached plan.
+        _append(lineage, lineage_path + "_partitions", catalog)
+        _append(doc_lineage, lineage_path, catalog)
 
     return {
         "run_id": run_id,

@@ -151,10 +151,9 @@ def main() -> None:
         "batch of codes against the full probe LUT with one numpy gather "
         "and keeps a batch-local top-k, so no explode, no broadcast-hash "
         "join, and only top-k-per-batch rows reach the final "
-        "WindowGroupLimit exchange. The join formulation survives as the "
-        "oracle twin (scan_path=\"join\"); path agreement is pinned by "
-        "tests/test_operators.py. Raw embeddings never enter the scan "
-        "when a persisted codes table is passed "
+        "WindowGroupLimit exchange. The oracle and a Python ADC brute "
+        "force in tests/test_operators.py check it. Raw embeddings never "
+        "enter the scan when a persisted codes table is passed "
         "(tests/test_plans.py::test_pq_adc_scan_reads_codes_not_vectors).",
     )
     add(

@@ -551,6 +551,32 @@ def _emb_df(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _ref_qdist(a, b):
+    """Python reference for the PQ distance: per-dimension
+    floor(d² · 10⁴ + 0.5), summed as an integer."""
+    import math
+
+    return sum(math.floor((x - c) * (x - c) * 10000.0 + 0.5) for x, c in zip(a, b))
+
+
+def _pq_ref_codes(vec, books):
+    """Python reference encoder: per subspace, the code at minimum
+    ``_ref_qdist`` distance, ties to the smaller code."""
+    d0 = len(books[0][0][1])
+    return [
+        min((_ref_qdist(vec[s * d0 : (s + 1) * d0], cvec), code) for code, cvec in book)[1]
+        for s, book in enumerate(books)
+    ]
+
+
+def _pq_ref_adc(vec, codes, books):
+    """Python reference ADC distance from a raw probe vector to a code row."""
+    d0 = len(books[0][0][1])
+    return sum(
+        _ref_qdist(vec[s * d0 : (s + 1) * d0], books[s][c][1]) for s, c in enumerate(codes)
+    )
+
+
 def test_ivf_assign_and_topk_find_identical_vector(spark):
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         ivf_ann_topk,
@@ -607,12 +633,8 @@ def test_embedding_near_dup_threshold(spark):
     dup = [0.6, 0.8, 0.0, 0.0]
     ortho = [0.0, 0.0, 1.0, 0.0]
     df = _emb_df(spark, [(1, dup), (2, dup), (3, ortho)])
-    for path in ("arrow", "expr"):
-        pairs = {
-            (r.vec_a, r.vec_b): r.cosine
-            for r in embedding_near_dup(df, 4, signature_path=path).collect()
-        }
-        assert pairs == {(1, 2): 1.0}, path
+    pairs = {(r.vec_a, r.vec_b): r.cosine for r in embedding_near_dup(df, 4).collect()}
+    assert pairs == {(1, 2): 1.0}
 
 
 def test_pq_codebooks_constant_size_and_errors(spark):
@@ -642,48 +664,29 @@ def test_pq_codebooks_constant_size_and_errors(spark):
         pq_codebooks(corpus(100).where(F.col("vec_id") < 0), stride=1)
 
 
-def test_pq_encode_paths_agree_exactly(spark):
+def test_pq_encode_matches_python_reference(spark):
     import random
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         pq_codebooks,
         pq_encode,
-        pq_encode_expr,
     )
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
     df = _emb_df(spark, rows)
     books = pq_codebooks(df, m=2, target_codes=8)
-    arrow = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
-    expr = {r.vec_id: list(r.codes) for r in pq_encode_expr(df, books).collect()}
+    got = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
     # EXACT agreement (not within-noise): the per-component x10k
-    # quantization makes both paths sum identical integers.
-    assert arrow == expr and len(arrow) == 60
-
-
-def test_pq_probe_tables_paths_agree_exactly(spark):
-    import random
-
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
-        pq_codebooks,
-        pq_probe_tables,
-        pq_probe_tables_arrow,
-    )
-
-    rng = random.Random(13)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    df = _emb_df(spark, rows)
-    books = pq_codebooks(df, m=2, target_codes=8)
-    probes = df.where(F.col("vec_id") < 4)
-    expr = sorted(map(tuple, pq_probe_tables(probes, books).collect()))
-    arrow = sorted(map(tuple, pq_probe_tables_arrow(probes, books).collect()))
-    # EXACT equality: both paths emit the same x10k integers.
-    assert expr == arrow and len(arrow) == 4 * 2 * len(books[0])
+    # quantization makes both sides compare identical integers.
+    want = {
+        r.vec_id: _pq_ref_codes([float(x) for x in r.embedding], books)
+        for r in df.collect()
+    }
+    assert got == want and len(got) == 60
 
 
 def test_pq_adc_topk_is_exact_when_corpus_is_the_codebook(spark):
-    import math
     import random
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
@@ -701,32 +704,29 @@ def test_pq_adc_topk_is_exact_when_corpus_is_the_codebook(spark):
 
     vals = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
 
-    def qdist(a, b):
-        return sum(
-            math.floor((x - c) * (x - c) * 10000.0 + 0.5) for x, c in zip(a, b)
-        )
-
     out = pq_adc_topk(df, df.where(F.col("vec_id") < 2), books, k=3)
     got = {}
     for r in out.collect():
         got.setdefault(r.probe_id, []).append((r.rank, r.item_id, r.adc_x10k))
     for pid in (0, 1):
         expected = sorted(
-            (qdist(vals[pid], v), i) for i, v in vals.items() if i != pid
+            (_ref_qdist(vals[pid], v), i) for i, v in vals.items() if i != pid
         )[:3]
         assert sorted(got[pid]) == [
             (rk, i, d) for rk, (d, i) in enumerate(expected, start=1)
         ]
 
 
-def test_pq_adc_topk_scan_path_agreement(spark):
-    """The brute-force Arrow LUT-gather scan (production default) and
-    the explode×m JVM-join twin score with the same exact integers, so
-    top-k output is identical row-for-row — including rank assignment
-    under quantization ties (the per-chunk partial top-k keeps the
-    (adc ASC, item ASC) total order, so the union of chunk top-k sets
-    is a superset of the global top-k)."""
+def test_pq_adc_topk_matches_brute_force_under_ties(spark):
+    """The Arrow LUT-gather scan matches a Python ADC brute force row for
+    row — including rank assignment under quantization ties (the
+    per-chunk partial top-k keeps the (adc ASC, item ASC) total order,
+    so the union of chunk top-k sets is a superset of the global top-k)
+    — and the exact re-rank of its shortlist matches a Python re-rank."""
+    import math
     import random
+    from decimal import ROUND_HALF_UP, Decimal
+    from functools import reduce
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         pq_adc_rerank_topk,
@@ -739,29 +739,47 @@ def test_pq_adc_topk_scan_path_agreement(spark):
     # boundary-tie handling of the chunk-level selection
     base = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
     rows = [(i, base[i % 40]) for i in range(120)]
-    df = _emb_df(spark, rows)
+    # one partition: the tied copies share a chunk, so the in-chunk
+    # boundary tie-break decides which of them survives
+    df = _emb_df(spark, rows).coalesce(1)
     probes = df.where(F.col("vec_id") < 4)
     books = pq_codebooks(df, m=2, target_codes=8)
-    arrow = sorted(map(tuple, pq_adc_topk(df, probes, books, k=6).collect()))
-    join = sorted(
-        map(
-            tuple,
-            pq_adc_topk(df, probes, books, k=6, scan_path="join").collect(),
+
+    vals = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
+    codes = {i: _pq_ref_codes(v, books) for i, v in vals.items()}
+
+    def ranked(pid, n):
+        return sorted(
+            (_pq_ref_adc(vals[pid], codes[i], books), i) for i in vals if i != pid
+        )[:n]
+
+    def cosine(a, b):
+        # Spark's left-fold double sums, then round(·, 4) half-up on the
+        # shortest decimal form, as F.round does.
+        def dot(x, y):
+            return reduce(lambda acc, t: acc + t[0] * t[1], zip(x, y), 0.0)
+
+        c = dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+        return float(Decimal(repr(c)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+    # k=1 cuts through ties such as the one between a probe's two copies
+    for k in (1, 6):
+        want = sorted(
+            (pid, i, adc, rk)
+            for pid in range(4)
+            for rk, (adc, i) in enumerate(ranked(pid, k), start=1)
         )
-    )
-    assert arrow == join and len(arrow) == 4 * 6
-    rr_arrow = sorted(
+        got = sorted(map(tuple, pq_adc_topk(df, probes, books, k=k).collect()))
+        assert got == want and len(got) == 4 * k, k
+
+    want_rr = []
+    for pid in range(4):
+        scored = sorted((-cosine(vals[pid], vals[i]), i) for _, i in ranked(pid, 9))
+        want_rr += [(pid, i, -nc, rk) for rk, (nc, i) in enumerate(scored[:3], start=1)]
+    got_rr = sorted(
         map(tuple, pq_adc_rerank_topk(df, probes, books, k=3, shortlist=9).collect())
     )
-    rr_join = sorted(
-        map(
-            tuple,
-            pq_adc_rerank_topk(
-                df, probes, books, k=3, shortlist=9, scan_path="join"
-            ).collect(),
-        )
-    )
-    assert rr_arrow == rr_join
+    assert got_rr == sorted(want_rr)
 
 
 def test_arrow_lut_paths_reject_non_integral_ids(spark):
@@ -771,13 +789,15 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
     import pytest
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
+        ivf_centroids,
+        pq_adc_cell_scan_arrow,
         pq_adc_scan_arrow,
-        pq_adc_scores_arrow,
         pq_codebooks,
     )
 
     df = _emb_df(spark, [(i, [float(i), 0.0]) for i in range(8)])
     books = pq_codebooks(df, m=1, target_codes=4)
+    cents = ivf_centroids(df, stride=4)
     str_probes = df.select(
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"
     )
@@ -789,12 +809,13 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
             per_probe_r=2,
         )
     with pytest.raises(TypeError, match="integral"):
-        pq_adc_scores_arrow(
-            df.selectExpr(
-                "vec_id as probe_id", "vec_id as item_id", "array(0) as codes"
-            ),
+        pq_adc_cell_scan_arrow(
+            df.selectExpr("vec_id as item_id", "0L as cell_id", "array(0) as codes"),
             str_probes,
+            cents,
             books,
+            nprobe=1,
+            per_probe_r=2,
         )
 
 
@@ -802,16 +823,15 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
     """The inverted-list kernel (candidate pairing inside numpy, never
     as Spark rows) must emit — per probe — a SUPERSET of the global
     (adc ASC, item ASC) top-R pairs over that probe's cells, with
-    integers identical to the pre-paired kernel's; the downstream
-    row_number shortlist is therefore path-independent."""
+    integers identical to a brute force over the probed cells; the
+    downstream row_number shortlist is therefore unchanged by pruning."""
     import collections
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
-        _probe_cells_local,
         ivf_assign_arrow,
         ivf_centroids,
+        ivf_probe_cells_arrow,
         pq_adc_cell_scan_arrow,
-        pq_adc_scores_arrow,
         pq_codebooks,
         pq_encode,
     )
@@ -834,18 +854,16 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
         ).collect()
     }
 
-    # reference: pre-paired kernel over the SAME candidate set, unpruned
-    rows = probes.select("vec_id", "embedding").collect()
-    pc = _probe_cells_local(spark, rows, cents, nprobe=2, id_type="bigint")
-    cand = (
-        cells.join(F.broadcast(pc), cells.cell_id == pc.probe_cell)
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", F.col("vec_id").alias("item_id"))
-        .join(codes.select(F.col("vec_id").alias("item_id"), "codes"), "item_id")
-    )
+    # reference: Python ADC brute force over every item in the probed cells
+    probe_vecs = {x.vec_id: [float(v) for v in x.embedding] for x in probes.collect()}
+    probed = collections.defaultdict(set)
+    for x in ivf_probe_cells_arrow(probes, cents, nprobe=2).collect():
+        probed[x.probe_id].add(x.probe_cell)
     ref = {
-        (x.probe_id, x.item_id): x.adc_x10k
-        for x in pq_adc_scores_arrow(cand, probes, books).collect()
+        (p, x.item_id): _pq_ref_adc(probe_vecs[p], list(x.codes), books)
+        for x in cwc.collect()
+        for p in probe_vecs
+        if x.cell_id in probed[p] and x.item_id != p
     }
 
     assert set(got) <= set(ref)  # never invents a pair
@@ -854,6 +872,7 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
     by_probe = collections.defaultdict(list)
     for (p, i), q in ref.items():
         by_probe[p].append((q, i))
+    assert by_probe.keys() == probe_vecs.keys()
     for p, scored in by_probe.items():
         top = {i for _, i in sorted(scored)[:r]}
         kept = {i for (pp, i) in got if pp == p}
@@ -1368,20 +1387,6 @@ def test_ivfpq_topk_recall_on_planted_neighbors(spark):
         len(v) for v in truth.values()
     )
     assert recall >= 0.85, recall
-
-    # path agreement: the Arrow LUT-gather ADC (production default,
-    # with per-batch partial top-R pruning) and the JVM-join twin score
-    # with the same exact integers, so the full composed output —
-    # shortlist membership included — is identical row-for-row.
-    arrow_rows = {tuple(r) for r in out.collect()}
-    join_rows = {
-        tuple(r)
-        for r in ivfpq_topk(
-            emb, probes, cents, books, k=5, nprobe=8, shortlist=50,
-            adc_path="join",
-        ).collect()
-    }
-    assert arrow_rows == join_rows
     emb.unpersist()
 
 
@@ -1429,40 +1434,18 @@ def test_semantic_dedup_hand_built_exact(spark):
         (20, [0.0, 0.0, 1.0, 0.0]),
     ]
     df = _emb_df(spark, rows)
-    for path in ("arrow", "expr"):
-        got = {
-            r.vec_id: (r.cell_id, r.is_semantic_dup)
-            for r in semantic_dedup(df, tau=0.99, stride=10, path=path).collect()
-        }
-        assert got == {
-            0: (0, False),
-            1: (0, True),
-            2: (0, True),
-            10: (10, False),
-            11: (10, True),
-            20: (20, False),
-        }, (path, got)
-
-
-def test_semantic_dedup_path_agreement(spark):
-    """Arrow path (per-cell numpy gram matrix) and expression twin (the
-    oracle-parity self-join) must agree row-for-row at the registry's own
-    setting (tau=0.35, 10-cell codebook, driver embeddings)."""
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
-        semantic_dedup,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    arrow = {
+    got = {
         r.vec_id: (r.cell_id, r.is_semantic_dup)
-        for r in semantic_dedup(emb, tau=0.35, target_cells=10).collect()
+        for r in semantic_dedup(df, tau=0.99, stride=10).collect()
     }
-    expr = {
-        r.vec_id: (r.cell_id, r.is_semantic_dup)
-        for r in semantic_dedup(emb, tau=0.35, target_cells=10, path="expr").collect()
-    }
-    assert len(arrow) == 500
-    assert arrow == expr
+    assert got == {
+        0: (0, False),
+        1: (0, True),
+        2: (0, True),
+        10: (10, False),
+        11: (10, True),
+        20: (20, False),
+    }, got
 
 
 def test_semantic_dedup_on_planted_neighbors(spark):

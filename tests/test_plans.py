@@ -354,9 +354,8 @@ def test_filter_funnel_single_scan_single_row_exchange(spark):
 def test_pq_adc_scan_reads_codes_not_vectors(spark, tmp_path):
     """The whole point of PQ: with a persisted codes table, the ADC scan
     must never re-read or re-encode the corpus vectors — the plan reads
-    the codes parquet plus the (small) probe side only, joins the probe
-    tables by BROADCAST, and the per-(probe, item) distance sum gets a
-    map-side partial aggregate."""
+    the codes parquet only and scores it in one LUT-gather MapInPandas,
+    with no join and no re-aggregation."""
     import re
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators import (
@@ -373,10 +372,10 @@ def test_pq_adc_scan_reads_codes_not_vectors(spark, tmp_path):
         emb, probes, books, k=5, codes=spark.read.parquet(codes_path)
     )
     plan = plan_of(out)
-    # Arrow scan path (default): ONE scan — the codes table. The probe
-    # LUT is built eagerly at call time and shipped via broadcast
-    # variable, so the lazy plan touches nothing else; the corpus
-    # embedding parquet must NOT appear at all.
+    # ONE scan — the codes table. The probe LUT is built eagerly at
+    # call time and shipped via broadcast variable, so the lazy plan
+    # touches nothing else; the corpus embedding parquet must NOT
+    # appear at all.
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "embeddings.parquet" not in plan
     # Exactly ONE MapInPandas — the LUT-gather scorer. A second one
@@ -386,19 +385,6 @@ def test_pq_adc_scan_reads_codes_not_vectors(spark, tmp_path):
     # No join, no re-aggregation: candidates come pre-scored and
     # chunk-pruned; the only exchange is the top-k window's.
     assert "Join" not in plan
-
-    # Join twin (oracle path): codes scan + probe scan, probe tables
-    # joined by BROADCAST, per-(probe, item) distance sum combining
-    # map-side.
-    jplan = plan_of(
-        S.pq_adc_topk(
-            emb, probes, books, k=5,
-            codes=spark.read.parquet(codes_path), scan_path="join",
-        )
-    )
-    assert len(re.findall(r"\(\d+\) Scan parquet", jplan)) == 2
-    assert "BroadcastHashJoin" in jplan  # probe tables broadcast
-    assert "partial_sum" in jplan  # ADC sum combines map-side
     # Correctness of the persisted path: identical to the live encode.
     live = S.pq_adc_topk(emb, probes, books, k=5)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, live.collect()))
