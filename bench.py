@@ -59,79 +59,14 @@ def main() -> None:
     timings["extract_interleaved"] = time.time() - start
     docs_per_sec = n_out / timings["extract_interleaved"]
 
-    # Operator families over the driver tables.
-    queries = entrymod.queries()
-    for name in (
-        "extract_documents_txt",
-        "training_data_prep",
-        "training_sequences",
-        "training_mix",
-        "exact_dedup",
-        "minhash_signatures",
-        "minhash_candidates",
-        "minhash_verified_dedup",
-        "source_dedup_matrix",
-        "dedup_against_index",
-        "dedup_index_probe",
-        "simhash_signatures",
-        "simhash_near_pairs",
-        "dedup_components",
-        "ngram_jaccard",
-        "token_stats",
-        "quality_scores",
-        "document_features",
-        "scrub_pii",
-        "chunk_documents",
-        "split_assign",
-        "stratified_sample",
-        "pack_sequences",
-        "repetition_signals",
-        "line_repetition",
-        "corpus_stats",
-        "source_mix_stats",
-        "quality_filter_funnel",
-        "temperature_mix",
-        "domain_affinity",
-        "line_dedup",
-        "repeated_passages",
-        "gram_novelty",
-        "decontaminate",
-        "decontaminate_join",
-        "language_id",
-        "fingerprints",
-        "tfidf_top_terms",
-        "bpe_pair_counts",
-        "bpe_encode",
-        "bpe_token_stats",
-        "cosine_topk",
-        "knn_label_vote",
-        "lsh_ann_topk",
-        "ivf_ann_topk",
-        "ivf_kmeans_cells",
-        "pq_codes",
-        "pq_ann_topk",
-        "pq_rerank_topk",
-        "ivfpq_topk",
-        "embedding_near_dup",
-        "semantic_dedup",
-        "semantic_dedup_kmeans",
-        "media_features",
-        "frame_samples",
-        "resize_media",
-        "transcript_enrichment",
-        "extract_pdf_files",
-        "extract_ebook_files",
-        "event_funnel",
-        "pricing_summary",
-        "nation_revenue",
-        "events_hourly",
-        "events_percentiles",
-    ):
+    # Every registered query over the driver tables — the list comes
+    # from the one registry, so a new query is benched without edits here.
+    for name, query in entrymod.queries().items():
         start = time.time()
         # noop sink, not count(): count() lets Catalyst prune pure-projection
         # queries down to the scan, timing nothing (measured 2.1s vs 5.0s on
         # document_features at sf0.01) — the noop write forces every column.
-        queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        query(spark, sf_dir).write.mode("overwrite").format("noop").save()
         timings[name] = time.time() - start
 
     total = sum(timings.values())

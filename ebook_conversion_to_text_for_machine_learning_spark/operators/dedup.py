@@ -496,7 +496,7 @@ def append_to_minhash_index(
     every other batch) is never re-read or re-signatured, and replaying
     a crashed append (at-least-once ingest) rewrites the same partitions
     instead of appending duplicates — the same idempotency contract as
-    the streaming sidecar (``streaming/curation.py``).
+    every ``batch_id``-partitioned table (``operators/index_maintenance.py``).
 
     Contract: ``batch_id`` must be unique per logical batch (> 0; 0 is
     the full build) and ``df`` must hold only doc_ids NOT already in the
@@ -571,29 +571,22 @@ def dedup_against_index(
     base = path.rstrip("/")
     idx_bands = spark.read.parquet(f"{base}/bands")
     idx_grams = spark.read.parquet(f"{base}/grams")
-    # Legacy-layout guard (same compatibility behavior as the ANN
-    # sibling): an index written before the batch_id/pfx partitioning
-    # existed still probes correctly — pruning and replay exclusion just
-    # become no-ops on it. Appends/replays require the partitioned
-    # layout, so demand it when exclusion is requested.
-    legacy = "batch_id" not in idx_bands.columns
-    if exclude_batch_id is not None and legacy:
-        raise ValueError(
-            "dedup_against_index: exclude_batch_id requires the "
-            "batch_id-partitioned layout — rebuild the index with "
-            "write_minhash_index before appending to it"
-        )
+    # Index-side totals come from the precomputed counts/ table — never a
+    # corpus-scale aggregate of grams/ at query time (that would break
+    # the cost-scales-with-the-batch contract).
+    n_idx = spark.read.parquet(f"{base}/counts")
     if exclude_batch_id is not None:
         idx_bands = idx_bands.where(F.col("batch_id") != exclude_batch_id)
         idx_grams = idx_grams.where(F.col("batch_id") != exclude_batch_id)
+        n_idx = n_idx.where(F.col("batch_id") != exclude_batch_id)
+    n_idx = n_idx.select("doc_id", F.col("n_grams").alias("_ni"))
 
     b_bands = minhash_bands(minhash_signatures(batch, text_col)).localCheckpoint()
     band_pfx = [
         r[0]
         for r in b_bands.select(_hex_pfx(F.col("bucket")).alias("p")).distinct().collect()
     ]
-    if "pfx" in idx_bands.columns:
-        idx_bands = idx_bands.where(F.col("pfx").isin(band_pfx or [-1]))
+    idx_bands = idx_bands.where(F.col("pfx").isin(band_pfx or [-1]))
     cands = (
         b_bands.alias("b")
         .join(
@@ -614,15 +607,7 @@ def dedup_against_index(
         .distinct()
         .collect()
     ]
-    if "pfx" in idx_grams.columns:
-        idx_grams = idx_grams.where(F.col("pfx").isin(gram_pfx or [-1]))
-    # Index-side totals come from the precomputed counts/ table — never a
-    # corpus-scale aggregate of grams/ at query time (that would break
-    # the cost-scales-with-the-batch contract).
-    n_idx = spark.read.parquet(f"{base}/counts")
-    if exclude_batch_id is not None:  # legacy layout raised above
-        n_idx = n_idx.where(F.col("batch_id") != exclude_batch_id)
-    n_idx = n_idx.select("doc_id", F.col("n_grams").alias("_ni"))
+    idx_grams = idx_grams.where(F.col("pfx").isin(gram_pfx or [-1]))
     # Prefilter the corpus-scale gram table with a BROADCAST semi-join on
     # the (batch-scale) candidate set: grams/ is scanned but never
     # shuffled — only the candidates' gram rows enter the array-collect

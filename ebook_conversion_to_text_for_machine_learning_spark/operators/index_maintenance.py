@@ -1,46 +1,45 @@
-"""Compaction for the persisted incremental indexes.
+"""The one owner of the ``batch_id``-partitioned table layout.
 
 Engine extension (the reference is a single-process converter with no
-persisted state): the minhash dedup index (``operators/dedup.py``), the
-ANN index and the PQ code table (``operators/similarity.py``) all grow
-one ``batch_id=<n>`` hive partition per ingest batch — O(batch) appends,
-partition-pruned probes. What goes *up* must eventually merge back
-*down*: after 10^4 streaming micro-batches (``streaming/dedup.py``
-appends one index batch per trigger) the ``bands/``/``grams/`` tables
-hold 10^4 × 256 directories and every probe's pruned read fans across
-10^4 small files per prefix. These compactors squash the accumulated
-batch partitions into the single ``batch_id=-1`` base partition —
-the same ``COMPACTED_BATCH_ID`` convention as the streaming seen-hash
-sidecar (``streaming/curation.py``) — preserving probe decisions
-exactly.
+persisted state). Four tables grow one ``batch_id=<n>`` hive partition
+per ingest batch — O(batch) appends, partition-pruned probes: the
+minhash dedup index (``operators/dedup.py``), the ANN index and the PQ
+code table (``operators/similarity.py``) and the streaming seen-hash
+sidecar (``streaming/curation.py``). What goes *up* must eventually
+merge back *down*: after 10^4 streaming micro-batches
+(``streaming/dedup.py`` appends one index batch per trigger) the
+``bands/``/``grams/`` tables hold 10^4 × 256 directories and every
+probe's pruned read fans across 10^4 small files per prefix. One
+compactor (``_compact_table``) squashes the accumulated batch
+partitions of any of them into the single ``COMPACTED_BATCH_ID``
+(``batch_id=-1``) base partition, preserving probe decisions exactly.
 
-Checkpoint awareness (the sidecar's contract, reused): pass the
-stream's ``checkpoint_dir`` and only batches at or below the last
-COMMITTED micro-batch are folded. A batch above the commit horizon may
-be replayed (at-least-once), and ``dedup_against_index``'s
-``exclude_batch_id=N`` replay guard only works while batch N's rows
-still live in their own partition — folding an uncommitted batch into
-the base would make a replay flag its docs as dups of their own
-half-appended copies and drop them. ``index_batch_offset`` maps
-micro-batch ids to index batch ids (``stream_near_dedup`` appends
-micro-batch N as index batch N+1).
+Checkpoint awareness: pass the stream's ``checkpoint_dir`` and only
+batches at or below the last COMMITTED micro-batch
+(``last_committed_batch``) are folded. A batch above the commit horizon
+may be replayed (at-least-once), and the replay guards — the index's
+``exclude_batch_id=N`` and the sidecar's ``batch_id != N`` read — only
+work while batch N's rows still live in their own partition: folding an
+uncommitted batch into the base would make a replay flag its docs as
+dups of their own half-appended copies and drop them.
+``index_batch_offset`` maps micro-batch ids to index batch ids
+(``stream_near_dedup`` appends micro-batch N as index batch N+1; the
+sidecar writes micro-batch N as batch N).
 
-Crash protocol (single maintenance writer, same window contract as
-``compact_seen_sidecar``): the merged base is STAGED to
-``<index>/_compact/<table>`` first — a plain streaming write, never a
-corpus-size driver materialization — together with a ``_FOLDED.json``
-manifest of the batch ids it covers; only then are the folded source
-dirs deleted and the staging dir renamed (an O(1) metadata op) to
-``batch_id=-1``. A crash before the manifest lands leaves the index
-untouched (stale staging is discarded and re-built); a crash after it
-is completed by the next ``compact_*`` call from the manifest — it
-deletes exactly the manifest's ids, never a batch appended after the
+Crash protocol (single maintenance writer): the merged base is STAGED
+to a ``_``-prefixed dir first — invisible to parquet readers; a plain
+streaming write, never a corpus-size driver materialization — together
+with a ``_FOLDED.json`` manifest of the batch ids it covers; only then
+are the folded source dirs deleted and the staging dir renamed (an O(1)
+metadata op) to ``batch_id=-1``. A crash before the manifest lands
+leaves the table untouched (stale staging is discarded and re-built); a
+crash after it is completed by the next compaction from the manifest —
+it deletes exactly the manifest's ids, never a batch appended after the
 crash. Merges dedupe on each table's logical key, so re-running any
-step converges. Between the first source delete and the rename, probes
-of THIS index would miss folded rows — run compaction in the same
-maintenance window the sidecar requires (between micro-batches /
-against a cleanly-stopped stream) and re-run it after a crash before
-the next probe.
+step converges. Between the first source delete and the rename, reads
+of THIS table miss folded rows — run compaction in a maintenance window
+(between micro-batches / against a cleanly-stopped stream) and re-run
+it after a crash before the next read.
 """
 
 from __future__ import annotations
@@ -50,31 +49,33 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
-    COMPACTED_BATCH_ID,
-    last_committed_batch,
-)
+#: Partition id compaction squashes into — below any real batch id, so
+#: the "exclude my own batch" replay filters can never exclude it.
+COMPACTED_BATCH_ID = -1
 
 _MANIFEST = "_FOLDED.json"
 
 
 def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _child_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the entries directly under ``path`` ([] when it does
+    not exist) — a pure file-listing, never a table scan."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 def _batch_ids(spark: SparkSession, table_dir: str) -> list[int]:
-    """Batch ids present as ``batch_id=<n>`` partition dirs — a pure
-    file-listing, never a table scan (partition values are directory
-    names by construction)."""
-    fs, p, _ = _fs(spark, table_dir)
-    if not fs.exists(p):
-        return []
+    """Batch ids present as ``batch_id=<n>`` partition dirs (partition
+    values are directory names by construction)."""
     out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
+    for name in _child_names(spark, table_dir):
+        if name.startswith("batch_id="):
             try:
                 out.append(int(name.split("=", 1)[1]))
             except ValueError:
@@ -82,14 +83,31 @@ def _batch_ids(spark: SparkSession, table_dir: str) -> list[int]:
     return sorted(out)
 
 
+def last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int:
+    """Largest micro-batch id the streaming checkpoint has COMMITTED —
+    the numeric filenames under ``<checkpoint>/commits/`` — or -1 when
+    nothing has committed yet."""
+    names = _child_names(spark, checkpoint_dir.rstrip("/") + "/commits")
+    return max((int(n) for n in names if n.isdigit()), default=-1)
+
+
+def _commit_horizon(
+    spark: SparkSession, checkpoint_dir: str | None, offset: int
+) -> int | None:
+    """Highest batch id that may fold (None = no stream gates the fold)."""
+    if checkpoint_dir is None:
+        return None
+    return last_committed_batch(spark, checkpoint_dir) + offset
+
+
 def _delete_dir(spark: SparkSession, path: str) -> None:
-    fs, p, _ = _fs(spark, path)
+    fs, p = _fs(spark, path)
     if fs.exists(p):
         fs.delete(p, True)
 
 
 def _read_small_file(spark: SparkSession, path: str) -> str | None:
-    fs, p, _ = _fs(spark, path)
+    fs, p = _fs(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -106,7 +124,7 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
 
 
 def _write_small_file(spark: SparkSession, path: str, data: str) -> None:
-    fs, p, _ = _fs(spark, path)
+    fs, p = _fs(spark, path)
     stream = fs.create(p, True)
     try:
         stream.write(bytearray(data, "utf-8"))
@@ -128,12 +146,10 @@ def _compact_table(
     Returns the number of batch partitions folded (0 = nothing to do).
     """
     manifest_path = f"{staging_dir}/{_MANIFEST}"
-    success_path = f"{staging_dir}/_SUCCESS"
-    fs, _, _ = _fs(spark, staging_dir)
+    fs, staging = _fs(spark, staging_dir)
     staged = _read_small_file(spark, manifest_path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
 
-    if staged is not None and fs.exists(jvm_path(success_path)):
+    if staged is not None and fs.exists(_fs(spark, f"{staging_dir}/_SUCCESS")[1]):
         # Crash recovery: staging is complete — finish the fold using
         # the manifest's EXACT id list (ids appended after the crash are
         # untouched even if they are below the commit horizon now).
@@ -175,10 +191,7 @@ def _compact_table(
     # Atomic-ish publish: the staged base becomes the compacted
     # partition in one metadata rename (manifest/_SUCCESS ride along —
     # underscore-prefixed files are invisible to parquet readers).
-    fs.rename(
-        jvm_path(staging_dir),
-        jvm_path(f"{table_dir}/batch_id={COMPACTED_BATCH_ID}"),
-    )
+    fs.rename(staging, _fs(spark, f"{table_dir}/batch_id={COMPACTED_BATCH_ID}")[1])
     return len([b for b in folded if b != COMPACTED_BATCH_ID])
 
 
@@ -191,11 +204,7 @@ def _compact_index(
     index_batch_offset: int,
 ) -> int:
     base = path.rstrip("/")
-    committed_max = (
-        last_committed_batch(spark, checkpoint_dir) + index_batch_offset
-        if checkpoint_dir is not None
-        else None
-    )
+    committed_max = _commit_horizon(spark, checkpoint_dir, index_batch_offset)
     folded = 0
     for name, key_cols, sub_parts in tables:
         folded = max(

@@ -1035,15 +1035,13 @@ def lsh_ann_topk_indexed(
         .select(F.col("vec_id").alias("probe_id"), "band_id", "bucket")
         .localCheckpoint()
     )
-    c_bands = index.bands
-    if "pfx" in c_bands.columns:
-        pfxs = [
-            r[0]
-            for r in p_bands.select(_band_pfx(F.col("bucket")).alias("p"))
-            .distinct()
-            .collect()
-        ]
-        c_bands = c_bands.where(F.col("pfx").isin(pfxs or [-1]))
+    pfxs = [
+        r[0]
+        for r in p_bands.select(_band_pfx(F.col("bucket")).alias("p"))
+        .distinct()
+        .collect()
+    ]
+    c_bands = index.bands.where(F.col("pfx").isin(pfxs or [-1]))
     probe_vecs = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
     )
@@ -1148,21 +1146,18 @@ def ivf_ann_topk_indexed(
     """
     probe_cells = ivf_probe_cells_arrow(
         probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-    )
-    cells = index.cells
-    if "cell_pfx" in cells.columns:
-        probe_cells = probe_cells.localCheckpoint()
-        pfxs = [
-            r[0]
-            for r in probe_cells.select(
-                F.pmod(F.col("probe_cell"), F.lit(_CELL_PARTITIONS))
-                .cast("int")
-                .alias("p")
-            )
-            .distinct()
-            .collect()
-        ]
-        cells = cells.where(F.col("cell_pfx").isin(pfxs or [-1]))
+    ).localCheckpoint()
+    pfxs = [
+        r[0]
+        for r in probe_cells.select(
+            F.pmod(F.col("probe_cell"), F.lit(_CELL_PARTITIONS))
+            .cast("int")
+            .alias("p")
+        )
+        .distinct()
+        .collect()
+    ]
+    cells = index.cells.where(F.col("cell_pfx").isin(pfxs or [-1]))
     return _ivf_topk_from_cells(cells, probe_cells, k)
 
 

@@ -28,6 +28,7 @@ import json
 from pyspark.sql import functions as F
 
 from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+    _read_table_or_none,
     run_extraction_job,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.session import build_session
@@ -115,30 +116,11 @@ def main(argv: list[str] | None = None) -> None:
                 prepare_training_sequences,
             )
 
-            seen = None
-            if args.seen_hashes:
-                from pyspark.errors import AnalysisException
-
-                try:
-                    seen = (
-                        spark.read.table(args.seen_hashes)
-                        if args.catalog
-                        else spark.read.parquet(args.seen_hashes)
-                    )
-                except AnalysisException as ex:
-                    # Only "nothing landed yet" may proceed unseeded —
-                    # missing path/table, or a dir holding no committed
-                    # data files (UNABLE_TO_INFER_SCHEMA after a crashed
-                    # prior write). Any other read failure (permissions,
-                    # corrupt footer) must abort — silently disabling the
-                    # anti-join re-emits the whole corpus as duplicates.
-                    if (
-                        "PATH_NOT_FOUND" not in str(ex)
-                        and "TABLE_OR_VIEW_NOT_FOUND" not in str(ex)
-                        and "UNABLE_TO_INFER_SCHEMA" not in str(ex)
-                    ):
-                        raise
-                    seen = None
+            seen = (
+                _read_table_or_none(spark, args.seen_hashes, args.catalog)
+                if args.seen_hashes
+                else None
+            )
             if args.mode == "mix":
                 eval_df = None
                 if args.eval_set:

@@ -36,12 +36,26 @@ def _append(df: DataFrame, target: str, catalog: bool) -> None:
         df.write.mode("append").parquet(target)
 
 
+def _nothing_landed(ex: Exception) -> bool:
+    """True only for the "nothing landed yet" read failures: a missing
+    path or table, or an existing dir with no committed data files (e.g.
+    only ``_temporary/`` from a killed first write). Neither can hold
+    rows. Any OTHER failure (transient store error, corrupt footer) must
+    propagate: treating it as "first run" would silently disable a
+    resume or seen-set anti-join and re-append the whole corpus as
+    duplicates."""
+    msg = str(ex)
+    return any(
+        cond in msg
+        for cond in (
+            "PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
+        )
+    )
+
+
 def _read_table_or_none(spark: SparkSession, path: str, catalog: bool):
-    """Read a sink table, returning None only for the "nothing landed yet"
-    states (missing path/table, or an existing dir with no committed data
-    files). Any OTHER failure propagates: treating a transient store error
-    as "first run" would silently disable the resume anti-join and
-    re-append the whole corpus as duplicates."""
+    """Read a sink table (catalog table or parquet dir), returning None
+    only when ``_nothing_landed``."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -49,11 +63,7 @@ def _read_table_or_none(spark: SparkSession, path: str, catalog: bool):
             return spark.read.table(path)
         return spark.read.parquet(path)
     except AnalysisException as ex:
-        if (
-            "PATH_NOT_FOUND" not in str(ex)
-            and "TABLE_OR_VIEW_NOT_FOUND" not in str(ex)
-            and "UNABLE_TO_INFER_SCHEMA" not in str(ex)
-        ):
+        if not _nothing_landed(ex):
             raise
         return None
 

@@ -25,10 +25,9 @@ Crash-consistency (foreachBatch is at-least-once):
   rewrites the same files instead of appending duplicates;
 - the seen set for batch N reads ``batch_id != N``, so a replay never
   sees its own failed attempt's partial sidecar rows;
-- compaction first lands the distinct union into ``batch_id=-1`` and
-  only THEN deletes the superseded partitions — a crash at any point
-  leaves hashes present (possibly twice, which the left-anti join
-  ignores), never absent.
+- ``compact_seen_sidecar`` runs the one batch-partition compactor of
+  ``operators.index_maintenance`` — its staged-write + manifest protocol
+  makes a crash mid-fold completable by re-running the compaction.
 
 The sidecar lives next to the output (``<output>_seen`` by default):
 the two tables are a unit — delete both or neither.
@@ -46,14 +45,20 @@ from pyspark.sql.streaming import StreamingQuery
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
     INPUT_SCHEMA,
 )
+from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
+    _commit_horizon,
+    _compact_table,
+)
+from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+    _read_table_or_none,
+)
 from ebook_conversion_to_text_for_machine_learning_spark.plans.training_prep import (
     DEFAULT_MIN_QUALITY,
     prepare_training_sequences,
 )
-
-#: Partition id compaction squashes into — below any real micro-batch id,
-#: so the "exclude my own batch" replay filter can never exclude it.
-COMPACTED_BATCH_ID = -1
+from ebook_conversion_to_text_for_machine_learning_spark.streaming.stream import (
+    foreach_batch_stream,
+)
 
 
 def default_seen_dir(output_dir: str) -> str:
@@ -63,117 +68,20 @@ def default_seen_dir(output_dir: str) -> str:
 def _read_seen(
     spark: SparkSession, seen_dir: str, exclude_batch_id: int
 ) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        seen = spark.read.parquet(seen_dir)
-    except AnalysisException as ex:
-        # Only the "nothing landed yet" states may proceed without a
-        # seen set: a missing path, or an existing dir with no committed
-        # data files (e.g. only _temporary/ from a killed batch-0 write →
-        # UNABLE_TO_INFER_SCHEMA) — neither can hold duplicates. Any
-        # OTHER read failure (transient store error, corrupt footer)
-        # must fail the batch so the stream retries — swallowing it
-        # would silently append duplicates.
-        if (
-            "PATH_NOT_FOUND" not in str(ex)
-            and "UNABLE_TO_INFER_SCHEMA" not in str(ex)
-        ):
-            raise
+    seen = _read_table_or_none(spark, seen_dir, catalog=False)
+    if seen is None:
         return None
     return seen.where(F.col("batch_id") != exclude_batch_id).select("text_hash")
-
-
-def _migrate_legacy_output(
-    spark: SparkSession, output_dir: str, seen_dir: str
-) -> None:
-    """One-time upgrade from the round-2 layout (flat part-files under
-    ``output_dir``; the seen set WAS the landed output) to this layout.
-    Without it, a legacy stream restarting on this code finds no sidecar,
-    reads an EMPTY seen set, and re-emits its whole history — and its new
-    ``batch_id=N`` subdirs landing next to the old flat files break
-    ``spark.read.parquet(output_dir)`` with conflicting directory
-    structures.
-
-    Crash-ordered steps, each state resumable:
-
-    1. rename flat ``part-*`` files into ``batch_id=-1/`` (pure FS moves,
-       re-entrant — a crash mid-move leaves a detectable flat remainder
-       that the next start finishes moving);
-    2. seed the sidecar's ``batch_id=-1`` partition with the distinct
-       ``text_hash`` set of the MIGRATED partition only. Reading just
-       ``batch_id=-1`` (real micro-batches are numbered >= 0) keeps the
-       normal crash window safe: a first-ever batch 0 that died between
-       its output write and its sidecar write must NOT have its hashes
-       seeded here, or the replay would anti-join its own rows away and
-       overwrite the landed partition with nothing.
-
-    No-op for fresh streams (no output yet) and migrated ones (sidecar
-    present). Migrated rows read back with ``batch_id = -1``."""
-    from pyspark.errors import AnalysisException
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    out_path = jvm.org.apache.hadoop.fs.Path(output_dir)
-    fs = out_path.getFileSystem(hconf)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(seen_dir)):
-        return
-    if not fs.exists(out_path):
-        return
-    flat = [
-        st.getPath()
-        for st in fs.listStatus(out_path)
-        if st.isFile() and st.getPath().getName().startswith("part-")
-    ]
-    migrated = f"{output_dir.rstrip('/')}/batch_id={COMPACTED_BATCH_ID}"
-    if flat:
-        dest = jvm.org.apache.hadoop.fs.Path(migrated)
-        fs.mkdirs(dest)
-        for p in flat:
-            fs.rename(p, jvm.org.apache.hadoop.fs.Path(dest, p.getName()))
-    try:
-        landed = spark.read.parquet(migrated).select("text_hash").distinct()
-        landed.write.mode("overwrite").parquet(
-            f"{seen_dir}/batch_id={COMPACTED_BATCH_ID}"
-        )
-    except AnalysisException as ex:
-        # no migrated partition → nothing legacy to seed; anything else
-        # (corrupt footer, store error) must fail the start, not silently
-        # skip seeding and re-emit history.
-        if (
-            "PATH_NOT_FOUND" not in str(ex)
-            and "UNABLE_TO_INFER_SCHEMA" not in str(ex)
-        ):
-            raise
-
-
-def last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int:
-    """Largest micro-batch id the streaming checkpoint has COMMITTED —
-    the numeric filenames under ``<checkpoint>/commits/`` — or -1 when
-    nothing has committed yet."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(checkpoint_dir.rstrip("/") + "/commits")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return -1
-    ids = [
-        int(st.getPath().getName())
-        for st in fs.listStatus(p)
-        if st.getPath().getName().isdigit()
-    ]
-    return max(ids, default=-1)
 
 
 def compact_seen_sidecar(
     spark: SparkSession, seen_dir: str, *, checkpoint_dir: str | None = None
 ) -> int:
-    """Squash the sidecar's per-batch partitions into ``batch_id=-1``.
-
-    Returns the number of distinct hashes after compaction (0 when there
-    is nothing to compact). Idempotent: the distinct union lands in the
-    compacted partition BEFORE the superseded partitions are deleted, so
-    a crash anywhere leaves every hash readable (duplicate hashes across
-    partitions are harmless to the left-anti join).
+    """Squash the sidecar's per-batch partitions into ``batch_id=-1``
+    with the index compactor (``operators.index_maintenance``: staged
+    write under ``<seen_dir>/_compact``, ``_FOLDED.json`` manifest,
+    rename publish — a crash mid-fold is completed by re-running).
+    Returns the number of batch partitions folded (0 = nothing to do).
 
     WHEN it may run: between micro-batches of a live stream, or against
     a CLEANLY-stopped stream whose last batch committed. After a crash,
@@ -188,44 +96,15 @@ def compact_seen_sidecar(
     un-compacted and excluded from the compacted hash set — and picked
     up by the next compaction after they commit.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        seen = spark.read.parquet(seen_dir)
-    except AnalysisException:
-        return 0
-    committed_max = (
-        last_committed_batch(spark, checkpoint_dir)
-        if checkpoint_dir is not None
-        else None
+    seen_dir = seen_dir.rstrip("/")
+    return _compact_table(
+        spark,
+        seen_dir,
+        f"{seen_dir}/_compact",
+        key_cols=["text_hash"],
+        sub_parts=[],
+        committed_max=_commit_horizon(spark, checkpoint_dir, 0),
     )
-    batch_ids = [
-        int(r.batch_id)
-        for r in seen.select("batch_id").distinct().collect()
-        if int(r.batch_id) != COMPACTED_BATCH_ID
-    ]
-    if committed_max is not None:
-        uncommitted = [b for b in batch_ids if b > committed_max]
-        old = [b for b in batch_ids if b <= committed_max]
-        if uncommitted:
-            seen = seen.where(~F.col("batch_id").isin(uncommitted))
-    else:
-        old = batch_ids
-    if not old:
-        return 0
-    # Materialize BEFORE overwriting a partition of the table being read
-    # (writing a path a live plan scans both races the scan and drops
-    # caches via refreshByPath — see plans/pipeline.py).
-    compacted = seen.select("text_hash").distinct().localCheckpoint()
-    compacted.write.mode("overwrite").parquet(
-        f"{seen_dir}/batch_id={COMPACTED_BATCH_ID}"
-    )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for b in old:
-        path = jvm.org.apache.hadoop.fs.Path(f"{seen_dir}/batch_id={b}")
-        path.getFileSystem(hconf).delete(path, True)
-    return compacted.count()
 
 
 def stream_curation(
@@ -252,12 +131,6 @@ def stream_curation(
     ``seen_dir`` (default ``<output>_seen``).
     """
     sidecar = seen_dir or default_seen_dir(output_dir)
-    _migrate_legacy_output(spark, output_dir, sidecar)
-    source = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def _process(batch_df, batch_id: int) -> None:
         session = batch_df.sparkSession
@@ -276,12 +149,10 @@ def stream_curation(
             f"{sidecar}/batch_id={batch_id}"
         )
 
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_stream(
+        spark, input_dir, checkpoint_dir, _process, schema=INPUT_SCHEMA,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_funnel(
@@ -312,12 +183,6 @@ def stream_funnel(
         filter_funnel,
     )
 
-    source = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
     def _process(batch_df, batch_id: int) -> None:
         (
             filter_funnel(batch_df, stages)
@@ -325,9 +190,7 @@ def stream_funnel(
             .parquet(f"{output_dir}/batch_id={batch_id}")
         )
 
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_stream(
+        spark, input_dir, checkpoint_dir, _process, schema=schema,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -93,11 +93,14 @@ def stream_near_dedup(
         ingest_batch_against_index,
         intra_batch_dups,
     )
-
-    source = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
+        compact_minhash_index,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _nothing_landed,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.streaming.stream import (
+        foreach_batch_stream,
     )
 
     def _process(batch_df, batch_id: int) -> None:
@@ -112,10 +115,7 @@ def stream_near_dedup(
             # with no committed files): nothing landed ⇒ everything is
             # novel, and the append CREATES the tables. Any other read
             # failure must fail the batch so the stream retries.
-            if (
-                "PATH_NOT_FOUND" not in str(ex)
-                and "UNABLE_TO_INFER_SCHEMA" not in str(ex)
-            ):
+            if not _nothing_landed(ex):
                 raise
             # The bootstrap batch still intra-batch dedups: two near-dup
             # docs in the stream's very first trigger must not both land
@@ -130,17 +130,11 @@ def stream_near_dedup(
             f"{output_dir}/batch_id={batch_id}"
         )
         if compact_every and (int(batch_id) + 1) % compact_every == 0:
-            from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
-                compact_minhash_index,
-            )
-
             compact_minhash_index(
                 session, index_path, checkpoint_dir=checkpoint_dir
             )
 
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_stream(
+        spark, input_dir, checkpoint_dir, _process, schema=schema,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

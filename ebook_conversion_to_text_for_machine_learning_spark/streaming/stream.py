@@ -15,13 +15,44 @@ one code path to test for correctness, two execution modes.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
     INPUT_SCHEMA,
     extract_spans,
 )
+
+
+def foreach_batch_stream(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    process: Callable[[DataFrame, int], None],
+    *,
+    schema,
+    max_files_per_trigger: int,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``process(batch_df, batch_id)`` over a parquet file stream —
+    the one driver every ``foreachBatch`` stream in this package runs on.
+
+    ``available_now=True`` drains everything currently in ``input_dir`` and
+    stops (used by tests and backfills); otherwise the query runs until
+    stopped, picking up newly landed parquet files per micro-batch.
+    """
+    writer = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_extraction(
@@ -33,17 +64,8 @@ def stream_extraction(
     max_files_per_trigger: int = 16,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """Start a file-source streaming extraction.
-
-    ``available_now=True`` drains everything currently in ``input_dir`` and
-    stops (used by tests and backfills); otherwise the query runs until
-    stopped, picking up newly landed parquet files per micro-batch.
-    """
-    source = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    """Start a file-source streaming extraction (see
+    ``foreach_batch_stream`` for ``available_now``)."""
 
     def _process(batch_df, batch_id: int) -> None:
         # Idempotent per-batch commit: foreachBatch is at-least-once (a
@@ -59,9 +81,7 @@ def stream_extraction(
             .parquet(f"{output_dir}/batch_id={batch_id}")
         )
 
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_stream(
+        spark, input_dir, checkpoint_dir, _process, schema=INPUT_SCHEMA,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -5,6 +5,7 @@ what folds, and a crash mid-fold must be completable by re-run."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators import (
@@ -143,6 +144,48 @@ def test_compact_crash_mid_fold_completes_on_rerun(spark, tmp_path, monkeypatch)
     assert not os.path.exists(f"{path}/_compact")
 
 
+@pytest.mark.parametrize("crash_at", [2, 4])
+def test_compact_seen_sidecar_crash_mid_fold_completes_on_rerun(
+    spark, tmp_path, monkeypatch, crash_at
+):
+    """The sidecar folds through the same staged-write + manifest
+    protocol. Delete calls run: stale staging, batch 0, batch 1, the old
+    base — crash 2 dies before any source delete, crash 4 after every
+    per-batch partition is gone. Either way the re-run restores exactly
+    the pre-compaction hash set, the earlier base's hashes included."""
+    from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
+        compact_seen_sidecar,
+    )
+
+    seen_dir = str(tmp_path / "out_seen")
+    for batch, batch_hashes in ((-1, ["h0", "h1"]), (0, ["h1", "h2"]), (1, ["h3"])):
+        spark.createDataFrame(
+            [(h,) for h in batch_hashes], "text_hash string"
+        ).write.parquet(f"{seen_dir}/batch_id={batch}")
+
+    def hashes():
+        return sorted(r.text_hash for r in spark.read.parquet(seen_dir).collect())
+
+    before = sorted(set(hashes()))
+    real_delete = M._delete_dir
+    calls = {"n": 0}
+
+    def exploding_delete(spark_, p):
+        calls["n"] += 1
+        if calls["n"] == crash_at:
+            raise RuntimeError("simulated crash mid-fold")
+        real_delete(spark_, p)
+
+    monkeypatch.setattr(M, "_delete_dir", exploding_delete)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact_seen_sidecar(spark, seen_dir)
+    monkeypatch.setattr(M, "_delete_dir", real_delete)
+
+    assert compact_seen_sidecar(spark, seen_dir) == 2  # the manifest's batches
+    assert hashes() == before
+    assert sorted(os.listdir(seen_dir)) == ["batch_id=-1"]
+
+
 def test_compact_ann_index_identical_topk(spark, tmp_path):
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         append_to_ann_index,
@@ -157,13 +200,17 @@ def test_compact_ann_index_identical_topk(spark, tmp_path):
     extra = emb.where(F.col("vec_id") % 3 == 0)
     dim = len(base.select("embedding").first()[0])
     path = str(tmp_path / "ann")
-    write_ann_index(base, dim, path)
+    # 16 target cells over 333 vectors: stride 20, ~17 cells, not the
+    # stride-1 O(N²) codebook of the 65536-cell default. 2 bands × 4
+    # planes keep bands/ at tens of pfx dirs instead of ~1,000 tiny files.
+    write_ann_index(base, dim, path, target_cells=16, n_bands=2, band_planes=4)
     append_to_ann_index(extra, path, batch_id=1)
 
     probes = emb.where(F.col("vec_id") < 5)
     idx = read_ann_index(spark, path)
     lsh_before = sorted(map(tuple, lsh_ann_topk_indexed(idx, probes, k=5).collect()))
     ivf_before = sorted(map(tuple, ivf_ann_topk_indexed(idx, probes, k=5).collect()))
+    assert lsh_before and ivf_before, "probes must return neighbours"
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
         compact_ann_index,
@@ -214,31 +261,3 @@ def test_compact_pq_index_identical_topk(spark, tmp_path):
     )
     dirs = [d for d in os.listdir(f"{path}/codes") if d.startswith("batch_id=")]
     assert dirs == ["batch_id=-1"]
-
-
-def test_dedup_against_index_legacy_layout_guard(spark, tmp_path):
-    """A pre-partitioning index layout (flat tables, no batch_id/pfx)
-    still probes correctly — pruning degrades to a full read — but
-    replay exclusion demands the partitioned layout (advice r4)."""
-    import pytest
-
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
-        gram_hashes,
-        minhash_bands,
-        minhash_signatures,
-    )
-
-    corpus = _docs(spark, _BASE)
-    path = str(tmp_path / "legacy")
-    minhash_bands(minhash_signatures(corpus, "text")).write.parquet(f"{path}/bands")
-    gram_hashes(corpus, "text").write.parquet(f"{path}/grams")
-    gram_hashes(corpus, "text").groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_grams")
-    ).write.parquet(f"{path}/counts")
-
-    out = dedup_against_index(spark, _docs(spark, _PROBE), path)
-    assert {r.doc_id for r in out.collect()} == {"p0"}
-    with pytest.raises(ValueError, match="partitioned layout"):
-        dedup_against_index(
-            spark, _docs(spark, _PROBE), path, exclude_batch_id=1
-        ).collect()

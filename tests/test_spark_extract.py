@@ -293,6 +293,32 @@ def test_catalog_mode_routes_writes_through_writeto_append(spark, monkeypatch):
     assert appended[0][1] == 10  # all docs written to the output table
 
 
+def test_read_table_or_none_only_forgives_nothing_landed(spark, tmp_path):
+    """The one "nothing landed yet" reader (pipeline resume, CLI seen
+    hashes, streaming seen sidecar): a missing path and a dir holding
+    only a killed write's ``_temporary/`` read as None; a dir whose data
+    file is not parquet must raise — forgiving it would disable the
+    anti-join and re-append the whole corpus."""
+    from py4j.protocol import Py4JJavaError
+
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _read_table_or_none,
+    )
+
+    assert _read_table_or_none(spark, str(tmp_path / "missing"), False) is None
+
+    killed = tmp_path / "killed"
+    (killed / "_temporary" / "0").mkdir(parents=True)
+    (killed / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"partial")
+    assert _read_table_or_none(spark, str(killed), False) is None
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):  # footer read fails, not AnalysisException
+        _read_table_or_none(spark, str(corrupt), False)
+
+
 def test_salted_repartition_levels_giant_document_skew(spark):
     """Stress golden for the SURVEY risk register: a cluster of giant
     documents co-located in one input partition must (a) be visible in the

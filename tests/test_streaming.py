@@ -212,8 +212,10 @@ def test_stream_curation_seen_source_is_sidecar_and_survives_compaction(
     compaction must leave exactly one batch_id=-1 partition."""
     import os
 
-    from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
         COMPACTED_BATCH_ID,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
         compact_seen_sidecar,
         default_seen_dir,
         stream_curation,
@@ -247,7 +249,8 @@ def test_stream_curation_seen_source_is_sidecar_and_survives_compaction(
 
     # compact: per-batch partitions squash into batch_id=-1, old ones go
     n = compact_seen_sidecar(spark, seen_dir)
-    assert n == 1  # one distinct text so far
+    assert n == 1  # batch 0's partition folded
+    assert spark.read.parquet(seen_dir).count() == 1  # one distinct text so far
     parts = sorted(
         d for d in os.listdir(seen_dir) if d.startswith("batch_id=")
     )
@@ -275,78 +278,6 @@ def test_stream_curation_seen_source_is_sidecar_and_survives_compaction(
     hashes = {r.text_hash for r in out}
     assert len(hashes) == 1
     assert {r.text_hash for r in first}.isdisjoint(hashes)
-
-
-def test_stream_curation_migrates_round2_flat_output(spark, tmp_path):
-    """A stream whose output landed under the round-2 layout (flat
-    part-files, no sidecar — the seen set WAS the output table) must be
-    migrated on start, not silently restarted from an empty seen set:
-    the flat files move into ``batch_id=-1``, their hashes seed the
-    sidecar, the already-landed text does NOT re-emit, and the mixed dir
-    still reads back as ONE partitioned table."""
-    import os
-
-    from ebook_conversion_to_text_for_machine_learning_spark.plans.training_prep import (
-        prepare_training_sequences,
-    )
-    from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
-        COMPACTED_BATCH_ID,
-        default_seen_dir,
-        stream_curation,
-    )
-
-    good_a = (
-        "The quick brown fox jumps over the lazy dog and the miller waits "
-        "for the grain in the old mill by the stone bridge near the river"
-    )
-    good_b = (
-        "A copper lantern hangs in the harbor window and the keeper of the "
-        "light waits for the evening boats to find the channel in the fog"
-    )
-
-    def _doc(doc_id, text):
-        return {"doc_id": doc_id, "fmt": "txt", "title": None, "author": None,
-                "spans": [("line", text, "", 0)]}
-
-    out_dir = str(tmp_path / "out")
-    seen_dir = default_seen_dir(out_dir)
-    # round-2 state: the sequence table written FLAT, no sidecar anywhere
-    legacy = prepare_training_sequences(
-        spans_df(spark, [_doc("a1", good_a)]), chunk_tokens=16, overlap=0
-    )
-    legacy.write.parquet(out_dir)
-    legacy_rows = spark.read.parquet(out_dir).collect()
-    assert len(legacy_rows) > 0 and not os.path.exists(seen_dir)
-    assert any(f.startswith("part-") for f in os.listdir(out_dir))
-
-    in_dir = tmp_path / "in"
-    spans_df(spark, [_doc("a2", good_a), _doc("b1", good_b)]).write.parquet(
-        str(in_dir / "f1")
-    )
-    query = stream_curation(
-        spark, f"{in_dir}/*", out_dir, str(tmp_path / "ckpt"),
-        chunk_tokens=16, overlap=0, available_now=True,
-    )
-    query.awaitTermination(180)
-
-    # flat files moved into the compacted partition; the dir reads as one
-    # partitioned table again (mixed flat+partitioned would throw here)
-    assert not any(f.startswith("part-") for f in os.listdir(out_dir))
-    out = spark.read.parquet(out_dir)
-    rows = out.collect()
-    legacy_hashes = {r.text_hash for r in legacy_rows}
-    by_batch = {}
-    for r in rows:
-        by_batch.setdefault(r.batch_id, set()).add(r.text_hash)
-    assert by_batch[COMPACTED_BATCH_ID] == legacy_hashes
-    # the duplicate of the legacy text did NOT re-emit; only b is new
-    new_hashes = set().union(
-        *(v for b, v in by_batch.items() if b != COMPACTED_BATCH_ID)
-    )
-    assert len(new_hashes) == 1 and new_hashes.isdisjoint(legacy_hashes)
-    # sidecar seeded under batch_id=-1 with exactly the legacy hashes
-    seeded = spark.read.parquet(f"{seen_dir}/batch_id={COMPACTED_BATCH_ID}")
-    assert {r.text_hash for r in seeded.collect()} == legacy_hashes
 
 
 def test_stream_funnel_per_batch_counters_match_batch_funnel(spark, tmp_path):
@@ -418,11 +349,13 @@ def test_compact_seen_sidecar_skips_uncommitted_partitions(spark, tmp_path):
 
     from tests.conftest import spans_df
 
-    from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
         COMPACTED_BATCH_ID,
+        last_committed_batch,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.streaming.curation import (
         compact_seen_sidecar,
         default_seen_dir,
-        last_committed_batch,
         stream_curation,
     )
 
@@ -450,25 +383,29 @@ def test_compact_seen_sidecar_skips_uncommitted_partitions(spark, tmp_path):
     spark.createDataFrame([("deadbeef",)], "text_hash string").write.parquet(
         f"{seen_dir}/batch_id=1"
     )
+    def folded():
+        return {
+            r.text_hash
+            for r in spark.read.parquet(
+                f"{seen_dir}/batch_id={COMPACTED_BATCH_ID}"
+            ).collect()
+        }
+
     n = compact_seen_sidecar(spark, seen_dir, checkpoint_dir=ckpt)
-    assert n == 1  # only the committed batch's one distinct hash
+    assert n == 1  # only the committed batch 0 folded
     parts = sorted(d for d in os.listdir(seen_dir) if d.startswith("batch_id="))
     assert parts == [f"batch_id={COMPACTED_BATCH_ID}", "batch_id=1"]
-    folded = {
-        r.text_hash
-        for r in spark.read.parquet(
-            f"{seen_dir}/batch_id={COMPACTED_BATCH_ID}"
-        ).collect()
-    }
-    assert "deadbeef" not in folded
+    first = folded()
+    assert len(first) == 1 and "deadbeef" not in first  # batch 0's one hash
 
     # the commit lands -> the partition is now compactable
     with open(os.path.join(ckpt, "commits", "1"), "w") as fh:
         fh.write("v1\n{}")
     assert last_committed_batch(spark, ckpt) == 1
-    assert compact_seen_sidecar(spark, seen_dir, checkpoint_dir=ckpt) == 2
+    assert compact_seen_sidecar(spark, seen_dir, checkpoint_dir=ckpt) == 1
     parts = sorted(d for d in os.listdir(seen_dir) if d.startswith("batch_id="))
     assert parts == [f"batch_id={COMPACTED_BATCH_ID}"]
+    assert folded() == first | {"deadbeef"}
 
 
 def test_stream_near_dedup_flags_against_everything_landed(spark, tmp_path):
