@@ -10,7 +10,11 @@ atomic snapshot commit per run.
 
 Metrics come from one ``groupBy`` over the extraction output — partial
 (map-side) aggregation is free from Catalyst, so the agg adds one small
-shuffle over ~|formats|×|statuses| groups, never over documents.
+shuffle over ~|formats|×|statuses| groups, never over documents. That
+aggregate is appended straight to the metrics sink, and the returned
+summary is an ``Observation`` on that same write: no separate collect
+job and no rebuild of the rows from Python (a plain ``collect`` when
+there is no metrics sink).
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
@@ -155,9 +159,11 @@ def run_extraction_job(
     _append(extracted.select("doc_id", "fmt", "spans"), output_path, catalog)
 
     # Metrics counters (docs in/dropped, chapters, media, per format).
-    # Collected BEFORE the lineage append: writing into lineage_path
+    # Written BEFORE the lineage append: writing into lineage_path
     # invalidates any cached plan that reads it (the resume anti-join),
-    # and a recompute after the append would see its own commit.
+    # and a recompute after the append would see its own commit. The
+    # summary rides on the sink write as an observed metric over its
+    # ≤|formats|×|statuses| rows — no separate collect job.
     metrics_rows = (
         extracted.groupBy("fmt", "status")
         .agg(
@@ -168,15 +174,18 @@ def run_extraction_job(
         )
         .withColumn("run_id", F.lit(run_id))
     )
-    collected = metrics_rows.collect()
     if metrics_path:
-        # write the already-collected handful of rows instead of
-        # re-running the aggregation job for the sink
+        observed = Observation()
         _append(
-            spark.createDataFrame(collected, metrics_rows.schema),
+            metrics_rows.observe(
+                observed, F.collect_list(F.struct(*metrics_rows.columns)).alias("rows")
+            ),
             metrics_path,
             catalog,
         )
+        collected = observed.get["rows"]
+    else:
+        collected = metrics_rows.collect()
     metrics = [row.asDict() for row in collected]
 
     # Per-partition lineage: partition id, doc/span counts, commit id.

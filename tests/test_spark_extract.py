@@ -119,6 +119,63 @@ def test_pipeline_with_lineage_and_resume(spark, tmp_path):
     assert row.doc_count > 0 and row.cpu_us > 0
 
 
+def test_metrics_summary_equals_metrics_table_and_groupby(spark, tmp_path):
+    """The returned summary is observed on the metrics write: it must be the
+    same set of rows as the metrics table and as a fresh ``groupBy`` over
+    the extracted frame, including an ``unknown_format`` group and a doc
+    whose output is empty."""
+    from pyspark.sql import functions as F
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
+        extract_spans,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        run_extraction_job,
+    )
+
+    docs = fx.random_corpus(24, seed=17) + [
+        dict(fx.TXT_001, doc_id="mobi-001", fmt="mobi"),
+        dict(fx.TXT_001, doc_id="txt-empty", spans=[]),
+    ]
+    df = spans_df(spark, docs)
+    out, lineage, metrics = (str(tmp_path / n) for n in ("out", "lineage", "metrics"))
+
+    def as_set(rows, run_id=True):
+        keys = ["fmt", "status", "docs", "docs_empty", "spans_out", "media_spans"]
+        return {tuple(r[k] for k in keys + (["run_id"] if run_id else [])) for r in rows}
+
+    summary = run_extraction_job(spark, df, out, lineage_path=lineage, metrics_path=metrics)
+    table = spark.read.parquet(metrics).collect()
+    assert as_set(summary["metrics"]) == as_set(table)
+    assert len(summary["metrics"]) == len(table)
+    assert {r["run_id"] for r in table} == {summary["run_id"]}
+    grouped = (
+        extract_spans(df)
+        .groupBy("fmt", "status")
+        .agg(
+            F.count("*").alias("docs"),
+            F.sum(F.when(F.col("n_spans") == 0, 1).otherwise(0)).alias("docs_empty"),
+            F.sum("n_spans").alias("spans_out"),
+            F.sum("n_media").alias("media_spans"),
+        )
+        .collect()
+    )
+    assert as_set(summary["metrics"], run_id=False) == as_set(grouped, run_id=False)
+    by_status = {(m["fmt"], m["status"]): m for m in summary["metrics"]}
+    assert by_status[("mobi", "unknown_format")]["docs"] == 1
+    assert by_status[("txt", "ok")]["docs_empty"] >= 1
+
+    # A resumed no-op run observes an empty aggregate and appends nothing.
+    assert run_extraction_job(
+        spark, df, out, lineage_path=lineage, metrics_path=metrics
+    )["metrics"] == []
+    assert spark.read.parquet(metrics).count() == len(table)
+
+    # Without a metrics sink the summary is collected, and is the same.
+    no_sink = run_extraction_job(spark, df, str(tmp_path / "out_no_sink"))
+    assert as_set(no_sink["metrics"], run_id=False) == as_set(summary["metrics"], run_id=False)
+
+
 def test_documents_adapter_smoke(spark):
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
         extract_spans,
