@@ -4,10 +4,10 @@ Scale shape (the part that matters at 10^12 docs):
 
 - exact: one hash-aggregate on ``md5(text)`` — map-side partial agg, one
   shuffle over distinct hashes, no data explosion.
-- minhash: signatures are computed per-row with array lambdas (narrow, no
-  explode), candidates come from a band-bucket self-join (shuffle keyed on
-  narrow bucket strings, never on raw text), then exact Jaccard verifies
-  only the candidates.
+- minhash: one shingle explode + ``groupBy(doc_id)`` yields each doc's
+  signature and distinct gram-hash array (``_sketch``), candidates come
+  from a band-bucket self-join (shuffle keyed on narrow bucket strings,
+  never on raw text), then exact Jaccard verifies only the candidates.
 - simhash: per-row signature from built-in expressions; near-dup search is
   a bucket join on signature prefixes.
 - n-gram Jaccard: O(n²) only within a blocking key — usable as the
@@ -73,8 +73,20 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     )).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
-    """Per-document MinHash signature from k independent hash slots.
+def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
+    """Per-document near-dup sketch: (doc_id, sig_0..sig_{k-1}, grams).
+
+    The ONE definition of a document's MinHash signature and of its
+    distinct gram hashes, from ONE shingle explode and ONE
+    ``groupBy(doc_id)``. Every MinHash consumer derives from it:
+    ``minhash_signatures`` is its projection (Catalyst prunes the unused
+    ``collect_list`` and gram md5), the verifiers intersect its ``grams``
+    arrays, and the index writer persists its bands, exploded ``grams``
+    and array sizes. So the persisted index and the batch side of
+    ``dedup_against_index`` can never desynchronize on shingle width or
+    hash salt (every candidate would silently fail verification if they
+    did), and ``ingest_batch_against_index``, which checkpoints one
+    sketch, tokenizes and signs its batch exactly once.
 
     Slot ``i`` is the lexicographic min over shingles of an 8-hex-char
     (32-bit) slice of a salted md5 — ``md5(g || ':' || i//4)`` sliced at
@@ -82,18 +94,31 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = MINHASH_K
     values needs ⌈k/4⌉ md5 calls per shingle instead of k (md5 dominated
     this operator's profile: 2 digests beat 8 by ~2× end-to-end), and
     fixed-width hex slices keep lexicographic-min ≡ numeric-min,
-    bit-identical in any engine with standard md5.
+    bit-identical in any engine with standard md5. ``grams`` holds
+    ``md5(g)`` of every distinct 3-shingle (``shingles_col`` is distinct
+    per doc, so the array is too, and an intersection's size is the
+    match count).
 
     Explode shingles once, then k parallel min-aggregates: building the
     shingle array inside k separate array_min expressions would rebuild
     it k times per row (Catalyst inlines collapsed projections). The
-    groupBy gets map-side partial min()s, so the shuffle carries only k
-    short hex strings per document.
+    min()s combine map-side; the ``collect_list`` ships each gram hash
+    once. Documents with no shingles (fewer than 3 tokens) vanish in the
+    explode and come back through the left join with null signatures and
+    a null ``grams``.
+
+    Large-doc assumption: the verifiers carry a doc's whole ``grams``
+    array on every candidate row it appears in, and one task builds it.
+    A doc's distinct-shingle set is assumed to fit comfortably in one row
+    (33 bytes per gram: a 10^5-shingle book is ~3 MB). A corpus of
+    multi-MB shingle sets with many candidate partners inflates per-row
+    memory and shuffle payload; no per-doc gram-count bound is enforced.
     """
     exploded = df.select("doc_id", F.explode(shingles_col(F.col(text_col))).alias("g"))
     n_digests = (k + 3) // 4
     digests = exploded.select(
         "doc_id",
+        F.md5("g").alias("gram_hash"),
         *[
             F.md5(F.concat(F.col("g"), F.lit(f":{d}"))).alias(f"h{d}")
             for d in range(n_digests)
@@ -103,10 +128,15 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = MINHASH_K
         F.min(F.substring(F.col(f"h{i // 4}"), (i % 4) * 8 + 1, 8)).alias(f"sig_{i}")
         for i in range(k)
     ]
-    sigs = digests.groupBy("doc_id").agg(*aggs)
-    # Documents with no shingles (fewer than n tokens) vanish in the
-    # explode; restore them with null signatures.
-    return df.select("doc_id").join(sigs, "doc_id", "left")
+    sk = digests.groupBy("doc_id").agg(*aggs, F.collect_list("gram_hash").alias("grams"))
+    return df.select("doc_id").join(sk, "doc_id", "left")
+
+
+def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
+    """Per-document MinHash signature from k independent hash slots:
+    ``_sketch`` without its gram array (null signatures for gram-less
+    docs)."""
+    return _sketch(df, text_col, k).drop("grams")
 
 
 def minhash_bands(signatures: DataFrame, k: int = MINHASH_K, band_size: int = BAND_SIZE) -> DataFrame:
@@ -137,9 +167,9 @@ def minhash_bands(signatures: DataFrame, k: int = MINHASH_K, band_size: int = BA
     )
 
 
-def minhash_candidate_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Distinct candidate pairs that collide in at least one LSH band."""
-    bands = minhash_bands(minhash_signatures(df, text_col))
+def _candidate_pairs(signatures: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs colliding in at least one LSH band."""
+    bands = minhash_bands(signatures)
     left = bands.alias("l")
     right = bands.alias("r")
     return (
@@ -154,19 +184,50 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def minhash_candidate_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Distinct candidate pairs that collide in at least one LSH band."""
+    return _candidate_pairs(minhash_signatures(df, text_col))
+
+
+def _verified_pairs(sketch: DataFrame) -> DataFrame:
+    """``minhash_verified_pairs`` over a ``_sketch`` frame."""
+
+    def side(s: str) -> DataFrame:
+        return sketch.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("grams").alias(f"_g{s}"),
+            F.size("grams").alias(f"_n{s}"),
+        )
+
+    n_common = F.size(F.array_intersect(F.col("_ga"), F.col("_gb"))).cast("long")
+    n_union = (F.col("_na") + F.col("_nb")).cast("long") - n_common
+    return (
+        _candidate_pairs(sketch)
+        .join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            n_common.alias("n_common"),
+            n_union.alias("n_union"),
+        )
+        .where(F.lit(2) * F.col("n_common") >= F.col("n_union"))
+    )
+
+
 def minhash_verified_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     """LSH candidates + exact-Jaccard verification within ONE frame.
 
     The self-join twin of ``dedup_against_index``'s batch-vs-index
-    verify: identical gram definition (``shingles_col`` — the distinct
-    3-shingles ``gram_hashes`` digests, so the intersection size equals
-    the index path's md5-match count) and identical acceptance rule
-    (``2 * n_common >= n_union``, J ≥ 0.5). Band-bucket join generates
-    candidates; only candidates pay the verify — the standard
-    sub-quadratic shape, O(frame) for a micro-batch.
+    verify: identical gram definition (both intersect ``_sketch``'s
+    distinct gram-hash arrays, the rows the index's ``grams/`` table
+    persists) and identical acceptance rule (``2 * n_common >= n_union``,
+    J ≥ 0.5). Band-bucket join generates candidates; only candidates pay
+    the verify — the standard sub-quadratic shape, O(frame) for a
+    micro-batch.
 
     Verify shape: each candidate pair row carries both docs' distinct
-    shingle ARRAYS and intersects them in place (``array_intersect`` —
+    gram ARRAYS and intersects them in place (``array_intersect`` —
     a per-row hash set that fits L1/L2), instead of exploding pairs ×
     grams into a |cands|·|grams/doc|-row join probed against a
     frame-scale (doc, gram) hash relation at DRAM latency. Same rows
@@ -179,35 +240,11 @@ def minhash_verified_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``minhash_verified_dedup`` registry query has always run.
     Gram-less docs (< 3 tokens) carry null signatures and never become
     candidates (``minhash_bands`` drops null buckets), so inner-joining
-    the shingle arrays loses no pair.
+    the gram arrays loses no pair.
 
     Returns (doc_a, doc_b, n_common, n_union) with ``doc_a < doc_b``.
     """
-    cands = minhash_candidate_pairs(df, text_col)
-    grams = df.select("doc_id", shingles_col(F.col(text_col)).alias("_gs"))
-    ga = grams.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("_gs").alias("_ga"),
-        F.size("_gs").alias("_na"),
-    )
-    gb = grams.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("_gs").alias("_gb"),
-        F.size("_gs").alias("_nb"),
-    )
-    n_common = F.size(F.array_intersect(F.col("_ga"), F.col("_gb"))).cast("long")
-    n_union = (F.col("_na") + F.col("_nb")).cast("long") - n_common
-    return (
-        cands.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_common.alias("n_common"),
-            n_union.alias("n_union"),
-        )
-        .where(F.lit(2) * F.col("n_common") >= F.col("n_union"))
-    )
+    return _verified_pairs(_sketch(df, text_col))
 
 
 def size_bucket_keys(n_grams: Column, threshold: float) -> Column:
@@ -393,20 +430,6 @@ def repeated_passages(
     )
 
 
-def gram_hashes(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, gram_hash) rows — md5 of each distinct 3-gram shingle.
-
-    The ONE definition both sides of the incremental index use: the index
-    writer persists these rows and the batch side recomputes them at
-    query time, so a change to the shingle width or hash salt can never
-    desynchronize the two (every candidate would silently fail
-    verification if it did).
-    """
-    return df.select(
-        "doc_id", F.explode(shingles_col(F.col(text_col))).alias("_g")
-    ).select("doc_id", F.md5("_g").alias("gram_hash"))
-
-
 #: Hex-prefix width for the index tables' ``pfx`` partition column: 2 hex
 #: chars → 256 partitions per batch. Wide enough that a small probe batch
 #: prunes most index files, narrow enough that a batch write doesn't
@@ -426,26 +449,38 @@ def _hex_pfx(col: Column) -> Column:
     return F.conv(F.substring(col, 1, _PFX_HEX_CHARS), 16, 10).cast("int")
 
 
-def _index_tables(df: DataFrame, batch_id: int, text_col: str):
-    """(bands, grams, counts) frames for one batch, with partition cols."""
+def _write_index(sketch: DataFrame, path: str, batch_id: int) -> None:
+    """The ONE index writer: a checkpointed ``_sketch`` frame's bands,
+    exploded ``grams`` and array sizes (gram-less docs: no rows) become
+    index batch ``batch_id`` — 0 statically overwrites each table (the
+    full build), any other id dynamically overwrites its own partitions."""
+    base = path.rstrip("/")
     bid = F.lit(batch_id).cast("int")
-    bands = (
-        minhash_bands(minhash_signatures(df, text_col))
-        .withColumn("batch_id", bid)
-        .withColumn("pfx", _hex_pfx(F.col("bucket")))
+    bands = minhash_bands(sketch).withColumn("pfx", _hex_pfx(F.col("bucket")))
+    grams = sketch.select(
+        "doc_id", F.explode("grams").alias("gram_hash")
+    ).withColumn("pfx", _hex_pfx(F.col("gram_hash")))
+    counts = sketch.where(F.col("grams").isNotNull()).select(
+        "doc_id", F.size("grams").cast("long").alias("n_grams")
     )
-    grams = (
-        gram_hashes(df, text_col)
-        .withColumn("batch_id", bid)
-        .withColumn("pfx", _hex_pfx(F.col("gram_hash")))
-    )
-    counts = (
-        gram_hashes(df, text_col)
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("n_grams"))
-        .withColumn("batch_id", bid)
-    )
-    return bands, grams, counts
+    mode_opt = "dynamic" if batch_id else "static"
+    for frame, table, parts in (
+        # Cluster on the partition key before the partitioned write:
+        # without it every input task writes a file into every pfx dir it
+        # touches — O(tasks × 256) tiny files (measured: thousands at test
+        # scale, a metadata catastrophe at corpus scale). The repartition
+        # keys each dir to exactly one task → one file per partition dir.
+        (bands.repartition("pfx"), "bands", ["batch_id", "pfx"]),
+        (grams.repartition("pfx"), "grams", ["batch_id", "pfx"]),
+        (counts, "counts", ["batch_id"]),
+    ):
+        (
+            frame.withColumn("batch_id", bid)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", mode_opt)
+            .partitionBy(*parts)
+            .parquet(f"{base}/{table}")
+        )
 
 
 def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> None:
@@ -453,13 +488,14 @@ def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> 
 
     Three narrow parquet tables under ``path``: ``bands/`` — the LSH
     band table ``(doc_id, band_id, bucket)`` that generates candidates —
-    ``grams/`` — ``gram_hashes`` rows that verify them with exact
-    Jaccard — and ``counts/`` — per-doc gram totals, so query time never
+    ``grams/`` — ``(doc_id, gram_hash)`` rows, the md5 of each distinct
+    3-shingle, that verify them with exact Jaccard — and ``counts/`` —
+    per-doc gram totals ``(doc_id, n_grams)``, so query time never
     aggregates the corpus-scale gram table (the batch's few candidates
-    join the tiny counts table instead). Storing hashes instead of gram
+    join the tiny counts table instead). All three come from one
+    ``_sketch`` pass (``_write_index``). Storing hashes instead of gram
     arrays keeps the index a fraction of corpus size, and the verify
-    runs as a partial-agg hash join, never re-reading the indexed
-    corpus's text.
+    never re-reads the indexed corpus's text.
 
     Layout (all three tables): hive-partitioned by ``batch_id`` — the
     full-build writes ``batch_id=0``; ``append_to_minhash_index`` grows
@@ -469,20 +505,7 @@ def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> 
     prune index files by partition instead of scanning the corpus-scale
     tables. Overwrite-idempotent: a full rebuild is a plain re-run.
     """
-    base = path.rstrip("/")
-    bands, grams, counts = _index_tables(df, 0, text_col)
-    # Cluster on the partition key before the partitioned write: without
-    # it every input task writes a file into every pfx dir it touches —
-    # O(tasks × 256) tiny files (measured: thousands at test scale, a
-    # metadata catastrophe at corpus scale). The repartition keys each
-    # dir to exactly one task → one well-sized file per partition dir.
-    bands.repartition("pfx").write.mode("overwrite").partitionBy(
-        "batch_id", "pfx"
-    ).parquet(f"{base}/bands")
-    grams.repartition("pfx").write.mode("overwrite").partitionBy(
-        "batch_id", "pfx"
-    ).parquet(f"{base}/grams")
-    counts.write.mode("overwrite").partitionBy("batch_id").parquet(f"{base}/counts")
+    _write_index(_sketch(df, text_col).localCheckpoint(), path, 0)
 
 
 def append_to_minhash_index(
@@ -497,31 +520,18 @@ def append_to_minhash_index(
     a crashed append (at-least-once ingest) rewrites the same partitions
     instead of appending duplicates — the same idempotency contract as
     every ``batch_id``-partitioned table (``operators/index_maintenance.py``).
+    A missing index path is created.
 
     Contract: ``batch_id`` must be unique per logical batch (> 0; 0 is
     the full build) and ``df`` must hold only doc_ids NOT already in the
     index — i.e. the docs ``dedup_against_index`` marked novel. A doc
     indexed under two batch_ids would double its gram rows and inflate
-    ``n_common``; ``ingest_batch_against_index`` sequences the two calls
+    ``n_common``; ``ingest_batch_against_index`` sequences the two steps
     correctly.
     """
     if batch_id == 0:
         raise ValueError("batch_id 0 is reserved for the full build")
-    base = path.rstrip("/")
-    bands, grams, counts = _index_tables(df, batch_id, text_col)
-    for frame, table, parts in (
-        # bands/grams cluster on pfx first — one file per partition dir,
-        # not one per (task × dir); see write_minhash_index.
-        (bands.repartition("pfx"), "bands", ["batch_id", "pfx"]),
-        (grams.repartition("pfx"), "grams", ["batch_id", "pfx"]),
-        (counts, "counts", ["batch_id"]),
-    ):
-        (
-            frame.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(f"{base}/{table}")
-        )
+    _write_index(_sketch(df, text_col).localCheckpoint(), path, batch_id)
 
 
 def dedup_against_index(
@@ -536,15 +546,15 @@ def dedup_against_index(
 
     The incremental-curation shape: the landed corpus is touched only
     through its index tables, so dedup cost scales with the batch, not
-    the corpus. Batch docs band with the same hash family as the index
-    (``minhash_signatures``/``minhash_bands``); a band-bucket join — the
-    same narrow-key shuffle as ``minhash_candidate_pairs``, with the
-    index side replacing the self-join — yields (batch doc, indexed doc)
-    candidates, and exact Jaccard verifies them by collecting each
-    side's gram hashes into per-doc arrays and intersecting in place on
-    the candidate row (``array_intersect``; shingles are distinct per
-    doc, so intersection size == the match count the former
-    ``(dup_of, gram_hash)`` join produced, without the pair×gram
+    the corpus. The batch is sketched (``_sketch``, materialized once by
+    localCheckpoint) with the same hash family the index was written
+    with; a band-bucket join — the same narrow-key shuffle as
+    ``minhash_candidate_pairs``, with the index side replacing the
+    self-join — yields (batch doc, indexed doc) candidates, and exact
+    Jaccard verifies them by intersecting, on the candidate row, the
+    batch doc's sketch array with the indexed doc's gram hashes
+    collected into one array (``array_intersect``; grams are distinct
+    per doc, so intersection size == match count, without a pair×gram
     explosion probed against a hash relation at DRAM latency — see
     ``minhash_verified_pairs``). The index-side arrays are built from
     the pfx-PRUNED gram scan, which loses no intersection element: a
@@ -555,19 +565,27 @@ def dedup_against_index(
     ``2 * n_common >= n_union`` (J >= 0.5).
 
     Index-side scans PARTITION-PRUNE on the batch's realized ``pfx``
-    sets: the batch bands/grams are materialized once (localCheckpoint —
-    they feed two consumers each), their distinct hex prefixes collected
-    (bounded: ≤256 ints each), and pushed as partition filters on
-    ``bands/`` and ``grams/`` — a small probe batch reads a handful of
-    index files instead of the corpus-scale tables. ``exclude_batch_id``
-    additionally prunes that batch's own partitions, so an at-least-once
-    replay of ingest batch N never sees the half-appended rows of its
-    failed attempt (which would flag every replayed doc as a dup of
-    itself and lose it).
+    sets: both sets (band buckets, gram hashes; ≤256 ints each) come
+    from ONE collect over the checkpointed sketch and are pushed as
+    partition filters on ``bands/`` and ``grams/`` — a small probe batch
+    reads a handful of index files instead of the corpus-scale tables.
+    ``exclude_batch_id`` additionally prunes that batch's own
+    partitions, so an at-least-once replay of ingest batch N never sees
+    the half-appended rows of its failed attempt (which would flag every
+    replayed doc as a dup of itself and lose it).
 
     Returns (doc_id, dup_of, n_common, n_union) — one row per verified
     (batch, indexed) pair; batch docs with no row are novel.
     """
+    return _probe_index(
+        spark, _sketch(batch, text_col).localCheckpoint(), path, exclude_batch_id
+    )
+
+
+def _probe_index(
+    spark, sketch: DataFrame, path: str, exclude_batch_id: int | None
+) -> DataFrame:
+    """``dedup_against_index`` for a materialized ``_sketch`` frame."""
     base = path.rstrip("/")
     idx_bands = spark.read.parquet(f"{base}/bands")
     idx_grams = spark.read.parquet(f"{base}/grams")
@@ -581,12 +599,18 @@ def dedup_against_index(
         n_idx = n_idx.where(F.col("batch_id") != exclude_batch_id)
     n_idx = n_idx.select("doc_id", F.col("n_grams").alias("_ni"))
 
-    b_bands = minhash_bands(minhash_signatures(batch, text_col)).localCheckpoint()
-    band_pfx = [
-        r[0]
-        for r in b_bands.select(_hex_pfx(F.col("bucket")).alias("p")).distinct().collect()
-    ]
-    idx_bands = idx_bands.where(F.col("pfx").isin(band_pfx or [-1]))
+    b_bands = minhash_bands(sketch)
+    b_grams = sketch.select(F.explode("grams").alias("gram_hash"))
+    pfx: dict[str, list[int]] = {"bands": [], "grams": []}
+    for table, p in (
+        b_bands.select(F.lit("bands"), _hex_pfx(F.col("bucket")))
+        .union(b_grams.select(F.lit("grams"), _hex_pfx(F.col("gram_hash"))))
+        .distinct()
+        .collect()
+    ):
+        pfx[table].append(p)
+    idx_bands = idx_bands.where(F.col("pfx").isin(pfx["bands"] or [-1]))
+    idx_grams = idx_grams.where(F.col("pfx").isin(pfx["grams"] or [-1]))
     cands = (
         b_bands.alias("b")
         .join(
@@ -600,14 +624,6 @@ def dedup_against_index(
         )
         .distinct()
     )
-    b_grams = gram_hashes(batch, text_col).localCheckpoint()
-    gram_pfx = [
-        r[0]
-        for r in b_grams.select(_hex_pfx(F.col("gram_hash")).alias("p"))
-        .distinct()
-        .collect()
-    ]
-    idx_grams = idx_grams.where(F.col("pfx").isin(gram_pfx or [-1]))
     # Prefilter the corpus-scale gram table with a BROADCAST semi-join on
     # the (batch-scale) candidate set: grams/ is scanned but never
     # shuffled — only the candidates' gram rows enter the array-collect
@@ -618,23 +634,18 @@ def dedup_against_index(
         .join(F.broadcast(cands.select("dup_of").distinct()), "dup_of", "left_semi")
     )
     # Verify by in-place array intersection (the minhash_verified_pairs
-    # shape): each side's distinct gram hashes are collected ONCE per doc
-    # and carried on the candidate row, so a candidate index doc's grams
-    # ship once instead of once per pair and the intersection is a
-    # per-row set that fits L1/L2 — not a pair×gram explosion probed
-    # against a candidate-corpus-scale hash relation at DRAM latency
-    # (measured on the intra twin: 2× faster at local[8], 2→8 phase
-    # scaling 0.551 → 0.867). Intersection size == match count because
-    # grams are distinct per doc on both sides — the same invariant the
-    # previous (dup_of, gram_hash) join counted on.
-    b_arr = b_grams.groupBy("doc_id").agg(
-        F.collect_list("gram_hash").alias("_ba")
-    )
+    # shape): a candidate index doc's distinct gram hashes are collected
+    # ONCE and carried on the candidate row, so its grams ship once
+    # instead of once per pair and the intersection is a per-row set
+    # that fits L1/L2 — not a pair×gram explosion probed against a
+    # candidate-corpus-scale hash relation at DRAM latency (measured on
+    # the intra twin: 2× faster at local[8], 2→8 phase scaling 0.551 →
+    # 0.867). The batch side's arrays are the sketch's own.
     i_arr = cand_grams.groupBy("dup_of").agg(
         F.collect_list("gram_hash").alias("_ia")
     )
     return (
-        cands.join(b_arr, "doc_id")
+        cands.join(sketch.select("doc_id", F.col("grams").alias("_ba")), "doc_id")
         .join(i_arr, "dup_of")
         .join(n_idx.withColumnRenamed("doc_id", "dup_of"), "dup_of")
         .select(
@@ -656,20 +667,13 @@ def dedup_against_index(
     )
 
 
-def intra_batch_dups(batch: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """(doc_id, dup_of) for docs near-duplicating a SMALLER-id doc in the
-    same frame — the greedy keeper rule ``ingest_batch_against_index``
-    applies before probing the index: per verified pair (doc_a < doc_b),
-    doc_b duplicates its best doc_a match (max n_common, min doc_a
-    tie-break); docs with no smaller-id match are the batch's keepers."""
-    pairs = minhash_verified_pairs(batch, text_col=text_col)
+def _best_match(pairs: DataFrame, key: str, match: str) -> DataFrame:
+    """(doc_id, dup_of): per ``key`` doc, its best ``match`` — max
+    n_common, min id tie-break."""
     return (
-        pairs.groupBy("doc_b")
-        .agg(F.min(F.struct(-F.col("n_common"), F.col("doc_a"))).alias("_b"))
-        .select(
-            F.col("doc_b").alias("doc_id"),
-            F.col("_b.doc_a").alias("dup_of"),
-        )
+        pairs.groupBy(key)
+        .agg(F.min(F.struct(-F.col("n_common"), F.col(match))).alias("_b"))
+        .select(F.col(key).alias("doc_id"), F.col(f"_b.{match}").alias("dup_of"))
     )
 
 
@@ -680,7 +684,6 @@ def ingest_batch_against_index(
     *,
     batch_id: int,
     text_col: str = "text",
-    intra_batch: bool = True,
 ) -> DataFrame:
     """One incremental-ingest step: dedup a batch, then GROW the index.
 
@@ -691,50 +694,65 @@ def ingest_batch_against_index(
     without ever re-signaturing the landed corpus. Per-call cost is
     O(batch) + the pruned index probe; the corpus is never rewritten.
 
-    ``intra_batch=True`` (default) first runs the same verified-pairs
-    rule WITHIN the batch (``minhash_verified_pairs``): two near-dup
-    docs arriving in the same batch no longer both land as "novel" —
-    the greedy smaller-id keeper survives (per pair, ``doc_b`` is
-    flagged as ``dup_of`` its best ``doc_a`` match: max n_common, min
-    doc_a tie-break) and only keepers probe and enter the index.
-    Chain caveat: in a near-dup chain a → b → c where (a, c) is not
-    itself a verified pair, c's ``dup_of`` points at b, which was also
-    dropped (its own dup_of is a) — ``dup_of`` names the matched
-    document, not the cluster representative; run ``dedup_components``
-    over the pair set when canonical cluster ids are needed.
+    The batch is sketched ONCE (``_sketch``, checkpointed) and all three
+    steps derive from that frame. First the verified-pairs rule runs
+    WITHIN the batch, so two near-dup docs arriving in the same batch
+    never both land as "novel": the greedy smaller-id keeper survives
+    (per pair, ``doc_b`` is flagged as ``dup_of`` its best ``doc_a``
+    match: max n_common, min doc_a tie-break). Then the sketch probes
+    the index; only keepers take an index match, and only novel keepers'
+    sketch rows are appended. An index path where nothing has landed
+    yet — missing, or a table dir a killed first write left with no
+    committed files — is an empty index whose tables the append creates;
+    any other read failure propagates. Chain caveat: in a near-dup chain
+    a → b → c where (a, c) is not itself a verified pair, c's ``dup_of``
+    points at b, which was also dropped (its own dup_of is a) —
+    ``dup_of`` names the matched document, not the cluster
+    representative; run ``dedup_components`` over the pair set when
+    canonical cluster ids are needed.
 
-    At-least-once safe: the dedup pass excludes ``batch_id``'s own
-    partitions (a replay after a half-completed append would otherwise
-    see its own docs in the index, flag them as self-dups, and drop
-    them), and the append overwrites only this batch's partitions.
-    Intra-batch decisions are deterministic recomputations of the same
-    batch, so a replay reproduces them exactly. The dup decisions are
-    materialized (localCheckpoint) BEFORE the append, because appending
-    mutates tables the decision plan scans.
+    At-least-once safe: the probe excludes ``batch_id``'s own partitions
+    (a replay after a half-completed append would otherwise see its own
+    docs in the index, flag them as self-dups, and drop them), and the
+    append overwrites only this batch's partitions. Intra-batch
+    decisions are deterministic recomputations of the same batch, so a
+    replay reproduces them exactly. The dup decisions are materialized
+    (localCheckpoint) BEFORE the append, because appending mutates
+    tables the decision plan scans.
 
     Returns the batch annotated with ``dup_of`` (null ⇒ novel, and the
     doc is now indexed) — the best-match keeper (max n_common, min
     doc_id tie-break) when duplicated.
     """
-    if intra_batch:
-        intra = intra_batch_dups(batch, text_col=text_col).localCheckpoint()
-        keepers = batch.join(intra, "doc_id", "left_anti")
-    else:
-        intra = None
-        keepers = batch
-    dups = dedup_against_index(
-        spark, keepers, path, text_col=text_col, exclude_batch_id=batch_id
-    ).localCheckpoint()
-    best = (
-        dups.groupBy("doc_id")
-        .agg(F.min(F.struct(-F.col("n_common"), F.col("dup_of"))).alias("_b"))
-        .select("doc_id", F.col("_b.dup_of").alias("dup_of"))
+    from pyspark.errors import AnalysisException
+
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _nothing_landed,
     )
-    if intra is not None:
-        best = best.unionByName(intra)
+
+    if batch_id == 0:
+        raise ValueError("batch_id 0 is reserved for the full build")
+    sketch = _sketch(batch, text_col).localCheckpoint()
+    intra = _best_match(_verified_pairs(sketch), "doc_b", "doc_a")
+    try:
+        # The whole checkpointed sketch probes, not a keepers-only frame
+        # derived from it: a derived frame's size estimate (a product of
+        # join sizes) tips the planner into runtime bloom filters that
+        # read the index tables twice — measured 546 files vs 273.
+        dups = _probe_index(spark, sketch, path, batch_id)
+    except AnalysisException as ex:
+        if not _nothing_landed(ex):
+            raise
+        best = intra
+    else:
+        # An intra-batch dup keeps its intra-batch match.
+        best = intra.unionByName(
+            _best_match(dups, "doc_id", "dup_of").join(intra, "doc_id", "left_anti")
+        )
     annotated = batch.join(best, "doc_id", "left").localCheckpoint()
-    novel = annotated.where(F.col("dup_of").isNull()).drop("dup_of")
-    append_to_minhash_index(novel, path, batch_id=batch_id, text_col=text_col)
+    novel = annotated.where(F.col("dup_of").isNull()).select("doc_id")
+    novel_sketch = sketch.join(F.broadcast(novel), "doc_id", "left_semi")
+    _write_index(novel_sketch, path, batch_id)
     return annotated
 
 

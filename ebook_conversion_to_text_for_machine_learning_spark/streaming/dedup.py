@@ -15,15 +15,16 @@ Engine extensions (the reference is batch-only):
   guarantees no duplicate within the late-data horizon.
 
 - ``stream_near_dedup`` — the streaming incremental NEAR-dup loop:
-  every micro-batch runs ``operators.dedup.ingest_batch_against_index``
-  (dedup against the persisted minhash index, then grow the index by
-  the batch's novelties — O(batch) per step, corpus never re-read), so
-  a document near-duplicating ANYTHING the stream has ever landed is
-  flagged — including same-trigger arrivals, which the ingest step's
-  intra-batch pass (``minhash_verified_pairs`` within the micro-batch,
-  greedy smaller-id keeper) resolves before probing the index — with
-  no watermark horizon and state bounded by the on-disk index instead
-  of executor memory.
+  every micro-batch, the first one against a virgin index path included,
+  runs ``operators.dedup.ingest_batch_against_index`` (one MinHash +
+  gram-hash sketch of the micro-batch feeds the intra-batch pass, the
+  probe of the persisted minhash index and the append of the batch's
+  novelties — O(batch) per step, corpus never re-read), so a document
+  near-duplicating ANYTHING the stream has ever landed is flagged —
+  including same-trigger arrivals, which the intra-batch pass (greedy
+  smaller-id keeper) resolves before probing the index — with no
+  watermark horizon and state bounded by the on-disk index instead of
+  executor memory.
 """
 
 from __future__ import annotations
@@ -69,7 +70,8 @@ def stream_near_dedup(
     via ``ingest_batch_against_index``. Micro-batch N maps to index
     batch ``N + 1`` (index batch 0 is the initial ``write_minhash_index``
     full build of the landed corpus — run it before starting, or start
-    against a virgin path and the first batch bootstraps the tables).
+    against a virgin path: the ingest step treats an index where nothing
+    has landed as empty, and the first batch's append creates it).
 
     At-least-once safety is inherited wholesale: the ingest step
     excludes its own index partitions during dedup and overwrites only
@@ -86,18 +88,11 @@ def stream_near_dedup(
     batch is always retained with its replay-exclusion partition intact;
     only committed (never-replayed) batches merge into the base.
     """
-    from pyspark.errors import AnalysisException
-
     from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
-        append_to_minhash_index,
         ingest_batch_against_index,
-        intra_batch_dups,
     )
     from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
         compact_minhash_index,
-    )
-    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
-        _nothing_landed,
     )
     from ebook_conversion_to_text_for_machine_learning_spark.streaming.stream import (
         foreach_batch_stream,
@@ -105,27 +100,10 @@ def stream_near_dedup(
 
     def _process(batch_df, batch_id: int) -> None:
         session = batch_df.sparkSession
-        idx_batch = int(batch_id) + 1
-        try:
-            annotated = ingest_batch_against_index(
-                session, batch_df, index_path, batch_id=idx_batch, text_col=text_col
-            )
-        except AnalysisException as ex:
-            # Virgin index path (or an index dir a killed bootstrap left
-            # with no committed files): nothing landed ⇒ everything is
-            # novel, and the append CREATES the tables. Any other read
-            # failure must fail the batch so the stream retries.
-            if not _nothing_landed(ex):
-                raise
-            # The bootstrap batch still intra-batch dedups: two near-dup
-            # docs in the stream's very first trigger must not both land
-            # as novel (same rule the ingest step applies every trigger).
-            intra = intra_batch_dups(batch_df, text_col=text_col)
-            annotated = batch_df.join(intra, "doc_id", "left").localCheckpoint()
-            append_to_minhash_index(
-                annotated.where(F.col("dup_of").isNull()).drop("dup_of"),
-                index_path, batch_id=idx_batch, text_col=text_col,
-            )
+        annotated = ingest_batch_against_index(
+            session, batch_df, index_path, batch_id=int(batch_id) + 1,
+            text_col=text_col,
+        )
         annotated.write.mode("overwrite").parquet(
             f"{output_dir}/batch_id={batch_id}"
         )

@@ -206,8 +206,7 @@ def test_ingest_batch_against_index_loop(spark, tmp_path):
 def test_ingest_batch_intra_batch_near_dups(spark, tmp_path):
     """Two near-dup docs arriving in the SAME batch: the smaller-id
     keeper survives and is indexed; the other is flagged against it and
-    never enters the index (advice r4 #1). ``intra_batch=False`` keeps
-    the old probe-only behavior (both land as novel)."""
+    never enters the index (advice r4 #1)."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
         dedup_against_index,
         ingest_batch_against_index,
@@ -240,16 +239,154 @@ def test_ingest_batch_intra_batch_near_dups(spark, tmp_path):
     hits = {(r.doc_id, r.dup_of) for r in dedup_against_index(spark, probe, path).collect()}
     assert hits == {(20, 10)}
 
-    # legacy switch: both intra dups land as novel
-    path2 = str(tmp_path / "idx2")
-    write_minhash_index(_docs_df(spark, [(1, "en", far)]), path2)
-    out2 = {
-        r.doc_id: r.dup_of
-        for r in ingest_batch_against_index(
-            spark, batch, path2, batch_id=1, intra_batch=False
-        ).collect()
+
+def _index_rows(spark, path):
+    """{table: set of rows} of a minhash index, as read back."""
+    return {
+        t: {tuple(r) for r in spark.read.parquet(f"{path}/{t}").collect()}
+        for t in ("bands", "grams", "counts")
     }
-    assert out2 == {10: None, 11: None, 12: None, 13: 1}
+
+
+def test_ingest_batch_against_virgin_index(spark, tmp_path):
+    """An index path where nothing has landed — missing, or an index dir
+    or table dirs a killed first write left holding only ``_temporary/``
+    — is an empty index: the batch gets its intra-batch decisions only,
+    its keepers create bands/grams/counts, and the next batch's probe
+    finds them."""
+    import os
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
+        ingest_batch_against_index,
+    )
+
+    novel = "a copper lantern hangs alone in the harbor window tonight waiting quietly"
+    batch = _docs_df(
+        spark,
+        [(1, "en", BASE), (2, "en", BASE.replace("lazy", "sleepy")), (3, "en", novel)],
+    )
+    bare = tmp_path / "bare"
+    os.makedirs(bare / "_temporary" / "0")
+    killed = tmp_path / "killed"
+    for table in ("bands", "grams", "counts"):
+        os.makedirs(killed / table / "_temporary" / "0")
+    for path in (str(tmp_path / "virgin"), str(bare), str(killed)):
+        out = {
+            r.doc_id: r.dup_of
+            for r in ingest_batch_against_index(spark, batch, path, batch_id=1).collect()
+        }
+        assert out == {1: None, 2: 1, 3: None}
+        rows = _index_rows(spark, path)
+        assert {r[0] for r in rows["counts"]} == {1, 3}
+        assert {r[0] for r in rows["bands"]} == {1, 3}
+        assert {r[0] for r in rows["grams"]} == {1, 3}
+        later = _docs_df(
+            spark,
+            [
+                (10, "en", BASE.replace("lazy", "idle")),
+                (11, "en", novel.replace("copper", "brass")),
+            ],
+        )
+        out2 = {
+            r.doc_id: r.dup_of
+            for r in ingest_batch_against_index(spark, later, path, batch_id=2).collect()
+        }
+        assert out2 == {10: 1, 11: 3}
+
+
+def _reference_index_rows(docs, batch_id):
+    """bands/grams/counts rows of ``docs`` [(doc_id, text)] computed in
+    pure Python: salted-md5 slice MinHash over distinct word 3-shingles,
+    null buckets dropped, md5 of each distinct shingle."""
+    import hashlib
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
+        BAND_SIZE,
+        MINHASH_K,
+    )
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    bands, grams, counts = set(), set(), set()
+    for doc_id, text in docs:
+        toks = [t for t in text.split(" ") if t]
+        shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        if not shingles:
+            continue
+        sig = [
+            min(md5(f"{g}:{i // 4}")[(i % 4) * 8 : (i % 4) * 8 + 8] for g in shingles)
+            for i in range(MINHASH_K)
+        ]
+        for b in range(MINHASH_K // BAND_SIZE):
+            bucket = "|".join(sig[b * BAND_SIZE : (b + 1) * BAND_SIZE])
+            bands.add((doc_id, b, bucket, batch_id, int(bucket[:2], 16)))
+        for g in shingles:
+            h = md5(g)
+            grams.add((doc_id, h, batch_id, int(h[:2], 16)))
+        counts.add((doc_id, len(shingles), batch_id))
+    return {"bands": bands, "grams": grams, "counts": counts}
+
+
+def test_index_rows_match_python_reference(spark, tmp_path):
+    """The one index writer, pinned row by row against a pure-Python
+    reference on a corpus with a gram-less doc, a doc with repeated
+    shingles and a near-dup pair: the full build, an append and the
+    ingest step's novel append write the same rows for the same docs."""
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
+        append_to_minhash_index,
+        ingest_batch_against_index,
+        write_minhash_index,
+    )
+
+    docs = [
+        (1, "too short"),
+        (2, "la la la la la la la la then the end of the song la la la"),
+        (3, BASE),
+        (4, BASE.replace("lazy", "sleepy")),
+    ]
+    df = _docs_df(spark, [(d, "en", t) for d, t in docs])
+
+    built = str(tmp_path / "built")
+    write_minhash_index(df, built)
+    assert _index_rows(spark, built) == _reference_index_rows(docs, 0)
+
+    appended = str(tmp_path / "appended")
+    append_to_minhash_index(df, appended, batch_id=7)
+    assert _index_rows(spark, appended) == _reference_index_rows(docs, 7)
+
+    # ingest on a virgin path: doc 4 is an intra-batch dup of 3, so the
+    # novel append holds docs 1-3 (doc 1 gram-less: no rows at all)
+    ingested = str(tmp_path / "ingested")
+    out = {
+        r.doc_id: r.dup_of
+        for r in ingest_batch_against_index(spark, df, ingested, batch_id=7).collect()
+    }
+    assert out == {1: None, 2: None, 3: None, 4: 3}
+    assert _index_rows(spark, ingested) == _reference_index_rows(docs[:3], 7)
+
+
+def test_ingest_batch_sketches_once(spark, tmp_path, monkeypatch):
+    """One ingest call signs and shingles its batch once: ``_sketch``
+    runs once per call, whether the index is virgin or populated."""
+    from ebook_conversion_to_text_for_machine_learning_spark.operators import dedup
+
+    calls = []
+    real = dedup._sketch
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_sketch", counting)
+    path = str(tmp_path / "idx")
+    batch = _docs_df(spark, [(1, "en", BASE), (2, "en", BASE.replace("lazy", "sleepy"))])
+    dedup.ingest_batch_against_index(spark, batch, path, batch_id=1)
+    assert len(calls) == 1
+    probe = _docs_df(spark, [(10, "en", BASE.replace("lazy", "idle"))])
+    out = dedup.ingest_batch_against_index(spark, probe, path, batch_id=2)
+    assert len(calls) == 2
+    assert {r.doc_id: r.dup_of for r in out.collect()} == {10: 1}
 
 
 def test_minhash_verified_pairs_matches_driver_rule(spark):
