@@ -1226,8 +1226,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         emb = read_table(spark, sf_dir, "embeddings")
         # SemDeDup over the IVF cells: tau=0.35 is tuned to the synthetic
         # near-random corpus (real text embeddings run ~0.8); production
-        # path (Arrow assignment + per-cell numpy gram matrix) — the expr
-        # twin agrees, pinned by test_semantic_dedup_path_agreement.
+        # path (Arrow assignment + per-cell numpy gram matrix), checked by
+        # its oracle and by test_semantic_dedup_hand_built_exact.
         return S.semantic_dedup(emb, tau=0.35, target_cells=_IVF_TEST_CELLS)
 
     q["semantic_dedup"] = semantic_dedup

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
+    ngrams_col,
     tokens_col,
 )
 
@@ -61,16 +62,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (distinct), built with array lambdas — no explode.
-
-    Guarded for short docs: ``sequence(1, 0)`` in Spark would count DOWN,
-    so documents with fewer than ``n`` tokens yield an empty shingle set.
-    """
-    toks = tokens_col(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    return F.when(F.size(toks) >= n, F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    )).otherwise(F.array().cast("array<string>"))
+    """Word n-gram shingles (distinct): ``text_stats.ngrams_col`` without
+    repeats, so documents with fewer than ``n`` tokens yield an empty
+    shingle set."""
+    return F.array_distinct(ngrams_col(text, n))
 
 
 def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
@@ -103,9 +98,9 @@ def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFr
     shingle array inside k separate array_min expressions would rebuild
     it k times per row (Catalyst inlines collapsed projections). The
     min()s combine map-side; the ``collect_list`` ships each gram hash
-    once. Documents with no shingles (fewer than 3 tokens) vanish in the
-    explode and come back through the left join with null signatures and
-    a null ``grams``.
+    once. Documents with no shingles (fewer than 3 tokens) survive the
+    ``explode_outer`` as one null-gram row, so they keep null signatures
+    and a null ``grams`` without a second read of ``df``.
 
     Large-doc assumption: the verifiers carry a doc's whole ``grams``
     array on every candidate row it appears in, and one task builds it.
@@ -114,7 +109,7 @@ def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFr
     multi-MB shingle sets with many candidate partners inflates per-row
     memory and shuffle payload; no per-doc gram-count bound is enforced.
     """
-    exploded = df.select("doc_id", F.explode(shingles_col(F.col(text_col))).alias("g"))
+    exploded = df.select("doc_id", F.explode_outer(shingles_col(F.col(text_col))).alias("g"))
     n_digests = (k + 3) // 4
     digests = exploded.select(
         "doc_id",
@@ -128,8 +123,10 @@ def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFr
         F.min(F.substring(F.col(f"h{i // 4}"), (i % 4) * 8 + 1, 8)).alias(f"sig_{i}")
         for i in range(k)
     ]
-    sk = digests.groupBy("doc_id").agg(*aggs, F.collect_list("gram_hash").alias("grams"))
-    return df.select("doc_id").join(sk, "doc_id", "left")
+    grams = F.collect_list("gram_hash")
+    return digests.groupBy("doc_id").agg(
+        *aggs, F.when(F.size(grams) > 0, grams).alias("grams")
+    )
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:

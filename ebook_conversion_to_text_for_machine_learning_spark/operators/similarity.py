@@ -79,22 +79,45 @@ def _centroid_matrix(centroids: list):
     import numpy as np
 
     ids = np.array([c[0] for c in centroids], dtype=np.int64)
-    mat = np.array([c[1] for c in centroids], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    return ids, mat / norms
+    return ids, _unit_rows(np.array([c[1] for c in centroids], dtype=np.float64))
 
 
-def _unit_rows(values) -> "object":
-    """Stack an Arrow batch's vector column into unit rows (zero-norm
-    rows pass through as zeros — cosine 0 to everything, same rule as
-    ``_centroid_matrix``)."""
+def _unit_rows(vecs):
+    """L2-normalized rows of a float64 matrix; zero-norm rows pass
+    through as zeros (cosine 0 to everything)."""
     import numpy as np
 
-    vecs = np.stack([np.asarray(v, dtype=np.float64) for v in values])
     norms = np.linalg.norm(vecs, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
     return vecs / norms
+
+
+def _matrix(arr, dtype):
+    """(n, d) ``dtype`` ndarray of an Arrow ``list<number>`` Array or
+    ChunkedArray — the one list→matrix decode of every kernel here.
+
+    ``flatten()`` (not ``.values``) reads only the array's own rows, so a
+    sliced batch whose offsets do not start at 0 decodes correctly. Like
+    a per-row stack of the vectors it raises ``ValueError`` on a null row
+    or a ragged row; row lengths are checked one by one, so a ragged column
+    whose total length happens to equal ``n·d`` cannot reshape into
+    misaligned rows. A null component raises too, instead of decoding
+    as NaN."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        raise ValueError(f"{arr.null_count} null vector row(s)")
+    lens = np.diff(arr.offsets.to_numpy())
+    d = int(lens[0]) if len(lens) else 0
+    if (lens != d).any():
+        raise ValueError(f"ragged vector column: row lengths {lens.min()}..{lens.max()}")
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError(f"{flat.null_count} null vector component(s)")
+    return flat.to_numpy(zero_copy_only=False).astype(dtype, copy=False).reshape(len(arr), d)
 
 
 def cosine_topk(
@@ -259,37 +282,35 @@ def lsh_banded_signatures_arrow(
     (~1e-13); a path-agreement test pins this on the test corpus, exactly
     like ``ivf_assign_arrow``.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     planes = np.array(
         hyperplanes(dim, n_bands * band_planes), dtype=np.float64
     )  # (P, dim)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it):
         for batch in it:
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )
-            bits = (vecs @ planes.T) > 0  # (n, P) booleans
-            ids = batch[id_col].to_numpy()
-            out_ids, out_bands, out_buckets = [], [], []
-            for b in range(n_bands):
-                chunk = bits[:, b * band_planes : (b + 1) * band_planes]
-                buckets = [
-                    "".join("1" if x else "0" for x in row) for row in chunk
-                ]
-                out_ids.extend(ids)
-                out_bands.extend([b] * len(ids))
-                out_buckets.extend(buckets)
-            yield pd.DataFrame(
-                {"vec_id": out_ids, "band_id": out_bands, "bucket": out_buckets}
+            n = batch.num_rows
+            bits = (_matrix(batch.column(1), np.float64) @ planes.T) > 0  # (n, P)
+            # Band-major rows; each bucket is its band's band_planes
+            # '0'/'1' bytes, laid out back to back as one string buffer.
+            chars = np.ascontiguousarray(
+                bits.reshape(n, n_bands, band_planes).transpose(1, 0, 2), dtype=np.uint8
+            ) + ord("0")
+            offsets = np.arange(0, chars.size + 1, band_planes, dtype=np.int32)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "vec_id": batch.column(0).take(np.tile(np.arange(n), n_bands)),
+                    "band_id": np.repeat(np.arange(n_bands, dtype=np.int32), n),
+                    "bucket": pa.StringArray.from_buffers(
+                        n * n_bands, pa.py_buffer(offsets), pa.py_buffer(chars)
+                    ),
+                }
             )
 
     id_type = dict(df.dtypes)[id_col]
-    return df.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
+    return df.select(id_col, vec_col).mapInArrow(
         batches, schema=f"vec_id {id_type}, band_id int, bucket string"
     )
 
@@ -409,10 +430,8 @@ def ivf_assign_arrow(
     noise. Centroids arrive sorted by id, so numpy argmax's first-match
     rule over the rounded scores reproduces the min-id tie-break.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     ids, mat = _centroid_matrix(centroids)
 
@@ -423,15 +442,18 @@ def ivf_assign_arrow(
         # (ivf_ann_topk) needs no corpus self-join to refetch it.
         schema += f", {vec_col} {vec_type}"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it):
         for batch in it:
-            best = np.argmax(np.round(_unit_rows(batch[vec_col]) @ mat.T, 4), axis=1)
-            out = {"vec_id": batch[id_col].astype("int64"), "cell_id": ids[best]}
+            unit = _unit_rows(_matrix(batch.column(1), np.float64))
+            best = np.argmax(np.round(unit @ mat.T, 4), axis=1)
+            out = {"vec_id": batch.column(0), "cell_id": ids[best]}
             if keep_vec:
-                out[vec_col] = batch[vec_col]
-            yield pd.DataFrame(out)
+                out[vec_col] = batch.column(1)
+            yield pa.RecordBatch.from_pydict(out)
 
-    return corpus.select(id_col, vec_col).mapInPandas(batches, schema=schema)
+    return corpus.select(F.col(id_col).cast("long"), vec_col).mapInArrow(
+        batches, schema=schema
+    )
 
 
 def ivf_probe_cells_arrow(
@@ -455,52 +477,61 @@ def ivf_probe_cells_arrow(
     min-id tie-break because ``ivf_centroids`` returns centroids sorted by
     id. Emits (probe_id, probe_vec, probe_cell), ``nprobe`` rows per probe.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     ids, mat = _centroid_matrix(centroids)
-    n_take = min(nprobe, len(ids))
 
     vec_type = dict(probes.dtypes)[vec_col]
     id_type = dict(probes.dtypes)[id_col]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it):
         for batch in it:
-            cos = np.round(_unit_rows(batch[vec_col]) @ mat.T, 4)  # (n, cells)
-            # Stable sort on -cos: ties fall back to column order == id order.
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :n_take]
-            n = len(batch)
-            yield pd.DataFrame(
+            cells = _probe_cell_assign(_matrix(batch.column(1), np.float64), ids, mat, nprobe)
+            rows = np.repeat(np.arange(batch.num_rows), cells.shape[1])
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "probe_id": batch[id_col].to_numpy().repeat(n_take),
-                    "probe_vec": [
-                        v for v in batch[vec_col] for _ in range(n_take)
-                    ],
-                    "probe_cell": ids[top].ravel(),
+                    "probe_id": batch.column(0).take(rows),
+                    "probe_vec": batch.column(1).take(rows),
+                    "probe_cell": cells.ravel(),
                 }
             )
 
-    return probes.select(id_col, vec_col).mapInPandas(
+    return probes.select(id_col, vec_col).mapInArrow(
         batches, schema=f"probe_id {id_type}, probe_vec {vec_type}, probe_cell long"
     )
 
 
-def _probe_cell_assign(rows, centroids, nprobe: int):
-    """(P, min(nprobe, cells)) cell-id matrix for pre-collected
-    ``(id, vec)`` rows, aligned to the rows' order — the driver-side
-    twin of ``ivf_probe_cells_arrow``'s per-batch math through the
-    identical helpers (``_unit_rows`` @ ``_centroid_matrix``,
-    round(·,4), stable argsort → min-id tie-break): bit-identical
-    assignments."""
+def _probe_cell_assign(vecs, ids, mat, nprobe: int):
+    """(n, min(nprobe, cells)) probed cell ids per row of a float64
+    vector matrix against a ``_centroid_matrix`` codebook — the one
+    probe-cell ranking, shared by ``ivf_probe_cells_arrow`` and
+    ``pq_adc_cell_scan_arrow``: (round(cos, 4) DESC, centroid_id ASC).
+    The stable sort on -cos breaks ties by column order, which is id
+    order."""
     import numpy as np
 
-    ids, mat = _centroid_matrix(centroids)
-    n_take = min(nprobe, len(ids))
-    cos = np.round(_unit_rows([r[1] for r in rows]) @ mat.T, 4)
-    top = np.argsort(-cos, axis=1, kind="stable")[:, :n_take]
-    return ids[top]
+    cos = np.round(_unit_rows(vecs) @ mat.T, 4)  # (n, cells)
+    return ids[np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]]
+
+
+def _partial_sums(keys, vals, n_keys: int):
+    """One batch's Lloyd partial sums: the keys with members, and the
+    ``pos``/``psum``/``pcnt`` output columns — per member key, one row
+    per component of its summed ``vals`` rows, with the member count.
+    ``np.add.at`` adds each key's rows in row order."""
+    import numpy as np
+
+    d = vals.shape[1]
+    acc = np.zeros((n_keys, d))
+    np.add.at(acc, keys, vals)
+    cnt = np.bincount(keys, minlength=n_keys)
+    nz = np.flatnonzero(cnt)
+    return nz, {
+        "pos": np.tile(np.arange(d, dtype=np.int32), nz.size),
+        "psum": acc[nz].ravel(),
+        "pcnt": np.repeat(cnt[nz], d).astype(np.int64),
+    }
 
 
 def ivf_kmeans_centroids(
@@ -550,10 +581,8 @@ def ivf_kmeans_centroids(
     x10k floor-round pattern before summation at the cost of one extra
     rounding per member vector.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     cents = ivf_centroids(
         corpus, target_cells=target_cells, stride=stride,
@@ -564,29 +593,19 @@ def ivf_kmeans_centroids(
     for _ in range(max(0, iters)):
         ids, mat = _centroid_matrix(cents)
 
-        def batches(
-            it: Iterator[pd.DataFrame], _ids=ids, _mat=mat
-        ) -> Iterator[pd.DataFrame]:
+        def batches(it, _ids=ids, _mat=mat):
             for batch in it:
-                if not len(batch):
+                if not batch.num_rows:
                     continue
-                unit = _unit_rows(batch[vec_col])
+                unit = _unit_rows(_matrix(batch.column(0), np.float64))
                 best = np.argmax(np.round(unit @ _mat.T, 4), axis=1)
-                acc = np.zeros((_ids.size, unit.shape[1]))
-                np.add.at(acc, best, unit)
-                cnt = np.bincount(best, minlength=_ids.size)
-                nz = np.flatnonzero(cnt)
-                yield pd.DataFrame(
-                    {
-                        "cell_id": np.repeat(_ids[nz], dim),
-                        "pos": np.tile(np.arange(dim, dtype=np.int32), nz.size),
-                        "psum": acc[nz].ravel(),
-                        "pcnt": np.repeat(cnt[nz], dim).astype("int64"),
-                    }
+                nz, sums = _partial_sums(best, unit, _ids.size)
+                yield pa.RecordBatch.from_pydict(
+                    {"cell_id": np.repeat(_ids[nz], dim), **sums}
                 )
 
         means = (
-            src.mapInPandas(
+            src.mapInArrow(
                 batches, schema="cell_id long, pos int, psum double, pcnt long"
             )
             .groupBy("cell_id", "pos")
@@ -879,6 +898,8 @@ def write_ann_index(
     ``centroids`` overrides the stride sample (k-means output, or a
     frozen codebook an append must stay consistent with).
     """
+    import pyarrow as pa
+
     if centroids is None:
         centroids = ivf_centroids(
             corpus, target_cells=target_cells, stride=stride,
@@ -891,10 +912,12 @@ def write_ann_index(
     )
     spark = corpus.sparkSession
     spark.createDataFrame(
-        [(cid, vec) for cid, vec in centroids], "cid long, cvec array<float>"
+        pa.table({"cid": [c for c, _ in centroids], "cvec": [v for _, v in centroids]}),
+        "cid long, cvec array<float>",
     ).write.mode("overwrite").parquet(f"{path}/codebook")
     spark.createDataFrame(
-        [(dim, n_bands, band_planes)], "dim int, n_bands int, band_planes int"
+        pa.table({"dim": [dim], "n_bands": [n_bands], "band_planes": [band_planes]}),
+        "dim int, n_bands int, band_planes int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -1081,7 +1104,7 @@ def semantic_dedup(
 
     Scale shape: one narrow shuffle (hash-partition the cell-tagged
     corpus on ``cell_id``), then a per-cell numpy gram matrix inside
-    ``applyInPandas`` — O(c² · dim) per cell where c ≈ N / target_cells
+    ``applyInArrow`` — O(c² · dim) per cell where c ≈ N / target_cells
     stays constant as both grow; this per-cluster gram matrix IS the cost
     model the paper ran at 5B scale. Hot-cell skew (a giant cluster of
     bit-identical vectors) should be drained with exact dedup on
@@ -1098,31 +1121,28 @@ def semantic_dedup(
         stride=stride, vec_col=vec_col, id_col=id_col,
     )
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     assign = ivf_assign_arrow(
         corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
     )
 
-    def mark(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", ignore_index=True)
-        vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        unit = vecs / norms
+    def mark(cell):
+        cell = cell.sort_by("vec_id")
+        unit = _unit_rows(_matrix(cell.column(vec_col), np.float64))
         cos = np.round(unit @ unit.T, 4)
         # dup[i] = any strictly-lower-id row within tau: strict lower
         # triangle of the thresholded gram matrix, any per row.
         dup = np.tril(cos >= tau, -1).any(axis=1)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "vec_id": pdf["vec_id"],
-                "cell_id": pdf["cell_id"],
+                "vec_id": cell.column("vec_id"),
+                "cell_id": cell.column("cell_id"),
                 "is_semantic_dup": dup,
             }
         )
 
-    return assign.groupBy("cell_id").applyInPandas(
+    return assign.groupBy("cell_id").applyInArrow(
         mark, schema="vec_id long, cell_id long, is_semantic_dup boolean"
     )
 
@@ -1259,10 +1279,8 @@ def pq_kmeans_codebooks(
     captures no members keeps its previous entry so code ids are stable
     across refinement.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     books = pq_codebooks(
         corpus, m=m, target_codes=target_codes, stride=stride,
@@ -1274,38 +1292,24 @@ def pq_kmeans_codebooks(
         cb = _codebook_tensor(books)  # (m, k, d0)
         k = cb.shape[1]
 
-        def batches(
-            it: Iterator[pd.DataFrame], _cb=cb, _k=k
-        ) -> Iterator[pd.DataFrame]:
+        def batches(it, _cb=cb, _k=k):
             for batch in it:
-                if not len(batch):
+                if not batch.num_rows:
                     continue
-                x = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
+                x = _matrix(batch.column(0), np.float64)
+                # key s·k + code: one partial-sum row set per (subspace, code)
+                keys = (_pq_nearest_codes(x, _cb) + np.arange(m) * _k).ravel()
+                nz, sums = _partial_sums(keys, x.reshape(len(x) * m, d0), m * _k)
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "subspace": np.repeat(nz // _k, d0).astype(np.int32),
+                        "code": np.repeat(nz % _k, d0).astype(np.int32),
+                        **sums,
+                    }
                 )
-                codes = _pq_nearest_codes(x, _cb)  # (n, m)
-                sub = x.reshape(len(x), m, d0)
-                frames = []
-                for s in range(m):
-                    acc = np.zeros((_k, d0))
-                    np.add.at(acc, codes[:, s], sub[:, s, :])
-                    cnt = np.bincount(codes[:, s], minlength=_k)
-                    nz = np.flatnonzero(cnt)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "subspace": np.full(nz.size * d0, s, dtype=np.int32),
-                                "code": np.repeat(nz, d0).astype("int32"),
-                                "pos": np.tile(np.arange(d0, dtype=np.int32), nz.size),
-                                "psum": acc[nz].ravel(),
-                                "pcnt": np.repeat(cnt[nz], d0).astype("int64"),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
 
         means = (
-            src.mapInPandas(
+            src.mapInArrow(
                 batches,
                 schema="subspace int, code int, pos int, psum double, pcnt long",
             )
@@ -1365,9 +1369,11 @@ def _pq_nearest_codes(x, cb):
     return np.argmin(q, axis=2)
 
 
-def _adc_lut(rows, cb):
-    """(sorted probe ids, probes × m × k int64 LUT) for the Arrow ADC
-    kernels, from collected ``(id, vec)`` rows and a ``_codebook_tensor``.
+def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
+    """(id-sorted probe ids, their float64 vector matrix, probes × m × k
+    LUT) for the Arrow ADC kernels: the probe batch reaches the driver
+    through ONE ``toArrow()`` collect, bounded by the probe batch by
+    design, and is decoded by ``_matrix``.
 
     Quantization is the exact-integer rule of ``_pq_nearest_codes``,
     identical in both kernels and the SQL oracle. Built CHUNKED with
@@ -1379,14 +1385,14 @@ def _adc_lut(rows, cb):
     import numpy as np
 
     m, k, d0 = cb.shape
-    probe_ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    t = probes.select(id_col, vec_col).toArrow()
+    probe_ids = t.column(0).to_numpy().astype(np.int64)
     order = np.argsort(probe_ids)
     probe_ids = probe_ids[order]
-    x = np.stack(
-        [np.asarray(rows[i][1], dtype=np.float64) for i in order]
-    ).reshape(len(rows), m, 1, d0)
-    lut = np.empty((len(rows), m, k), dtype=np.int64)
-    for s in range(0, len(rows), 64):
+    vecs = _matrix(t.column(1), np.float64)[order]
+    x = vecs.reshape(len(vecs), m, 1, d0)
+    lut = np.empty((len(x), m, k), dtype=np.int64)
+    for s in range(0, len(x), 64):
         d = x[s : s + 64] - cb[None, :, :, :]
         np.multiply(d, d, out=d)
         d *= 10000.0
@@ -1403,7 +1409,7 @@ def _adc_lut(rows, cb):
         # genuinely exceed int32 (pathological unnormalized vectors)
         # keep the int64 table.
         lut = lut.astype(np.int32)
-    return probe_ids, lut
+    return probe_ids, vecs, lut
 
 
 def pq_encode(
@@ -1420,32 +1426,32 @@ def pq_encode(
     Code choice is ``_pq_nearest_codes``: an exact-integer distance, so
     the codes match the SQL oracle's exactly, not just within float noise.
     """
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     cb = _codebook_tensor(codebooks)  # (m, k, d0)
+    m = cb.shape[0]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it):
         for batch in it:
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            )  # (n, dim)
-            codes = _pq_nearest_codes(x, cb).astype(np.int32)
-            yield pd.DataFrame(
+            codes = _pq_nearest_codes(_matrix(batch.column(1), np.float64), cb)
+            offsets = np.arange(0, codes.size + 1, m, dtype=np.int32)
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "vec_id": batch[id_col].astype("int64"),
-                    "codes": list(codes),
+                    "vec_id": batch.column(0),
+                    "codes": pa.ListArray.from_arrays(
+                        offsets, codes.ravel().astype(np.int32)
+                    ),
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select(F.col(id_col).cast("long"), vec_col).mapInArrow(
         batches, schema="vec_id long, codes array<int>"
     )
 
 
-_INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
+#: Integral Spark id types, and the Arrow type the ADC kernels emit each as.
+_INTEGRAL_TYPES = {"tinyint": "int8", "smallint": "int16", "int": "int32", "bigint": "int64"}
 
 
 def _require_integral_id(df: DataFrame, col: str, where: str) -> None:
@@ -1472,24 +1478,40 @@ def _require_integral_id(df: DataFrame, col: str, where: str) -> None:
 _ADC_CHUNK_ROWS = 65536
 
 
-def _score_chunks(batches, score):
-    """Yield ``score`` over runs of at least ``_ADC_CHUNK_ROWS`` rows
-    concatenated from a ``mapInPandas`` batch iterator (the last run may
-    be shorter); empty batches are skipped."""
-    import pandas as pd
+def _score_chunks(scan: DataFrame, score, *, p_type: str, i_type: str) -> DataFrame:
+    """The one Arrow chunk accumulator, shared by both ADC scans: ``scan``
+    runs through ``mapInArrow`` and ``score`` gets runs of at least
+    ``_ADC_CHUNK_ROWS`` of its rows concatenated into one ``pa.Table``
+    (the last run may be shorter; empty batches are skipped). ``score``
+    returns int64 ``probe_id``/``item_id``/``adc_x10k`` columns, emitted
+    as the probe and item id types ``p_type``/``i_type``."""
+    import pyarrow as pa
 
-    buf: list = []
-    n = 0
-    for batch in batches:
-        if not len(batch):
-            continue
-        buf.append(batch)
-        n += len(batch)
-        if n >= _ADC_CHUNK_ROWS:
-            yield score(pd.concat(buf, ignore_index=True))
-            buf, n = [], 0
-    if buf:
-        yield score(pd.concat(buf, ignore_index=True))
+    schema = pa.schema(
+        [
+            ("probe_id", pa.type_for_alias(_INTEGRAL_TYPES[p_type])),
+            ("item_id", pa.type_for_alias(_INTEGRAL_TYPES[i_type])),
+            ("adc_x10k", pa.int64()),
+        ]
+    )
+
+    def chunks(batches):
+        buf: list = []
+        n = 0
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            buf.append(batch)
+            n += batch.num_rows
+            if n >= _ADC_CHUNK_ROWS:
+                yield pa.RecordBatch.from_pydict(score(pa.Table.from_batches(buf)), schema)
+                buf, n = [], 0
+        if buf:
+            yield pa.RecordBatch.from_pydict(score(pa.Table.from_batches(buf)), schema)
+
+    return scan.mapInArrow(
+        chunks, schema=f"probe_id {p_type}, item_id {i_type}, adc_x10k long"
+    )
 
 
 def pq_adc_scan_arrow(
@@ -1525,26 +1547,22 @@ def pq_adc_scan_arrow(
     Returns (probe_id, item_id, adc_x10k) candidate rows.
     """
     import numpy as np
-    import pandas as pd
 
     _require_integral_id(probes, id_col, "pq_adc_scan_arrow")
     _require_integral_id(codes, "vec_id", "pq_adc_scan_arrow")
     cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, k, d0 = cb.shape
-    rows = probes.select(id_col, vec_col).collect()
-    probe_ids, lut = _adc_lut(rows, cb)
+    m = cb.shape[0]
+    probe_ids, _, lut = _adc_lut(probes, cb, vec_col=vec_col, id_col=id_col)
     bc = codes.sparkSession.sparkContext.broadcast((probe_ids, lut))
     sentinel = np.iinfo(np.int64).max
     r = int(per_probe_r)
     # probe-block × chunk score matrix budget: ~1M int64 cells (8 MB)
     _SCORE_CELLS = 1 << 20
 
-    def score(chunk: pd.DataFrame) -> pd.DataFrame:
+    def score(chunk):
         pids, table = bc.value
-        items = chunk["item_id"].to_numpy(dtype=np.int64)
-        codes_mat = np.stack(
-            [np.asarray(c, dtype=np.int64) for c in chunk["codes"]]
-        )  # (n, m)
+        items = chunk.column("item_id").to_numpy().astype(np.int64)
+        codes_mat = _matrix(chunk.column("codes"), np.int64)  # (n, m)
         n = len(items)
         blk = max(1, _SCORE_CELLS // max(n, 1))
         out_p: list = []
@@ -1570,19 +1588,18 @@ def pq_adc_scan_arrow(
                 out_p.append(np.full(len(sel), pid_blk[j], dtype=np.int64))
                 out_i.append(items[sel])
                 out_q.append(row[sel])
-        return pd.DataFrame(
-            {
-                "probe_id": np.concatenate(out_p) if out_p else np.array([], dtype=np.int64),
-                "item_id": np.concatenate(out_i) if out_i else np.array([], dtype=np.int64),
-                "adc_x10k": np.concatenate(out_q) if out_q else np.array([], dtype=np.int64),
-            }
-        )
+        empty = np.array([], dtype=np.int64)
+        return {
+            "probe_id": np.concatenate(out_p) if out_p else empty,
+            "item_id": np.concatenate(out_i) if out_i else empty,
+            "adc_x10k": np.concatenate(out_q) if out_q else empty,
+        }
 
-    p_type = dict(probes.dtypes)[id_col]
-    i_type = dict(codes.dtypes)["vec_id"]
-    return codes.select(F.col("vec_id").alias("item_id"), "codes").mapInPandas(
-        lambda it: _score_chunks(it, score),
-        schema=f"probe_id {p_type}, item_id {i_type}, adc_x10k long",
+    return _score_chunks(
+        codes.select(F.col("vec_id").alias("item_id"), "codes"),
+        score,
+        p_type=dict(probes.dtypes)[id_col],
+        i_type=dict(codes.dtypes)["vec_id"],
     )
 
 
@@ -1596,7 +1613,6 @@ def pq_adc_cell_scan_arrow(
     per_probe_r: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    probe_rows: list | None = None,
 ) -> DataFrame:
     """IVFADC scoring the way inverted-list engines actually run it:
     each corpus code row ships ONCE with its ``cell_id``, and the kernel
@@ -1617,9 +1633,10 @@ def pq_adc_cell_scan_arrow(
     unchanged.
 
     Exactness: quantization is the ``_pq_nearest_codes`` integer rule via
-    the shared ``_adc_lut``; probe→cell assignment is the bit-identical
-    ``_probe_cell_assign``; self-matches mask to a sentinel exactly as
-    ``pq_adc_scan_arrow``. Per (cell, chunk) block the kernel keeps,
+    the shared ``_adc_lut``; probe→cell assignment is
+    ``_probe_cell_assign`` (the ranking ``ivf_probe_cells_arrow`` runs)
+    over the id-sorted probe matrix ``_adc_lut`` returns; self-matches
+    mask to a sentinel exactly as ``pq_adc_scan_arrow``. Per (cell, chunk) block the kernel keeps,
     per probe, every pair whose score ties-or-beats the block's R-th
     smallest — a SUPERSET of the block's (adc ASC, item ASC) top-R, and
     each (probe, item) pair exists in exactly one block, so the union
@@ -1630,22 +1647,13 @@ def pq_adc_cell_scan_arrow(
     Returns (probe_id, item_id, adc_x10k) candidate rows.
     """
     import numpy as np
-    import pandas as pd
 
     _require_integral_id(probes, id_col, "pq_adc_cell_scan_arrow")
     _require_integral_id(codes_with_cells, "item_id", "pq_adc_cell_scan_arrow")
     cb = _codebook_tensor(codebooks)
-    m, k, d0 = cb.shape
-    rows = (
-        probe_rows
-        if probe_rows is not None
-        else probes.select(id_col, vec_col).collect()
-    )
-    pids, lut = _adc_lut(rows, cb)
-    order = np.argsort(
-        np.array([int(r[0]) for r in rows], dtype=np.int64)
-    )
-    assign = _probe_cell_assign([rows[i] for i in order], centroids, nprobe)
+    m = cb.shape[0]
+    pids, vecs, lut = _adc_lut(probes, cb, vec_col=vec_col, id_col=id_col)
+    assign = _probe_cell_assign(vecs, *_centroid_matrix(centroids), nprobe)
     cell_map: dict = {}
     for pos, row_cells in enumerate(assign):
         for c in row_cells:
@@ -1659,13 +1667,11 @@ def pq_adc_cell_scan_arrow(
     sentinel = np.iinfo(np.int64).max
     r = int(per_probe_r)
 
-    def score(chunk: pd.DataFrame) -> pd.DataFrame:
+    def score(chunk):
         spids, table, cmap = bc.value
-        items = chunk["item_id"].to_numpy(dtype=np.int64)
-        cellids = chunk["cell_id"].to_numpy(dtype=np.int64)
-        codes_mat = np.stack(
-            [np.asarray(c, dtype=np.int64) for c in chunk["codes"]]
-        )
+        items = chunk.column("item_id").to_numpy().astype(np.int64)
+        cellids = chunk.column("cell_id").to_numpy().astype(np.int64)
+        codes_mat = _matrix(chunk.column("codes"), np.int64)  # (n, m)
         grp_order = np.argsort(cellids, kind="stable")
         bounds = np.flatnonzero(np.diff(cellids[grp_order])) + 1
         out_p: list = []
@@ -1692,11 +1698,9 @@ def pq_adc_cell_scan_arrow(
             out_p.append(spids[ppos[pj]])
             out_i.append(it[ij])
             out_q.append(scores[pj, ij])
-        empty = np.array([], dtype=np.int64)
         if not out_p:
-            return pd.DataFrame(
-                {"probe_id": empty, "item_id": empty, "adc_x10k": empty}
-            )
+            empty = np.array([], dtype=np.int64)
+            return {"probe_id": empty, "item_id": empty, "adc_x10k": empty}
         p = np.concatenate(out_p)
         i = np.concatenate(out_i)
         q = np.concatenate(out_q)
@@ -1712,15 +1716,13 @@ def pq_adc_cell_scan_arrow(
         sizes = np.diff(np.r_[starts, len(p)])
         ranks = np.arange(len(p)) - np.repeat(starts, sizes)
         keep = ranks < r
-        return pd.DataFrame(
-            {"probe_id": p[keep], "item_id": i[keep], "adc_x10k": q[keep]}
-        )
+        return {"probe_id": p[keep], "item_id": i[keep], "adc_x10k": q[keep]}
 
-    p_type = dict(probes.dtypes)[id_col]
-    i_type = dict(codes_with_cells.dtypes)["item_id"]
-    return codes_with_cells.select("item_id", "cell_id", "codes").mapInPandas(
-        lambda it: _score_chunks(it, score),
-        schema=f"probe_id {p_type}, item_id {i_type}, adc_x10k long",
+    return _score_chunks(
+        codes_with_cells.select("item_id", "cell_id", "codes"),
+        score,
+        p_type=dict(probes.dtypes)[id_col],
+        i_type=dict(codes_with_cells.dtypes)["item_id"],
     )
 
 
@@ -1885,6 +1887,8 @@ def write_pq_index(
     ``append_to_pq_index`` can grow the code table one idempotent batch
     at a time against the frozen codebooks.
     """
+    import pyarrow as pa
+
     base = path.rstrip("/")
     if kmeans_iters > 0:
         books = pq_kmeans_codebooks(
@@ -1896,14 +1900,15 @@ def write_pq_index(
             corpus, m=m, target_codes=target_codes, stride=stride,
             vec_col=vec_col, id_col=id_col,
         )
-    spark = corpus.sparkSession
-    rows = [
-        (s, code, [float(x) for x in cvec])
-        for s, book in enumerate(books)
-        for code, cvec in book
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, cvec array<double>"
+    entries = pa.table(
+        {
+            "subspace": [s for s, book in enumerate(books) for _ in book],
+            "code": [code for book in books for code, _ in book],
+            "cvec": [cvec for book in books for _, cvec in book],
+        }
+    )
+    corpus.sparkSession.createDataFrame(
+        entries, "subspace int, code int, cvec array<double>"
     ).write.mode("overwrite").parquet(f"{base}/codebooks")
     pq_encode(corpus, books, vec_col=vec_col, id_col=id_col).withColumn(
         "batch_id", F.lit(0).cast("int")
@@ -2001,22 +2006,13 @@ def ivfpq_topk(
         cells = ivf_assign_arrow(corpus, centroids, vec_col=vec_col, id_col=id_col)
     if codes is None:
         codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    # One driver-side collect of the probe batch (bounded by design —
-    # the ADC LUT needs it on the driver regardless) feeds the
-    # probe→cell assignment and the LUT build, replacing two of the
-    # measured fixed per-pass jobs from the r4 ANN scaling series (the
-    # probe-side Arrow stage and the ADC kernel's own collect) with
-    # one. Assignment math is bit-identical to ``ivf_probe_cells_arrow``
-    # (same helpers, same rounding/tie-break).
-    probe_rows = probes.select(id_col, vec_col).collect()
     cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
         cells.select(F.col("vec_id").alias("item_id"), "cell_id"),
         "item_id",
     )
     adc = pq_adc_cell_scan_arrow(
         cwc, probes, centroids, codebooks,
-        nprobe=nprobe, per_probe_r=r,
-        vec_col=vec_col, id_col=id_col, probe_rows=probe_rows,
+        nprobe=nprobe, per_probe_r=r, vec_col=vec_col, id_col=id_col,
     )
     wsl = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
     sl = (

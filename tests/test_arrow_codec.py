@@ -1,11 +1,14 @@
-"""The ``mapInArrow`` codec without a JVM: ``_extract_arrow_batches`` driven
+"""The ``mapInArrow`` codecs without a JVM: ``_extract_arrow_batches`` driven
 directly on pyarrow RecordBatches must produce, per document, exactly what
 ``core.extract.extract_document`` produces on the same spans (nulls read
-as '', spans in stable ``offset`` order)."""
+as '', spans in stable ``offset`` order); ``similarity._matrix``, the vector
+kernels' list→matrix decode, must equal the per-row stack it replaces."""
 
 import random
 
+import numpy as np
 import pyarrow as pa
+import pytest
 
 from ebook_conversion_to_text_for_machine_learning_spark.core.extract import (
     extract_document,
@@ -13,6 +16,7 @@ from ebook_conversion_to_text_for_machine_learning_spark.core.extract import (
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
     _extract_arrow_batches,
 )
+from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import _matrix
 from tests import fixtures as fx
 
 SPAN_TYPE = pa.struct(
@@ -156,3 +160,46 @@ def test_codec_sliced_batch_with_nonzero_list_offsets():
     # several batches through one generator, each decoded independently
     whole = _batch(docs)
     _assert_matches_core(docs, [whole.slice(0, 5), whole.slice(5, 4), whole.slice(9)])
+
+
+def _stacked(rows, dtype):
+    """The per-row stack ``_matrix`` replaces."""
+    return np.stack([np.asarray(r, dtype=dtype) for r in rows])
+
+
+def test_matrix_float32_bit_equal_to_per_row_stack():
+    rows = np.random.default_rng(3).standard_normal((9, 5)).astype(np.float32)
+    arr = pa.array(list(rows), type=pa.list_(pa.float32()))
+    got = _matrix(arr, np.float64)
+    assert got.dtype == np.float64 and got.shape == (9, 5)
+    assert got.tobytes() == _stacked(arr.to_pylist(), np.float64).tobytes()
+
+
+def test_matrix_sliced_array_with_nonzero_offsets():
+    rows = [[float(10 * i + j) for j in range(3)] for i in range(8)]
+    sliced = pa.array(rows, type=pa.list_(pa.float32())).slice(5, 2)
+    assert sliced.offsets[0].as_py() == 15
+    np.testing.assert_array_equal(_matrix(sliced, np.float64), np.array(rows[5:7]))
+
+
+def test_matrix_chunked_array_and_int32_codes():
+    codes = [[i, 255 - i, i % 7, 0] for i in range(12)]
+    arr = pa.array(codes, type=pa.list_(pa.int32()))
+    chunked = pa.chunked_array([arr.slice(0, 5), arr.slice(5, 0), arr.slice(5)])
+    got = _matrix(chunked, np.int64)
+    assert got.dtype == np.int64
+    np.testing.assert_array_equal(got, _stacked(codes, np.int64))
+
+
+def test_matrix_rejects_null_and_ragged_rows():
+    t = pa.list_(pa.float32())
+    for bad in (
+        [[1.0, 2.0], None, [3.0, 4.0]],  # null row
+        [[1.0, 2.0], [3.0], [4.0, 5.0, 6.0]],  # ragged, total length 6 == n·d
+        [[1.0, None], [2.0, 3.0]],  # null component
+    ):
+        with pytest.raises(ValueError):
+            _matrix(pa.array(bad, type=t), np.float64)
+    # the ragged column also fails the per-row stack it replaces
+    with pytest.raises(ValueError):
+        _stacked([[1.0, 2.0], [3.0], [4.0, 5.0, 6.0]], np.float64)

@@ -105,7 +105,7 @@ def test_simhash_near_pairs_joins_on_block_values(spark):
 def test_embedding_near_dup_arrow_candidates_are_narrow(spark):
     q = entrymod.queries()["embedding_near_dup"](spark, SF_DIR)
     plan = plan_of(q)
-    assert "MapInPandas" in plan  # Arrow matmul signature path
+    assert "MapInArrow" in plan  # Arrow matmul signature path
     assert "BatchEvalPython" not in plan
     key_lines = [l for l in plan.splitlines() if "keys [" in l]
     assert key_lines, plan
@@ -354,7 +354,7 @@ def test_filter_funnel_single_scan_single_row_exchange(spark):
 def test_pq_adc_scan_reads_codes_not_vectors(spark, tmp_path):
     """The whole point of PQ: with a persisted codes table, the ADC scan
     must never re-read or re-encode the corpus vectors — the plan reads
-    the codes parquet only and scores it in one LUT-gather MapInPandas,
+    the codes parquet only and scores it in one LUT-gather MapInArrow,
     with no join and no re-aggregation."""
     import re
 
@@ -378,9 +378,9 @@ def test_pq_adc_scan_reads_codes_not_vectors(spark, tmp_path):
     # appear at all.
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "embeddings.parquet" not in plan
-    # Exactly ONE MapInPandas — the LUT-gather scorer. A second one
+    # Exactly ONE MapInArrow — the LUT-gather scorer. A second one
     # would be a corpus re-encode.
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
     assert "BatchEvalPython" not in plan
     # No join, no re-aggregation: candidates come pre-scored and
     # chunk-pruned; the only exchange is the top-k window's.
