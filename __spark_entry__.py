@@ -37,7 +37,7 @@ from ebook_conversion_to_text_for_machine_learning_spark.operators import (
     text_stats as T,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
-    INPUT_SCHEMA,
+    docs_df,
     extract_spans,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.sources.tables import (
@@ -89,20 +89,7 @@ def _scratch_index_path(prefix: str, sf_dir: str) -> str:
 
 
 def _golden_docs_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        (
-            d["doc_id"],
-            d["fmt"],
-            d["title"],
-            d["author"],
-            [
-                {"kind": k, "text": t, "media_ref": r, "offset": o}
-                for k, t, r, o in d["spans"]
-            ],
-        )
-        for d, _ in fx.GOLDEN_DOCS
-    ]
-    return spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+    return docs_df(spark, [d for d, _ in fx.GOLDEN_DOCS])
 
 
 # ---------------------------------------------------------------------------
@@ -454,20 +441,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["extract_documents_txt"] = extract_documents_txt
 
     def extract_random_corpus(spark, sf_dir):
-        docs = fx.random_corpus(300, seed=42)
-        rows = [
-            (
-                d["doc_id"], d["fmt"], d["title"], d["author"],
-                [
-                    {"kind": k, "text": t, "media_ref": r, "offset": o}
-                    for k, t, r, o in d["spans"]
-                ],
-            )
-            for d in docs
-        ]
-        df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
         return (
-            extract_spans(df)
+            extract_spans(docs_df(spark, fx.random_corpus(300, seed=42)))
             .groupBy("fmt", "status")
             .agg(
                 F.count("*").alias("n_docs"),

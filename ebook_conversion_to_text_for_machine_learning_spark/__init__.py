@@ -10,8 +10,8 @@ reference's extracted text exactly.
 
 Layout:
 - ``core/``       pure-Python semantic cores (no Spark import; unit-testable)
-- ``operators/``  Spark operators (extraction mapInPandas, dedup, similarity,
-                  text stats, media plumbing)
+- ``operators/``  Spark operators (extraction mapInArrow + the span Arrow
+                  codec, dedup, similarity, text stats, media plumbing)
 - ``sources/``    table readers / adapters (parquet now, Iceberg DDL documented)
 - ``plans/``      end-to-end job pipeline (salting, lineage, metrics, resume)
 - ``streaming/``  Structured Streaming variant of the extraction stage

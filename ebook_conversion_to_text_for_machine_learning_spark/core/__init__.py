@@ -2,7 +2,7 @@
 
 Every module here is free of Spark imports so the extraction semantics can
 be unit-tested directly (SURVEY.md §7.1 step 1) and reused verbatim inside
-Arrow-batched pandas UDFs.
+the ``mapInArrow`` extraction kernel.
 """
 
 from ebook_conversion_to_text_for_machine_learning_spark.core.chapter import (

@@ -7,7 +7,7 @@ tuples ``(kind, text, media_ref)``.
 
 The folds are per-document sequential by semantic necessity (the reference
 is an ordered dataflow); across documents they are embarrassingly parallel
-and run vectorized-per-batch inside the Spark pandas UDF layer.
+and run per Arrow batch inside the ``mapInArrow`` extraction kernel.
 """
 
 from __future__ import annotations

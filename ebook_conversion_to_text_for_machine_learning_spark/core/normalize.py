@@ -3,7 +3,7 @@
 Semantics match the reference's ``text_utilities.py`` and
 ``pdf_converter.py`` helpers exactly (citations per function); the code is
 written fresh for this engine and is shared between pure-Python tests and
-the Arrow-batched pandas UDFs.
+the ``mapInArrow`` extraction kernel.
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ documents stays within executor memory.
 
 from __future__ import annotations
 
+from itertools import accumulate
 from time import perf_counter_ns
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -81,50 +82,106 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 
+def decode_spans(spans):
+    """A span ``list<struct>`` column → ``(offsets, kind, text, media_ref,
+    position)``: the list offsets as an int32 ndarray rebased to 0, and the
+    four struct fields as flat Arrow arrays, nulls kept.
+
+    ``flatten()`` reads only the column's own rows, so a sliced batch
+    whose offsets do not start at 0 decodes correctly; the position field
+    is the fourth one, ``offset`` on input spans and ``order`` on output
+    spans. Nothing is copied but the offsets."""
+    import pyarrow as pa
+
+    if isinstance(spans, pa.ChunkedArray):
+        spans = spans.combine_chunks()
+    offsets = spans.offsets.to_numpy()
+    flat = spans.flatten()
+    return (offsets - offsets[0], *(flat.field(i) for i in range(4)))
+
+
+def encode_spans(offsets, kinds, texts, refs, positions, position="offset"):
+    """``decode_spans`` in reverse: list offsets + the four span fields
+    (Arrow arrays, ndarrays or Python lists) → a ``list<struct<kind,
+    text, media_ref, <position>>>`` array; ``position`` is ``offset`` for
+    ``INPUT_SPAN_STRUCT`` and ``order`` for ``OUTPUT_SPAN_STRUCT``."""
+    import pyarrow as pa
+
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        pa.StructArray.from_arrays(
+            [
+                pa.array(kinds, type=pa.string()),
+                pa.array(texts, type=pa.string()),
+                pa.array(refs, type=pa.string()),
+                pa.array(positions, type=pa.int32()),
+            ],
+            names=["kind", "text", "media_ref", position],
+        ),
+    )
+
+
+def docs_batch(docs):
+    """Documents (dicts of ``doc_id, fmt, title, author`` and ``spans`` as
+    ``(kind, text, media_ref, offset)`` tuples) → one ``INPUT_SCHEMA``
+    RecordBatch, nullability included."""
+    import pyarrow as pa
+
+    offsets = list(accumulate((len(d["spans"]) for d in docs), initial=0))
+    fields = list(zip(*(s for d in docs for s in d["spans"]))) or [[]] * 4
+    arrays = [
+        pa.array([d[name] for d in docs], type=pa.string())
+        for name in ("doc_id", "fmt", "title", "author")
+    ]
+    arrays.append(encode_spans(offsets, *fields))
+    return pa.RecordBatch.from_arrays(
+        arrays,
+        schema=pa.schema(
+            pa.field(f.name, a.type, f.nullable) for f, a in zip(INPUT_SCHEMA.fields, arrays)
+        ),
+    )
+
+
+def docs_df(spark, docs) -> DataFrame:
+    """Driver-side documents → an ``INPUT_SCHEMA`` DataFrame via one Arrow
+    table (``docs_batch``), no per-span Row objects."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.Table.from_batches([docs_batch(docs)]), schema=INPUT_SCHEMA
+    )
+
+
 def _extract_arrow_batches(batches):
     """One Arrow batch of documents in → one batch of extracted spans out.
 
     Operates on Arrow buffers directly (``mapInArrow``): the nested span
-    structs are unboxed as four flat arrays + list offsets instead of one
-    Python dict per span, and the output list<struct> column is rebuilt the
-    same way — roughly 3× less (de)serialization than the pandas path for
-    this span-heavy schema.
+    structs are unboxed as four flat arrays + list offsets
+    (``decode_spans``) instead of one Python dict per span, and the output
+    list<struct> column is rebuilt the same way (``encode_spans``) —
+    roughly 3× less (de)serialization than the pandas path for this
+    span-heavy schema.
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    out_span_type = pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("order", pa.int32()),
-            ]
-        )
-    )
 
     for batch in batches:
         doc_ids = batch.column(0).to_pylist()
         fmts = batch.column(1).to_pylist()
         titles = batch.column(2).to_pylist()
         authors = batch.column(3).to_pylist()
-        spans_col = batch.column(4)
-        # Flatten list<struct>: per-field flat arrays + row offsets.
-        if isinstance(spans_col, pa.ChunkedArray):
-            spans_col = spans_col.combine_chunks()
-        list_offsets = spans_col.offsets.to_pylist()
-        flat = spans_col.flatten()
+        offsets, *fields = decode_spans(batch.column(4))
+        list_offsets = offsets.tolist()
         # Null→'' happens vectorized in Arrow so row construction below is a
         # bare zip of slices (no per-element branch). to_numpy().tolist() is
         # one C-level pass per column; to_pylist() boxes an Arrow scalar per
         # span first (302,706 spans: 1.30 s → 0.09 s on one Xeon core).
         kinds, texts, refs = (
-            pc.fill_null(flat.field(name), "").to_numpy(zero_copy_only=False).tolist()
-            for name in ("kind", "text", "media_ref")
+            pc.fill_null(f, "").to_numpy(zero_copy_only=False).tolist()
+            for f in fields[:3]
         )
-        offs = pc.fill_null(flat.field("offset"), 0).to_numpy(zero_copy_only=False)
+        offs = pc.fill_null(fields[3], 0).to_numpy(zero_copy_only=False)
         # Out-of-order detection for the whole batch in one vectorized pass:
         # doc i needs a sort iff any adjacent decrease falls inside its slice.
         if len(offs) > 1:
@@ -143,9 +200,8 @@ def _extract_arrow_batches(batches):
         n_media_col = []
         status_col = []
         elapsed_col = []
-        base = list_offsets[0]
         for i in range(len(doc_ids)):
-            lo, hi = list_offsets[i] - base, list_offsets[i + 1] - base
+            lo, hi = list_offsets[i], list_offsets[i + 1]
             rows = list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi]))
             if hi - lo > 1 and dec_prefix[hi - 1] - dec_prefix[lo] > 0:
                 order = np.argsort(offs[lo:hi], kind="stable")
@@ -166,23 +222,13 @@ def _extract_arrow_batches(batches):
             n_media_col.append(n_media)
             status_col.append(status)
 
-        out_spans = pa.ListArray.from_arrays(
-            pa.array(out_offsets, type=pa.int32()),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(out_kinds, type=pa.string()),
-                    pa.array(out_texts, type=pa.string()),
-                    pa.array(out_refs, type=pa.string()),
-                    pa.array(out_orders, type=pa.int32()),
-                ],
-                names=["kind", "text", "media_ref", "order"],
-            ),
-        ).cast(out_span_type)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(doc_ids, type=pa.string()),
                 pa.array(fmts, type=pa.string()),
-                out_spans,
+                encode_spans(
+                    out_offsets, out_kinds, out_texts, out_refs, out_orders, position="order"
+                ),
                 pa.array(n_spans_col, type=pa.int32()),
                 pa.array(n_media_col, type=pa.int32()),
                 pa.array(status_col, type=pa.string()),

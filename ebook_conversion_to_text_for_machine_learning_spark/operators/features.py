@@ -1,13 +1,13 @@
 """One-pass document feature table: every per-row signal in one projection.
 
 The curation operators each expose their core signal as a composable
-column expression (``quality_score_col``, ``repetitive_col``, marker
-scores, PII counts, fingerprints). This module assembles them into a
-single wide SELECT — the feature table a filtering pipeline or quality
-classifier consumes — with zero Python and no shuffle of document text:
-one parquet scan and one codegen'd projection, plus a narrow
-(doc_id, flag) join for the Gopher repetition flag, whose aggregate
-path is ~30× cheaper CPU than its per-row twin (see
+column expression (``quality_score_col``, marker scores, PII counts,
+fingerprints). This module assembles them into a single wide SELECT —
+the feature table a filtering pipeline or quality classifier consumes —
+with zero Python and no shuffle of document text: one parquet scan and
+one codegen'd projection, plus a narrow (doc_id, flag) join for the
+Gopher repetition flag from ``repetition_signals``, whose aggregate path
+is ~30× cheaper CPU than a per-row expression (see
 ``document_features``). Computing the signals together lets Tungsten
 share the scan instead of re-reading the corpus once per signal table.
 """
@@ -40,8 +40,8 @@ def document_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Everything except the repetition flag is a single shuffle-free
     projection. The flag joins in from the explode+aggregate path
-    (``repetition_signals``): its per-row expression twin costs ~2.6
-    ms/doc (higher-order aggregates are interpreted, and every extra
+    (``repetition_signals``): a per-row expression form of it measured
+    ~2.6 ms/doc (higher-order aggregates are interpreted, and every extra
     reference to the gram array re-builds it — no common-subexpression
     elimination for HOF subtrees), ~30× the CPU of the aggregate path.
     At corpus scale CPU dominates a narrow (doc_id, flag) shuffle, so

@@ -245,69 +245,6 @@ TOP_2GRAM_PCT = 20
 DUP_3GRAM_PCT = 18
 
 
-def _run_stats(grams: Column) -> Column:
-    """(maxrun, dup) over a gram multiset in ONE pass: sort, then a
-    run-length ``aggregate`` scan. ``maxrun`` is the most common gram's
-    count; ``dup`` is the total count of grams whose gram occurs more
-    than once — the two statistics the Gopher flag needs.
-
-    Why not count-per-distinct with nested lambdas: Catalyst does no
-    common-subexpression elimination inside lambda bodies, so a
-    ``filter(grams, ...)`` inside ``transform(distinct, ...)`` re-builds
-    the O(n²)-char gram array once per distinct element — measured ~100×
-    slower than this sorted pass on the driver corpus.
-    """
-    s = F.array_sort(grams)
-
-    def step(acc, x):
-        same = (acc.run > 0) & (acc.prev == x)
-        newrun = F.when(same, acc.run + 1).otherwise(F.lit(1))
-        newdup = (
-            F.when(~same & (acc.run > 1), acc.dup + acc.run).otherwise(acc.dup)
-        )
-        return F.struct(
-            x.alias("prev"),
-            newrun.alias("run"),
-            F.greatest(acc.maxrun, newrun).alias("maxrun"),
-            newdup.alias("dup"),
-        )
-
-    def fin(acc):
-        return F.struct(
-            F.greatest(acc.maxrun, acc.run).alias("maxrun"),
-            F.when(acc.run > 1, acc.dup + acc.run).otherwise(acc.dup).alias("dup"),
-        )
-
-    init = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("maxrun"),
-        F.lit(0).alias("dup"),
-    )
-    return F.aggregate(s, init, step, fin)
-
-
-def repetitive_col(text: Column) -> Column:
-    """Per-row expression twin of ``repetition_signals``' ``repetitive``
-    flag — no explode, no shuffle, for pure-map pipelines where an
-    aggregate is unavailable. O(n log n) array work per row via
-    ``_run_stats``, but higher-order aggregates are interpreted
-    (CodegenFallback): measured ~2.6 ms/doc, ~30× the CPU of the
-    explode+aggregate path — production chains (``prepare_training_mix``,
-    ``document_features``, ``corpus_stats``) all use
-    ``repetition_signals`` and join the flag instead.
-
-    Agreement with the aggregate path is pinned by
-    ``test_repetitive_col_agrees_with_repetition_signals``.
-    """
-    g2, g3 = ngrams_col(text, 2), ngrams_col(text, 3)
-    s2, s3 = _run_stats(g2), _run_stats(g3)
-    n2, n3 = F.size(g2), F.size(g3)
-    return ((n2 > 0) & (s2.maxrun * 100 > F.lit(TOP_2GRAM_PCT) * n2)) | (
-        (n3 > 0) & (s3.dup * 100 > F.lit(DUP_3GRAM_PCT) * n3)
-    )
-
-
 def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style repetition quality signals per document.
 

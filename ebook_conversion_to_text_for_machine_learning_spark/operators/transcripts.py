@@ -8,39 +8,33 @@ the input spans' image entries before extraction:
 
 - one aggregation turns the sidecar into a per-document
   ``map<media_ref, transcript>`` (small rows — refs and transcripts only);
-- a LEFT join attaches it (docs without images never shuffle their spans if
-  the sidecar side is broadcast; for lake-scale both sides bucket by
-  doc_id);
+- a LEFT join attaches it, with the sidecar side broadcast so documents
+  never shuffle their spans;
 - a per-row array ``transform`` rewrites ``img`` span text via map lookup —
   pure Catalyst expressions, no Python.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterator, List, Optional
+from typing import Any, Callable, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def apply_transcripts(
-    spans_df: DataFrame,
-    transcripts_df: DataFrame,
-    *,
-    broadcast: bool = True,
-) -> DataFrame:
+def apply_transcripts(spans_df: DataFrame, transcripts_df: DataFrame) -> DataFrame:
     """Overwrite image-span text with sidecar transcripts where available.
 
     Non-image spans and images without a sidecar row are untouched (the
     reference's OCR-failure path leaves the empty transcript in place).
     """
-    per_doc = transcripts_df.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("media_ref", "transcript"))
-        ).alias("_transcripts")
+    per_doc = F.broadcast(
+        transcripts_df.groupBy("doc_id").agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("media_ref", "transcript"))
+            ).alias("_transcripts")
+        )
     )
-    if broadcast:
-        per_doc = F.broadcast(per_doc)
 
     enriched_spans = F.transform(
         F.col("spans"),
@@ -116,31 +110,36 @@ def apply_ocr(
     the reference's ``run_ocr`` contract, so an OpenAI-vision client, a
     local model, or a test mock drop in unchanged. ``image_loader`` maps a
     span's ``media_ref`` to the image payload handed to ``ocr_fn``
-    (default: pass the ref itself). Runs as Arrow-batched ``mapInPandas``
-    — one Python crossing per batch, refusal/retry handled per image by
+    (default: pass the ref itself). Runs as ``mapInArrow`` over the
+    extraction kernel's span codec — one Python crossing per batch, only
+    ``img`` span text rewritten, every other span field and column passed
+    through as is (nulls included); refusal/retry handled per image by
     ``run_ocr_with_retries``; failures become empty transcripts (the
     reference's OCR-failure path), never task failures.
     """
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
+        decode_spans,
+        encode_spans,
+    )
 
     loader = image_loader or (lambda ref: ref)
+    spans_at = spans_df.columns.index("spans")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it):
         for batch in it:
-            rewritten = []
-            for spans in batch["spans"]:
-                out = []
-                for s in spans:
-                    if s["kind"] == "img":
-                        images = [loader(s["media_ref"])] if s["media_ref"] else []
-                        s = dict(s)
-                        s["text"] = run_ocr_with_retries(
-                            ocr_fn, images, max_retries=max_retries
-                        )
-                    out.append(s)
-                rewritten.append(out)
-            batch = batch.copy()
-            batch["spans"] = rewritten
-            yield batch
+            offsets, kinds, texts, refs, positions = decode_spans(batch.column(spans_at))
+            is_img = pc.fill_null(pc.equal(kinds, "img"), False)
+            transcripts = [
+                run_ocr_with_retries(
+                    ocr_fn, [loader(ref)] if ref else [], max_retries=max_retries
+                )
+                for ref in refs.filter(is_img).to_pylist()
+            ]
+            texts = pc.replace_with_mask(texts, is_img, pa.array(transcripts, pa.string()))
+            spans = encode_spans(offsets, kinds, texts, refs, positions)
+            yield batch.set_column(spans_at, "spans", spans)
 
-    return spans_df.mapInPandas(batches, schema=spans_df.schema)
+    return spans_df.mapInArrow(batches, schema=spans_df.schema)

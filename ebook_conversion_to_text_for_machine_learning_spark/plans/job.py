@@ -28,6 +28,7 @@ import json
 from pyspark.sql import functions as F
 
 from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+    _append,
     _read_table_or_none,
     run_extraction_job,
 )
@@ -151,10 +152,7 @@ def main(argv: list[str] | None = None) -> None:
             # included) runs once, not once per action.
             seqs.persist()
             try:
-                if args.catalog:
-                    seqs.writeTo(args.output).append()
-                else:
-                    seqs.write.mode("append").parquet(args.output)
+                _append(seqs, args.output, args.catalog)
                 counts = {
                     r["split"]: r["n"]
                     for r in seqs.groupBy("split").agg(F.count("*").alias("n")).collect()

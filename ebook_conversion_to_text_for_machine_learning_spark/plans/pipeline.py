@@ -133,15 +133,10 @@ def run_extraction_job(
         # Resume also consults what actually landed in the OUTPUT table —
         # doc_id only, a column-pruned scan — so the crash window between
         # the output append and the lineage commit cannot duplicate rows.
-        # This extra net is best-effort: if the output table is unreadable
-        # for environment reasons (e.g. catalog not configured in a test
-        # harness), fall back to lineage-only resume — the pre-net,
-        # at-least-once behavior — rather than failing a job the lineage
-        # record alone could drive.
-        try:
-            committed_output = _read_table_or_none(spark, output_path, catalog)
-        except Exception:
-            committed_output = None
+        # Only "nothing landed yet" reads as no output; any other read
+        # failure propagates, since ignoring it would silently turn the
+        # exact resume into an at-least-once one.
+        committed_output = _read_table_or_none(spark, output_path, catalog)
 
     todo = resume_filter(input_df, lineage_df, committed_output)
     extracted = extract_spans(todo, repartition=repartition)

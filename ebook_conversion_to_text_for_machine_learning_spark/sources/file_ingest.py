@@ -14,8 +14,9 @@ supplies one, exactly matching the reference's OCR-failure path
 (ocr.py:113-115 returns "").
 
 At scale this runs distributed: ``spark.read.format("binaryFile")`` →
-``mapInPandas`` calling these per-file parsers; driver-side helpers below
-cover the CLI/compat path.
+``mapInArrow`` calling these per-file parsers and encoding the span rows
+with the extraction kernel's Arrow codec; driver-side helpers below cover
+the CLI/compat path.
 """
 
 from __future__ import annotations
@@ -246,12 +247,18 @@ _SUFFIX_DISPATCH = {
 }
 
 
-def file_to_spans(path: str | Path) -> Tuple[str, List[InSpan]]:
-    """Suffix dispatch (convert_file.py:28-36); unknown suffix raises."""
-    suffix = Path(path).suffix.lower()
+def _dispatch(name: str | Path):
+    """Suffix dispatch (convert_file.py:28-36) → ``(fmt, parser)``;
+    unknown suffix raises."""
+    suffix = Path(name).suffix.lower()
     if suffix not in _SUFFIX_DISPATCH:
         raise ValueError(f"Unsupported file type: {suffix}")
-    fmt, parser = _SUFFIX_DISPATCH[suffix]
+    return _SUFFIX_DISPATCH[suffix]
+
+
+def file_to_spans(path: str | Path) -> Tuple[str, List[InSpan]]:
+    """Parse one file by its suffix; unknown suffix raises."""
+    fmt, parser = _dispatch(path)
     return fmt, parser(path)
 
 
@@ -392,30 +399,24 @@ def convert_file(
 
 def bytes_to_spans(filename: str, data: bytes) -> Tuple[str, List[InSpan]]:
     """Parse raw file bytes (executor-side variant — zip parsers accept
-    file-like objects, so no temp files)."""
+    file-like objects, so no temp files). TXT bytes decode leniently."""
     import io
 
-    suffix = Path(filename).suffix.lower()
-    if suffix in (".txt", ".text"):
-        return "txt", [
-            ("line", line, "", i)
-            for i, line in enumerate(data.decode("utf-8", errors="replace").splitlines())
-        ]
-    if suffix == ".epub":
-        return "epub", epub_file_to_spans(io.BytesIO(data))
-    if suffix == ".docx":
-        return "docx", docx_file_to_spans(io.BytesIO(data))
-    if suffix == ".pdf":
-        return "pdf", pdf_file_to_spans(io.BytesIO(data))
-    raise ValueError(f"Unsupported file type: {suffix}")
+    fmt, parser = _dispatch(filename)
+    if fmt == "txt":
+        lines = data.decode("utf-8", errors="replace").splitlines()
+        return fmt, [("line", line, "", i) for i, line in enumerate(lines)]
+    return fmt, parser(io.BytesIO(data))
 
 
 def spans_from_binary_df(binary_df):
-    """(path, content) DataFrame → contract-schema spans via Arrow batches.
+    """(path, content) DataFrame → contract-schema spans via ``mapInArrow``.
 
     Each executor task parses whole files; unparseable files become
     quarantine rows (``fmt='error'``, empty spans) instead of task
     failures — at 10^12 files a corrupt zip must never kill a stage.
+    The span rows are encoded by the extraction kernel's own codec
+    (``docs_batch``).
 
     Memory bound: ``binaryFile`` packs at most ``maxPartitionBytes``
     (default 128 MB) of whole files per partition, and an Arrow batch never
@@ -423,37 +424,25 @@ def spans_from_binary_df(binary_df):
     knob regardless of ``maxRecordsPerBatch`` — size it down for very
     large ebooks.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
         INPUT_SCHEMA,
+        docs_batch,
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(batches):
         for batch in batches:
-            rows = []
-            for path, content in zip(batch["path"], batch["content"]):
+            docs = []
+            for path, content in zip(batch.column(0).to_pylist(), batch.column(1)):
                 try:
-                    fmt, spans = bytes_to_spans(path, bytes(content))
+                    fmt, spans = bytes_to_spans(path, content.as_py())
                 except Exception:  # noqa: BLE001 — quarantine, never fail the task
                     fmt, spans = "error", []
-                rows.append(
-                    {
-                        "doc_id": path,
-                        "fmt": fmt,
-                        "title": None,
-                        "author": None,
-                        "spans": [
-                            {"kind": k, "text": t, "media_ref": r, "offset": o}
-                            for k, t, r, o in spans
-                        ],
-                    }
+                docs.append(
+                    {"doc_id": path, "fmt": fmt, "title": None, "author": None, "spans": spans}
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in INPUT_SCHEMA.fields])
+            yield docs_batch(docs)
 
-    return binary_df.select("path", "content").mapInPandas(parse, schema=INPUT_SCHEMA)
+    return binary_df.select("path", "content").mapInArrow(parse, schema=INPUT_SCHEMA)
 
 
 def ingest_files_distributed(spark, path_glob: str):
@@ -464,27 +453,24 @@ def ingest_files_distributed(spark, path_glob: str):
 
 def ingest_files(spark, paths: List[str], metadata_by_path: Optional[dict] = None):
     """Build the engine's input DataFrame from local files (driver-side;
-    for lake-scale ingest use binaryFile + mapInPandas with the same
+    for lake-scale ingest use ``ingest_files_distributed`` with the same
     per-file parsers)."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
-        INPUT_SCHEMA,
+        docs_df,
     )
 
     metadata_by_path = metadata_by_path or {}
-    rows = []
+    docs = []
     for p in paths:
         fmt, spans = file_to_spans(p)
         meta = metadata_by_path.get(p, {})
-        rows.append(
-            (
-                p,
-                fmt,
-                meta.get("title"),
-                meta.get("author"),
-                [
-                    {"kind": k, "text": t, "media_ref": r, "offset": o}
-                    for k, t, r, o in spans
-                ],
-            )
+        docs.append(
+            {
+                "doc_id": p,
+                "fmt": fmt,
+                "title": meta.get("title"),
+                "author": meta.get("author"),
+                "spans": spans,
+            }
         )
-    return spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+    return docs_df(spark, docs)

@@ -1,19 +1,20 @@
 """Distributed synthetic corpus generation for benchmarks.
 
-``spark.range(n)`` → Arrow-batched ``mapInPandas`` → one deterministic
-document per index (seeded per ``(seed, index)``) — generation itself
-scales with the cluster instead of bottlenecking on the driver.
+``spark.range(n)`` → ``mapInArrow`` → one deterministic document per index
+(seeded per ``(seed, index)``), encoded by the extraction kernel's span
+codec — generation itself scales with the cluster instead of
+bottlenecking on the driver.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
     INPUT_SCHEMA,
+    docs_batch,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.testing.fixtures import (
     make_doc,
@@ -27,26 +28,11 @@ def corpus_spans_df(
     if partitions:
         base = base.repartition(partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         for batch in batches:
-            docs = [make_doc(int(i), seed) for i in batch["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [d["doc_id"] for d in docs],
-                    "fmt": [d["fmt"] for d in docs],
-                    "title": [d["title"] for d in docs],
-                    "author": [d["author"] for d in docs],
-                    "spans": [
-                        [
-                            {"kind": k, "text": t, "media_ref": r, "offset": o}
-                            for k, t, r, o in d["spans"]
-                        ]
-                        for d in docs
-                    ],
-                }
-            )
+            yield docs_batch([make_doc(i, seed) for i in batch.column(0).to_pylist()])
 
-    return base.mapInPandas(gen, schema=INPUT_SCHEMA)
+    return base.mapInArrow(gen, schema=INPUT_SCHEMA)
 
 
 def write_corpus(
@@ -82,10 +68,13 @@ def planted_embeddings(
     and a stride sharing a factor with a round-robin layout would sample
     the whole codebook from a handful of clusters.
 
-    Same distributed shape as ``corpus_spans_df``: ``spark.range`` →
-    Arrow-batched ``mapInPandas``, per-row determinism, no driver loop.
+    Same distributed shape as ``corpus_spans_df`` (``spark.range`` → one
+    generator call per Arrow batch, per-row determinism, no driver loop),
+    but through ``mapInPandas``: ``perfbench`` drives this generator
+    without a JVM by faking ``range(n).mapInPandas``.
     """
     import numpy as np
+    import pandas as pd
 
     centers = np.random.default_rng(seed).standard_normal((n_clusters, dim))
     centers /= np.linalg.norm(centers, axis=1, keepdims=True)

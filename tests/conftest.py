@@ -1,5 +1,9 @@
 import pytest
 
+from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (  # noqa: F401
+    docs_df as spans_df,
+)
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -8,22 +12,3 @@ def spark():
     session = build_session(app_name="engine-tests", master="local[4]", shuffle_partitions=8)
     yield session
     session.stop()
-
-
-def spans_df(spark, docs):
-    """Build a documents_spans DataFrame from fixture dicts."""
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
-        INPUT_SCHEMA,
-    )
-
-    rows = [
-        (
-            d["doc_id"],
-            d["fmt"],
-            d["title"],
-            d["author"],
-            [{"kind": k, "text": t, "media_ref": r, "offset": o} for k, t, r, o in d["spans"]],
-        )
-        for d in docs
-    ]
-    return spark.createDataFrame(rows, schema=INPUT_SCHEMA)

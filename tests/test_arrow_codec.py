@@ -1,8 +1,10 @@
 """The ``mapInArrow`` codecs without a JVM: ``_extract_arrow_batches`` driven
 directly on pyarrow RecordBatches must produce, per document, exactly what
 ``core.extract.extract_document`` produces on the same spans (nulls read
-as '', spans in stable ``offset`` order); ``similarity._matrix``, the vector
-kernels' list→matrix decode, must equal the per-row stack it replaces."""
+as '', spans in stable ``offset`` order); ``docs_batch``, the span
+contract's one docs → RecordBatch encoder, must equal ``_batch``'s
+``from_pylist`` construction; ``similarity._matrix``, the vector kernels'
+list→matrix decode, must equal the per-row stack it replaces."""
 
 import random
 
@@ -14,7 +16,11 @@ from ebook_conversion_to_text_for_machine_learning_spark.core.extract import (
     extract_document,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
+    INPUT_SCHEMA,
     _extract_arrow_batches,
+    decode_spans,
+    docs_batch,
+    encode_spans,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import _matrix
 from tests import fixtures as fx
@@ -160,6 +166,42 @@ def test_codec_sliced_batch_with_nonzero_list_offsets():
     # several batches through one generator, each decoded independently
     whole = _batch(docs)
     _assert_matches_core(docs, [whole.slice(0, 5), whole.slice(5, 4), whole.slice(9)])
+
+
+def _assert_docs_batch_matches(docs):
+    got, ref = docs_batch(docs), _batch(docs)
+    assert got.schema.names == ref.schema.names
+    assert [f.nullable for f in got.schema] == [f.nullable for f in INPUT_SCHEMA.fields]
+    for name in SCHEMA.names:
+        assert got.column(name).equals(ref.column(name)), name
+
+
+def test_docs_batch_matches_from_pylist_on_goldens_and_random_corpus():
+    _assert_docs_batch_matches([doc for doc, _ in fx.GOLDEN_DOCS] + fx.random_corpus(40, seed=13))
+
+
+def test_docs_batch_empty_spans_null_metadata_and_null_span_fields():
+    docs = [
+        _doc("no-spans", "txt", []),
+        _doc("no-meta", "docx", [("para", "Body.", "")], title=None, author=None),
+        fx._doc("null-fields", "epub", [("img", None, None, None), (None, "x", "r", 1)]),
+        _doc("tail-empty", "pdf", []),
+    ]
+    _assert_docs_batch_matches(docs)
+    _assert_docs_batch_matches([])
+    _assert_docs_batch_matches(docs[:1])
+
+
+def test_span_encode_decode_round_trip_on_sliced_batch():
+    whole = _batch(fx.random_corpus(12, seed=21))
+    sliced = whole.column("spans").slice(5, 4)
+    assert sliced.offsets[0].as_py() > 0
+    offsets, *fields = decode_spans(sliced)
+    assert offsets[0] == 0 and offsets[-1] == len(fields[0])
+    assert encode_spans(offsets, *fields).equals(sliced)
+    # the extraction output's ``order`` span type round-trips the same way
+    out = next(_extract_arrow_batches([whole])).column("spans").slice(3, 6)
+    assert encode_spans(*decode_spans(out), position="order").equals(out)
 
 
 def _stacked(rows, dtype):

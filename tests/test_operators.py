@@ -494,6 +494,65 @@ def test_apply_ocr_hook_reproduces_epub_002(spark):
     assert got == fx.EPUB_002_EXPECTED
 
 
+def test_apply_ocr_rewrites_only_img_text(spark):
+    """Only ``img`` span text changes: a non-img span with null
+    text/media_ref/offset, an img span without a ref, and the other
+    columns come back exactly as they went in."""
+    from tests import fixtures as fx
+    from tests.conftest import spans_df
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.transcripts import (
+        apply_ocr,
+    )
+
+    doc = fx._doc(
+        "nulls", "epub",
+        [("p", None, None, None), ("img", "", "a.png", 1), ("img", "old", None, 2)],
+        title=None,
+    )
+    df = spans_df(spark, [doc])
+    enriched = apply_ocr(df, lambda images: "text of " + images[0])
+    assert enriched.schema == df.schema
+    row = enriched.collect()[0]
+    assert (row.doc_id, row.fmt, row.title, row.author) == ("nulls", "epub", None, fx.AUTHOR)
+    assert [tuple(s) for s in row.spans] == [
+        ("p", None, None, None),
+        ("img", "text of a.png", "a.png", 1),
+        ("img", "", None, 2),  # no ref → no image → the empty transcript
+    ]
+
+
+def test_span_producers_run_through_map_in_arrow(spark):
+    """File ingest, the corpus generator and live OCR share the extraction
+    kernel's Arrow codec: ``MapInArrow`` in their plans, no pandas."""
+    from tests import fixtures as fx
+    from tests.conftest import spans_df
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.transcripts import (
+        apply_ocr,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.sources.file_ingest import (
+        spans_from_binary_df,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.testing.corpus import (
+        corpus_spans_df,
+    )
+
+    bin_df = spark.createDataFrame([("a.txt", b"x")], "path string, content binary")
+    corpus = corpus_spans_df(spark, 30, seed=3, partitions=3)
+    for df in (
+        spans_from_binary_df(bin_df),
+        corpus,
+        apply_ocr(spans_df(spark, [fx.EPUB_002]), lambda images: ""),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
+    # the generator's rows are the driver-built rows of the same documents
+    expected = spans_df(spark, [fx.make_doc(i, 3) for i in range(30)])
+    by_id = lambda r: r.doc_id  # noqa: E731
+    assert sorted(corpus.collect(), key=by_id) == sorted(expected.collect(), key=by_id)
+
+
 def test_run_ocr_with_retries_reference_semantics():
     from ebook_conversion_to_text_for_machine_learning_spark.operators.transcripts import (
         run_ocr_with_retries,
@@ -2094,10 +2153,11 @@ def test_repetition_signals_flags_repetitive_docs(spark):
     assert rows[3].n_2grams == 0 and not rows[3].repetitive
 
 
-def test_repetitive_col_agrees_with_repetition_signals(spark):
+def test_repetition_signals_hand_computed_flags(spark):
+    """Counts and flag on short, empty and borderline docs, computed by
+    hand: (n_2grams, top_2gram_cnt, n_3grams, dup_3gram_cnt, repetitive)."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
         repetition_signals,
-        repetitive_col,
     )
 
     rows = [
@@ -2108,15 +2168,20 @@ def test_repetitive_col_agrees_with_repetition_signals(spark):
         (5, "en", "a b a b a b a b c d e f g h i j"),
         (6, "en", "one two three one two three nine ten"),
     ]
-    df = _docs_df(spark, rows)
-    agg = {r.doc_id: r.repetitive for r in repetition_signals(df).collect()}
-    expr = {
-        r.doc_id: r.flag
-        for r in df.select(
-            "doc_id", repetitive_col(F.col("text")).alias("flag")
-        ).collect()
+    got = {
+        r.doc_id: (r.n_2grams, r.top_2gram_cnt, r.n_3grams, r.dup_3gram_cnt, r.repetitive)
+        for r in repetition_signals(_docs_df(spark, rows)).collect()
     }
-    assert agg == expr
+    assert got == {
+        1: (5, 5, 4, 4, True),
+        2: (24, 1, 23, 0, False),
+        3: (0, 0, 0, 0, False),
+        4: (0, 0, 0, 0, False),
+        # "a b" 4 of 15 2-grams (400 > 20·15); "a b a"/"b a b" 3 each of 14
+        5: (15, 4, 14, 6, True),
+        # "one two" 2 of 7 2-grams (200 > 20·7)
+        6: (7, 2, 6, 2, True),
+    }
 
 
 def test_prepare_training_mix_filters_and_packs(spark):

@@ -1,4 +1,4 @@
-"""End-to-end Spark tests: goldens through mapInPandas, pipeline, resume."""
+"""End-to-end Spark tests: goldens through mapInArrow, pipeline, resume."""
 
 import pytest
 
@@ -216,24 +216,18 @@ def test_null_span_fields_are_tolerated(spark):
     not poison a task — nulls coerce to '' at the Arrow boundary and unknown
     kinds are ignored, status stays ok."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
-        INPUT_SCHEMA,
         extract_spans,
     )
 
     docs = [
-        ("n1", "txt", None, None, [
-            {"kind": "line", "text": None, "media_ref": None, "offset": 0},
-            {"kind": "line", "text": "Real.", "media_ref": "", "offset": 1},
-        ]),
-        ("n2", "epub", None, None, [
-            {"kind": "section", "text": None, "media_ref": "", "offset": 0},
-            {"kind": "p", "text": "Chapter 1", "media_ref": "", "offset": 1},
-            {"kind": "p", "text": "Body.", "media_ref": None, "offset": 2},
-        ]),
-        ("n3", "pdf", None, None, [{"kind": None, "text": "x", "media_ref": "", "offset": 0}]),
+        fx._doc(doc_id, fmt, fx._spans(rows), title=None, author=None)
+        for doc_id, fmt, rows in [
+            ("n1", "txt", [("line", None, None), ("line", "Real.", "")]),
+            ("n2", "epub", [("section", None, ""), ("p", "Chapter 1", ""), ("p", "Body.", None)]),
+            ("n3", "pdf", [(None, "x", "")]),
+        ]
     ]
-    df = spark.createDataFrame(docs, schema=INPUT_SCHEMA)
-    out = {r.doc_id: r for r in extract_spans(df).collect()}
+    out = {r.doc_id: r for r in extract_spans(spans_df(spark, docs)).collect()}
     assert all(r.status == "ok" for r in out.values())
     assert [(s.kind, s.text) for s in out["n1"].spans] == [("text", "Real.")]
     assert [(s.kind, s.text) for s in out["n2"].spans] == [("text", "Body.")]
@@ -384,28 +378,19 @@ def test_salted_repartition_levels_giant_document_skew(spark):
     from pyspark.sql import functions as SF
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
-        INPUT_SCHEMA,
         extract_spans,
         salted_repartition,
     )
 
     def doc(doc_id, n_lines, width):
-        return (
-            doc_id,
-            "txt",
-            None,
-            None,
-            [
-                {"kind": "line", "text": f"line {i} " + "w" * width, "media_ref": "", "offset": i}
-                for i in range(n_lines)
-            ],
-        )
+        rows = [("line", f"line {i} " + "w" * width, "") for i in range(n_lines)]
+        return fx._doc(doc_id, "txt", fx._spans(rows), title=None, author=None)
 
     giants = [doc(f"giant-{i}", 4000, 60) for i in range(8)]
     tiny = [doc(f"tiny-{i:04d}", 1, 5) for i in range(2000)]
     # Giants first + coalesce(4): all giants land in input partition 0 —
     # the "all the big PDFs came from one source split" shape.
-    df = spark.createDataFrame(giants + tiny, schema=INPUT_SCHEMA).coalesce(4)
+    df = spans_df(spark, giants + tiny).coalesce(4)
 
     def per_partition(extracted):
         rows = (
@@ -460,3 +445,24 @@ def test_resume_consults_output_table_across_crash_window(spark, tmp_path):
     summary = run_extraction_job(spark, df, out, lineage_path=lineage)
     assert sum(m["docs"] for m in summary["metrics"]) == 0
     assert spark.read.parquet(out).count() == 20  # no duplicates
+
+
+def test_unreadable_output_table_fails_the_job(spark, tmp_path):
+    """An output dir whose data file is not parquet must fail the job
+    before anything lands: reading it as "no output" would silently turn
+    the exact resume into an at-least-once one."""
+    from py4j.protocol import Py4JJavaError
+
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        run_extraction_job,
+    )
+
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+    lineage = tmp_path / "lineage"
+    df = spans_df(spark, fx.random_corpus(5, seed=3))
+    with pytest.raises(Py4JJavaError):
+        run_extraction_job(spark, df, str(out), lineage_path=str(lineage))
+    assert not lineage.exists()
+    assert not (tmp_path / "lineage_partitions").exists()
