@@ -20,7 +20,7 @@ documents stays within executor memory.
 from __future__ import annotations
 
 from itertools import accumulate
-from time import perf_counter_ns
+from time import thread_time_ns
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -76,7 +76,8 @@ EXTRACTED_SCHEMA = StructType(
         # Per-document fold CPU time — summed per partition into lineage so
         # skew is observable in TIME, not just document counts (a partition
         # of 25-page PDFs and one of tweets have very different costs at
-        # equal doc_count). ~100ns of perf_counter overhead per document.
+        # equal doc_count). Measured with thread_time_ns, so time the worker
+        # spends descheduled is not counted; ~0.4 µs per clock read.
         StructField("elapsed_us", LongType(), False),
     ]
 )
@@ -84,26 +85,35 @@ EXTRACTED_SCHEMA = StructType(
 
 def decode_spans(spans):
     """A span ``list<struct>`` column → ``(offsets, kind, text, media_ref,
-    position)``: the list offsets as an int32 ndarray rebased to 0, and the
-    four struct fields as flat Arrow arrays, nulls kept.
+    position, list_nulls, span_nulls)``: the list offsets as an int32
+    ndarray rebased to 0, the four struct fields as flat Arrow arrays, and
+    the null masks of the lists (one per row) and of the span structs
+    (one per flat span), each None when there are no nulls.
 
     ``flatten()`` reads only the column's own rows, so a sliced batch
-    whose offsets do not start at 0 decodes correctly; the position field
-    is the fourth one, ``offset`` on input spans and ``order`` on output
-    spans. Nothing is copied but the offsets."""
+    whose offsets do not start at 0 decodes correctly; the struct's own
+    ``flatten()`` merges its validity into each field, so a null span
+    reads as four null fields (the extraction kernel fills them to '' and
+    0: an empty-kind span, which it ignores). The position field is the
+    fourth one, ``offset`` on input spans and ``order`` on output spans.
+    ``encode_spans(*decode_spans(col))`` gives back ``col``."""
     import pyarrow as pa
 
     if isinstance(spans, pa.ChunkedArray):
         spans = spans.combine_chunks()
     offsets = spans.offsets.to_numpy()
     flat = spans.flatten()
-    return (offsets - offsets[0], *(flat.field(i) for i in range(4)))
+    nulls = (a.is_null() if a.null_count else None for a in (spans, flat))
+    return (offsets - offsets[0], *flat.flatten(), *nulls)
 
 
-def encode_spans(offsets, kinds, texts, refs, positions, position="offset"):
+def encode_spans(
+    offsets, kinds, texts, refs, positions, list_nulls=None, span_nulls=None, position="offset"
+):
     """``decode_spans`` in reverse: list offsets + the four span fields
-    (Arrow arrays, ndarrays or Python lists) → a ``list<struct<kind,
-    text, media_ref, <position>>>`` array; ``position`` is ``offset`` for
+    (Arrow arrays, ndarrays or Python lists) + optional boolean null masks
+    of the lists and of the span structs → a ``list<struct<kind, text,
+    media_ref, <position>>>`` array; ``position`` is ``offset`` for
     ``INPUT_SPAN_STRUCT`` and ``order`` for ``OUTPUT_SPAN_STRUCT``."""
     import pyarrow as pa
 
@@ -117,7 +127,9 @@ def encode_spans(offsets, kinds, texts, refs, positions, position="offset"):
                 pa.array(positions, type=pa.int32()),
             ],
             names=["kind", "text", "media_ref", position],
+            mask=span_nulls,
         ),
+        mask=list_nulls,
     )
 
 
@@ -171,7 +183,7 @@ def _extract_arrow_batches(batches):
         fmts = batch.column(1).to_pylist()
         titles = batch.column(2).to_pylist()
         authors = batch.column(3).to_pylist()
-        offsets, *fields = decode_spans(batch.column(4))
+        offsets, *fields, _, _ = decode_spans(batch.column(4))
         list_offsets = offsets.tolist()
         # Null→'' happens vectorized in Arrow so row construction below is a
         # bare zip of slices (no per-element branch). to_numpy().tolist() is
@@ -206,9 +218,9 @@ def _extract_arrow_batches(batches):
             if hi - lo > 1 and dec_prefix[hi - 1] - dec_prefix[lo] > 0:
                 order = np.argsort(offs[lo:hi], kind="stable")
                 rows = [rows[j] for j in order]
-            t_doc = perf_counter_ns()
+            t_doc = thread_time_ns()
             result, status = extract_document(fmts[i], rows, titles[i], authors[i])
-            elapsed_col.append((perf_counter_ns() - t_doc) // 1000)
+            elapsed_col.append((thread_time_ns() - t_doc) // 1000)
             n_media = 0
             for k, t, r, o in result:
                 out_kinds.append(k)

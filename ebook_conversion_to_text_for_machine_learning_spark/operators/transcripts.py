@@ -130,7 +130,7 @@ def apply_ocr(
 
     def batches(it):
         for batch in it:
-            offsets, kinds, texts, refs, positions = decode_spans(batch.column(spans_at))
+            offsets, kinds, texts, refs, positions, *nulls = decode_spans(batch.column(spans_at))
             is_img = pc.fill_null(pc.equal(kinds, "img"), False)
             transcripts = [
                 run_ocr_with_retries(
@@ -139,7 +139,7 @@ def apply_ocr(
                 for ref in refs.filter(is_img).to_pylist()
             ]
             texts = pc.replace_with_mask(texts, is_img, pa.array(transcripts, pa.string()))
-            spans = encode_spans(offsets, kinds, texts, refs, positions)
+            spans = encode_spans(offsets, kinds, texts, refs, positions, *nulls)
             yield batch.set_column(spans_at, "spans", spans)
 
     return spans_df.mapInArrow(batches, schema=spans_df.schema)

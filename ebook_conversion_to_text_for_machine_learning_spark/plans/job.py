@@ -39,7 +39,11 @@ def main(argv: list[str] | None = None) -> None:
     parser = argparse.ArgumentParser(description="ebook spans extraction job")
     parser.add_argument("--input", required=True)
     parser.add_argument("--output", required=True)
-    parser.add_argument("--lineage", default=None)
+    parser.add_argument(
+        "--lineage", default=None,
+        help="extract mode: append per-partition lineage (doc/span counts, fold cpu_us) "
+        "to <lineage>_partitions. Resume needs none: every run skips the doc_ids in --output",
+    )
     parser.add_argument("--metrics", default=None)
     parser.add_argument("--repartition", type=int, default=None)
     parser.add_argument(

@@ -1,12 +1,16 @@
-"""The full extraction job: read → (resume filter) → extract → write +
-lineage + metrics (SURVEY.md §3.4, BASELINE.json north_rule).
+"""The full extraction job: read → resume filter → extract → write output +
+metrics + partition lineage (SURVEY.md §3.4, BASELINE.json north_rule).
 
-Checkpoint/resume is engine-level so the Parquet fallback and the Iceberg
-snapshot path share one code path: every committed run appends per-partition
-``lineage`` rows; a restart left-anti-joins the input against the lineage
-table's completed ``doc_id``s (broadcast when small — Catalyst/AQE decides)
-and only processes the remainder. On Iceberg the same append is a single
-atomic snapshot commit per run.
+The output table is the job's one commit record. Checkpoint/resume is
+engine-level so the Parquet fallback and the Iceberg snapshot path share
+one code path: every call left-anti-joins the input against the
+``doc_id``s already in the output table (broadcast when small —
+Catalyst/AQE decides) and only processes the remainder. The output append
+is the commit point: on Iceberg a single atomic snapshot commit per run;
+on Parquet a killed write leaves only ``_temporary/``, which reads as
+nothing landed. (Known gap on Parquet: task files that a killed job had
+already committed under ``_temporary/0/`` are merged into the output by
+the next append's job commit, so that rerun can duplicate them.)
 
 Metrics come from one ``groupBy`` over the extraction output — partial
 (map-side) aggregation is free from Catalyst, so the agg adds one small
@@ -72,32 +76,13 @@ def _read_table_or_none(spark: SparkSession, path: str, catalog: bool):
         return None
 
 
-def resume_filter(
-    input_df: DataFrame,
-    lineage_df: DataFrame | None,
-    committed_output: DataFrame | None = None,
-) -> DataFrame:
-    """Drop documents already committed by a previous run (left anti join).
-
-    ``committed_output`` (the output table itself, doc_id column) closes
-    the output-committed-but-lineage-missing crash window: the output
-    append and the lineage append are separate snapshot commits, so a
-    crash between them leaves documents in output with no lineage row —
-    consulting both makes the restart exact instead of at-least-once.
-    """
-    done_parts = []
-    if lineage_df is not None:
-        done_parts.append(
-            lineage_df.where(F.col("status") == "committed").select("doc_id")
-        )
-    if committed_output is not None:
-        done_parts.append(committed_output.select("doc_id"))
-    if not done_parts:
+def resume_filter(input_df: DataFrame, committed_output: DataFrame | None) -> DataFrame:
+    """Drop documents already in the output table: one left anti join on
+    its ``doc_id``. No ``distinct`` in front of it — an anti join keeps a
+    row iff nothing matches, so duplicate committed ids change nothing."""
+    if committed_output is None:
         return input_df
-    done = done_parts[0]
-    for part in done_parts[1:]:
-        done = done.unionByName(part)
-    return input_df.join(done.distinct(), "doc_id", "left_anti")
+    return input_df.join(committed_output.select("doc_id"), "doc_id", "left_anti")
 
 
 def run_extraction_job(
@@ -112,33 +97,29 @@ def run_extraction_job(
 ) -> dict:
     """Execute the pipeline, returning the metrics summary.
 
-    With ``catalog=False`` (sandbox default) ``output_path``/
-    ``lineage_path``/``metrics_path`` are parquet dirs; with
-    ``catalog=True`` they are catalog table names (e.g.
-    ``lake.db.extracted``) and every append is an atomic
-    ``writeTo(...).append()`` Iceberg snapshot commit. The resume
-    left-anti join reads committed doc_ids from BOTH the lineage table
-    and the output table itself (the two appends are separate snapshot
-    commits, so either alone leaves a crash window) — a restart is exact,
-    not best-effort. Tables are created once with the DDL in
-    ``sources/tables.py``.
+    With ``catalog=False`` (sandbox default) ``output_path``,
+    ``metrics_path`` and ``lineage_path + "_partitions"`` are parquet
+    dirs; with ``catalog=True`` they are names of existing catalog tables
+    (e.g. ``lake.db.extracted``) and every append is an atomic
+    ``writeTo(...).append()`` Iceberg snapshot commit.
+
+    Every call resumes: documents whose ``doc_id`` is already in the
+    output table are skipped, so a rerun over the same input appends
+    nothing. The output append is the commit point; the metrics append and
+    the per-partition lineage append follow it, so a crash between them
+    leaves the run's documents committed (never reprocessed) and its
+    metrics and partition rows missing. ``lineage_path`` only names the
+    partition-lineage table (``lineage_path + "_partitions"``); it
+    switches nothing else.
     """
     run_id = uuid.uuid4().hex
     started = time.time()
 
-    lineage_df = None
-    committed_output = None
-    if lineage_path:
-        lineage_df = _read_table_or_none(spark, lineage_path, catalog)
-        # Resume also consults what actually landed in the OUTPUT table —
-        # doc_id only, a column-pruned scan — so the crash window between
-        # the output append and the lineage commit cannot duplicate rows.
-        # Only "nothing landed yet" reads as no output; any other read
-        # failure propagates, since ignoring it would silently turn the
-        # exact resume into an at-least-once one.
-        committed_output = _read_table_or_none(spark, output_path, catalog)
-
-    todo = resume_filter(input_df, lineage_df, committed_output)
+    # doc_id only, a column-pruned scan. Only "nothing landed yet" reads
+    # as no output; any other read failure propagates, since ignoring it
+    # would silently re-append every committed document.
+    committed_output = _read_table_or_none(spark, output_path, catalog)
+    todo = resume_filter(input_df, committed_output)
     extracted = extract_spans(todo, repartition=repartition)
     # localCheckpoint, NOT persist: the resume anti-join scans output_path,
     # and our own output append fires refreshByPath(output_path), which
@@ -151,12 +132,10 @@ def run_extraction_job(
     # Checkpointed blocks are released by the ContextCleaner once
     # ``extracted`` goes out of scope; nothing to unpersist.
     extracted = extracted.localCheckpoint()
+    # The commit point: once this lands, a rerun skips these documents.
     _append(extracted.select("doc_id", "fmt", "spans"), output_path, catalog)
 
-    # Metrics counters (docs in/dropped, chapters, media, per format).
-    # Written BEFORE the lineage append: writing into lineage_path
-    # invalidates any cached plan that reads it (the resume anti-join),
-    # and a recompute after the append would see its own commit. The
+    # Metrics counters (docs in/dropped, chapters, media, per format). The
     # summary rides on the sink write as an observed metric over its
     # ≤|formats|×|statuses| rows — no separate collect job.
     metrics_rows = (
@@ -184,8 +163,8 @@ def run_extraction_job(
     metrics = [row.asDict() for row in collected]
 
     # Per-partition lineage: partition id, doc/span counts, commit id.
-    # Written LAST — committing lineage marks the run complete, so a
-    # crash before this point simply reprocesses the run's documents.
+    # Written last, after the commit point: a crash before it loses this
+    # run's partition rows, never its documents.
     lineage = (
         extracted.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(
@@ -198,16 +177,8 @@ def run_extraction_job(
         .withColumn("status", F.lit("committed"))
         .withColumn("run_id", F.lit(run_id))
     )
-    doc_lineage = extracted.select(
-        "doc_id",
-        F.lit("committed").alias("status"),
-        F.lit(run_id).alias("run_id"),
-    )
     if lineage_path:
-        # Partition stats first: the doc_lineage append into lineage_path
-        # is the commit point and also invalidates the cached plan.
         _append(lineage, lineage_path + "_partitions", catalog)
-        _append(doc_lineage, lineage_path, catalog)
 
     return {
         "run_id": run_id,

@@ -4,13 +4,14 @@ The reference is strictly batch (SURVEY.md §2.7), so this is an engine
 extension, not a ported semantic: the same ``extract_spans`` operator runs
 inside ``foreachBatch`` with an idempotent per-batch-directory commit
 (foreachBatch alone is at-least-once; overwriting ``batch_id=N`` makes a
-replayed batch rewrite itself instead of duplicating rows), reusing the
-batch pipeline's lineage/metrics wiring unchanged.
+replayed batch rewrite itself instead of duplicating rows). It writes no
+lineage table and no metrics table: each output row carries its own
+``n_spans`` and ``status``.
 
-``foreachBatch`` (rather than a direct streaming ``mapInArrow`` lineage) is
+``foreachBatch`` (rather than a direct streaming ``mapInArrow`` plan) is
 deliberate: each micro-batch is a normal DataFrame, so broadcast joins,
-AQE, and the pipeline's writer all behave identically to the batch path —
-one code path to test for correctness, two execution modes.
+AQE, and the extraction operator all behave identically to the batch
+path — one code path to test for correctness, two execution modes.
 """
 
 from __future__ import annotations

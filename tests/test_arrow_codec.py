@@ -204,6 +204,32 @@ def test_span_encode_decode_round_trip_on_sliced_batch():
     assert encode_spans(*decode_spans(out), position="order").equals(out)
 
 
+def test_span_codec_keeps_null_spans_and_null_lists():
+    img = {"kind": "img", "text": "", "media_ref": "a.png", "offset": 1}
+    spans = pa.array([[None, img], None, [], [img, None], None], type=pa.list_(SPAN_TYPE))
+    for col in (spans, spans.slice(1, 3), spans.slice(3)):
+        back = encode_spans(*decode_spans(col))
+        assert back.equals(col)
+        assert back.to_pylist() == col.to_pylist()
+    assert decode_spans(_batch(fx.random_corpus(3, seed=2)).column("spans"))[5:] == (None, None)
+
+
+def test_codec_reads_null_span_as_empty_kind_and_null_list_as_no_spans():
+    spans = [
+        {"kind": k, "text": t, "media_ref": r, "offset": o} for k, t, r, o in fx.EPUB_002["spans"]
+    ]
+    meta = {k: fx.EPUB_002[k] for k in ("doc_id", "fmt", "title", "author")}
+    null_fields = {"kind": None, "text": None, "media_ref": None, "offset": None}
+
+    def batch(*span_lists):
+        return pa.RecordBatch.from_pylist([{**meta, "spans": s} for s in span_lists], schema=SCHEMA)
+
+    with_nulls = _decoded([batch([None] + spans + [None], None)])
+    assert with_nulls == _decoded([batch([null_fields] + spans + [null_fields], [])])
+    assert with_nulls[0]["spans"] == [tuple(s) for s in fx.EPUB_002_EXPECTED]
+    assert with_nulls[1]["n_spans"] == 0
+
+
 def _stacked(rows, dtype):
     """The per-row stack ``_matrix`` replaces."""
     return np.stack([np.asarray(r, dtype=dtype) for r in rows])

@@ -522,6 +522,39 @@ def test_apply_ocr_rewrites_only_img_text(spark):
     ]
 
 
+def test_apply_ocr_passes_null_spans_and_null_lists_through(spark):
+    """A null span element and a null spans list come back null, not as
+    an empty-field span and an empty list."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
+        INPUT_SCHEMA,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.transcripts import (
+        apply_ocr,
+    )
+
+    schema = StructType(
+        INPUT_SCHEMA.fields[:4] + [StructField("spans", INPUT_SCHEMA["spans"].dataType, True)]
+    )
+    span_type = pa.struct(
+        [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()),
+         ("offset", pa.int32())]
+    )
+    img = {"kind": "img", "text": "", "media_ref": "a.png", "offset": 1}
+    spans = pa.array([[None, img], None], type=pa.list_(span_type))
+    table = pa.table({
+        "doc_id": ["nulls", "no-list"], "fmt": ["epub", "epub"],
+        "title": pa.nulls(2, pa.string()), "author": pa.nulls(2, pa.string()), "spans": spans,
+    })
+    enriched = apply_ocr(spark.createDataFrame(table, schema=schema), lambda images: "ocr")
+    rows = {r.doc_id: r.spans for r in enriched.collect()}
+    assert rows["nulls"][0] is None
+    assert tuple(rows["nulls"][1]) == ("img", "ocr", "a.png", 1)
+    assert rows["no-list"] is None
+
+
 def test_span_producers_run_through_map_in_arrow(spark):
     """File ingest, the corpus generator and live OCR share the extraction
     kernel's Arrow codec: ``MapInArrow`` in their plans, no pandas."""

@@ -141,9 +141,11 @@ def test_resume_anti_join_is_anti(spark, tmp_path):
     )
 
     docs = documents_as_txt_spans(spark, SF_DIR)
-    done = docs.select("doc_id").limit(5).withColumn("status", F.lit("committed"))
-    plan = plan_of(resume_filter(docs, done))
+    committed = docs.select("doc_id").limit(5)
+    plan = plan_of(resume_filter(docs, committed))
     assert "LeftAnti" in plan
+    # One anti join on the committed ids: no distinct (HashAggregate) under it.
+    assert "HashAggregate" not in plan
 
 
 def test_training_sequences_single_data_shuffle(spark):

@@ -192,8 +192,9 @@ def test_documents_adapter_smoke(spark):
 
 
 def test_arrow_eval_plan_no_rowwise_python(spark):
-    """The physical plan must use Arrow-batched python (MapInPandas), never
-    row-wise BatchEvalPython, and keep the scan pruned to contract columns."""
+    """The physical plan must use Arrow-batched python (MapInArrow), never
+    row-wise BatchEvalPython or pandas, and keep the scan pruned to
+    contract columns."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
         extract_spans,
     )
@@ -204,7 +205,7 @@ def test_arrow_eval_plan_no_rowwise_python(spark):
     plan = extract_spans(
         documents_as_txt_spans(spark, "/root/testdata/sf0.001")
     )._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     assert "BatchEvalPython" not in plan
     # Column pruning must reach the parquet scan: only the adapter's two
     # source columns are read, not the whole documents table.
@@ -294,7 +295,7 @@ def test_read_spans_source_json_and_csv_roundtrip(spark, tmp_path):
 
 def test_catalog_mode_routes_writes_through_writeto_append(spark, monkeypatch):
     """--catalog mode must issue writeTo(table).append() for every sink
-    (output, metrics, partition lineage, doc lineage) — the Iceberg
+    (output, metrics, partition lineage), output first — the Iceberg
     snapshot-commit path — with the parquet branch untouched."""
     from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
         run_extraction_job,
@@ -339,7 +340,6 @@ def test_catalog_mode_routes_writes_through_writeto_append(spark, monkeypatch):
         "lake.db.extracted",
         "lake.db.metrics",
         "lake.db.lineage_partitions",
-        "lake.db.lineage",
     ]
     assert appended[0][1] == 10  # all docs written to the output table
 
@@ -423,9 +423,9 @@ def test_salted_repartition_levels_giant_document_skew(spark):
 
 
 def test_resume_consults_output_table_across_crash_window(spark, tmp_path):
-    """A crash between the output append and the lineage commit leaves
-    documents in output with no lineage row; the restart must consult the
-    output table itself and NOT re-append them."""
+    """The output append is the commit point: a crash after it leaves the
+    run's metrics and partition lineage missing, and the restart must read
+    the output table itself and NOT re-append its documents."""
     import shutil
 
     from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
@@ -434,23 +434,57 @@ def test_resume_consults_output_table_across_crash_window(spark, tmp_path):
 
     docs = fx.random_corpus(20, seed=9)
     df = spans_df(spark, docs)
-    out = str(tmp_path / "out")
-    lineage = str(tmp_path / "lineage")
+    out, lineage, metrics = (str(tmp_path / n) for n in ("out", "lineage", "metrics"))
 
-    run_extraction_job(spark, df, out, lineage_path=lineage)
+    run_extraction_job(spark, df, out, lineage_path=lineage, metrics_path=metrics)
     assert spark.read.parquet(out).count() == 20
 
-    # Simulate the crash window: output committed, doc lineage lost.
-    shutil.rmtree(lineage)
-    summary = run_extraction_job(spark, df, out, lineage_path=lineage)
+    # Simulate the crash window: output committed, the later sinks lost.
+    shutil.rmtree(metrics)
+    shutil.rmtree(lineage + "_partitions")
+    summary = run_extraction_job(spark, df, out, lineage_path=lineage, metrics_path=metrics)
     assert sum(m["docs"] for m in summary["metrics"]) == 0
     assert spark.read.parquet(out).count() == 20  # no duplicates
 
 
+def test_resume_after_killed_first_output_write(spark, tmp_path):
+    """A first run killed inside the output write leaves only
+    ``_temporary/`` in the output dir: nothing committed, so the rerun
+    processes every document exactly once."""
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        run_extraction_job,
+    )
+
+    attempt = tmp_path / "out" / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000.parquet").write_bytes(b"partial")
+    out = str(tmp_path / "out")
+    df = spans_df(spark, fx.random_corpus(15, seed=4))
+
+    summary = run_extraction_job(spark, df, out, lineage_path=str(tmp_path / "lineage"))
+    assert sum(m["docs"] for m in summary["metrics"]) == 15
+    written = spark.read.parquet(out)
+    assert written.count() == written.select("doc_id").distinct().count() == 15
+
+
+def test_rerun_without_lineage_appends_nothing(spark, tmp_path):
+    """``lineage_path`` switches nothing: a rerun into the same output with
+    no lineage path resumes from the output table like any other."""
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        run_extraction_job,
+    )
+
+    df = spans_df(spark, fx.random_corpus(12, seed=6))
+    out = str(tmp_path / "out")
+    assert sum(m["docs"] for m in run_extraction_job(spark, df, out)["metrics"]) == 12
+    assert run_extraction_job(spark, df, out)["metrics"] == []
+    assert spark.read.parquet(out).count() == 12
+
+
 def test_unreadable_output_table_fails_the_job(spark, tmp_path):
     """An output dir whose data file is not parquet must fail the job
-    before anything lands: reading it as "no output" would silently turn
-    the exact resume into an at-least-once one."""
+    before anything lands: reading it as "no output" would silently
+    re-append every committed document."""
     from py4j.protocol import Py4JJavaError
 
     from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
@@ -460,9 +494,11 @@ def test_unreadable_output_table_fails_the_job(spark, tmp_path):
     out = tmp_path / "out"
     out.mkdir()
     (out / "part-00000.parquet").write_bytes(b"not a parquet file")
-    lineage = tmp_path / "lineage"
     df = spans_df(spark, fx.random_corpus(5, seed=3))
     with pytest.raises(Py4JJavaError):
-        run_extraction_job(spark, df, str(out), lineage_path=str(lineage))
-    assert not lineage.exists()
+        run_extraction_job(
+            spark, df, str(out),
+            lineage_path=str(tmp_path / "lineage"), metrics_path=str(tmp_path / "metrics"),
+        )
+    assert not (tmp_path / "metrics").exists()
     assert not (tmp_path / "lineage_partitions").exists()
