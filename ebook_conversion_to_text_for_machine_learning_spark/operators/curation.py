@@ -132,6 +132,8 @@ def chunk_documents(
 #: ~80% train, ~10% val, ~10% test.
 TRAIN_UPPER = 205
 VAL_UPPER = 230
+#: The values ``split_col`` assigns.
+SPLITS = ("train", "val", "test")
 
 _HEX = "0123456789abcdef"
 
@@ -149,10 +151,11 @@ def split_col(id_col: Column) -> Column:
     """train/val/test as a pure column expression over the id — composable
     into any plan without a join (an id's split never changes)."""
     bucket = _hex_bucket(id_col)
+    train, val, test = SPLITS
     return (
-        F.when(bucket < TRAIN_UPPER, F.lit("train"))
-        .when(bucket < VAL_UPPER, F.lit("val"))
-        .otherwise(F.lit("test"))
+        F.when(bucket < TRAIN_UPPER, F.lit(train))
+        .when(bucket < VAL_UPPER, F.lit(val))
+        .otherwise(F.lit(test))
     )
 
 

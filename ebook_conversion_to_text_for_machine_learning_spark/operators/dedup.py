@@ -22,6 +22,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
+    FULL_BUILD_BATCH_ID,
+    MINHASH_BANDS,
+    MINHASH_COUNTS,
+    MINHASH_GRAMS,
+    MINHASH_TABLES,
+    check_append_batch_id,
+    has_landed,
+    write_batch,
+)
 from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
     ngrams_col,
     tokens_col,
@@ -449,10 +459,8 @@ def _hex_pfx(col: Column) -> Column:
 def _write_index(sketch: DataFrame, path: str, batch_id: int) -> None:
     """The ONE index writer: a checkpointed ``_sketch`` frame's bands,
     exploded ``grams`` and array sizes (gram-less docs: no rows) become
-    index batch ``batch_id`` — 0 statically overwrites each table (the
-    full build), any other id dynamically overwrites its own partitions."""
-    base = path.rstrip("/")
-    bid = F.lit(batch_id).cast("int")
+    index batch ``batch_id`` of the three tables, each through
+    ``index_maintenance.write_batch``."""
     bands = minhash_bands(sketch).withColumn("pfx", _hex_pfx(F.col("bucket")))
     grams = sketch.select(
         "doc_id", F.explode("grams").alias("gram_hash")
@@ -460,24 +468,10 @@ def _write_index(sketch: DataFrame, path: str, batch_id: int) -> None:
     counts = sketch.where(F.col("grams").isNotNull()).select(
         "doc_id", F.size("grams").cast("long").alias("n_grams")
     )
-    mode_opt = "dynamic" if batch_id else "static"
-    for frame, table, parts in (
-        # Cluster on the partition key before the partitioned write:
-        # without it every input task writes a file into every pfx dir it
-        # touches — O(tasks × 256) tiny files (measured: thousands at test
-        # scale, a metadata catastrophe at corpus scale). The repartition
-        # keys each dir to exactly one task → one file per partition dir.
-        (bands.repartition("pfx"), "bands", ["batch_id", "pfx"]),
-        (grams.repartition("pfx"), "grams", ["batch_id", "pfx"]),
-        (counts, "counts", ["batch_id"]),
+    for spec, frame in (
+        (MINHASH_BANDS, bands), (MINHASH_GRAMS, grams), (MINHASH_COUNTS, counts)
     ):
-        (
-            frame.withColumn("batch_id", bid)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", mode_opt)
-            .partitionBy(*parts)
-            .parquet(f"{base}/{table}")
-        )
+        write_batch(frame, path, spec, batch_id)
 
 
 def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> None:
@@ -494,15 +488,15 @@ def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> 
     arrays keeps the index a fraction of corpus size, and the verify
     never re-reads the indexed corpus's text.
 
-    Layout (all three tables): hive-partitioned by ``batch_id`` — the
-    full-build writes ``batch_id=0``; ``append_to_minhash_index`` grows
-    the index one idempotent batch partition at a time — and ``bands/``
-    and ``grams/`` additionally by ``pfx``, a 256-way hex prefix of the
-    join key (bucket / gram_hash), so ``dedup_against_index`` probes
-    prune index files by partition instead of scanning the corpus-scale
-    tables. Overwrite-idempotent: a full rebuild is a plain re-run.
+    Layout: ``index_maintenance.MINHASH_TABLES`` — the full build is
+    batch 0 and ``append_to_minhash_index`` grows the index one
+    idempotent batch partition at a time; ``pfx`` is a 256-way hex
+    prefix of the join key (bucket / gram_hash), so
+    ``dedup_against_index`` probes prune index files by partition
+    instead of scanning the corpus-scale tables. Overwrite-idempotent:
+    a full rebuild is a plain re-run.
     """
-    _write_index(_sketch(df, text_col).localCheckpoint(), path, 0)
+    _write_index(_sketch(df, text_col).localCheckpoint(), path, FULL_BUILD_BATCH_ID)
 
 
 def append_to_minhash_index(
@@ -526,8 +520,7 @@ def append_to_minhash_index(
     ``n_common``; ``ingest_batch_against_index`` sequences the two steps
     correctly.
     """
-    if batch_id == 0:
-        raise ValueError("batch_id 0 is reserved for the full build")
+    check_append_batch_id(batch_id)
     _write_index(_sketch(df, text_col).localCheckpoint(), path, batch_id)
 
 
@@ -698,10 +691,11 @@ def ingest_batch_against_index(
     (per pair, ``doc_b`` is flagged as ``dup_of`` its best ``doc_a``
     match: max n_common, min doc_a tie-break). Then the sketch probes
     the index; only keepers take an index match, and only novel keepers'
-    sketch rows are appended. An index path where nothing has landed
-    yet — missing, or a table dir a killed first write left with no
-    committed files — is an empty index whose tables the append creates;
-    any other read failure propagates. Chain caveat: in a near-dup chain
+    sketch rows are appended. An index where any table has nothing
+    landed yet (``index_maintenance.has_landed``, a listing: missing, or
+    a table dir a killed first write left with no committed files) is an
+    empty index whose tables the append creates; any read failure of a
+    landed table propagates. Chain caveat: in a near-dup chain
     a → b → c where (a, c) is not itself a verified pair, c's ``dup_of``
     points at b, which was also dropped (its own dup_of is a) —
     ``dup_of`` names the matched document, not the cluster
@@ -721,31 +715,22 @@ def ingest_batch_against_index(
     doc is now indexed) — the best-match keeper (max n_common, min
     doc_id tie-break) when duplicated.
     """
-    from pyspark.errors import AnalysisException
-
-    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
-        _nothing_landed,
-    )
-
-    if batch_id == 0:
-        raise ValueError("batch_id 0 is reserved for the full build")
+    check_append_batch_id(batch_id)
     sketch = _sketch(batch, text_col).localCheckpoint()
     intra = _best_match(_verified_pairs(sketch), "doc_b", "doc_a")
-    try:
+    base = path.rstrip("/")
+    if all(has_landed(spark, f"{base}/{t.name}") for t in MINHASH_TABLES):
         # The whole checkpointed sketch probes, not a keepers-only frame
         # derived from it: a derived frame's size estimate (a product of
         # join sizes) tips the planner into runtime bloom filters that
         # read the index tables twice — measured 546 files vs 273.
         dups = _probe_index(spark, sketch, path, batch_id)
-    except AnalysisException as ex:
-        if not _nothing_landed(ex):
-            raise
-        best = intra
-    else:
         # An intra-batch dup keeps its intra-batch match.
         best = intra.unionByName(
             _best_match(dups, "doc_id", "dup_of").join(intra, "doc_id", "left_anti")
         )
+    else:
+        best = intra
     annotated = batch.join(best, "doc_id", "left").localCheckpoint()
     novel = annotated.where(F.col("dup_of").isNull()).select("doc_id")
     novel_sketch = sketch.join(F.broadcast(novel), "doc_id", "left_semi")

@@ -1,12 +1,17 @@
 """The one owner of the ``batch_id``-partitioned table layout.
 
 Engine extension (the reference is a single-process converter with no
-persisted state). Four tables grow one ``batch_id=<n>`` hive partition
-per ingest batch — O(batch) appends, partition-pruned probes: the
-minhash dedup index (``operators/dedup.py``), the ANN index and the PQ
-code table (``operators/similarity.py``) and the streaming seen-hash
-sidecar (``streaming/curation.py``). What goes *up* must eventually
-merge back *down*: after 10^4 streaming micro-batches
+persisted state). The persisted index tables grow one ``batch_id=<n>``
+hive partition per ingest batch — O(batch) appends, partition-pruned
+probes: the minhash dedup index (``operators/dedup.py``), the ANN index
+and the PQ code table (``operators/similarity.py``) and the streaming
+seen-hash sidecar (``streaming/curation.py``). Each table's layout is
+one ``TableSpec`` here (name, logical key, sub-partition columns), and
+every index write goes through ``write_batch``: batch 0 is the full
+build, any other id an append. The sidecar writes its own micro-batch
+dirs (its micro-batch 0 is a real batch, not a full build); only its
+compaction uses its spec. What goes *up* must eventually merge back
+*down*: after 10^4 streaming micro-batches
 (``streaming/dedup.py`` appends one index batch per trigger) the
 ``bands/``/``grams/`` tables hold 10^4 × 256 directories and every
 probe's pruned read fans across 10^4 small files per prefix. One
@@ -45,15 +50,72 @@ it after a crash before the next read.
 from __future__ import annotations
 
 import json
+from typing import NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: Partition id of the full build: written with static overwrite, which
+#: truncates the table dir, so a rebuild over an older layout leaves no
+#: stale partition dirs behind. No append may use it.
+FULL_BUILD_BATCH_ID = 0
 
 #: Partition id compaction squashes into — below any real batch id, so
 #: the "exclude my own batch" replay filters can never exclude it.
 COMPACTED_BATCH_ID = -1
 
 _MANIFEST = "_FOLDED.json"
+
+
+class TableSpec(NamedTuple):
+    """One ``batch_id``-partitioned table: its dir name under the index
+    root, the logical key a compaction merge dedupes on, and the columns
+    that sub-partition each batch dir (probes prune on them)."""
+
+    name: str
+    key_cols: tuple[str, ...]
+    sub_parts: tuple[str, ...] = ()
+
+
+MINHASH_BANDS = TableSpec("bands", ("doc_id", "band_id", "bucket"), ("pfx",))
+MINHASH_GRAMS = TableSpec("grams", ("doc_id", "gram_hash"), ("pfx",))
+MINHASH_COUNTS = TableSpec("counts", ("doc_id",))
+MINHASH_TABLES = (MINHASH_BANDS, MINHASH_GRAMS, MINHASH_COUNTS)
+ANN_BANDS = TableSpec("bands", ("item_id", "band_id", "bucket"), ("band_id", "pfx"))
+ANN_CELLS = TableSpec("cells", ("item_id",), ("cell_pfx",))
+PQ_CODES = TableSpec("codes", ("vec_id",))
+#: The streaming seen-hash sidecar is its own root dir (``name`` is unused).
+SEEN_HASHES = TableSpec("seen", ("text_hash",))
+
+
+def check_append_batch_id(batch_id: int) -> None:
+    """Appends take any id but the full build's."""
+    if batch_id == FULL_BUILD_BATCH_ID:
+        raise ValueError("batch_id 0 is reserved for the full build")
+
+
+def write_batch(frame: DataFrame, index_path: str, spec: TableSpec, batch_id: int) -> None:
+    """The one index-table writer: ``frame`` (the table's data columns
+    plus ``spec.sub_parts``) lands in ``<index_path>/<spec.name>/
+    batch_id=<batch_id>/<sub_parts>``. The full build statically
+    overwrites the whole table; any other id dynamically overwrites only
+    its own partitions, so replaying a crashed append rewrites the same
+    files instead of appending duplicates."""
+    if spec.sub_parts:
+        # Cluster on the partition key before the partitioned write:
+        # without it every input task writes a file into every dir it
+        # touches — O(tasks × 256) tiny files (measured: thousands at
+        # test scale). The repartition keys each dir to one task → one
+        # file per partition dir.
+        frame = frame.repartition(*spec.sub_parts)
+    mode = "static" if batch_id == FULL_BUILD_BATCH_ID else "dynamic"
+    (
+        frame.withColumn("batch_id", F.lit(batch_id).cast("int"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", mode)
+        .partitionBy("batch_id", *spec.sub_parts)
+        .parquet(f"{index_path.rstrip('/')}/{spec.name}")
+    )
 
 
 def _fs(spark: SparkSession, path: str):
@@ -68,6 +130,30 @@ def _child_names(spark: SparkSession, path: str) -> list[str]:
     if not fs.exists(p):
         return []
     return [st.getPath().getName() for st in fs.listStatus(p)]
+
+
+def has_landed(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds a data file a parquet reader would list.
+    A missing path, or a dir holding only hidden entries (``_SUCCESS``,
+    a killed write's ``_temporary/`` or ``.spark-staging-*``), has
+    nothing landed. A listing, never a table scan: it walks visible dirs
+    depth-first and stops at the first visible file, so callers read
+    (and let any read failure propagate) only when data is there."""
+    fs, root = _fs(spark, path)
+    if not fs.exists(root):
+        return False
+    pending = [root]
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            name = st.getPath().getName()
+            # Spark's own hidden-path rule: "_" marks metadata unless it
+            # is a partition dir ("_col=v"); "." marks staging/crc files.
+            if name.startswith(".") or (name.startswith("_") and "=" not in name):
+                continue
+            if st.isFile():
+                return True
+            pending.append(st.getPath())
+    return False
 
 
 def _batch_ids(spark: SparkSession, table_dir: str) -> list[int]:
@@ -136,9 +222,7 @@ def _compact_table(
     spark: SparkSession,
     table_dir: str,
     staging_dir: str,
-    *,
-    key_cols: list[str],
-    sub_parts: list[str],
+    spec: TableSpec,
     committed_max: int | None,
 ) -> int:
     """Fold one table's batch partitions into ``batch_id=-1``.
@@ -170,19 +254,15 @@ def _compact_table(
             spark.read.parquet(table_dir)
             .where(F.col("batch_id").isin(folded))
             .drop("batch_id")
-            .dropDuplicates(key_cols)
+            .dropDuplicates(list(spec.key_cols))
         )
-        if sub_parts:
-            # One file per partition dir, not one per (task × dir) —
-            # the write_minhash_index small-files lesson.
-            (
-                merged.repartition(*[F.col(c) for c in sub_parts])
-                .write.mode("overwrite")
-                .partitionBy(*sub_parts)
-                .parquet(staging_dir)
-            )
-        else:
-            merged.coalesce(1).write.mode("overwrite").parquet(staging_dir)
+        # One file per leaf dir, as write_batch lays them out.
+        (
+            (merged.repartition(*spec.sub_parts) if spec.sub_parts else merged.coalesce(1))
+            .write.mode("overwrite")
+            .partitionBy(*spec.sub_parts)
+            .parquet(staging_dir)
+        )
         _write_small_file(
             spark, manifest_path, json.dumps({"folded": folded})
         )
@@ -198,7 +278,7 @@ def _compact_table(
 def _compact_index(
     spark: SparkSession,
     path: str,
-    tables: list[tuple[str, list[str], list[str]]],
+    specs: tuple[TableSpec, ...],
     *,
     checkpoint_dir: str | None,
     index_batch_offset: int,
@@ -206,16 +286,15 @@ def _compact_index(
     base = path.rstrip("/")
     committed_max = _commit_horizon(spark, checkpoint_dir, index_batch_offset)
     folded = 0
-    for name, key_cols, sub_parts in tables:
+    for spec in specs:
         folded = max(
             folded,
             _compact_table(
                 spark,
-                f"{base}/{name}",
-                f"{base}/_compact/{name}",
-                key_cols=key_cols,
-                sub_parts=sub_parts,
-                committed_max=committed_max,
+                f"{base}/{spec.name}",
+                f"{base}/_compact/{spec.name}",
+                spec,
+                committed_max,
             ),
         )
     _delete_dir(spark, f"{base}/_compact")
@@ -239,11 +318,7 @@ def compact_minhash_index(
     return _compact_index(
         spark,
         path,
-        [
-            ("bands", ["doc_id", "band_id", "bucket"], ["pfx"]),
-            ("grams", ["doc_id", "gram_hash"], ["pfx"]),
-            ("counts", ["doc_id"], []),
-        ],
+        MINHASH_TABLES,
         checkpoint_dir=checkpoint_dir,
         index_batch_offset=index_batch_offset,
     )
@@ -262,10 +337,7 @@ def compact_ann_index(
     return _compact_index(
         spark,
         path,
-        [
-            ("bands", ["item_id", "band_id", "bucket"], ["band_id", "pfx"]),
-            ("cells", ["item_id"], ["cell_pfx"]),
-        ],
+        (ANN_BANDS, ANN_CELLS),
         checkpoint_dir=checkpoint_dir,
         index_batch_offset=index_batch_offset,
     )
@@ -283,7 +355,7 @@ def compact_pq_index(
     return _compact_index(
         spark,
         path,
-        [("codes", ["vec_id"], [])],
+        (PQ_CODES,),
         checkpoint_dir=checkpoint_dir,
         index_batch_offset=index_batch_offset,
     )

@@ -24,6 +24,15 @@ from typing import List
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
+    ANN_BANDS,
+    ANN_CELLS,
+    FULL_BUILD_BATCH_ID,
+    PQ_CODES,
+    check_append_batch_id,
+    write_batch,
+)
+
 #: Number of sign-projection hyperplanes (bucket space = 2^N_PLANES).
 N_PLANES = 8
 _PLANE_SEED = 20240816
@@ -881,13 +890,12 @@ def write_ann_index(
     - ``meta``    — one row of the knobs the index was built with, so a
       reader cannot accidentally band probes with mismatched planes
 
-    Probe-pruned, append-ready layout: both tables are hive-partitioned
-    by ``batch_id`` (the full build is batch 0;
+    Probe-pruned, append-ready layout: ``index_maintenance.ANN_BANDS``
+    and ``ANN_CELLS`` (the full build is batch 0;
     ``append_to_ann_index`` grows the index one idempotent batch at a
-    time), then ``bands/`` by ``band_id`` and ``pfx`` (the bucket
-    bit-string's leading ``_BAND_PFX_BITS`` bits as an int) and
-    ``cells/`` by ``cell_pfx`` (``cell_id mod _CELL_PARTITIONS``), so
-    the ``*_topk_indexed`` paths read only the partitions a probe
+    time). ``pfx`` is the bucket bit-string's leading
+    ``_BAND_PFX_BITS`` bits as an int and ``cell_pfx`` is
+    ``cell_id mod _CELL_PARTITIONS``, so the ``*_topk_indexed`` paths read only the partitions a probe
     batch's buckets / probed cells land in instead of scanning the
     corpus-scale tables — the same file-pruning contract as the minhash
     dedup index (``operators/dedup.py``). The modulo keeps the
@@ -906,7 +914,7 @@ def write_ann_index(
             vec_col=vec_col, id_col=id_col,
         )
     _write_ann_batch(
-        corpus, dim, path, 0, centroids, dynamic=False,
+        corpus, dim, path, FULL_BUILD_BATCH_ID, centroids,
         vec_col=vec_col, id_col=id_col,
         n_bands=n_bands, band_planes=band_planes,
     )
@@ -928,56 +936,29 @@ def _write_ann_batch(
     batch_id: int,
     centroids: list,
     *,
-    dynamic: bool,
     vec_col: str,
     id_col: str,
     n_bands: int,
     band_planes: int,
 ) -> None:
-    # The full build (dynamic=False) STATICALLY overwrites — truncating
-    # the table dir, so a rebuild over a stale/older layout can never
-    # leave conflicting partition dirs behind. Appends (dynamic=True)
-    # replace only their own batch partitions.
-    bid = F.lit(batch_id).cast("int")
-    # Cluster on the partition key before each partitioned write — one
-    # file per partition dir instead of one per (task × dir); see
-    # dedup.write_minhash_index for the measured small-files blowup.
     bands = (
         lsh_banded_signatures_arrow(
             corpus, dim, vec_col=vec_col, id_col=id_col,
             n_bands=n_bands, band_planes=band_planes,
         )
         .withColumnRenamed("vec_id", "item_id")
-        .withColumn("batch_id", bid)
         .withColumn("pfx", _band_pfx(F.col("bucket")))
-        .repartition("band_id", "pfx")
     )
-    cells = (
-        ivf_assign_arrow(
-            corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
-        )
-        .select(
-            F.col("vec_id").alias("item_id"),
-            F.col(vec_col).alias("item_vec"),
-            "cell_id",
-            bid.alias("batch_id"),
-            F.pmod(F.col("cell_id"), F.lit(_CELL_PARTITIONS)).cast("int").alias("cell_pfx"),
-        )
-        .repartition("cell_pfx")
+    cells = ivf_assign_arrow(
+        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
+    ).select(
+        F.col("vec_id").alias("item_id"),
+        F.col(vec_col).alias("item_vec"),
+        "cell_id",
+        F.pmod(F.col("cell_id"), F.lit(_CELL_PARTITIONS)).cast("int").alias("cell_pfx"),
     )
-    mode_opt = "dynamic" if dynamic else "static"
-    (
-        bands.write.mode("overwrite")
-        .option("partitionOverwriteMode", mode_opt)
-        .partitionBy("batch_id", "band_id", "pfx")
-        .parquet(f"{path}/bands")
-    )
-    (
-        cells.write.mode("overwrite")
-        .option("partitionOverwriteMode", mode_opt)
-        .partitionBy("batch_id", "cell_pfx")
-        .parquet(f"{path}/cells")
-    )
+    write_batch(bands, path, ANN_BANDS, batch_id)
+    write_batch(cells, path, ANN_CELLS, batch_id)
 
 
 def append_to_ann_index(
@@ -1004,12 +985,11 @@ def append_to_ann_index(
     with ``write_ann_index`` (optionally passing k-means ``centroids=``)
     as the compaction step.
     """
-    if batch_id == 0:
-        raise ValueError("batch_id 0 is reserved for the full build")
+    check_append_batch_id(batch_id)
     spark = corpus_batch.sparkSession
     idx = read_ann_index(spark, path)
     _write_ann_batch(
-        corpus_batch, idx.dim, path, batch_id, idx.centroids, dynamic=True,
+        corpus_batch, idx.dim, path, batch_id, idx.centroids,
         vec_col=vec_col, id_col=id_col,
         n_bands=idx.n_bands, band_planes=idx.band_planes,
     )
@@ -1883,9 +1863,9 @@ def write_pq_index(
     never re-encode (or, for raw ADC, even re-read) the corpus.
     ``kmeans_iters > 0`` Lloyd-trains the codebooks before encoding.
 
-    ``codes/`` is hive-partitioned by ``batch_id`` (full build = 0) so
-    ``append_to_pq_index`` can grow the code table one idempotent batch
-    at a time against the frozen codebooks.
+    ``codes/`` is laid out as ``index_maintenance.PQ_CODES`` (full
+    build = batch 0) so ``append_to_pq_index`` can grow the code table
+    one idempotent batch at a time against the frozen codebooks.
     """
     import pyarrow as pa
 
@@ -1910,9 +1890,10 @@ def write_pq_index(
     corpus.sparkSession.createDataFrame(
         entries, "subspace int, code int, cvec array<double>"
     ).write.mode("overwrite").parquet(f"{base}/codebooks")
-    pq_encode(corpus, books, vec_col=vec_col, id_col=id_col).withColumn(
-        "batch_id", F.lit(0).cast("int")
-    ).write.mode("overwrite").partitionBy("batch_id").parquet(f"{base}/codes")
+    write_batch(
+        pq_encode(corpus, books, vec_col=vec_col, id_col=id_col),
+        base, PQ_CODES, FULL_BUILD_BATCH_ID,
+    )
 
 
 def append_to_pq_index(
@@ -1932,17 +1913,11 @@ def append_to_pq_index(
     Same drift contract as ``append_to_ann_index``: rebuild (optionally
     with retrained codebooks) as the compaction step.
     """
-    if batch_id == 0:
-        raise ValueError("batch_id 0 is reserved for the full build")
-    spark = corpus_batch.sparkSession
-    books, _ = read_pq_index(spark, path)
-    (
-        pq_encode(corpus_batch, books, vec_col=vec_col, id_col=id_col)
-        .withColumn("batch_id", F.lit(batch_id).cast("int"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{path.rstrip('/')}/codes")
+    check_append_batch_id(batch_id)
+    books, _ = read_pq_index(corpus_batch.sparkSession, path)
+    write_batch(
+        pq_encode(corpus_batch, books, vec_col=vec_col, id_col=id_col),
+        path, PQ_CODES, batch_id,
     )
 
 

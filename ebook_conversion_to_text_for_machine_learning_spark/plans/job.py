@@ -25,8 +25,10 @@ from __future__ import annotations
 import argparse
 import json
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from ebook_conversion_to_text_for_machine_learning_spark.operators.curation import SPLITS
 from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
     _append,
     _read_table_or_none,
@@ -102,19 +104,15 @@ def main(argv: list[str] | None = None) -> None:
                     "write to a new --output and swap, or use --catalog "
                     "tables where createOrReplace commits atomically"
                 )
-            out = compact_sequences(input_df)
-            out.persist()
-            try:
-                # a compaction output is a full rewrite — append would make
-                # the dedup job itself create duplicates on rerun
-                if args.catalog:
-                    out.writeTo(args.output).createOrReplace()
-                else:
-                    out.write.mode("overwrite").parquet(args.output)
-                kept = out.count()
-            finally:
-                out.unpersist()
-            print(json.dumps({"mode": "compact", "rows_kept": kept}))
+            observed = Observation()
+            out = compact_sequences(input_df).observe(observed, F.count("*").alias("n"))
+            # a compaction output is a full rewrite — append would make
+            # the dedup job itself create duplicates on rerun
+            if args.catalog:
+                out.writeTo(args.output).createOrReplace()
+            else:
+                out.write.mode("overwrite").parquet(args.output)
+            print(json.dumps({"mode": "compact", "rows_kept": observed.get["n"]}))
         elif args.mode in ("sequences", "mix"):
             from ebook_conversion_to_text_for_machine_learning_spark.plans.training_prep import (
                 prepare_training_mix,
@@ -152,17 +150,19 @@ def main(argv: list[str] | None = None) -> None:
                     overlap=args.chunk_overlap,
                     seen_hashes=seen,
                 )
-            # Persist across the write + summary so the chain (extraction
-            # included) runs once, not once per action.
-            seqs.persist()
-            try:
-                _append(seqs, args.output, args.catalog)
-                counts = {
-                    r["split"]: r["n"]
-                    for r in seqs.groupBy("split").agg(F.count("*").alias("n")).collect()
-                }
-            finally:
-                seqs.unpersist()
+            # The summary is observed on the append itself: the chain runs
+            # once, and a second action after the append would recompute
+            # it against the grown table when --seen-hashes names --output.
+            observed = Observation()
+            _append(
+                seqs.observe(
+                    observed,
+                    *(F.count_if(F.col("split") == s).alias(s) for s in SPLITS),
+                ),
+                args.output,
+                args.catalog,
+            )
+            counts = {s: n for s, n in observed.get.items() if n}
             print(json.dumps({"mode": args.mode, "chunks_by_split": counts}))
         else:
             summary = run_extraction_job(

@@ -8,9 +8,9 @@ one code path: every call left-anti-joins the input against the
 Catalyst/AQE decides) and only processes the remainder. The output append
 is the commit point: on Iceberg a single atomic snapshot commit per run;
 on Parquet a killed write leaves only ``_temporary/``, which reads as
-nothing landed. (Known gap on Parquet: task files that a killed job had
-already committed under ``_temporary/0/`` are merged into the output by
-the next append's job commit, so that rerun can duplicate them.)
+nothing landed and is cleared before the next append (its committer
+would otherwise merge the killed job's committed task files into the
+output).
 
 Metrics come from one ``groupBy`` over the extraction output — partial
 (map-side) aggregation is free from Catalyst, so the agg adds one small
@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
     extract_spans,
 )
+from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
+    _delete_dir,
+    has_landed,
+)
 
 
 def _append(df: DataFrame, target: str, catalog: bool) -> None:
@@ -44,36 +48,17 @@ def _append(df: DataFrame, target: str, catalog: bool) -> None:
         df.write.mode("append").parquet(target)
 
 
-def _nothing_landed(ex: Exception) -> bool:
-    """True only for the "nothing landed yet" read failures: a missing
-    path or table, or an existing dir with no committed data files (e.g.
-    only ``_temporary/`` from a killed first write). Neither can hold
-    rows. Any OTHER failure (transient store error, corrupt footer) must
-    propagate: treating it as "first run" would silently disable a
-    resume or seen-set anti-join and re-append the whole corpus as
-    duplicates."""
-    msg = str(ex)
-    return any(
-        cond in msg
-        for cond in (
-            "PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-        )
-    )
-
-
 def _read_table_or_none(spark: SparkSession, path: str, catalog: bool):
     """Read a sink table (catalog table or parquet dir), returning None
-    only when ``_nothing_landed``."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        if catalog:
-            return spark.read.table(path)
-        return spark.read.parquet(path)
-    except AnalysisException as ex:
-        if not _nothing_landed(ex):
-            raise
-        return None
+    only when nothing has landed yet: a missing table, or a parquet path
+    with no committed data file (``has_landed``, a listing — e.g. only
+    ``_temporary/`` from a killed first write). Any read failure of a
+    table that exists propagates: treating it as "first run" would
+    silently disable a resume or seen-set anti-join and re-append the
+    whole corpus as duplicates."""
+    if catalog:
+        return spark.read.table(path) if spark.catalog.tableExists(path) else None
+    return spark.read.parquet(path) if has_landed(spark, path) else None
 
 
 def resume_filter(input_df: DataFrame, committed_output: DataFrame | None) -> DataFrame:
@@ -111,6 +96,11 @@ def run_extraction_job(
     metrics and partition rows missing. ``lineage_path`` only names the
     partition-lineage table (``lineage_path + "_partitions"``); it
     switches nothing else.
+
+    Precondition: one writer per output at a time. On Parquet the append
+    first deletes the output's ``_temporary/`` — a killed job's leftovers,
+    whose committed task files the append's job commit would otherwise
+    merge into the output — and would delete a live writer's as well.
     """
     run_id = uuid.uuid4().hex
     started = time.time()
@@ -133,6 +123,8 @@ def run_extraction_job(
     # ``extracted`` goes out of scope; nothing to unpersist.
     extracted = extracted.localCheckpoint()
     # The commit point: once this lands, a rerun skips these documents.
+    if not catalog:
+        _delete_dir(spark, f"{output_path.rstrip('/')}/_temporary")
     _append(extracted.select("doc_id", "fmt", "spans"), output_path, catalog)
 
     # Metrics counters (docs in/dropped, chapters, media, per format). The

@@ -46,6 +46,7 @@ from ebook_conversion_to_text_for_machine_learning_spark.operators.extract impor
     INPUT_SCHEMA,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
+    SEEN_HASHES,
     _commit_horizon,
     _compact_table,
 )
@@ -101,9 +102,8 @@ def compact_seen_sidecar(
         spark,
         seen_dir,
         f"{seen_dir}/_compact",
-        key_cols=["text_hash"],
-        sub_parts=[],
-        committed_max=_commit_horizon(spark, checkpoint_dir, 0),
+        SEEN_HASHES,
+        _commit_horizon(spark, checkpoint_dir, 0),
     )
 
 

@@ -1,9 +1,12 @@
-"""Compaction of the persisted incremental indexes: decisions must be
-identical before/after, layouts must collapse to one base partition
-with one file per prefix dir, the streaming commit horizon must gate
-what folds, and a crash mid-fold must be completable by re-run."""
+"""The persisted incremental indexes' layout and compaction: every
+build, append and compaction lays each table out as its ``TableSpec``
+says, with one file per leaf dir; decisions must be identical
+before/after compaction, the streaming commit horizon must gate what
+folds, and a crash mid-fold must be completable by re-run."""
 
 import os
+import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,6 +47,41 @@ def _built_index(spark, tmp_path, name="idx"):
     return path
 
 
+def _assert_layout(index_path, spec, batch_ids):
+    """Every leaf dir of the spec's table is ``batch_id=<id>/<one dir per
+    sub-partition column>`` holding exactly one part file, and the batch
+    ids present are exactly ``batch_ids``. (At these sizes a table with
+    no sub-partition columns also gets one file per batch: its writer's
+    input is a single partition.)"""
+    table_dir = os.path.join(index_path, spec.name)
+    found = set()
+    for d, subdirs, files in os.walk(table_dir):
+        rel = os.path.relpath(d, table_dir)
+        parts = [f for f in files if f.startswith("part-")]
+        if rel == "." or subdirs:
+            assert not parts, (d, parts)
+            continue
+        segs = rel.split(os.sep)
+        assert [seg.split("=")[0] for seg in segs] == ["batch_id", *spec.sub_parts], d
+        assert len(parts) == 1, (d, parts)
+        found.add(int(segs[0].split("=")[1]))
+    assert sorted(found) == sorted(batch_ids), (table_dir, found)
+
+
+def test_only_index_maintenance_sets_the_batch_layout():
+    """The batch-partition write rule has one owner: no other library
+    module picks an overwrite mode or partitions by ``batch_id``."""
+    pkg = Path(M.__file__).parent.parent
+    rule = re.compile(r"partitionOverwriteMode|partitionBy\(\s*[\"']batch_id")
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p.name != "index_maintenance.py" and rule.search(p.read_text())
+    ]
+    assert offenders == []
+    assert rule.search(Path(M.__file__).read_text())
+
+
 def _decisions(spark, path):
     return sorted(
         map(tuple, dedup_against_index(spark, _docs(spark, _PROBE), path).collect())
@@ -52,23 +90,17 @@ def _decisions(spark, path):
 
 def test_compact_minhash_preserves_decisions_and_collapses_layout(spark, tmp_path):
     path = _built_index(spark, tmp_path)
+    for spec in M.MINHASH_TABLES:
+        _assert_layout(path, spec, [0, 1, 2])
     before = _decisions(spark, path)
     assert before, "probe must produce dup rows for the test to mean anything"
 
     assert M.compact_minhash_index(spark, path) == 3  # batches 0, 1, 2
     after = _decisions(spark, path)
     assert after == before
-
-    for table in ("bands", "grams", "counts"):
-        dirs = os.listdir(f"{path}/{table}")
-        assert [d for d in dirs if d.startswith("batch_id=")] == ["batch_id=-1"]
-    # one part-file per pfx dir (the small-files contract), manifest rode along
-    bands_base = f"{path}/bands/batch_id=-1"
-    pfx_dirs = [d for d in os.listdir(bands_base) if d.startswith("pfx=")]
-    assert pfx_dirs
-    for d in pfx_dirs:
-        parts = [f for f in os.listdir(f"{bands_base}/{d}") if f.endswith(".parquet")]
-        assert len(parts) == 1, (d, parts)
+    # one part-file per leaf dir (the small-files contract)
+    for spec in M.MINHASH_TABLES:
+        _assert_layout(path, spec, [-1])
 
     # idempotent: nothing left to fold, decisions unchanged
     assert M.compact_minhash_index(spark, path) == 0
@@ -205,6 +237,8 @@ def test_compact_ann_index_identical_topk(spark, tmp_path):
     # planes keep bands/ at tens of pfx dirs instead of ~1,000 tiny files.
     write_ann_index(base, dim, path, target_cells=16, n_bands=2, band_planes=4)
     append_to_ann_index(extra, path, batch_id=1)
+    for spec in (M.ANN_BANDS, M.ANN_CELLS):
+        _assert_layout(path, spec, [0, 1])
 
     probes = emb.where(F.col("vec_id") < 5)
     idx = read_ann_index(spark, path)
@@ -220,11 +254,8 @@ def test_compact_ann_index_identical_topk(spark, tmp_path):
     idx2 = read_ann_index(spark, path)
     assert sorted(map(tuple, lsh_ann_topk_indexed(idx2, probes, k=5).collect())) == lsh_before
     assert sorted(map(tuple, ivf_ann_topk_indexed(idx2, probes, k=5).collect())) == ivf_before
-    for table in ("bands", "cells"):
-        dirs = [
-            d for d in os.listdir(f"{path}/{table}") if d.startswith("batch_id=")
-        ]
-        assert dirs == ["batch_id=-1"], (table, dirs)
+    for spec in (M.ANN_BANDS, M.ANN_CELLS):
+        _assert_layout(path, spec, [-1])
 
 
 def test_compact_pq_index_identical_topk(spark, tmp_path):
@@ -244,6 +275,7 @@ def test_compact_pq_index_identical_topk(spark, tmp_path):
     path = str(tmp_path / "pq")
     write_pq_index(base, path, m=2, target_codes=8)
     append_to_pq_index(extra, path, batch_id=1)
+    _assert_layout(path, M.PQ_CODES, [0, 1])
 
     probes = emb.where(F.col("vec_id") < 5)
     books, codes = read_pq_index(spark, path)
@@ -259,5 +291,4 @@ def test_compact_pq_index_identical_topk(spark, tmp_path):
         )
         == before
     )
-    dirs = [d for d in os.listdir(f"{path}/codes") if d.startswith("batch_id=")]
-    assert dirs == ["batch_id=-1"]
+    _assert_layout(path, M.PQ_CODES, [-1])

@@ -99,69 +99,67 @@ def test_spark_submit_with_py_files_zip(spark, tmp_path):
 
 def test_job_cli_sequences_mode(spark, tmp_path):
     """--mode sequences runs the full curation chain via the CLI and writes
-    the training-sequence table."""
+    the training-sequence table. A rerun over a grown input whose
+    --seen-hashes names its own --output appends only the new texts'
+    chunks, and its summary counts exactly the rows it appended."""
     from tests import fixtures as fx
     from tests.conftest import spans_df
 
     docs = fx.random_corpus(40, seed=21)
-    in_dir = str(tmp_path / "in")
-    spans_df(spark, docs).write.parquet(in_dir)
+    first, grown = str(tmp_path / "in1"), str(tmp_path / "in2")
+    spans_df(spark, docs[:20]).write.parquet(first)
+    spans_df(spark, docs).write.parquet(grown)
     out_dir = str(tmp_path / "seqs")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    result = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "ebook_conversion_to_text_for_machine_learning_spark.plans.job",
-            "--input", in_dir,
-            "--output", out_dir,
-            "--mode", "sequences",
-            "--chunk-tokens", "32",
-            "--chunk-overlap", "8",
-            "--master", "local[2]",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        env={**os.environ, "PYTHONPATH": repo},
-    )
-    assert result.returncode == 0, result.stderr[-2000:]
-    summary = json.loads([l for l in result.stdout.splitlines() if l.startswith("{")][-1])
-    assert summary["mode"] == "sequences"
+
+    def run(*args):
+        result = subprocess.run(
+            [
+                sys.executable,
+                "-m",
+                "ebook_conversion_to_text_for_machine_learning_spark.plans.job",
+                "--output", out_dir,
+                "--mode", "sequences",
+                "--chunk-tokens", "32",
+                "--chunk-overlap", "8",
+                "--min-quality", "0",
+                "--master", "local[2]",
+                *args,
+            ],
+            capture_output=True,
+            text=True,
+            timeout=300,
+            env={**os.environ, "PYTHONPATH": repo},
+        )
+        assert result.returncode == 0, result.stderr[-2000:]
+        summary = json.loads(
+            [l for l in result.stdout.splitlines() if l.startswith("{")][-1]
+        )
+        assert summary["mode"] == "sequences"
+        return summary["chunks_by_split"]
+
+    def by_split():
+        out = spark.read.parquet(out_dir)
+        return {r.split: r["count"] for r in out.groupBy("split").count().collect()}
+
+    landed = run("--input", first)
     out = spark.read.parquet(out_dir)
     assert set(out.columns) == {
         "doc_id", "text_hash", "chunk_idx", "chunk_start", "chunk_text",
         "n_chunk_tokens", "split",
     }
-    n = out.count()
-    assert n > 0 and n == sum(summary["chunks_by_split"].values())
+    assert landed and landed == by_split()
     assert out.agg({"n_chunk_tokens": "max"}).first()[0] <= 32
 
-    # Incremental rerun: pointing --seen-hashes at the first output makes
-    # the same input a no-op (its text_hash column anti-joins everything).
-    result2 = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "ebook_conversion_to_text_for_machine_learning_spark.plans.job",
-            "--input", in_dir,
-            "--output", str(tmp_path / "seqs2"),
-            "--mode", "sequences",
-            "--chunk-tokens", "32",
-            "--chunk-overlap", "8",
-            "--seen-hashes", out_dir,
-            "--master", "local[2]",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        env={**os.environ, "PYTHONPATH": repo},
-    )
-    assert result2.returncode == 0, result2.stderr[-2000:]
-    summary2 = json.loads(
-        [l for l in result2.stdout.splitlines() if l.startswith("{")][-1]
-    )
-    assert summary2["chunks_by_split"] == {}
+    # Incremental rerun into the same table: the first 20 docs' texts are
+    # seen and re-emit nothing; the summary is what this run appended.
+    appended = run("--input", grown, "--seen-hashes", out_dir)
+    after = by_split()
+    assert appended and appended == {
+        s: n - landed.get(s, 0) for s, n in after.items() if n > landed.get(s, 0)
+    }
+    out = spark.read.parquet(out_dir)
+    assert out.count() == out.select("doc_id", "chunk_idx").distinct().count()
 
 
 def test_job_cli_mix_mode(spark, tmp_path):

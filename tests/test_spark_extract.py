@@ -449,17 +449,36 @@ def test_resume_consults_output_table_across_crash_window(spark, tmp_path):
 
 def test_resume_after_killed_first_output_write(spark, tmp_path):
     """A first run killed inside the output write leaves only
-    ``_temporary/`` in the output dir: nothing committed, so the rerun
+    ``_temporary/`` in the output dir — an uncommitted task attempt and a
+    committed task dir holding real output rows, which the next append's
+    job commit would merge into the output. Nothing landed, so the rerun
     processes every document exactly once."""
+    import shutil
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
+        extract_spans,
+    )
     from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
         run_extraction_job,
     )
 
+    docs = fx.random_corpus(15, seed=4)
     attempt = tmp_path / "out" / "_temporary" / "0" / "_temporary" / "attempt_0"
     attempt.mkdir(parents=True)
     (attempt / "part-00000.parquet").write_bytes(b"partial")
+    killed = tmp_path / "killed"
+    (
+        extract_spans(spans_df(spark, docs[:5]))
+        .select("doc_id", "fmt", "spans")
+        .coalesce(1)
+        .write.parquet(str(killed))
+    )
+    task = tmp_path / "out" / "_temporary" / "0" / "task_202610190000_0000_m_000000"
+    task.mkdir(parents=True)
+    for part in killed.glob("part-*.parquet"):
+        shutil.copy(part, task / part.name)
     out = str(tmp_path / "out")
-    df = spans_df(spark, fx.random_corpus(15, seed=4))
+    df = spans_df(spark, docs)
 
     summary = run_extraction_job(spark, df, out, lineage_path=str(tmp_path / "lineage"))
     assert sum(m["docs"] for m in summary["metrics"]) == 15
