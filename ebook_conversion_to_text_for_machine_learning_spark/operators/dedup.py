@@ -30,6 +30,7 @@ from ebook_conversion_to_text_for_machine_learning_spark.operators.index_mainten
     MINHASH_TABLES,
     check_append_batch_id,
     has_landed,
+    prune_to_probe_keys,
     write_batch,
 )
 from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
@@ -437,34 +438,13 @@ def repeated_passages(
     )
 
 
-#: Hex-prefix width for the index tables' ``pfx`` partition column: 2 hex
-#: chars → 256 partitions per batch. Wide enough that a small probe batch
-#: prunes most index files, narrow enough that a batch write doesn't
-#: scatter into thousands of tiny files.
-_PFX_HEX_CHARS = 2
-
-
-def _hex_pfx(col: Column) -> Column:
-    """Integer partition key from a hex string's leading chars (0..255).
-
-    An INT (via ``conv``) instead of the raw 2-char slice because parquet
-    partition-value type inference is content-dependent: a small corpus
-    whose realized prefixes happen to all look numeric ("12", "07") reads
-    back as int while a mixed one reads back as string — and a probe-side
-    ``isin`` against the wrong type silently prunes everything.
-    """
-    return F.conv(F.substring(col, 1, _PFX_HEX_CHARS), 16, 10).cast("int")
-
-
 def _write_index(sketch: DataFrame, path: str, batch_id: int) -> None:
     """The ONE index writer: a checkpointed ``_sketch`` frame's bands,
     exploded ``grams`` and array sizes (gram-less docs: no rows) become
     index batch ``batch_id`` of the three tables, each through
     ``index_maintenance.write_batch``."""
-    bands = minhash_bands(sketch).withColumn("pfx", _hex_pfx(F.col("bucket")))
-    grams = sketch.select(
-        "doc_id", F.explode("grams").alias("gram_hash")
-    ).withColumn("pfx", _hex_pfx(F.col("gram_hash")))
+    bands = minhash_bands(sketch)
+    grams = sketch.select("doc_id", F.explode("grams").alias("gram_hash"))
     counts = sketch.where(F.col("grams").isNotNull()).select(
         "doc_id", F.size("grams").cast("long").alias("n_grams")
     )
@@ -490,11 +470,11 @@ def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> 
 
     Layout: ``index_maintenance.MINHASH_TABLES`` — the full build is
     batch 0 and ``append_to_minhash_index`` grows the index one
-    idempotent batch partition at a time; ``pfx`` is a 256-way hex
-    prefix of the join key (bucket / gram_hash), so
-    ``dedup_against_index`` probes prune index files by partition
-    instead of scanning the corpus-scale tables. Overwrite-idempotent:
-    a full rebuild is a plain re-run.
+    idempotent batch partition at a time; ``MINHASH_BANDS`` and
+    ``MINHASH_GRAMS`` sub-partition on a prefix of the join key (bucket
+    / gram_hash), so ``dedup_against_index`` probes prune index files by
+    partition instead of scanning the corpus-scale tables.
+    Overwrite-idempotent: a full rebuild is a plain re-run.
     """
     _write_index(_sketch(df, text_col).localCheckpoint(), path, FULL_BUILD_BATCH_ID)
 
@@ -547,18 +527,18 @@ def dedup_against_index(
     per doc, so intersection size == match count, without a pair×gram
     explosion probed against a hash relation at DRAM latency — see
     ``minhash_verified_pairs``). The index-side arrays are built from
-    the pfx-PRUNED gram scan, which loses no intersection element: a
+    the prefix-PRUNED gram scan, which loses no intersection element: a
     pruned-away gram's prefix appears in no batch gram, so it could
     never match. ``n_union`` derives from the batch array size and the
     ``counts/`` table's FULL per-doc totals (never the pruned scan).
     Same acceptance rule as ``minhash_verified_dedup``:
     ``2 * n_common >= n_union`` (J >= 0.5).
 
-    Index-side scans PARTITION-PRUNE on the batch's realized ``pfx``
-    sets: both sets (band buckets, gram hashes; ≤256 ints each) come
-    from ONE collect over the checkpointed sketch and are pushed as
-    partition filters on ``bands/`` and ``grams/`` — a small probe batch
-    reads a handful of index files instead of the corpus-scale tables.
+    Index-side scans PARTITION-PRUNE on the batch's realized prefix
+    sets (``index_maintenance.prune_to_probe_keys`` over the
+    ``MINHASH_BANDS``/``MINHASH_GRAMS`` specs): both sets come from ONE
+    collect over the checkpointed sketch — a small probe batch reads a
+    handful of index files instead of the corpus-scale tables.
     ``exclude_batch_id`` additionally prunes that batch's own
     partitions, so an at-least-once replay of ingest batch N never sees
     the half-appended rows of its failed attempt (which would flag every
@@ -591,16 +571,9 @@ def _probe_index(
 
     b_bands = minhash_bands(sketch)
     b_grams = sketch.select(F.explode("grams").alias("gram_hash"))
-    pfx: dict[str, list[int]] = {"bands": [], "grams": []}
-    for table, p in (
-        b_bands.select(F.lit("bands"), _hex_pfx(F.col("bucket")))
-        .union(b_grams.select(F.lit("grams"), _hex_pfx(F.col("gram_hash"))))
-        .distinct()
-        .collect()
-    ):
-        pfx[table].append(p)
-    idx_bands = idx_bands.where(F.col("pfx").isin(pfx["bands"] or [-1]))
-    idx_grams = idx_grams.where(F.col("pfx").isin(pfx["grams"] or [-1]))
+    idx_bands, idx_grams = prune_to_probe_keys(
+        (idx_bands, MINHASH_BANDS, b_bands), (idx_grams, MINHASH_GRAMS, b_grams)
+    )
     cands = (
         b_bands.alias("b")
         .join(

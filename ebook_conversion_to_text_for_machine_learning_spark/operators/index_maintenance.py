@@ -6,9 +6,11 @@ hive partition per ingest batch — O(batch) appends, partition-pruned
 probes: the minhash dedup index (``operators/dedup.py``), the ANN index
 and the PQ code table (``operators/similarity.py``) and the streaming
 seen-hash sidecar (``streaming/curation.py``). Each table's layout is
-one ``TableSpec`` here (name, logical key, sub-partition columns), and
-every index write goes through ``write_batch``: batch 0 is the full
-build, any other id an append. The sidecar writes its own micro-batch
+one ``TableSpec`` here (name, logical key, sub-partition columns, and
+the rule that derives its prefix column), every index write goes
+through ``write_batch`` (batch 0 is the full build, any other id an
+append) and every indexed probe prunes its scans through
+``prune_to_probe_keys``. The sidecar writes its own micro-batch
 dirs (its micro-batch 0 is a real batch, not a full build); only its
 compaction uses its spec. What goes *up* must eventually merge back
 *down*: after 10^4 streaming micro-batches
@@ -50,9 +52,10 @@ it after a crash before the next read.
 from __future__ import annotations
 
 import json
-from typing import NamedTuple
+from functools import reduce
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Partition id of the full build: written with static overwrite, which
@@ -67,22 +70,75 @@ COMPACTED_BATCH_ID = -1
 _MANIFEST = "_FOLDED.json"
 
 
+class Prefix(NamedTuple):
+    """A sub-partition column derived from a data column: ``column`` =
+    ``rule(source)``, one of ``_PREFIX_VALUES`` ints. Writes add it
+    (``write_batch``) and probes prune on it (``prune_to_probe_keys``),
+    both from the same rule.
+
+    An INT instead of a raw string slice because parquet partition-value
+    type inference is content-dependent: a small corpus whose realized
+    prefixes happen to all look numeric ("12", "07") reads back as int
+    while a mixed one reads back as string — and a probe-side ``isin``
+    against the wrong type silently prunes everything."""
+
+    column: str
+    source: str
+    rule: Callable[[Column], Column]
+
+
+#: Values each derived sub-partition column takes (0..255; 2 hex chars,
+#: 8 bits). Wide enough that a small probe batch prunes most index
+#: files, narrow enough that a batch write doesn't scatter into
+#: thousands of tiny files.
+_PREFIX_VALUES = 256
+
+
+def _hex_prefix(col: Column) -> Column:
+    """First 2 hex chars of an md5-hex string."""
+    return F.conv(F.substring(col, 1, 2), 16, 10).cast("int")
+
+
+def _bit_prefix(col: Column) -> Column:
+    """First 8 bits of an LSH bucket bit-string."""
+    return F.conv(F.substring(col, 1, 8), 2, 10).cast("int")
+
+
+def _mod_prefix(col: Column) -> Column:
+    """An IVF cell id modulo 256: the dir count stays bounded at the
+    65536-cell setting; exact cell matching happens in the join."""
+    return F.pmod(col, F.lit(_PREFIX_VALUES)).cast("int")
+
+
 class TableSpec(NamedTuple):
     """One ``batch_id``-partitioned table: its dir name under the index
-    root, the logical key a compaction merge dedupes on, and the columns
-    that sub-partition each batch dir (probes prune on them)."""
+    root, the logical key a compaction merge dedupes on, the data
+    columns that sub-partition each batch dir and the derived ``prefix``
+    column partitioned last (probes prune on it)."""
 
     name: str
     key_cols: tuple[str, ...]
-    sub_parts: tuple[str, ...] = ()
+    data_parts: tuple[str, ...] = ()
+    prefix: Prefix | None = None
+
+    @property
+    def sub_parts(self) -> tuple[str, ...]:
+        """Every sub-partition column below ``batch_id``, in dir order."""
+        return self.data_parts + ((self.prefix.column,) if self.prefix else ())
 
 
-MINHASH_BANDS = TableSpec("bands", ("doc_id", "band_id", "bucket"), ("pfx",))
-MINHASH_GRAMS = TableSpec("grams", ("doc_id", "gram_hash"), ("pfx",))
+MINHASH_BANDS = TableSpec(
+    "bands", ("doc_id", "band_id", "bucket"), prefix=Prefix("pfx", "bucket", _hex_prefix)
+)
+MINHASH_GRAMS = TableSpec(
+    "grams", ("doc_id", "gram_hash"), prefix=Prefix("pfx", "gram_hash", _hex_prefix)
+)
 MINHASH_COUNTS = TableSpec("counts", ("doc_id",))
 MINHASH_TABLES = (MINHASH_BANDS, MINHASH_GRAMS, MINHASH_COUNTS)
-ANN_BANDS = TableSpec("bands", ("item_id", "band_id", "bucket"), ("band_id", "pfx"))
-ANN_CELLS = TableSpec("cells", ("item_id",), ("cell_pfx",))
+ANN_BANDS = TableSpec(
+    "bands", ("item_id", "band_id", "bucket"), ("band_id",), Prefix("pfx", "bucket", _bit_prefix)
+)
+ANN_CELLS = TableSpec("cells", ("item_id",), prefix=Prefix("cell_pfx", "cell_id", _mod_prefix))
 PQ_CODES = TableSpec("codes", ("vec_id",))
 #: The streaming seen-hash sidecar is its own root dir (``name`` is unused).
 SEEN_HASHES = TableSpec("seen", ("text_hash",))
@@ -95,12 +151,14 @@ def check_append_batch_id(batch_id: int) -> None:
 
 
 def write_batch(frame: DataFrame, index_path: str, spec: TableSpec, batch_id: int) -> None:
-    """The one index-table writer: ``frame`` (the table's data columns
-    plus ``spec.sub_parts``) lands in ``<index_path>/<spec.name>/
+    """The one index-table writer: ``frame`` (the table's data columns)
+    gains ``spec.prefix`` and lands in ``<index_path>/<spec.name>/
     batch_id=<batch_id>/<sub_parts>``. The full build statically
     overwrites the whole table; any other id dynamically overwrites only
     its own partitions, so replaying a crashed append rewrites the same
     files instead of appending duplicates."""
+    if spec.prefix:
+        frame = frame.withColumn(spec.prefix.column, spec.prefix.rule(F.col(spec.prefix.source)))
     if spec.sub_parts:
         # Cluster on the partition key before the partitioned write:
         # without it every input task writes a file into every dir it
@@ -116,6 +174,28 @@ def write_batch(frame: DataFrame, index_path: str, spec: TableSpec, batch_id: in
         .partitionBy("batch_id", *spec.sub_parts)
         .parquet(f"{index_path.rstrip('/')}/{spec.name}")
     )
+
+
+def prune_to_probe_keys(*probes: tuple[DataFrame, TableSpec, DataFrame]) -> list[DataFrame]:
+    """The one probe-side partition pruning. Each ``(scan, spec, keys)``
+    names an index-table scan, its spec and a probe frame holding the
+    spec's prefix source column; the realized prefixes of every ``keys``
+    frame (≤ 256 ints each) come from ONE collect, and each scan comes
+    back filtered to its set, sorted so the plan does not depend on
+    collect order — a partition filter, so a small probe batch reads a
+    handful of index files instead of the corpus-scale table. A probe
+    with no keys keeps no partition (``[-1]``)."""
+    tagged = [
+        keys.select(F.lit(i).alias("t"), spec.prefix.rule(F.col(spec.prefix.source)).alias("p"))
+        for i, (_, spec, keys) in enumerate(probes)
+    ]
+    realized: list[list[int]] = [[] for _ in probes]
+    for t, p in reduce(DataFrame.union, tagged).distinct().collect():
+        realized[t].append(p)
+    return [
+        scan.where(F.col(spec.prefix.column).isin(sorted(vals) or [-1]))
+        for (scan, spec, _), vals in zip(probes, realized)
+    ]
 
 
 def _fs(spark: SparkSession, path: str):

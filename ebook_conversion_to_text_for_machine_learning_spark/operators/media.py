@@ -1,9 +1,9 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; decode / feature-extraction runs as Arrow-batched
-``mapInPandas`` so payload bytes cross the JVM↔Python boundary exactly once
-per batch. The actual codec step is STUBBED in this sandbox (no
+metadata struct; decode / feature-extraction runs as ``mapInArrow`` over
+Arrow record batches so payload bytes cross the JVM↔Python boundary
+exactly once per batch. The actual codec step is STUBBED in this sandbox (no
 Pillow/av/librosa): ``decode_stub=True`` (default) computes deterministic
 byte-level features so the Spark plumbing — schema, batching, partitioning,
 UDF signature — is real and testable; ``decode_stub=False`` raises
@@ -14,9 +14,10 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -59,6 +60,16 @@ def _decode_real(payload: bytes, media_type: str):
         f"media decode for {media_type!r} requires codec libraries not "
         "present in this environment (Pillow/av); run with decode_stub=True"
     )
+
+
+def _stub_decode(batch: pa.RecordBatch, decode_stub: bool) -> list[bytes]:
+    """Each row's payload bytes (NULL → ``b""``); with ``decode_stub``
+    False, the codec call site."""
+    data = [p or b"" for p in batch.column("payload").to_pylist()]
+    if not decode_stub:
+        for payload, mtype in zip(data, batch.column("media_type").to_pylist()):
+            _decode_real(payload, mtype)
+    return data
 
 
 FRAME_SIZE = 16
@@ -148,32 +159,27 @@ def resize_media_stub(
     import hashlib
 
     target = target_w * target_h
+    schema = to_arrow_schema(RESIZED_SCHEMA)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            rows = []
-            for mid, mtype, payload in zip(
-                batch["media_id"], batch["media_type"], batch["payload"]
-            ):
-                data = bytes(payload) if payload is not None else b""
-                if not decode_stub:
-                    _decode_real(data, mtype)
-                resized = data[:target].ljust(target, b"\x00")
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "target_w": target_w,
-                        "target_h": target_h,
-                        "resized_bytes": len(resized),
-                        "resized_md5": hashlib.md5(
-                            resized.hex().upper().encode()
-                        ).hexdigest(),
-                        "status": "stub_resized",
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
+            resized = [d[:target].ljust(target, b"\x00") for d in _stub_decode(batch, decode_stub)]
+            n = len(resized)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "media_id": batch.column("media_id"),
+                    "target_w": [target_w] * n,
+                    "target_h": [target_h] * n,
+                    "resized_bytes": [len(r) for r in resized],
+                    "resized_md5": [
+                        hashlib.md5(r.hex().upper().encode()).hexdigest() for r in resized
+                    ],
+                    "status": ["stub_resized"] * n,
+                },
+                schema=schema,
+            )
 
-    return df.select("media_id", "media_type", "payload").mapInPandas(
+    return df.select("media_id", "media_type", "payload").mapInArrow(
         batches, schema=RESIZED_SCHEMA
     )
 
@@ -183,31 +189,25 @@ def extract_media_features(df: DataFrame, *, decode_stub: bool = True) -> DataFr
 
     The stub features are pure byte arithmetic (length, first byte, sum mod
     2^31) — deterministic, so the driver's SQL oracle can verify the whole
-    mapInPandas path byte-for-byte.
+    mapInArrow path byte-for-byte.
     """
+    schema = to_arrow_schema(MEDIA_FEATURE_SCHEMA)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            ids = batch["media_id"].tolist()
-            types = batch["media_type"].tolist()
-            payloads = batch["payload"].tolist()
-            rows = []
-            for mid, mtype, payload in zip(ids, types, payloads):
-                data = bytes(payload) if payload is not None else b""
-                if not decode_stub:
-                    _decode_real(data, mtype)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "media_type": mtype,
-                        "n_bytes": len(data),
-                        "first_byte": data[0] if data else None,
-                        "byte_sum_mod": sum(data) % (2**31),
-                        "status": "stub_decoded",
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURE_SCHEMA.fields])
+            data = _stub_decode(batch, decode_stub)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "media_id": batch.column("media_id"),
+                    "media_type": batch.column("media_type"),
+                    "n_bytes": [len(d) for d in data],
+                    "first_byte": [d[0] if d else None for d in data],
+                    "byte_sum_mod": [sum(d) % (2**31) for d in data],
+                    "status": ["stub_decoded"] * len(data),
+                },
+                schema=schema,
+            )
 
-    return df.select("media_id", "media_type", "payload").mapInPandas(
+    return df.select("media_id", "media_type", "payload").mapInArrow(
         batches, schema=MEDIA_FEATURE_SCHEMA
     )

@@ -23,6 +23,7 @@ from typing import List
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators.index_maintenance import (
     ANN_BANDS,
@@ -30,6 +31,7 @@ from ebook_conversion_to_text_for_machine_learning_spark.operators.index_mainten
     FULL_BUILD_BATCH_ID,
     PQ_CODES,
     check_append_batch_id,
+    prune_to_probe_keys,
     write_batch,
 )
 
@@ -67,6 +69,35 @@ def _norm(a: Column) -> Column:
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
+    )
+
+
+def _cosine(a: str = "probe_vec", b: str = "item_vec") -> Column:
+    """``cosine`` of vector columns ``a`` and ``b``, rounded to 4 places —
+    every exact score and rank key: rounding first makes the ordering
+    robust to last-ulp float differences across engines."""
+    va, vb = F.col(a), F.col(b)
+    return F.round(_dot(va, vb) / (_norm(va) * _norm(vb)), 4).alias("cosine")
+
+
+def _top_k_per_probe(
+    scored: DataFrame,
+    k: int,
+    *,
+    score: str = "cosine",
+    ascending: bool = False,
+    rank: str = "rank",
+) -> DataFrame:
+    """The per-probe rank tail of every top-k search: (probe_id,
+    item_id, ``score``, ``rank``) for each probe's best ``k`` rows of
+    ``scored`` — ``score`` DESC (a similarity) or ASC (a distance),
+    item_id ASC tie-break."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("probe_id").orderBy(order, F.asc("item_id"))
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .where(F.col(rank) <= k)
+        .select("probe_id", "item_id", score, rank)
     )
 
 
@@ -142,25 +173,13 @@ def cosine_topk(
     Ranking key is ``(round(cosine, 4) DESC, id)`` — rounding first makes
     the ordering robust to last-ulp float differences across engines.
     """
-    from pyspark.sql.window import Window
-
     c = corpus.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"))
     p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec"))
-    cosine = F.round(
-        _dot(F.col("probe_vec"), F.col("item_vec"))
-        / (_norm(F.col("probe_vec")) * _norm(F.col("item_vec"))),
-        4,
-    )
     scored = (
         c.join(F.broadcast(p), F.col("probe_id") != F.col("item_id"))
-        .select("probe_id", "item_id", cosine.alias("cosine"))
+        .select("probe_id", "item_id", _cosine())
     )
-    window = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "item_id", "cosine", "rank")
-    )
+    return _top_k_per_probe(scored, k)
 
 
 def knn_label_vote(
@@ -192,8 +211,6 @@ def knn_label_vote(
     NULLed every prediction); integral labels widen to long as before.
     """
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-    from pyspark.sql.window import Window
-
     if topk is None:
         topk = cosine_topk(corpus, probes, k=k, vec_col=vec_col, id_col=id_col)
     labels = corpus.select(
@@ -682,23 +699,11 @@ def _ivf_topk_from_cells(
     against the cell-tagged corpus, exact cosine, per-probe rank.
     ``cell_tagged`` carries (item_id, item_vec, cell_id) — freshly
     assigned or read back from a persisted index."""
-    from pyspark.sql.window import Window
-
-    cosine = F.round(
-        _dot(F.col("probe_vec"), F.col("item_vec"))
-        / (_norm(F.col("probe_vec")) * _norm(F.col("item_vec"))),
-        4,
-    )
     scored = cell_tagged.join(
         F.broadcast(probe_cells),
         (F.col("cell_id") == F.col("probe_cell")) & (F.col("probe_id") != F.col("item_id")),
-    ).select("probe_id", "item_id", cosine.alias("cosine"))
-    window = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "item_id", "cosine", "rank")
-    )
+    ).select("probe_id", "item_id", _cosine())
+    return _top_k_per_probe(scored, k)
 
 
 def embedding_near_dup(
@@ -739,13 +744,10 @@ def embedding_near_dup(
     )
     va = df.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
     vb = df.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
-    cosine = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))), 4
-    )
     return (
         candidates.join(va, "vec_a")
         .join(vb, "vec_b")
-        .select("vec_a", "vec_b", cosine.alias("cosine"))
+        .select("vec_a", "vec_b", _cosine("va", "vb"))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -760,8 +762,6 @@ def _lsh_topk_from_bands(
     """Shared LSH scoring tail: band-collision candidates → exact cosine
     → per-probe rank. ``c_bands``/``items`` may be freshly computed or
     read back from a persisted index — the plan is identical."""
-    from pyspark.sql.window import Window
-
     candidates = (
         c_bands.join(
             F.broadcast(p_bands),
@@ -771,22 +771,12 @@ def _lsh_topk_from_bands(
         .select("probe_id", "item_id")
         .distinct()
     )
-    cosine = F.round(
-        _dot(F.col("probe_vec"), F.col("item_vec"))
-        / (_norm(F.col("probe_vec")) * _norm(F.col("item_vec"))),
-        4,
-    )
     scored = (
         candidates.join(items, "item_id")
         .join(F.broadcast(probe_vecs), "probe_id")
-        .select("probe_id", "item_id", cosine.alias("cosine"))
+        .select("probe_id", "item_id", _cosine())
     )
-    window = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(window))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "item_id", "cosine", "rank")
-    )
+    return _top_k_per_probe(scored, k)
 
 
 def lsh_ann_topk(
@@ -835,18 +825,6 @@ def lsh_ann_topk(
 # per query batch" and "join against a prebuilt bucket table".
 
 
-#: bands/ partition key width: leading bits of the bucket bit-string →
-#: 256 partitions per band. cells/ partition count: cell_id modulo.
-_BAND_PFX_BITS = 8
-_CELL_PARTITIONS = 256
-
-
-def _band_pfx(bucket: Column) -> Column:
-    """Int partition key from a bucket bit-string's leading bits (see
-    ``dedup._hex_pfx`` for why partition values must be typed ints)."""
-    return F.conv(F.substring(bucket, 1, _BAND_PFX_BITS), 2, 10).cast("int")
-
-
 class AnnIndex:
     """Handle to a persisted ANN index (see ``write_ann_index``)."""
 
@@ -893,14 +871,11 @@ def write_ann_index(
     Probe-pruned, append-ready layout: ``index_maintenance.ANN_BANDS``
     and ``ANN_CELLS`` (the full build is batch 0;
     ``append_to_ann_index`` grows the index one idempotent batch at a
-    time). ``pfx`` is the bucket bit-string's leading
-    ``_BAND_PFX_BITS`` bits as an int and ``cell_pfx`` is
-    ``cell_id mod _CELL_PARTITIONS``, so the ``*_topk_indexed`` paths read only the partitions a probe
-    batch's buckets / probed cells land in instead of scanning the
-    corpus-scale tables — the same file-pruning contract as the minhash
-    dedup index (``operators/dedup.py``). The modulo keeps the
-    directory count bounded (256) at the advertised 65536-cell setting;
-    exact cell matching still happens in the join.
+    time). Both specs sub-partition on a prefix of the probe key
+    (bucket / cell id), so the ``*_topk_indexed`` paths read only the
+    partitions a probe batch's buckets / probed cells land in instead of
+    scanning the corpus-scale tables — the same file-pruning contract as
+    the minhash dedup index (``operators/dedup.py``).
 
     Everything is written ``overwrite`` so a rebuild is idempotent.
     ``centroids`` overrides the stride sample (k-means output, or a
@@ -947,7 +922,6 @@ def _write_ann_batch(
             n_bands=n_bands, band_planes=band_planes,
         )
         .withColumnRenamed("vec_id", "item_id")
-        .withColumn("pfx", _band_pfx(F.col("bucket")))
     )
     cells = ivf_assign_arrow(
         corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
@@ -955,7 +929,6 @@ def _write_ann_batch(
         F.col("vec_id").alias("item_id"),
         F.col(vec_col).alias("item_vec"),
         "cell_id",
-        F.pmod(F.col("cell_id"), F.lit(_CELL_PARTITIONS)).cast("int").alias("cell_pfx"),
     )
     write_batch(bands, path, ANN_BANDS, batch_id)
     write_batch(cells, path, ANN_CELLS, batch_id)
@@ -1025,8 +998,9 @@ def lsh_ann_topk_indexed(
     the scoring tail is the same function.
 
     The index's ``bands/`` scan partition-prunes on the probe batch's
-    realized bucket prefixes (materialized once, collected as a bounded
-    int set) — a handful of probes touch a handful of index files. The
+    realized bucket prefixes (materialized once, pruned through
+    ``index_maintenance.prune_to_probe_keys``) — a handful of probes
+    touch a handful of index files. The
     ``cells/`` scan stays full: it is the id→vector fetch table here and
     band-collision candidates can live in any cell.
     """
@@ -1038,13 +1012,7 @@ def lsh_ann_topk_indexed(
         .select(F.col("vec_id").alias("probe_id"), "band_id", "bucket")
         .localCheckpoint()
     )
-    pfxs = [
-        r[0]
-        for r in p_bands.select(_band_pfx(F.col("bucket")).alias("p"))
-        .distinct()
-        .collect()
-    ]
-    c_bands = index.bands.where(F.col("pfx").isin(pfxs or [-1]))
+    (c_bands,) = prune_to_probe_keys((index.bands, ANN_BANDS, p_bands))
     probe_vecs = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
     )
@@ -1139,25 +1107,17 @@ def ivf_ann_topk_indexed(
     """``ivf_ann_topk`` against a persisted index: cell assignment comes
     from the index; only probe→cell ranking runs per query batch.
 
-    The ``cells/`` scan partition-prunes on the probed cells' partition
-    keys (probes × nprobe ids, bounded by ``_CELL_PARTITIONS``): at the
-    advertised 65536-cell setting a probe batch reads only the cell
-    groups it actually ranks, not the corpus-scale table.
+    The ``cells/`` scan partition-prunes on the probed cells' prefixes
+    (``index_maintenance.prune_to_probe_keys``): at the advertised
+    65536-cell setting a probe batch reads only the cell groups it
+    actually ranks, not the corpus-scale table.
     """
     probe_cells = ivf_probe_cells_arrow(
         probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
     ).localCheckpoint()
-    pfxs = [
-        r[0]
-        for r in probe_cells.select(
-            F.pmod(F.col("probe_cell"), F.lit(_CELL_PARTITIONS))
-            .cast("int")
-            .alias("p")
-        )
-        .distinct()
-        .collect()
-    ]
-    cells = index.cells.where(F.col("cell_pfx").isin(pfxs or [-1]))
+    (cells,) = prune_to_probe_keys(
+        (index.cells, ANN_CELLS, probe_cells.select(F.col("probe_cell").alias("cell_id")))
+    )
     return _ivf_topk_from_cells(cells, probe_cells, k)
 
 
@@ -1733,20 +1693,13 @@ def pq_adc_topk(
 
     Returns (probe_id, item_id, adc_x10k, rank).
     """
-    from pyspark.sql.window import Window
-
     if codes is None:
         codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
     cand = pq_adc_scan_arrow(
         codes, probes, codebooks,
         per_probe_r=k, vec_col=vec_col, id_col=id_col,
     )
-    w = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "item_id", "adc_x10k", "rank")
-    )
+    return _top_k_per_probe(cand, k, score="adc_x10k", ascending=True)
 
 
 def pq_adc_rerank_topk(
@@ -1817,15 +1770,8 @@ def _exact_rerank(
     per pass (part of the r4 scaling series' ~6s fixed cost). One
     subtree needs neither the barrier nor the dedup.
     """
-    from pyspark.sql.window import Window
-
     p = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    )
-    cosine = F.round(
-        _dot(F.col("probe_vec"), F.col("item_vec"))
-        / (_norm(F.col("probe_vec")) * _norm(F.col("item_vec"))),
-        4,
     )
     scored = (
         corpus.select(
@@ -1833,14 +1779,9 @@ def _exact_rerank(
         )
         .join(F.broadcast(sl), "item_id")
         .join(F.broadcast(p), "probe_id")
-        .select("probe_id", "item_id", cosine.alias("cosine"))
+        .select("probe_id", "item_id", _cosine())
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "item_id", "cosine", "rank")
-    )
+    return _top_k_per_probe(scored, k)
 
 
 def write_pq_index(
@@ -1974,8 +1915,6 @@ def ivfpq_topk(
 
     Returns (probe_id, item_id, cosine, rank).
     """
-    from pyspark.sql.window import Window
-
     r = shortlist if shortlist is not None else 5 * k
     if cells is None:
         cells = ivf_assign_arrow(corpus, centroids, vec_col=vec_col, id_col=id_col)
@@ -1989,10 +1928,7 @@ def ivfpq_topk(
         cwc, probes, centroids, codebooks,
         nprobe=nprobe, per_probe_r=r, vec_col=vec_col, id_col=id_col,
     )
-    wsl = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
-    sl = (
-        adc.withColumn("_r", F.row_number().over(wsl))
-        .where(F.col("_r") <= r)
-        .select("probe_id", "item_id")
+    sl = _top_k_per_probe(adc, r, score="adc_x10k", ascending=True, rank="_r").select(
+        "probe_id", "item_id"
     )
     return _exact_rerank(corpus, probes, sl, k, vec_col=vec_col, id_col=id_col)

@@ -23,7 +23,7 @@ real); ``decode_stub=False`` raises NotImplementedError exactly where
 diff obvious.
 
 At lake scale this runs pre-ingest (fixture generation resolving
-``media_ref`` payloads), batched per file inside ``mapInPandas`` like
+``media_ref`` payloads), batched per file inside ``mapInArrow`` like
 ``ingest_files_distributed`` — never per-row Python in the engine.
 """
 

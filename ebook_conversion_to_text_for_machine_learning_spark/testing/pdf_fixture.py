@@ -424,14 +424,21 @@ def _fx_crypt_setup(mode: str):
 
 
 def _fx_hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
-    """Fixture twin of the ISO 32000-2 algorithm 2.B hardened hash."""
+    """Fixture twin of the ISO 32000-2 algorithm 2.B hardened hash. Its
+    ≥64 rounds of AES-128-CBC over ≥64 blocks run through
+    ``cryptography``: a cipher independent of the reader's, hundreds of
+    times faster than the fixture's byte-wise one, and equal to it on a
+    64-block input (``test_fixture_cbc_matches_cryptography``)."""
     import hashlib
+
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
     k = hashlib.sha256(pwd + salt + udata).digest()
     rnd = 0
     while True:
         k1 = (pwd + k + udata) * 64
-        e = _fx_aes128_cbc_encrypt_nopad(k[:16], k[16:32], k1)
+        enc = Cipher(algorithms.AES(k[:16]), modes.CBC(k[16:32])).encryptor()
+        e = enc.update(k1) + enc.finalize()
         k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[sum(e[:16]) % 3](
             e
         ).digest()
@@ -451,12 +458,8 @@ def _fx_aes128_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-@__import__("functools").lru_cache(maxsize=2)
 def _fx_r6_material(locked: bool):
-    """Deterministic R6 key material, computed ONCE per process: the
-    fixture's 2.B twin stays the slow byte-wise cipher on purpose
-    (independence from the reader's T-table path), so the four ~5s
-    derivations are cached."""
+    """Deterministic R6 key material: the file key, /U, /UE, /O, /OE."""
     import hashlib
 
     user_pwd = b"secret" if locked else b""

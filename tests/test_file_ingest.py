@@ -677,6 +677,26 @@ def test_aes128_fips197_known_answer():
     assert _aes128_decrypt_block(_aes128_round_keys(key), ct) == pt
 
 
+def test_fixture_cbc_matches_cryptography():
+    """The fixture's own AES-128-CBC (stream encryption, /UE, /OE,
+    /Perms) and the ``cryptography`` CBC its 2.B hash loop runs agree
+    on a 64-block input — the loop's shape."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
+        _fx_aes128_cbc_encrypt,
+        _fx_aes128_cbc_encrypt_nopad,
+    )
+
+    key, iv = bytes(range(16)), bytes(range(16, 32))
+    data = bytes(i * 7 % 256 for i in range(64 * 16))
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    ct = enc.update(data) + enc.finalize()
+    assert _fx_aes128_cbc_encrypt_nopad(key, iv, data) == ct
+    # The padded stream cipher: IV || the same blocks || one pad block.
+    assert _fx_aes128_cbc_encrypt(key, iv, data)[: 16 + len(ct)] == iv + ct
+
+
 def test_password_protected_pdf_still_quarantines(tmp_path):
     """A non-empty USER password (fixture mode rc4-locked) must fail the
     /U check and quarantine — never extract with a wrong key."""

@@ -4,6 +4,7 @@ says, with one file per leaf dir; decisions must be identical
 before/after compaction, the streaming commit horizon must gate what
 folds, and a crash mid-fold must be completable by re-run."""
 
+import ast
 import os
 import re
 from pathlib import Path
@@ -68,18 +69,28 @@ def _assert_layout(index_path, spec, batch_ids):
     assert sorted(found) == sorted(batch_ids), (table_dir, found)
 
 
+def _has_prefix_literal(source: str) -> bool:
+    return any(
+        isinstance(n, ast.Constant) and n.value in ("pfx", "cell_pfx")
+        for n in ast.walk(ast.parse(source))
+    )
+
+
 def test_only_index_maintenance_sets_the_batch_layout():
     """The batch-partition write rule has one owner: no other library
-    module picks an overwrite mode or partitions by ``batch_id``."""
+    module picks an overwrite mode, partitions by ``batch_id`` or names
+    a derived prefix column (``"pfx"``/``"cell_pfx"``)."""
     pkg = Path(M.__file__).parent.parent
     rule = re.compile(r"partitionOverwriteMode|partitionBy\(\s*[\"']batch_id")
     offenders = [
         str(p.relative_to(pkg))
         for p in pkg.rglob("*.py")
-        if p.name != "index_maintenance.py" and rule.search(p.read_text())
+        if p.name != "index_maintenance.py"
+        and (rule.search(src := p.read_text()) or _has_prefix_literal(src))
     ]
     assert offenders == []
-    assert rule.search(Path(M.__file__).read_text())
+    own = Path(M.__file__).read_text()
+    assert rule.search(own) and _has_prefix_literal(own)
 
 
 def _decisions(spark, path):
@@ -218,6 +229,17 @@ def test_compact_seen_sidecar_crash_mid_fold_completes_on_rerun(
     assert sorted(os.listdir(seen_dir)) == ["batch_id=-1"]
 
 
+def _assert_ann_prefixes(spark, path):
+    """Every ANN index row carries the prefix its spec derives, pinned
+    by a Python reference: ``pfx`` is the bucket's first 8 bits and
+    ``cell_pfx`` the cell id mod 256."""
+    bands = spark.read.parquet(f"{path}/bands").select("bucket", "pfx").collect()
+    cells = spark.read.parquet(f"{path}/cells").select("cell_id", "cell_pfx").collect()
+    assert bands and cells
+    assert all(r.pfx == int(r.bucket[:8], 2) for r in bands)
+    assert all(r.cell_pfx == r.cell_id % 256 for r in cells)
+
+
 def test_compact_ann_index_identical_topk(spark, tmp_path):
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         append_to_ann_index,
@@ -236,7 +258,9 @@ def test_compact_ann_index_identical_topk(spark, tmp_path):
     # stride-1 O(N²) codebook of the 65536-cell default. 2 bands × 4
     # planes keep bands/ at tens of pfx dirs instead of ~1,000 tiny files.
     write_ann_index(base, dim, path, target_cells=16, n_bands=2, band_planes=4)
+    _assert_ann_prefixes(spark, path)
     append_to_ann_index(extra, path, batch_id=1)
+    _assert_ann_prefixes(spark, path)
     for spec in (M.ANN_BANDS, M.ANN_CELLS):
         _assert_layout(path, spec, [0, 1])
 
