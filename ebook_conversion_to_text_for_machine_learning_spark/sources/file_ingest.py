@@ -5,8 +5,9 @@ A user of the reference library hands it EPUB/DOCX/PDF/TXT *files*
 files into the engine's span contract using ONLY the stdlib for the zip+XML
 formats — EPUB is a zip of XHTML (zipfile + html.parser replaces
 ebooklib/bs4), DOCX is a zip of WordprocessingML (zipfile + xml.etree
-replaces python-docx). PDF layout extraction genuinely needs pdfminer and
-is gated behind an import-try (available in production, stubbed here).
+replaces python-docx). PDF runs through the stdlib reader in
+sources/pdf_text.py on every executor; only AES-encrypted PDFs also need
+``cryptography``.
 
 OCR is not performed at ingest (north_star: a 10^12-doc job cannot call an
 LLM per image): image spans carry an empty transcript unless the caller
@@ -170,9 +171,14 @@ def txt_file_to_spans(path: str | Path) -> List[InSpan]:
     return [("line", line, "", i) for i, line in enumerate(content.splitlines())]
 
 
-def _pdf_file_to_spans_pure(path: str | Path) -> List[InSpan]:
-    """Stdlib PDF → spans (sources/pdf_text.py): the common-case path for
-    uncompressed/FlateDecode text PDFs, used when pdfminer is absent."""
+def pdf_file_to_spans(path: str | Path) -> List[InSpan]:
+    """PDF → spans through the stdlib reader (sources/pdf_text.py), the
+    one PDF path: the same spans on every executor, the ones the PDF
+    goldens and the ``extract_pdf_files`` oracle pin.
+
+    Mirrors the reference's element sweep (pdf_text_extractor.py:102-129):
+    image XObjects are ``img`` spans (objid as media_ref), text lines are
+    ``line`` spans, pages past the 25-page cap are dropped."""
     from ebook_conversion_to_text_for_machine_learning_spark.sources.pdf_text import (
         pdf_bytes_to_rows,
     )
@@ -191,51 +197,6 @@ def _pdf_file_to_spans_pure(path: str | Path) -> List[InSpan]:
         # that.
         raise PDFConversionError(str(e)) from e
     return [(k, t, r, i) for i, (k, t, r) in enumerate(rows)]
-
-
-def pdf_file_to_spans(path: str | Path) -> List[InSpan]:
-    """PDF → spans; pdfminer when installed (full layout fidelity), else
-    the pure-stdlib extractor for the uncompressed/FlateDecode common case.
-
-    Mirrors the reference's element sweep (pdf_text_extractor.py:102-129):
-    objects with a ``stream`` are images (objid as media_ref), LTText
-    non-LTChar elements are lines, containers recurse into their FIRST
-    child only (the reference's early-return quirk)."""
-    try:
-        from pdfminer.high_level import extract_pages
-        from pdfminer.layout import LTChar, LTContainer, LTText
-    except ImportError:  # sandbox has no pdfminer → stdlib extractor
-        return _pdf_file_to_spans_pure(path)
-
-    def classify(element):  # pragma: no cover - exercised only with pdfminer
-        if hasattr(element, "stream"):
-            return "img", "", str(element.stream.objid)
-        if isinstance(element, LTText) and not isinstance(element, LTChar):
-            return "line", element.get_text(), ""
-        if isinstance(element, LTContainer):
-            for child in element:
-                return classify(child)
-        return None
-
-    from pdfminer.pdfparser import PDFSyntaxError  # pragma: no cover
-
-    spans: List[InSpan] = []  # pragma: no cover
-    offset = 0
-    try:  # pragma: no cover
-        for page_index, page in enumerate(extract_pages(path, maxpages=25)):
-            if page_index:
-                spans.append(("page_break", "", "", offset))
-                offset += 1
-            for element in page:
-                row = classify(element)
-                if row is not None:
-                    spans.append((row[0], row[1], row[2], offset))
-                    offset += 1
-    except (OSError, PDFSyntaxError) as e:  # pragma: no cover
-        # Reference: PDFSyntaxError/OSError → PDFConversionError
-        # (pdf_converter.py:45-59).
-        raise PDFConversionError(str(e)) from e
-    return spans
 
 
 _SUFFIX_DISPATCH = {

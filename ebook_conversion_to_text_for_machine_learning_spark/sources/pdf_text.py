@@ -1,13 +1,14 @@
-"""Pure-stdlib PDF text extraction (the common-case ``.pdf`` ingest path).
+"""Stdlib PDF text extraction: the one ``.pdf`` ingest path.
 
 The reference reads PDFs through pdfminer's layout tree
 (pdf_conversion/pdf_text_extractor.py:43-129): per page it classifies
 top-level elements — objects with a ``stream`` become images keyed by
 object id, ``LTText`` elements become lines (``get_text()`` keeps the
 trailing newline), and containers recurse into their FIRST child only.
-pdfminer is not installable in this sandbox, so this module implements the
-subset of the PDF object model that covers the overwhelmingly common
-machine-generated ebook case with nothing but ``re`` + ``zlib``:
+Every PDF is read by this module instead, with no pdfminer dependency. It
+implements the subset of the PDF object model that covers the
+overwhelmingly common machine-generated ebook case with nothing but
+``re`` + ``zlib`` (plus ``cryptography`` for AES-encrypted files):
 
 - classic cross-reference PDFs (objects scanned directly, so damaged
   xref tables still parse);
@@ -42,9 +43,10 @@ its golden-test PDFs produce, one text box per line).
 Encrypted files: the Standard security handler decrypts when the EMPTY
 user password opens the file — the common owner-restricted case — for
 legacy RC4 (V 1-2 / R 2-3, 40-128 bit), AES-128 (V 4 / R 4, AESV2) and
-AES-256 (V 5 / R 5-6, AESV3 with the ISO 32000-2 hardened hash). All
-cipher cores are pure stdlib, pinned to the FIPS-197 C.1/C.3
-known-answer vectors. Password-protected files quarantine.
+AES-256 (V 5 / R 5-6, AESV3 with the ISO 32000-2 hardened hash). AES
+runs through ``cryptography`` (imported only when a file is AES-encrypted;
+its CBC helper is pinned to the FIPS-197 C.1/C.3 known-answer vectors);
+RC4 is pure Python. Password-protected files quarantine.
 
 Identity-H/V composite fonts WITHOUT a ToUnicode CMap decode their
 2-byte CIDs via ``_identity_cid_decoder``: when the descendant's
@@ -361,8 +363,10 @@ _PDF_PAD = bytes.fromhex(
 
 
 def _rc4(key: bytes, data: bytes) -> bytes:
-    """RC4 — stdlib-only (hashlib/ssl expose no RC4); 256-entry KSA + PRGA
-    straight from the spec. Used ONLY to read legacy encrypted PDFs."""
+    """RC4, 256-entry KSA + PRGA straight from the spec. Used ONLY to read
+    legacy encrypted PDFs. Pure Python (~0.2 µs/byte) because
+    ``cryptography``'s ARC4 sits in ``hazmat.decrepit`` and needs OpenSSL's
+    legacy provider, which deployments can switch off."""
     s = list(range(256))
     j = 0
     for i in range(256):
@@ -378,229 +382,30 @@ def _rc4(key: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-def _gf_mul(a: int, b: int) -> int:
-    """GF(2^8) multiply, AES polynomial x^8+x^4+x^3+x+1 (0x11B)."""
-    out = 0
-    for _ in range(8):
-        if b & 1:
-            out ^= a
-        b >>= 1
-        a <<= 1
-        if a & 0x100:
-            a ^= 0x11B
-    return out
+def _aes_cbc(key: bytes, iv: bytes, data: bytes, *, decrypt: bool) -> bytes:
+    """AES-CBC without padding, 128- or 256-bit key: the reader's one AES
+    provider. ``cryptography`` is imported here so unencrypted PDFs need
+    nothing beyond the stdlib. A bad key size or ragged data raises
+    ``ValueError``, which ingest maps to ``PDFConversionError``."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    cipher = Cipher(algorithms.AES(key), modes.CBC(iv))
+    ctx = cipher.decryptor() if decrypt else cipher.encryptor()
+    return ctx.update(data) + ctx.finalize()
 
 
-def _aes_tables():
-    """(sbox, inv_sbox) computed from the FIPS-197 definition (GF(2^8)
-    inverse + affine transform) instead of 256 hand-typed literals — a
-    derivation cannot carry a single-entry typo. Single-block
-    correctness is pinned against the FIPS-197 known-answer vector."""
-    sbox = [0] * 256
-    inv = [0] * 256
-    # multiplicative inverses via exp/log tables over generator 3
-    exp = [0] * 510
-    log = [0] * 256
-    x = 1
-    for i in range(255):
-        exp[i] = x
-        log[x] = i
-        x = _gf_mul(x, 3)
-    for i in range(255, 510):
-        exp[i] = exp[i - 255]
-    for a in range(256):
-        v = 0 if a == 0 else exp[255 - log[a]]
-        # affine: b_i = v_i ^ v_(i+4) ^ v_(i+5) ^ v_(i+6) ^ v_(i+7) ^ c_i
-        b = 0
-        for i in range(8):
-            bit = (
-                (v >> i)
-                ^ (v >> ((i + 4) % 8))
-                ^ (v >> ((i + 5) % 8))
-                ^ (v >> ((i + 6) % 8))
-                ^ (v >> ((i + 7) % 8))
-                ^ (0x63 >> i)
-            ) & 1
-            b |= bit << i
-        sbox[a] = b
-        inv[b] = a
-    return bytes(sbox), bytes(inv)
-
-
-_AES_SBOX, _AES_INV_SBOX = _aes_tables()
-
-
-def _aes_round_keys(key: bytes):
-    """FIPS-197 key expansion for AES-128 (Nk=4, Nr=10) and AES-256
-    (Nk=8, Nr=14): Nr+1 round keys of 16 bytes."""
-    nk = len(key) // 4
-    assert nk in (4, 8)
-    nr = 10 if nk == 4 else 14
-    words = [key[i : i + 4] for i in range(0, len(key), 4)]
-    rcon = 1
-    for i in range(nk, 4 * (nr + 1)):
-        t = words[i - 1]
-        if i % nk == 0:
-            t = bytes(
-                (_AES_SBOX[t[1]] ^ rcon, _AES_SBOX[t[2]], _AES_SBOX[t[3]], _AES_SBOX[t[0]])
-            )
-            rcon = _gf_mul(rcon, 2)
-        elif nk > 6 and i % nk == 4:
-            t = bytes(_AES_SBOX[b] for b in t)
-        words.append(bytes(a ^ b for a, b in zip(words[i - nk], t)))
-    return [b"".join(words[4 * r : 4 * r + 4]) for r in range(nr + 1)]
-
-
-#: Backwards-compatible alias (tests pin the FIPS vector through it).
-_aes128_round_keys = _aes_round_keys
-
-
-def _aes_encrypt_block(rk: list, block: bytes) -> bytes:
-    """FIPS-197 forward Cipher — the reader needs it for the R6 hardened
-    key-derivation hash (2.B runs AES-128-CBC ENcryption internally)."""
-    nr = len(rk) - 1
-    s = bytes(a ^ b for a, b in zip(block, rk[0]))
-
-    def sub_shift(st: bytes) -> bytearray:
-        out = bytearray(16)
-        for c in range(4):
-            for r in range(4):
-                out[c * 4 + r] = _AES_SBOX[st[((c + r) % 4) * 4 + r]]
-        return out
-
-    for rnd in range(1, nr):
-        s = sub_shift(s)
-        out = bytearray(16)
-        for c in range(4):
-            col = s[c * 4 : c * 4 + 4]
-            out[c * 4 + 0] = _gf_mul(col[0], 2) ^ _gf_mul(col[1], 3) ^ col[2] ^ col[3]
-            out[c * 4 + 1] = col[0] ^ _gf_mul(col[1], 2) ^ _gf_mul(col[2], 3) ^ col[3]
-            out[c * 4 + 2] = col[0] ^ col[1] ^ _gf_mul(col[2], 2) ^ _gf_mul(col[3], 3)
-            out[c * 4 + 3] = _gf_mul(col[0], 3) ^ col[1] ^ col[2] ^ _gf_mul(col[3], 2)
-        s = bytes(a ^ b for a, b in zip(out, rk[rnd]))
-    s = sub_shift(s)
-    return bytes(a ^ b for a, b in zip(s, rk[nr]))
-
-
-def _aes_enc_tables():
-    """Classic T-tables: T0[x] packs SubBytes+MixColumns for a row-0 byte
-    ([2s, s, s, 3s] big-endian); T1..T3 are byte rotations for rows 1-3."""
-    t0 = []
-    for x in range(256):
-        s = _AES_SBOX[x]
-        s2 = _gf_mul(s, 2)
-        t0.append((s2 << 24) | (s << 16) | (s << 8) | (s2 ^ s))
-    ts = [t0]
-    for _ in range(3):
-        ts.append([((w >> 8) | ((w & 0xFF) << 24)) & 0xFFFFFFFF for w in ts[-1]])
-    return ts
-
-
-_AES_T = _aes_enc_tables()
-
-
-def _aes_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """CBC encrypt WITHOUT padding (KDF internal; len(data) % 16 == 0).
-
-    T-table formulation, not the readable ``_aes_encrypt_block``: the R6
-    hardened hash runs ~10-16k block encryptions per derivation and the
-    byte-wise cipher costs ~300µs/block in pure Python (4.2s per 2.B
-    call, two calls per encrypted file). The tables cut that ~20×.
-    Correctness is pinned two ways: the FIPS-197 C.1/C.3 vectors and a
-    randomized equivalence test against the byte-wise cipher.
-    """
-    t0, t1, t2, t3 = _AES_T
-    sbox = _AES_SBOX
-    rk = _aes_round_keys(key)
-    nr = len(rk) - 1
-    rkw = [
-        [int.from_bytes(k[i : i + 4], "big") for i in range(0, 16, 4)] for k in rk
-    ]
-    out = bytearray()
-    prev = iv
-    for off in range(0, len(data), 16):
-        blk = bytes(a ^ b for a, b in zip(data[off : off + 16], prev))
-        k0 = rkw[0]
-        s = [int.from_bytes(blk[i : i + 4], "big") ^ k0[j] for j, i in enumerate(range(0, 16, 4))]
-        for rnd in range(1, nr):
-            k = rkw[rnd]
-            s = [
-                t0[(s[0] >> 24) & 255] ^ t1[(s[1] >> 16) & 255] ^ t2[(s[2] >> 8) & 255] ^ t3[s[3] & 255] ^ k[0],
-                t0[(s[1] >> 24) & 255] ^ t1[(s[2] >> 16) & 255] ^ t2[(s[3] >> 8) & 255] ^ t3[s[0] & 255] ^ k[1],
-                t0[(s[2] >> 24) & 255] ^ t1[(s[3] >> 16) & 255] ^ t2[(s[0] >> 8) & 255] ^ t3[s[1] & 255] ^ k[2],
-                t0[(s[3] >> 24) & 255] ^ t1[(s[0] >> 16) & 255] ^ t2[(s[1] >> 8) & 255] ^ t3[s[2] & 255] ^ k[3],
-            ]
-        k = rkw[nr]
-        prev_b = bytearray(16)
-        for j in range(4):
-            w = (
-                (sbox[(s[j] >> 24) & 255] << 24)
-                | (sbox[(s[(j + 1) % 4] >> 16) & 255] << 16)
-                | (sbox[(s[(j + 2) % 4] >> 8) & 255] << 8)
-                | sbox[s[(j + 3) % 4] & 255]
-            ) ^ k[j]
-            prev_b[4 * j : 4 * j + 4] = w.to_bytes(4, "big")
-        prev = bytes(prev_b)
-        out += prev
-    return bytes(out)
-
-
-def _aes128_decrypt_block(rk: list, block: bytes) -> bytes:
-    """FIPS-197 InvCipher over one 16-byte block (state in column order);
-    handles both 128-bit (11 round keys) and 256-bit (15) schedules."""
-    nr = len(rk) - 1
-    s = bytearray(a ^ b for a, b in zip(block, rk[nr]))
-
-    def inv_shift_sub(st: bytearray) -> bytearray:
-        out = bytearray(16)
-        for c in range(4):
-            for r in range(4):
-                # InvShiftRows: row r rotates RIGHT by r columns.
-                out[((c + r) % 4) * 4 + r] = _AES_INV_SBOX[st[c * 4 + r]]
-        return out
-
-    for rnd in range(nr - 1, 0, -1):
-        s = inv_shift_sub(s)
-        s = bytearray(a ^ b for a, b in zip(s, rk[rnd]))
-        # InvMixColumns
-        out = bytearray(16)
-        for c in range(4):
-            col = s[c * 4 : c * 4 + 4]
-            out[c * 4 + 0] = (
-                _gf_mul(col[0], 14) ^ _gf_mul(col[1], 11) ^ _gf_mul(col[2], 13) ^ _gf_mul(col[3], 9)
-            )
-            out[c * 4 + 1] = (
-                _gf_mul(col[0], 9) ^ _gf_mul(col[1], 14) ^ _gf_mul(col[2], 11) ^ _gf_mul(col[3], 13)
-            )
-            out[c * 4 + 2] = (
-                _gf_mul(col[0], 13) ^ _gf_mul(col[1], 9) ^ _gf_mul(col[2], 14) ^ _gf_mul(col[3], 11)
-            )
-            out[c * 4 + 3] = (
-                _gf_mul(col[0], 11) ^ _gf_mul(col[1], 13) ^ _gf_mul(col[2], 9) ^ _gf_mul(col[3], 14)
-            )
-        s = out
-    s = inv_shift_sub(s)
-    return bytes(a ^ b for a, b in zip(s, rk[0]))
-
-
-def _aes128_cbc_decrypt(key: bytes, data: bytes) -> bytes:
-    """AESV2 stream layout (§7.6.2): 16-byte IV prefix, CBC body,
-    PKCS#7 padding. Returns b'' for malformed (short / ragged) input —
-    the downstream parse then quarantines rather than crashing here."""
+def _aes_stream_decrypt(key: bytes, data: bytes) -> bytes:
+    """AESV2/AESV3 stream layout (§7.6.2): 16-byte IV prefix, CBC body,
+    PKCS#7 padding. Returns b'' for malformed (short / ragged) input or a
+    last byte outside 1..16 — that one object then reads as empty instead
+    of quarantining the file. Only the last pad byte is checked."""
     if len(data) < 32 or len(data) % 16:
         return b""
-    rk = _aes128_round_keys(key)
-    iv = data[:16]
-    out = bytearray()
-    prev = iv
-    for i in range(16, len(data), 16):
-        block = data[i : i + 16]
-        out += bytes(a ^ b for a, b in zip(_aes128_decrypt_block(rk, block), prev))
-        prev = block
+    out = _aes_cbc(key, data[:16], data[16:], decrypt=True)
     pad = out[-1]
     if not 1 <= pad <= 16:
         return b""
-    return bytes(out[:-pad])
+    return out[:-pad]
 
 
 def _hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
@@ -615,7 +420,7 @@ def _hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     rnd = 0
     while True:
         k1 = (pwd + k + udata) * 64
-        e = _aes_cbc_encrypt_nopad(k[:16], k[16:32], k1)
+        e = _aes_cbc(k[:16], k[16:32], k1, decrypt=False)
         k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[sum(e[:16]) % 3](
             e
         ).digest()
@@ -624,31 +429,20 @@ def _hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
             return k[:32]
 
 
-def _aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """CBC decrypt without padding (the 32-byte /UE unwrap)."""
-    rk = _aes_round_keys(key)
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        block = data[i : i + 16]
-        out += bytes(a ^ b for a, b in zip(_aes128_decrypt_block(rk, block), prev))
-        prev = block
-    return bytes(out)
-
-
 def _std_empty_password_scheme(enc: dict, doc_id: bytes):
     """(file key, stream cipher) for the Standard security handler when
     the EMPTY user password opens the file — the overwhelmingly common
     case on real shelves (owner-restricted PDFs that any viewer opens
-    without prompting). Returns ``(key, "rc4"|"aesv2")``, or ``None``
-    when the handler/revision is unsupported (AESV3/R6, exotic crypt
+    without prompting). Returns ``(key, "rc4"|"aesv2"|"aesv3")``, or
+    ``None`` when the handler/revision is unsupported (exotic crypt
     filters) or a real user password is required — the caller
-    quarantines exactly as before.
+    quarantines.
 
-    Algorithms 2 (key derivation) and 4/5 (U verification) of PDF
-    32000-1 §7.6.3. Supported: V ∈ {1,2} / R ∈ {2,3} (RC4 40–128 bit)
-    and V 4 / R 4 with the AESV2 crypt filter applied to streams
-    (EncryptMetadata default).
+    Supported: V ∈ {1,2} / R ∈ {2,3} (RC4 40–128 bit) and V 4 / R 4 with
+    the AESV2 crypt filter applied to streams (EncryptMetadata default),
+    via algorithms 2 (key derivation) and 4/5 (U verification) of PDF
+    32000-1 §7.6.3; and V 5 / R 5-6 with the AESV3 filter, whose file key
+    unwraps from /UE (ISO 32000-2 algorithms 2.A/2.B).
     """
     import hashlib
 
@@ -662,8 +456,6 @@ def _std_empty_password_scheme(enc: dict, doc_id: bytes):
         # the file key unwraps from /UE with the intermediate key. R5 is
         # Adobe's interim plain-SHA-256 derivation, R6 the ISO hardened
         # hash (2.A/2.B). No per-object keys under AESV3.
-        import hashlib
-
         cf = enc.get("CF")
         stdcf = cf.get("StdCF") if isinstance(cf, dict) else None
         cfm = str(stdcf.get("CFM")) if isinstance(stdcf, dict) else ""
@@ -682,7 +474,7 @@ def _std_empty_password_scheme(enc: dict, doc_id: bytes):
             ikey = hashlib.sha256(ksalt).digest()
         if check != u[:32]:
             return None  # a real user password is required
-        file_key = _aes_cbc_decrypt_nopad(ikey, bytes(16), ue[:32])
+        file_key = _aes_cbc(ikey, bytes(16), ue[:32], decrypt=True)
         return (file_key, "aesv3")
     if v in (1, 2) and r in (2, 3):
         method = "rc4"
@@ -770,14 +562,14 @@ class _PdfFile:
         self._load_object_streams()
 
     def _setup_decryption(self) -> None:
-        """Decrypt legacy RC4 standard-handler files that open with the
-        EMPTY user password (the common owner-restricted case); quarantine
-        everything else encrypted instead of extracting ciphertext as
-        mojibake. /Encrypt lives in the trailer dict (classic) or the
+        """Decrypt RC4, AESV2 and AESV3 standard-handler files that open
+        with the EMPTY user password (the common owner-restricted case);
+        quarantine everything else encrypted instead of extracting
+        ciphertext as mojibake. /Encrypt lives in the trailer dict (classic) or the
         xref stream dict (1.5+); both are parsed — a bare substring grep
         would false-positive on content.
 
-        When the key verifies, every object's stream is RC4-decrypted in
+        When the key verifies, every object's stream is decrypted in
         place BEFORE the xref chain / ObjStm pass, with two spec'd
         exceptions: cross-reference streams are never encrypted, and the
         /Encrypt dictionary's own object is skipped. Strings inside
@@ -826,9 +618,9 @@ class _PdfFile:
             if str(body.get("Type")) == "XRef":
                 continue
             if method == "aesv3":  # AES-256: the file key is used directly
-                plain = _aes128_cbc_decrypt(key, stream)
+                plain = _aes_stream_decrypt(key, stream)
             elif method == "aesv2":
-                plain = _aes128_cbc_decrypt(_object_key(key, num, aes=True), stream)
+                plain = _aes_stream_decrypt(_object_key(key, num, aes=True), stream)
             else:
                 plain = _rc4(_object_key(key, num), stream)
             self.objects[num] = (body, plain)

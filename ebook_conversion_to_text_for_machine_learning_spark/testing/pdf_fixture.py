@@ -5,8 +5,8 @@ table, trailer) whose pages contain one ``Tj`` per text line inside a
 single ``BT``/``ET`` block (``Td`` line advances), optionally preceded by
 an image XObject ``Do``. This is the layout shape the reference's golden
 PDFs exercise (one text line per layout line, images as separate
-elements), so the pure-Python extractor (sources/pdf_text.py) and the
-pdfminer path both see a well-formed file.
+elements), so the stdlib reader (sources/pdf_text.py) — the one PDF
+ingest path — sees the same well-formed file the reference reads.
 
 ``objstm=True`` switches to the PDF 1.5 serialization most modern
 producers emit: every non-stream object (catalog, page tree, pages,
@@ -547,8 +547,9 @@ def build_pdf(
 
     The returned image object ids are what the extractor (and pdfminer via
     ``stream.objid``) reports as each image span's ``media_ref``.
-    ``encrypt``: None, or ``rc4-40`` / ``rc4-128`` / ``rc4-locked``
-    (classic layout only).
+    ``encrypt``: None, or ``rc4-40`` / ``rc4-128`` / ``aes-128`` /
+    ``aes-256`` (the empty user password opens them), or ``rc4-locked`` /
+    ``aes-256-locked`` (a real user password), in either layout.
     """
     # --- object numbering: 1 Catalog, 2 Pages, 3 Font, then per page:
     # page, content, images...

@@ -2,7 +2,10 @@
 stdlib and check the end-to-end compat API reproduces the reference's
 golden strings for the same inputs."""
 
+import ast
+import re
 import zipfile
+from pathlib import Path
 
 import pytest
 
@@ -610,11 +613,15 @@ def test_encrypted_pdf_round_trips(tmp_path, mode):
     """Standard-handler files with an empty user password
     (owner-restricted — the common real-shelf case) must extract the
     SAME spans as the unencrypted serialization of the same document,
-    across RC4 40/128 (V1-2/R2-3) and AESV2 (V4/R4). The fixture's
-    crypto (key derivation, /O, /U, per-object keys, forward AES) is an
-    independent implementation of the spec — both AES directions are
-    pinned to the FIPS-197 known-answer vector — so agreement here
-    checks the reader's derivation, not a shared helper."""
+    across RC4 40/128 (V1-2/R2-3), AESV2 (V4/R4) and AESV3 (V5/R6). The
+    fixture's crypto (key derivation, /O, /U, per-object keys, forward
+    AES) is an independent implementation of the spec, so agreement here
+    checks the reader's derivation, not a shared helper. Each side's AES
+    is pinned on its own (``test_aes128_fips197_known_answer``): the
+    reader's ``cryptography`` CBC helper meets the FIPS-197 C.1 and C.3
+    vectors and the fixture's byte-wise cipher the C.1 vector; the
+    fixture's CBC also equals ``cryptography``'s
+    (``test_fixture_cbc_matches_cryptography``)."""
     from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
         build_pdf,
     )
@@ -658,13 +665,13 @@ def test_encrypted_objstm_pdf_round_trips(tmp_path, mode):
 
 
 def test_aes128_fips197_known_answer():
-    """Both AES implementations (reader InvCipher, fixture forward
-    Cipher) must match the official FIPS-197 Appendix C.1 vector — the
-    absolute pin that keeps the independent pair from agreeing on a
-    shared misunderstanding."""
+    """The fixture's forward Cipher must match the official FIPS-197
+    Appendix C.1 (AES-128) vector, and the reader's AES-CBC helper C.1
+    and C.3 (AES-256) — the absolute pin that keeps the independent pair from
+    agreeing on a shared misunderstanding. One CBC block under a zero IV
+    is the bare block cipher."""
     from ebook_conversion_to_text_for_machine_learning_spark.sources.pdf_text import (
-        _aes128_decrypt_block,
-        _aes128_round_keys,
+        _aes_cbc,
     )
     from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
         _fx_aes128_encrypt_block,
@@ -674,7 +681,93 @@ def test_aes128_fips197_known_answer():
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
     assert _fx_aes128_encrypt_block(key, pt) == ct
-    assert _aes128_decrypt_block(_aes128_round_keys(key), ct) == pt
+    iv = bytes(16)
+    assert _aes_cbc(key, iv, ct, decrypt=True) == pt
+    assert _aes_cbc(key, iv, pt, decrypt=False) == ct
+    key256 = bytes(range(32))
+    ct256 = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
+    assert _aes_cbc(key256, iv, ct256, decrypt=True) == pt
+    assert _aes_cbc(key256, iv, pt, decrypt=False) == ct256
+
+
+def test_aes_stream_decrypt_layout_rules():
+    """AESV2/AESV3 stream layout: 16-byte IV prefix, CBC body, PKCS#7
+    pad of which only the last byte is read. A short, ragged or
+    badly padded stream reads as empty — that one object, not the whole
+    file, is lost (a raise here would quarantine the file)."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    from ebook_conversion_to_text_for_machine_learning_spark.sources.pdf_text import (
+        _aes_stream_decrypt,
+    )
+
+    key, iv = bytes(range(16)), bytes(range(16, 32))
+
+    def stream(plain: bytes) -> bytes:
+        enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+        return iv + enc.update(plain) + enc.finalize()
+
+    body = b"BT (Hello) Tj ET" * 2  # 32 bytes
+    assert _aes_stream_decrypt(key, bytes(31)) == b""
+    assert _aes_stream_decrypt(key, bytes(40)) == b""
+    assert _aes_stream_decrypt(key, stream(body[:31] + b"\x00")) == b""
+    assert _aes_stream_decrypt(key, stream(body[:31] + b"\x11")) == b""
+    assert _aes_stream_decrypt(key, stream(body + b"\x10" * 16)) == body
+    # Only the last pad byte counts: the other pad bytes are not checked.
+    assert _aes_stream_decrypt(key, stream(body[:29] + b"xy\x03")) == body[:29]
+    # The AESV3 (256-bit) key uses the same layout.
+    key = bytes(range(32))
+    assert _aes_stream_decrypt(key, stream(body + b"\x10" * 16)) == body
+
+
+@pytest.mark.parametrize("ue_bytes", [20, 8])
+def test_truncated_aes256_key_wrap_raises_pdf_conversion_error(tmp_path, ue_bytes):
+    """A /UE cut to a ragged length is malformed key material: the
+    reference API must raise ``PDFConversionError`` (→ quarantine), not
+    leak a raw cipher error."""
+    from ebook_conversion_to_text_for_machine_learning_spark.compat import (
+        PDFConversionError,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
+        build_pdf,
+    )
+
+    data, _ = build_pdf([["Chapter One", "Body."]], encrypt="aes-256")
+    cut, n = re.subn(
+        rb"/UE <([0-9a-f]+)>",
+        lambda m: b"/UE <" + m.group(1)[: 2 * ue_bytes] + b">",
+        data,
+    )
+    assert n == 1
+    f = tmp_path / f"ue{ue_bytes}.pdf"
+    f.write_bytes(cut)
+    with pytest.raises(PDFConversionError):
+        pdf_file_to_spans(f)
+
+
+def test_one_pdf_path_no_import_selected_fork():
+    """No library module imports pdfminer or handles ``ImportError``:
+    either lets the packages an executor has installed pick the path that
+    parses a file, while the goldens and oracles verify only one."""
+    import ebook_conversion_to_text_for_machine_learning_spark as engine
+
+    pkg = Path(engine.__file__).parent
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, ast.Import):
+                mods = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom):
+                mods = [n.module or ""]
+            else:
+                mods = []
+            if any(m.split(".")[0] == "pdfminer" for m in mods):
+                offenders.append((str(p.relative_to(pkg)), n.lineno, "pdfminer"))
+            if isinstance(n, ast.ExceptHandler) and n.type is not None:
+                caught = {t.id for t in ast.walk(n.type) if isinstance(t, ast.Name)}
+                if caught & {"ImportError", "ModuleNotFoundError"}:
+                    offenders.append((str(p.relative_to(pkg)), n.lineno, "except"))
+    assert offenders == []
 
 
 def test_fixture_cbc_matches_cryptography():
