@@ -1,19 +1,31 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths:
+Five families:
 
-- ``cosine_topk`` — exact brute force. The probe side is small and gets
-  broadcast, so the plan is scan(corpus) × broadcast(probes) with no
-  shuffle of the corpus; per-pair math is built-in ``zip_with``/``aggregate``
-  (JVM-side, codegen), never Python.
-- ``lsh_bucket_*`` — the scale path: sign-random-projection LSH with
-  deterministic ±1 hyperplanes. Signatures are per-row expressions; the
-  candidate join is keyed on short signature strings. At 10^12 rows the
-  bucket join replaces the O(N·Q) brute force with O(candidates).
+- **Exact** — ``cosine_topk``: brute force over scan(corpus) ×
+  broadcast(probes), per-pair math in built-in ``zip_with``/``aggregate``
+  (JVM-side), never Python.
+- **LSH** — sign-random-projection signatures over deterministic ±1
+  hyperplanes (``lsh_banded_signatures_arrow``, one numpy matmul per Arrow
+  batch); candidates join on short bucket strings, so at 10^12 rows the
+  O(N·Q) brute force becomes O(candidates). ``±1`` entries make the dot
+  products exact float sums, so Spark and the DuckDB oracle compute
+  identical doubles from identical float32 inputs.
+- **IVF** — a bounded stride-sampled or Lloyd-refined codebook, cell
+  assignment and probe-cell ranking as one numpy matmul per Arrow batch,
+  exact cosine over the probed cells; SemDeDup compares pairs within a cell.
+- **PQ** — per-subspace codebooks, ``pq_encode`` to m small ints per
+  vector, asymmetric-distance (ADC) top-k over the codes, optional exact
+  re-rank.
+- **IVFADC** — ``ivfpq_topk``: IVF cells choose what to score, PQ codes
+  score it, exact re-rank orders the shortlist.
 
-Hyperplanes use ±1 entries so dot products are exact float sums — both
-Spark and the DuckDB oracle compute identical doubles from identical
-float32 inputs (no RNG parity issues).
+The IVF and PQ halves share one of each job: one stride sampler
+(``_stride_sample``), one Lloyd loop (``_lloyd``) and one ADC scan kernel
+(``pq_adc_cell_scan_arrow``; brute-force ADC is the one-cell case every
+probe probes). The expression twins ``lsh_*_signatures``, ``ivf_assign``
+and ``_cell_ranking`` are the oracle-parity references of the Arrow
+kernels.
 """
 
 from __future__ import annotations
@@ -130,6 +142,16 @@ def _unit_rows(vecs):
     norms = np.linalg.norm(vecs, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
     return vecs / norms
+
+
+def _rounded_cos(vecs, mat):
+    """(n, cells) cosines of a float64 vector matrix to a unit-row
+    codebook matrix, rounded to 4 places as the expression twin and the
+    SQL oracle round — the one score of every IVF assignment and
+    probe-cell ranking."""
+    import numpy as np
+
+    return np.round(_unit_rows(vecs) @ mat.T, 4)
 
 
 def _matrix(arr, dtype):
@@ -388,17 +410,27 @@ def ivf_centroids(
                 "corpora; the 65536-cell default is a lake-scale setting.",
                 stacklevel=2,
             )
+    return _stride_sample(corpus, stride, "ivf_centroids", vec_col=vec_col, id_col=id_col)
+
+
+def _stride_sample(
+    corpus: DataFrame, stride: int, where: str, *, vec_col: str, id_col: str
+) -> list:
+    """The one codebook sample of the IVF and PQ trainers: the
+    ``(id, vector)`` rows of every ``stride``-th id, collected to the
+    driver and sorted by id. Raises ``ValueError`` on an empty sample
+    instead of handing the kernels a zero-entry codebook."""
     rows = (
         corpus.where(F.col(id_col) % stride == 0)
-        .select(F.col(id_col).cast("long").alias("cid"), F.col(vec_col).alias("cvec"))
+        .select(F.col(id_col).cast("long").alias("sid"), F.col(vec_col).alias("svec"))
         .collect()
     )
     if not rows:
         raise ValueError(
-            f"ivf_centroids: empty codebook (no {id_col} divisible by stride "
-            f"{stride}); pass a smaller stride/target_cells or remap ids"
+            f"{where}: empty codebook (no {id_col} divisible by stride "
+            f"{stride}); pass a smaller stride or target size, or remap ids"
         )
-    return sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
+    return sorted((int(r.sid), [float(x) for x in r.svec]) for r in rows)
 
 
 # Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
@@ -470,8 +502,7 @@ def ivf_assign_arrow(
 
     def batches(it):
         for batch in it:
-            unit = _unit_rows(_matrix(batch.column(1), np.float64))
-            best = np.argmax(np.round(unit @ mat.T, 4), axis=1)
+            best = np.argmax(_rounded_cos(_matrix(batch.column(1), np.float64), mat), axis=1)
             out = {"vec_id": batch.column(0), "cell_id": ids[best]}
             if keep_vec:
                 out[vec_col] = batch.column(1)
@@ -537,15 +568,15 @@ def _probe_cell_assign(vecs, ids, mat, nprobe: int):
     order."""
     import numpy as np
 
-    cos = np.round(_unit_rows(vecs) @ mat.T, 4)  # (n, cells)
+    cos = _rounded_cos(vecs, mat)  # (n, cells)
     return ids[np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]]
 
 
-def _partial_sums(keys, vals, n_keys: int):
-    """One batch's Lloyd partial sums: the keys with members, and the
-    ``pos``/``psum``/``pcnt`` output columns — per member key, one row
-    per component of its summed ``vals`` rows, with the member count.
-    ``np.add.at`` adds each key's rows in row order."""
+def _partial_sums(keys, vals, n_keys: int) -> dict:
+    """One batch's Lloyd partial sums as ``key``/``pos``/``psum``/``pcnt``
+    columns: per member key, one row per component of its summed
+    ``vals`` rows, with the member count. ``np.add.at`` adds each key's
+    rows in row order."""
     import numpy as np
 
     d = vals.shape[1]
@@ -553,11 +584,54 @@ def _partial_sums(keys, vals, n_keys: int):
     np.add.at(acc, keys, vals)
     cnt = np.bincount(keys, minlength=n_keys)
     nz = np.flatnonzero(cnt)
-    return nz, {
+    return {
+        "key": np.repeat(nz, d),
         "pos": np.tile(np.arange(d, dtype=np.int32), nz.size),
         "psum": acc[nz].ravel(),
         "pcnt": np.repeat(cnt[nz], d).astype(np.int64),
     }
+
+
+def _lloyd(src: DataFrame, entries, assign, iters: int):
+    """The one Lloyd loop of the IVF and PQ trainers. ``entries`` is a
+    flat (K, d) float64 matrix, ``src`` a one-column vector frame, and
+    ``assign(x, entries)`` maps a batch's float64 vector matrix to
+    ``(keys, vals)``: one entry index per row of ``vals``, the rows whose
+    mean that entry moves to. Returns the refined matrix.
+
+    Each of the ``iters`` iterations costs ONE pass over ``src``: a
+    fused Arrow stage assigns each batch and, in the same numpy batch,
+    accumulates its per-entry ``_partial_sums`` — at most K × d tiny rows
+    leave each task, never the vectors. A partial-agg ``groupBy(key,
+    pos)`` (map-side combinable, skew-free: the key space is the
+    codebook) reduces them to means rounded to 6 decimals, so Spark and
+    the DuckDB oracle iterate from identical codebooks, and a bounded
+    K × d collect updates the matrix. An entry that captures no members
+    keeps its previous value (the empty-cell rule, which keeps entry ids
+    stable across refinement). No corpus shuffle, plan size constant in
+    the codebook.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    for _ in range(max(0, iters)):
+
+        def batches(it, _e=entries):
+            for batch in it:
+                if batch.num_rows:
+                    keys, vals = assign(_matrix(batch.column(0), np.float64), _e)
+                    yield pa.RecordBatch.from_pydict(_partial_sums(keys, vals, len(_e)))
+
+        means = (
+            src.mapInArrow(batches, schema="key long, pos int, psum double, pcnt long")
+            .groupBy("key", "pos")
+            .agg(F.round(F.sum("psum") / F.sum("pcnt"), 6).alias("mval"))
+            .collect()
+        )
+        entries = entries.copy()
+        for r in means:
+            entries[r.key, r.pos] = r.mval
+    return entries
 
 
 def ivf_kmeans_centroids(
@@ -574,25 +648,14 @@ def ivf_kmeans_centroids(
     with the same bounded-codebook contract (same ``(cid, vec)`` list, so
     it drops into every assignment/search path unchanged).
 
-    Each of the ``iters`` Lloyd iterations costs ONE pass over the corpus:
-    a fused Arrow stage assigns each vector to its nearest cell (the same
-    round-4 matmul ranking as ``ivf_assign_arrow``) and, in the same numpy
-    batch, accumulates per-cell sums of the UNIT vectors — so what leaves
-    each task is at most ``cells x dim`` tiny (cell, pos, partial_sum)
-    rows per batch, never the vectors themselves. A partial-agg ``groupBy``
-    reduces those to cell means (map-side combinable, skew-free: the key
-    space is the codebook) and a bounded ``cells x dim`` collect rebuilds
-    the list. No corpus shuffle, no N x dim explode, plan size constant in
-    the codebook.
-
-    Semantics pinned for oracle parity (the DuckDB twin unrolls the same
-    iterations): centroids are means of L2-normalized members (spherical
-    k-means — cosine ranking is scale-invariant, so no renormalization is
-    needed), components are rounded to 6 decimals each iteration so both
-    engines iterate from identical codebooks, and a cell that captures no
-    members keeps its previous centroid (the standard empty-cell rule;
-    also what makes the refined codebook keep exactly the initial cell
-    ids, which downstream nprobe arithmetic relies on).
+    ``_lloyd`` runs the ``iters`` iterations, one corpus pass each. A
+    vector's cell is the round-4 cosine argmax of ``ivf_assign_arrow``,
+    and cells average the UNIT vectors of their members (spherical
+    k-means — cosine ranking is scale-invariant, so no renormalization
+    is needed). With the loop's 6-decimal rounding and empty-cell rule,
+    the DuckDB twin unrolls the same iterations, and the refined codebook
+    keeps exactly the initial cell ids, which downstream nprobe
+    arithmetic relies on.
 
     Accepted parity window: the per-cell means sum float64 partial sums
     (``F.sum`` over per-batch accumulations), and double addition is
@@ -608,44 +671,18 @@ def ivf_kmeans_centroids(
     rounding per member vector.
     """
     import numpy as np
-    import pyarrow as pa
 
     cents = ivf_centroids(
         corpus, target_cells=target_cells, stride=stride,
         vec_col=vec_col, id_col=id_col,
     )
-    dim = len(cents[0][1])
-    src = corpus.select(vec_col)
-    for _ in range(max(0, iters)):
-        ids, mat = _centroid_matrix(cents)
 
-        def batches(it, _ids=ids, _mat=mat):
-            for batch in it:
-                if not batch.num_rows:
-                    continue
-                unit = _unit_rows(_matrix(batch.column(0), np.float64))
-                best = np.argmax(np.round(unit @ _mat.T, 4), axis=1)
-                nz, sums = _partial_sums(best, unit, _ids.size)
-                yield pa.RecordBatch.from_pydict(
-                    {"cell_id": np.repeat(_ids[nz], dim), **sums}
-                )
+    def assign(x, mat):
+        return np.argmax(_rounded_cos(x, _unit_rows(mat)), axis=1), _unit_rows(x)
 
-        means = (
-            src.mapInArrow(
-                batches, schema="cell_id long, pos int, psum double, pcnt long"
-            )
-            .groupBy("cell_id", "pos")
-            .agg(F.round(F.sum("psum") / F.sum("pcnt"), 6).alias("mval"))
-            .collect()
-        )
-        bycell: dict = {}
-        for r in means:
-            bycell.setdefault(int(r.cell_id), {})[int(r.pos)] = float(r.mval)
-        cents = [
-            (cid, [bycell[cid][p] for p in range(dim)] if cid in bycell else old)
-            for cid, old in cents
-        ]
-    return cents
+    init = np.array([v for _, v in cents], dtype=np.float64)
+    mat = _lloyd(corpus.select(vec_col), init, assign, iters)
+    return [(cid, vec) for (cid, _), vec in zip(cents, mat.tolist())]
 
 
 def ivf_ann_topk(
@@ -864,7 +901,8 @@ def write_ann_index(
     - ``cells``   — IVF cell assignment carrying the vector
       (item_id, item_vec, cell_id), which doubles as the id→vector
       fetch table for LSH candidate verification
-    - ``codebook``— the IVF centroid sample
+    - ``codebook``— the IVF centroids as doubles, so a k-means codebook
+      (6-decimal doubles) reads back exactly as it was assigned with
     - ``meta``    — one row of the knobs the index was built with, so a
       reader cannot accidentally band probes with mismatched planes
 
@@ -896,7 +934,7 @@ def write_ann_index(
     spark = corpus.sparkSession
     spark.createDataFrame(
         pa.table({"cid": [c for c, _ in centroids], "cvec": [v for _, v in centroids]}),
-        "cid long, cvec array<float>",
+        "cid long, cvec array<double>",
     ).write.mode("overwrite").parquet(f"{path}/codebook")
     spark.createDataFrame(
         pa.table({"dim": [dim], "n_bands": [n_bands], "band_planes": [band_planes]}),
@@ -1159,17 +1197,7 @@ def pq_codebooks(
     """
     if stride is None:
         stride = max(1, corpus.count() // target_codes)
-    rows = (
-        corpus.where(F.col(id_col) % stride == 0)
-        .select(F.col(id_col).cast("long").alias("sid"), F.col(vec_col).alias("svec"))
-        .collect()
-    )
-    if not rows:
-        raise ValueError(
-            f"pq_codebooks: empty sample (no {id_col} divisible by stride "
-            f"{stride}); pass a smaller stride/target_codes or remap ids"
-        )
-    sample = sorted((int(r.sid), [float(x) for x in r.svec]) for r in rows)
+    sample = _stride_sample(corpus, stride, "pq_codebooks", vec_col=vec_col, id_col=id_col)
     dim = len(sample[0][1])
     if dim % m:
         raise ValueError(f"pq_codebooks: dim {dim} not divisible by m={m}")
@@ -1206,75 +1234,29 @@ def pq_kmeans_codebooks(
     kept as the standard offline-training step with the same
     determinism/oracle contract as ``ivf_kmeans_centroids``.
 
-    Cost per iteration: ONE corpus pass. A fused Arrow stage encodes the
-    batch against all m codebooks (the ``pq_encode`` reshape) and, in
-    the same numpy batch, accumulates per-(subspace, code) sums of the
-    RAW subvectors — at most m × k × d0 tiny partial-sum rows leave each
-    task. A partial-agg groupBy reduces to means; a bounded collect
-    rebuilds the list. No corpus shuffle, plan constant in the codebook.
-
-    Determinism rules (same as ``ivf_kmeans_centroids``): assignment
-    uses the exact-integer quantized distance (min-code tie-break),
-    means are rounded to 6 decimals per iteration, and a code that
-    captures no members keeps its previous entry so code ids are stable
-    across refinement.
+    ``_lloyd`` runs the ``iters`` iterations, one corpus pass each, over
+    the flat (m·k, d0) entry matrix: a subvector's entry is its subspace
+    ``s``'s nearest code under the exact-integer quantized distance of
+    ``_pq_nearest_codes`` (min-code tie-break), offset by ``s·k``, and
+    entries average the RAW subvectors of their members. The loop's
+    6-decimal rounding and empty-entry rule keep code ids stable across
+    refinement, as in ``ivf_kmeans_centroids``.
     """
     import numpy as np
-    import pyarrow as pa
 
     books = pq_codebooks(
         corpus, m=m, target_codes=target_codes, stride=stride,
         vec_col=vec_col, id_col=id_col,
     )
-    d0 = len(books[0][0][1])
-    src = corpus.select(vec_col)
-    for _ in range(max(0, iters)):
-        cb = _codebook_tensor(books)  # (m, k, d0)
-        k = cb.shape[1]
+    cb = _codebook_tensor(books)  # (m, k, d0)
+    _, k, d0 = cb.shape
 
-        def batches(it, _cb=cb, _k=k):
-            for batch in it:
-                if not batch.num_rows:
-                    continue
-                x = _matrix(batch.column(0), np.float64)
-                # key s·k + code: one partial-sum row set per (subspace, code)
-                keys = (_pq_nearest_codes(x, _cb) + np.arange(m) * _k).ravel()
-                nz, sums = _partial_sums(keys, x.reshape(len(x) * m, d0), m * _k)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "subspace": np.repeat(nz // _k, d0).astype(np.int32),
-                        "code": np.repeat(nz % _k, d0).astype(np.int32),
-                        **sums,
-                    }
-                )
+    def assign(x, flat):
+        codes = _pq_nearest_codes(x, flat.reshape(m, k, d0))
+        return (codes + np.arange(m) * k).ravel(), x.reshape(len(x) * m, d0)
 
-        means = (
-            src.mapInArrow(
-                batches,
-                schema="subspace int, code int, pos int, psum double, pcnt long",
-            )
-            .groupBy("subspace", "code", "pos")
-            .agg(F.round(F.sum("psum") / F.sum("pcnt"), 6).alias("mval"))
-            .collect()
-        )
-        by: dict = {}
-        for r in means:
-            by.setdefault((int(r.subspace), int(r.code)), {})[int(r.pos)] = float(
-                r.mval
-            )
-        books = [
-            [
-                (
-                    code,
-                    [by[(s, code)][p] for p in range(d0)]
-                    if (s, code) in by
-                    else old,
-                )
-                for code, old in book
-            ]
-            for s, book in enumerate(books)
-        ]
-    return books
+    flat = _lloyd(corpus.select(vec_col), cb.reshape(m * k, d0), assign, iters)
+    return [list(enumerate(book)) for book in flat.reshape(m, k, d0).tolist()]
 
 
 def _codebook_tensor(codebooks: list):
@@ -1311,12 +1293,12 @@ def _pq_nearest_codes(x, cb):
 
 def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
     """(id-sorted probe ids, their float64 vector matrix, probes × m × k
-    LUT) for the Arrow ADC kernels: the probe batch reaches the driver
+    LUT) for the ADC kernel: the probe batch reaches the driver
     through ONE ``toArrow()`` collect, bounded by the probe batch by
     design, and is decoded by ``_matrix``.
 
     Quantization is the exact-integer rule of ``_pq_nearest_codes``,
-    identical in both kernels and the SQL oracle. Built CHUNKED with
+    identical in the kernel and the SQL oracle. Built CHUNKED with
     in-place ufuncs: the one-shot ``(P, m, k, d0)`` broadcast
     formulation allocated ~800 MB of temporaries and cost 2.5-3.5 s of
     serial DRIVER time per pass at 1024 probes (measured; the single
@@ -1329,7 +1311,8 @@ def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
     probe_ids = t.column(0).to_numpy().astype(np.int64)
     order = np.argsort(probe_ids)
     probe_ids = probe_ids[order]
-    vecs = _matrix(t.column(1), np.float64)[order]
+    # an empty probe batch decodes as (0, 0); keep its (0, dim) shape
+    vecs = _matrix(t.column(1), np.float64)[order].reshape(len(order), m * d0)
     x = vecs.reshape(len(vecs), m, 1, d0)
     lut = np.empty((len(x), m, k), dtype=np.int64)
     for s in range(0, len(x), 64):
@@ -1344,10 +1327,9 @@ def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
         # 1024-probe LUT LLC-resident where the int64 one spilled to
         # DRAM — measured 2→8-process gather scaling 0.67 (int64) vs
         # 0.99 (int32) on this VM, +38% absolute at 8 workers. The
-        # kernels accumulate in int64 (explicit sum dtype / int64
-        # accumulator array), so scores are bit-identical; values that
-        # genuinely exceed int32 (pathological unnormalized vectors)
-        # keep the int64 table.
+        # kernel accumulates in an int64 array, so scores are
+        # bit-identical; values that genuinely exceed int32
+        # (pathological unnormalized vectors) keep the int64 table.
         lut = lut.astype(np.int32)
     return probe_ids, vecs, lut
 
@@ -1390,13 +1372,13 @@ def pq_encode(
     )
 
 
-#: Integral Spark id types, and the Arrow type the ADC kernels emit each as.
+#: Integral Spark id types, and the Arrow type the ADC kernel emits each as.
 _INTEGRAL_TYPES = {"tinyint": "int8", "smallint": "int16", "int": "int32", "bigint": "int64"}
 
 
 def _require_integral_id(df: DataFrame, col: str, where: str) -> None:
-    """The Arrow ADC kernels compare probe ids with item ids as int64
-    arrays and lexsort item ids inside the selection loop — both require
+    """The ADC kernel compares probe ids with item ids as int64 arrays
+    and lexsorts item ids inside the selection loop — both require
     integer ids. Fail fast with a usable message instead of a mid-job numpy
     ValueError (string-keyed frames should factorize to dense positions
     first, e.g. ``F.xxhash64`` or a zipWithIndex-style dense id)."""
@@ -1417,9 +1399,15 @@ def _require_integral_id(df: DataFrame, col: str, where: str) -> None:
 #: the kernel makes it independent of the session knob.
 _ADC_CHUNK_ROWS = 65536
 
+#: Score-matrix budget of the ADC kernel: each cell group of a chunk is
+#: scored in blocks of ``max(1, _SCORE_CELLS // rows)`` probes, so one
+#: block's int64 (probes × rows) matrix stays ~8 MB however many probes
+#: probe the cell — the one-cell brute-force scan included.
+_SCORE_CELLS = 1 << 20
+
 
 def _score_chunks(scan: DataFrame, score, *, p_type: str, i_type: str) -> DataFrame:
-    """The one Arrow chunk accumulator, shared by both ADC scans: ``scan``
+    """The Arrow chunk accumulator of the ADC kernel: ``scan``
     runs through ``mapInArrow`` and ``score`` gets runs of at least
     ``_ADC_CHUNK_ROWS`` of its rows concatenated into one ``pa.Table``
     (the last run may be shorter; empty batches are skipped). ``score``
@@ -1454,95 +1442,6 @@ def _score_chunks(scan: DataFrame, score, *, p_type: str, i_type: str) -> DataFr
     )
 
 
-def pq_adc_scan_arrow(
-    codes: DataFrame,
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    per_probe_r: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Brute-force ADC scan: every corpus code row scored against ALL
-    probes with one numpy LUT gather per accumulated Arrow batch — the
-    full-scan sibling of the inverted-list ``pq_adc_cell_scan_arrow``.
-
-    Per accumulated chunk the kernel gathers ``LUT[probe, s, code]`` for
-    the whole chunk × a block of probes at once (probe blocks sized so
-    the int64 score matrix stays ~8 MB), masks self-matches with an
-    int64-max sentinel, and keeps each probe's top-``per_probe_r`` rows
-    by the global total order ``(adc ASC, item ASC)``. Each (probe,
-    item) pair exists in exactly one chunk, so the union of chunk top-R
-    sets is a provable superset of the global top-R per probe (if x is
-    in the global top-R, fewer than R pairs precede it globally, hence
-    fewer than R in its own chunk) — downstream ``row_number`` ranking
-    is EXACTLY unchanged while output shrinks from |corpus| × |probes|
-    to chunks × probes × R rows.
-
-    Scores use the ``_pq_nearest_codes`` exact-integer distance, so they
-    match the SQL oracle bit for bit. Probe vectors are collected to
-    build the LUT (probes × m × k int64 — 16 MB at 1024×8×256), bounded
-    by the probe batch by design.
-
-    Returns (probe_id, item_id, adc_x10k) candidate rows.
-    """
-    import numpy as np
-
-    _require_integral_id(probes, id_col, "pq_adc_scan_arrow")
-    _require_integral_id(codes, "vec_id", "pq_adc_scan_arrow")
-    cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m = cb.shape[0]
-    probe_ids, _, lut = _adc_lut(probes, cb, vec_col=vec_col, id_col=id_col)
-    bc = codes.sparkSession.sparkContext.broadcast((probe_ids, lut))
-    sentinel = np.iinfo(np.int64).max
-    r = int(per_probe_r)
-    # probe-block × chunk score matrix budget: ~1M int64 cells (8 MB)
-    _SCORE_CELLS = 1 << 20
-
-    def score(chunk):
-        pids, table = bc.value
-        items = chunk.column("item_id").to_numpy().astype(np.int64)
-        codes_mat = _matrix(chunk.column("codes"), np.int64)  # (n, m)
-        n = len(items)
-        blk = max(1, _SCORE_CELLS // max(n, 1))
-        out_p: list = []
-        out_i: list = []
-        out_q: list = []
-        for b0 in range(0, len(pids), blk):
-            pid_blk = pids[b0 : b0 + blk]
-            lut_blk = table[b0 : b0 + blk]  # (B, m, k)
-            scores = np.zeros((len(pid_blk), n), dtype=np.int64)
-            for s in range(m):
-                # (B, k) rows gathered at the chunk's subspace-s codes
-                scores += lut_blk[:, s, :][:, codes_mat[:, s]]
-            scores[pid_blk[:, None] == items[None, :]] = sentinel
-            for j in range(len(pid_blk)):
-                row = scores[j]
-                if n > r:
-                    idx = np.argpartition(row, r - 1)
-                    cand = np.flatnonzero(row <= row[idx[r - 1]])
-                else:
-                    cand = np.arange(n)
-                sel = cand[np.lexsort((items[cand], row[cand]))[:r]]
-                sel = sel[row[sel] != sentinel]
-                out_p.append(np.full(len(sel), pid_blk[j], dtype=np.int64))
-                out_i.append(items[sel])
-                out_q.append(row[sel])
-        empty = np.array([], dtype=np.int64)
-        return {
-            "probe_id": np.concatenate(out_p) if out_p else empty,
-            "item_id": np.concatenate(out_i) if out_i else empty,
-            "adc_x10k": np.concatenate(out_q) if out_q else empty,
-        }
-
-    return _score_chunks(
-        codes.select(F.col("vec_id").alias("item_id"), "codes"),
-        score,
-        p_type=dict(probes.dtypes)[id_col],
-        i_type=dict(codes.dtypes)["vec_id"],
-    )
-
-
 def pq_adc_cell_scan_arrow(
     codes_with_cells: DataFrame,
     probes: DataFrame,
@@ -1554,10 +1453,12 @@ def pq_adc_cell_scan_arrow(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVFADC scoring the way inverted-list engines actually run it:
-    each corpus code row ships ONCE with its ``cell_id``, and the kernel
-    expands it against the probes probing that cell in numpy — the
-    (probe × candidate) pairing never exists as Spark rows.
+    """The one ADC scan kernel — IVFADC scoring the way inverted-list
+    engines actually run it: each corpus code row ships ONCE with its
+    ``cell_id``, and the kernel expands it against the probes probing
+    that cell in numpy — the (probe × candidate) pairing never exists as
+    Spark rows. Brute-force ADC (``pq_adc_topk``) is the case of one
+    cell that every probe probes.
 
     Why the pairing happens in numpy (measured, 131k-vector scaling
     corpus, 1024 probes, nprobe 8/64): generating candidates as a JVM
@@ -1576,10 +1477,13 @@ def pq_adc_cell_scan_arrow(
     the shared ``_adc_lut``; probe→cell assignment is
     ``_probe_cell_assign`` (the ranking ``ivf_probe_cells_arrow`` runs)
     over the id-sorted probe matrix ``_adc_lut`` returns; self-matches
-    mask to a sentinel exactly as ``pq_adc_scan_arrow``. Per (cell, chunk) block the kernel keeps,
-    per probe, every pair whose score ties-or-beats the block's R-th
-    smallest — a SUPERSET of the block's (adc ASC, item ASC) top-R, and
-    each (probe, item) pair exists in exactly one block, so the union
+    mask to an int64-max sentinel. Each (cell, chunk) group is scored in
+    probe blocks bounded by ``_SCORE_CELLS``, one LUT gather per subspace
+    each. The selection is per probe row, so blocking changes no output
+    row: per (cell, chunk) group the kernel keeps, per probe, every pair
+    whose score ties-or-beats the group's R-th smallest — a SUPERSET of
+    the group's (adc ASC, item ASC) top-R, and each (probe, item) pair
+    exists in exactly one group, so the union
     provably contains the global per-probe top-R and the downstream
     ``row_number`` shortlist is EXACTLY that of an unpruned scan over the
     probed cells (pinned by the superset test).
@@ -1606,6 +1510,7 @@ def pq_adc_cell_scan_arrow(
     )
     sentinel = np.iinfo(np.int64).max
     r = int(per_probe_r)
+    budget = _SCORE_CELLS
 
     def score(chunk):
         spids, table, cmap = bc.value
@@ -1618,26 +1523,30 @@ def pq_adc_cell_scan_arrow(
         out_i: list = []
         out_q: list = []
         for grp in np.split(grp_order, bounds):
-            ppos = cmap.get(int(cellids[grp[0]]))
-            if ppos is None:
+            probing = cmap.get(int(cellids[grp[0]]))
+            if probing is None:
                 continue  # cell probed by nobody in this batch
             it = items[grp]
             cm = codes_mat[grp]  # (n_c, m)
-            lut_c = table[ppos]  # (B, m, k)
-            scores = np.zeros((len(ppos), len(grp)), dtype=np.int64)
-            for s in range(m):
-                scores += lut_c[:, s, :][:, cm[:, s]]
-            scores[spids[ppos][:, None] == it[None, :]] = sentinel
-            if len(grp) > r:
-                kth = np.partition(scores, r - 1, axis=1)[:, r - 1 : r]
-                mask = scores <= kth  # ties at the boundary stay in
-            else:
-                mask = np.ones_like(scores, dtype=bool)
-            mask &= scores != sentinel
-            pj, ij = np.nonzero(mask)
-            out_p.append(spids[ppos[pj]])
-            out_i.append(it[ij])
-            out_q.append(scores[pj, ij])
+            blk = max(1, budget // len(grp))
+            for b0 in range(0, len(probing), blk):
+                ppos = probing[b0 : b0 + blk]
+                lut_c = table[ppos]  # (B, m, k)
+                scores = np.zeros((len(ppos), len(grp)), dtype=np.int64)
+                for s in range(m):
+                    # (B, k) rows gathered at the cell's subspace-s codes
+                    scores += lut_c[:, s, :][:, cm[:, s]]
+                scores[spids[ppos][:, None] == it[None, :]] = sentinel
+                if len(grp) > r:
+                    kth = np.partition(scores, r - 1, axis=1)[:, r - 1 : r]
+                    mask = scores <= kth  # ties at the boundary stay in
+                else:
+                    mask = np.ones_like(scores, dtype=bool)
+                mask &= scores != sentinel
+                pj, ij = np.nonzero(mask)
+                out_p.append(spids[ppos[pj]])
+                out_i.append(it[ij])
+                out_q.append(scores[pj, ij])
         if not out_p:
             empty = np.array([], dtype=np.int64)
             return {"probe_id": empty, "item_id": empty, "adc_x10k": empty}
@@ -1682,10 +1591,12 @@ def pq_adc_topk(
     ``pq_encode`` table) to skip encoding entirely. Ranking is
     (adc_x10k ASC, item_id ASC); self-matches are excluded.
 
-    Each accumulated Arrow batch of code rows is scored against the full
-    probe LUT in one numpy gather (``pq_adc_scan_arrow``) with per-chunk
-    partial top-k — no explode, no broadcast hash probe per row, no
-    |probes| × |corpus|-key re-aggregation. Measured (scaling corpus,
+    The scan is ``pq_adc_cell_scan_arrow`` with every code row in cell
+    0 of a one-entry codebook, so every probe probes every row: each
+    accumulated Arrow batch of code rows is scored against the full
+    probe LUT in numpy gathers with per-chunk partial top-k — no
+    explode, no broadcast hash probe per row, no |probes| ×
+    |corpus|-key re-aggregation. Measured (scaling corpus,
     1024 probes × 16M candidates): a JVM-join formulation (codes
     exploded ×m, joined against broadcast per-probe tables, re-summed)
     stalls cores on DRAM probing a ~100×-L2 broadcast relation per
@@ -1695,9 +1606,13 @@ def pq_adc_topk(
     """
     if codes is None:
         codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    cand = pq_adc_scan_arrow(
-        codes, probes, codebooks,
-        per_probe_r=k, vec_col=vec_col, id_col=id_col,
+    one_cell = codes.select(
+        F.col("vec_id").alias("item_id"), F.lit(0).cast("long").alias("cell_id"), "codes"
+    )
+    dim = sum(len(book[0][1]) for book in codebooks)
+    cand = pq_adc_cell_scan_arrow(
+        one_cell, probes, [(0, [0.0] * dim)], codebooks,
+        nprobe=1, per_probe_r=k, vec_col=vec_col, id_col=id_col,
     )
     return _top_k_per_probe(cand, k, score="adc_x10k", ascending=True)
 

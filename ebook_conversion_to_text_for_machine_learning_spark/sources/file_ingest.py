@@ -36,10 +36,10 @@ from ebook_conversion_to_text_for_machine_learning_spark.compat import (
     PDFConversionError,
     TextConversionError,
 )
+from ebook_conversion_to_text_for_machine_learning_spark.core.formats import _EPUB_ELEMENT_KINDS
 
 InSpan = Tuple[str, str, str, int]  # (kind, text, media_ref, offset)
 
-_EPUB_ELEMENT_KINDS = frozenset({"p", "img", "h1", "h2", "h3", "h4", "h5", "h6"})
 _CONTAINER_NS = {"c": "urn:oasis:names:tc:opendocument:xmlns:container"}
 _OPF_NS = {"opf": "http://www.idpf.org/2007/opf"}
 _W_NS = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"

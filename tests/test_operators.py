@@ -946,17 +946,19 @@ def test_pq_adc_topk_is_exact_when_corpus_is_the_codebook(spark):
         ]
 
 
-def test_pq_adc_topk_matches_brute_force_under_ties(spark):
+def test_pq_adc_topk_matches_brute_force_under_ties(spark, monkeypatch):
     """The Arrow LUT-gather scan matches a Python ADC brute force row for
     row — including rank assignment under quantization ties (the
     per-chunk partial top-k keeps the (adc ASC, item ASC) total order,
-    so the union of chunk top-k sets is a superset of the global top-k)
-    — and the exact re-rank of its shortlist matches a Python re-rank."""
+    so the union of chunk top-k sets is a superset of the global top-k),
+    with the probes scored in one block or split one per block — and the
+    exact re-rank of its shortlist matches a Python re-rank."""
     import math
     import random
     from decimal import ROUND_HALF_UP, Decimal
     from functools import reduce
 
+    from ebook_conversion_to_text_for_machine_learning_spark.operators import similarity
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         pq_adc_rerank_topk,
         pq_adc_topk,
@@ -991,15 +993,19 @@ def test_pq_adc_topk_matches_brute_force_under_ties(spark):
         c = dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
         return float(Decimal(repr(c)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
 
-    # k=1 cuts through ties such as the one between a probe's two copies
-    for k in (1, 6):
-        want = sorted(
-            (pid, i, adc, rk)
-            for pid in range(4)
-            for rk, (adc, i) in enumerate(ranked(pid, k), start=1)
-        )
-        got = sorted(map(tuple, pq_adc_topk(df, probes, books, k=k).collect()))
-        assert got == want and len(got) == 4 * k, k
+    # k=1 cuts through ties such as the one between a probe's two copies.
+    # A 1-cell score budget scores the 4 probes of the one 120-row chunk
+    # in 4 blocks of one probe.
+    for budget in (similarity._SCORE_CELLS, 1):
+        monkeypatch.setattr(similarity, "_SCORE_CELLS", budget)
+        for k in (1, 6):
+            want = sorted(
+                (pid, i, adc, rk)
+                for pid in range(4)
+                for rk, (adc, i) in enumerate(ranked(pid, k), start=1)
+            )
+            got = sorted(map(tuple, pq_adc_topk(df, probes, books, k=k).collect()))
+            assert got == want and len(got) == 4 * k, (budget, k)
 
     want_rr = []
     for pid in range(4):
@@ -1020,7 +1026,7 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         ivf_centroids,
         pq_adc_cell_scan_arrow,
-        pq_adc_scan_arrow,
+        pq_adc_topk,
         pq_codebooks,
     )
 
@@ -1031,11 +1037,12 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"
     )
     with pytest.raises(TypeError, match="integral"):
-        pq_adc_scan_arrow(
-            df.select("vec_id").withColumn("codes", F.array(F.lit(0))),
+        pq_adc_topk(
+            df,
             str_probes,
             books,
-            per_probe_r=2,
+            k=2,
+            codes=df.select("vec_id").withColumn("codes", F.array(F.lit(0))),
         )
     with pytest.raises(TypeError, match="integral"):
         pq_adc_cell_scan_arrow(
@@ -1048,14 +1055,16 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
         )
 
 
-def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
+def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark, monkeypatch):
     """The inverted-list kernel (candidate pairing inside numpy, never
     as Spark rows) must emit — per probe — a SUPERSET of the global
     (adc ASC, item ASC) top-R pairs over that probe's cells, with
     integers identical to a brute force over the probed cells; the
-    downstream row_number shortlist is therefore unchanged by pruning."""
+    downstream row_number shortlist is therefore unchanged by pruning,
+    and so is the probe blocking a small score budget forces."""
     import collections
 
+    from ebook_conversion_to_text_for_machine_learning_spark.operators import similarity
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         ivf_assign_arrow,
         ivf_centroids,
@@ -1076,12 +1085,6 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
     cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
         cells.select(F.col("vec_id").alias("item_id"), "cell_id"), "item_id"
     )
-    got = {
-        (x.probe_id, x.item_id): x.adc_x10k
-        for x in pq_adc_cell_scan_arrow(
-            cwc, probes, cents, books, nprobe=2, per_probe_r=r
-        ).collect()
-    }
 
     # reference: Python ADC brute force over every item in the probed cells
     probe_vecs = {x.vec_id: [float(v) for v in x.embedding] for x in probes.collect()}
@@ -1094,18 +1097,36 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
         for p in probe_vecs
         if x.cell_id in probed[p] and x.item_id != p
     }
-
-    assert set(got) <= set(ref)  # never invents a pair
-    for pair, q in got.items():
-        assert q == ref[pair], pair  # identical integers
     by_probe = collections.defaultdict(list)
     for (p, i), q in ref.items():
         by_probe[p].append((q, i))
     assert by_probe.keys() == probe_vecs.keys()
-    for p, scored in by_probe.items():
-        top = {i for _, i in sorted(scored)[:r]}
-        kept = {i for (pp, i) in got if pp == p}
-        assert top <= kept, (p, top - kept)  # global top-R survives
+    # A 1-cell score budget scores one probe per block, so a cell probed
+    # by three or more probes splits into three or more blocks.
+    probes_per_cell = collections.Counter(c for cs in probed.values() for c in cs)
+    assert max(probes_per_cell.values()) >= 3
+
+    for budget in (similarity._SCORE_CELLS, 1):
+        monkeypatch.setattr(similarity, "_SCORE_CELLS", budget)
+        got = {
+            (x.probe_id, x.item_id): x.adc_x10k
+            for x in pq_adc_cell_scan_arrow(
+                cwc, probes, cents, books, nprobe=2, per_probe_r=r
+            ).collect()
+        }
+        assert set(got) <= set(ref)  # never invents a pair
+        for pair, q in got.items():
+            assert q == ref[pair], (budget, pair)  # identical integers
+        for p, scored in by_probe.items():
+            top = {i for _, i in sorted(scored)[:r]}
+            kept = {i for (pp, i) in got if pp == p}
+            assert top <= kept, (budget, p, top - kept)  # global top-R survives
+
+    # an empty probe batch scores nothing
+    no_probes = emb.where(F.col("vec_id") < 0)
+    assert not pq_adc_cell_scan_arrow(
+        cwc, no_probes, cents, books, nprobe=2, per_probe_r=r
+    ).collect()
 
 
 def test_pq_index_round_trip_identical_topk(spark, tmp_path):
@@ -1742,6 +1763,25 @@ def test_ann_index_round_trip_identical_topk(spark, tmp_path):
     live_ivf = ivf_ann_topk(emb, probes, k=3, target_cells=10)
     from_idx_ivf = ivf_ann_topk_indexed(idx, probes, k=3)
     assert key(live_ivf.collect()) == key(from_idx_ivf.collect())
+
+
+def test_ann_index_kmeans_codebook_round_trips(spark, tmp_path):
+    """A k-means codebook holds 6-decimal doubles. ``read_ann_index`` must
+    hand appends and indexed searches the codebook the cells were
+    assigned with, not a float32-rounded copy of it."""
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
+        ivf_kmeans_centroids,
+        read_ann_index,
+        write_ann_index,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cents = ivf_kmeans_centroids(emb, iters=2, target_cells=8)
+    path = str(tmp_path / "idx")
+    write_ann_index(
+        emb, len(cents[0][1]), path, n_bands=1, band_planes=4, centroids=cents
+    )
+    assert read_ann_index(spark, path).centroids == cents
 
 
 def test_prepare_training_data_filters_and_dedups(spark):
