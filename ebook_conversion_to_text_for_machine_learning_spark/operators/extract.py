@@ -283,10 +283,17 @@ def extract_spans(
     """Run the per-format extraction over a documents_spans DataFrame.
 
     Narrow by default; pass ``repartition`` to salt-shuffle skewed inputs
-    first. Column pruning happens in the select below, so the parquet scan
+    first. Column pruning happens in ``_map_extract``'s select, so the scan
     reads only the five contract columns regardless of extra input columns.
     """
+    return _map_extract(df, _extract_arrow_batches, repartition)
+
+
+def _map_extract(df: DataFrame, kernel, repartition: int | None) -> DataFrame:
+    """The operator's one ``mapInArrow``: the five contract columns, an
+    optional salted shuffle, then ``kernel`` — ``_extract_arrow_batches``
+    or a wrapper that yields its batches unchanged."""
     projected = df.select("doc_id", "fmt", "title", "author", "spans")
     if repartition:
         projected = salted_repartition(projected, repartition)
-    return projected.mapInArrow(_extract_arrow_batches, schema=EXTRACTED_SCHEMA)
+    return projected.mapInArrow(kernel, schema=EXTRACTED_SCHEMA)

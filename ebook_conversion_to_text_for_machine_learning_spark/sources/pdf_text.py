@@ -386,7 +386,13 @@ def _aes_cbc(key: bytes, iv: bytes, data: bytes, *, decrypt: bool) -> bytes:
     """AES-CBC without padding, 128- or 256-bit key: the reader's one AES
     provider. ``cryptography`` is imported here so unencrypted PDFs need
     nothing beyond the stdlib. A bad key size or ragged data raises
-    ``ValueError``, which ingest maps to ``PDFConversionError``."""
+    ``ValueError``, which ingest maps to ``PDFConversionError``. So does a
+    missing ``cryptography`` package: on an executor without it, an
+    AES-encrypted file is that file's conversion error."""
+    import importlib.util
+
+    if importlib.util.find_spec("cryptography") is None:
+        raise ValueError("AES-encrypted PDF needs the cryptography package")
     from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
     cipher = Cipher(algorithms.AES(key), modes.CBC(iv))

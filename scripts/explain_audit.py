@@ -38,6 +38,9 @@ def main() -> None:
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
         extract_spans,
     )
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _tallied_output,
+    )
     from ebook_conversion_to_text_for_machine_learning_spark.session import (
         build_session,
     )
@@ -59,6 +62,14 @@ def main() -> None:
         extract_spans(documents_as_txt_spans(spark, sf_dir)),
         "The scan feeds MapInArrow directly — no shuffle before the fold, "
         "no row-wise Python anywhere.",
+    )
+    add(
+        "Extraction job output write (the fold's one pass)",
+        _tallied_output(documents_as_txt_spans(spark, sf_dir), None)[0],
+        "What `run_extraction_job` appends to the output table on a first "
+        "run: the scan feeds the one MapInArrow, whose kernel also tallies "
+        "the metrics and partition lineage into an accumulator — no "
+        "checkpoint, no Exchange, no second job over the spans.",
     )
     add(
         "Filter pushdown + column pruning (embeddings probe)",

@@ -808,6 +808,33 @@ def test_password_protected_pdf_still_quarantines(tmp_path):
             pdf_file_to_spans(f)
 
 
+def test_aes_pdf_without_cryptography_is_a_conversion_error(tmp_path, monkeypatch):
+    """On an executor without ``cryptography`` an AES-encrypted file is
+    that file's ``PDFConversionError``, not a bare ``ModuleNotFoundError``;
+    unencrypted and RC4 files, which need only the stdlib, still read."""
+    import sys
+
+    from ebook_conversion_to_text_for_machine_learning_spark.compat import (
+        PDFConversionError,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
+        build_pdf,
+    )
+
+    pages = [["Chapter One", "First chapter paragraph text."]]
+    files = {}
+    for mode in (None, "rc4-128", "aes-128"):
+        files[mode] = tmp_path / f"{mode}.pdf"
+        files[mode].write_bytes(build_pdf(pages, encrypt=mode)[0])
+    expected = pdf_file_to_spans(files[None])
+
+    monkeypatch.setitem(sys.modules, "cryptography", None)
+    with pytest.raises(PDFConversionError, match="cryptography"):
+        pdf_file_to_spans(files["aes-128"])
+    assert pdf_file_to_spans(files[None]) == expected
+    assert pdf_file_to_spans(files["rc4-128"]) == expected
+
+
 def test_encrypted_pdf_quarantines_not_mojibake(tmp_path):
     """A file with /Encrypt must raise (→ quarantine) instead of
     extracting RC4/AES ciphertext as garbage text."""

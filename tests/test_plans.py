@@ -8,6 +8,7 @@ the difference between these plans and naive ones is the job.
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,6 +69,27 @@ def test_extraction_plan_is_arrow_not_rowwise_python(spark):
     plan = plan_of(extract_spans(documents_as_txt_spans(spark, SF_DIR)))
     assert "MapInArrow" in plan or "MapInPandas" in plan
     assert "BatchEvalPython" not in plan  # row-at-a-time Python UDF
+
+
+def test_extraction_job_output_write_is_one_pass(spark):
+    """The extraction job's output write runs the fold once: one
+    MapInArrow fed straight by the scan — no checkpointed-RDD scan, and
+    no Exchange unless ``repartition`` asks for the salted shuffle."""
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _tallied_output,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.sources.tables import (
+        documents_as_txt_spans,
+    )
+
+    todo = documents_as_txt_spans(spark, SF_DIR)
+    plan = plan_of(_tallied_output(todo, None)[0])
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1
+    assert "Exchange" not in plan
+    assert "ExistingRDD" not in plan
+    salted = plan_of(_tallied_output(todo, 8)[0])
+    assert len(re.findall(r"^\(\d+\) MapInArrow", salted, re.M)) == 1
+    assert "Arguments: hashpartitioning(xxhash64(doc_id" in salted
 
 
 def test_ivf_assignment_has_no_shuffle(spark):

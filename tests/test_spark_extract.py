@@ -1,5 +1,7 @@
 """End-to-end Spark tests: goldens through mapInArrow, pipeline, resume."""
 
+from pathlib import Path
+
 import pytest
 
 from tests import fixtures as fx
@@ -119,11 +121,23 @@ def test_pipeline_with_lineage_and_resume(spark, tmp_path):
     assert row.doc_count > 0 and row.cpu_us > 0
 
 
+def _parquet_schema(path) -> str:
+    """The Parquet schema of a table's first data file, nullability
+    included (a Spark read reports every column nullable)."""
+    import pyarrow.parquet as pq
+
+    part = sorted(Path(path).glob("part-*.parquet"))[0]
+    return pq.read_schema(part).to_string(show_schema_metadata=False)
+
+
 def test_metrics_summary_equals_metrics_table_and_groupby(spark, tmp_path):
-    """The returned summary is observed on the metrics write: it must be the
-    same set of rows as the metrics table and as a fresh ``groupBy`` over
-    the extracted frame, including an ``unknown_format`` group and a doc
-    whose output is empty."""
+    """The summary, the metrics table and the partition lineage come from
+    the tally the output write fills: the summary must be the same set of
+    rows as the metrics table and as a fresh ``groupBy`` over the
+    extracted frame, including an ``unknown_format`` group and a doc whose
+    output is empty, and the lineage rows must equal a ``groupBy`` on
+    ``spark_partition_id()``. Both tables keep their column names, order,
+    types and nullability. Each holds with and without ``repartition``."""
     from pyspark.sql import functions as F
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
@@ -138,42 +152,155 @@ def test_metrics_summary_equals_metrics_table_and_groupby(spark, tmp_path):
         dict(fx.TXT_001, doc_id="txt-empty", spans=[]),
     ]
     df = spans_df(spark, docs)
-    out, lineage, metrics = (str(tmp_path / n) for n in ("out", "lineage", "metrics"))
 
     def as_set(rows, run_id=True):
         keys = ["fmt", "status", "docs", "docs_empty", "spans_out", "media_spans"]
         return {tuple(r[k] for k in keys + (["run_id"] if run_id else [])) for r in rows}
 
-    summary = run_extraction_job(spark, df, out, lineage_path=lineage, metrics_path=metrics)
-    table = spark.read.parquet(metrics).collect()
-    assert as_set(summary["metrics"]) == as_set(table)
-    assert len(summary["metrics"]) == len(table)
-    assert {r["run_id"] for r in table} == {summary["run_id"]}
-    grouped = (
-        extract_spans(df)
-        .groupBy("fmt", "status")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.when(F.col("n_spans") == 0, 1).otherwise(0)).alias("docs_empty"),
-            F.sum("n_spans").alias("spans_out"),
-            F.sum("n_media").alias("media_spans"),
+    for repartition in (None, 8):
+        run_dir = tmp_path / str(repartition)
+        out, lineage, metrics = (str(run_dir / n) for n in ("out", "lineage", "metrics"))
+
+        summary = run_extraction_job(
+            spark, df, out, lineage_path=lineage, metrics_path=metrics, repartition=repartition
         )
-        .collect()
+        table = spark.read.parquet(metrics).collect()
+        assert as_set(summary["metrics"]) == as_set(table)
+        assert len(summary["metrics"]) == len(table)
+        assert {r["run_id"] for r in table} == {summary["run_id"]}
+        extracted = extract_spans(df, repartition=repartition)
+        grouped = (
+            extracted.groupBy("fmt", "status")
+            .agg(
+                F.count("*").alias("docs"),
+                F.sum(F.when(F.col("n_spans") == 0, 1).otherwise(0)).alias("docs_empty"),
+                F.sum("n_spans").alias("spans_out"),
+                F.sum("n_media").alias("media_spans"),
+            )
+            .collect()
+        )
+        assert as_set(summary["metrics"], run_id=False) == as_set(grouped, run_id=False)
+        by_status = {(m["fmt"], m["status"]): m for m in summary["metrics"]}
+        assert by_status[("mobi", "unknown_format")]["docs"] == 1
+        assert by_status[("txt", "ok")]["docs_empty"] >= 1
+
+        parts = spark.read.parquet(lineage + "_partitions").collect()
+        per_partition = (
+            extracted.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count("*").alias("doc_count"), F.sum("n_spans").alias("span_count"))
+            .collect()
+        )
+        assert sorted((r.partition_id, r.doc_count, r.span_count) for r in parts) == sorted(
+            tuple(r) for r in per_partition
+        )
+        assert all(r.cpu_us > 0 for r in parts)
+        assert {(r.status, r.run_id) for r in parts} == {("committed", summary["run_id"])}
+
+        # Each small table gets one file per run.
+        for table_dir in (metrics, lineage + "_partitions"):
+            assert len(list(Path(table_dir).glob("part-*.parquet"))) == 1
+        assert _parquet_schema(metrics) == (
+            "fmt: string not null\n"
+            "status: string not null\n"
+            "docs: int64 not null\n"
+            "docs_empty: int64\n"
+            "spans_out: int64\n"
+            "media_spans: int64\n"
+            "run_id: string not null"
+        )
+        assert _parquet_schema(lineage + "_partitions") == (
+            "partition_id: int32 not null\n"
+            "doc_count: int64 not null\n"
+            "span_count: int64\n"
+            "cpu_us: int64\n"
+            "status: string not null\n"
+            "run_id: string not null"
+        )
+
+        # A resumed no-op run tallies nothing and appends no rows.
+        assert run_extraction_job(
+            spark, df, out, lineage_path=lineage, metrics_path=metrics
+        )["metrics"] == []
+        assert spark.read.parquet(metrics).count() == len(table)
+        assert spark.read.parquet(lineage + "_partitions").count() == len(parts)
+
+        # Without a metrics sink the summary comes from the same tally.
+        no_sink = run_extraction_job(
+            spark, df, str(run_dir / "out_no_sink"), repartition=repartition
+        )
+        assert as_set(no_sink["metrics"], run_id=False) == as_set(summary["metrics"], run_id=False)
+
+
+def test_partition_tally_merge_replaces_a_partition_entry():
+    """The accumulator merge is exact and idempotent: a partition that
+    reports twice (a retried or speculative task, a recomputed stage)
+    counts once, and different partitions sum. No JVM."""
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _PartitionTally,
+        _tally_rows,
     )
-    assert as_set(summary["metrics"], run_id=False) == as_set(grouped, run_id=False)
-    by_status = {(m["fmt"], m["status"]): m for m in summary["metrics"]}
-    assert by_status[("mobi", "unknown_format")]["docs"] == 1
-    assert by_status[("txt", "ok")]["docs_empty"] >= 1
 
-    # A resumed no-op run observes an empty aggregate and appends nothing.
-    assert run_extraction_job(
-        spark, df, out, lineage_path=lineage, metrics_path=metrics
-    )["metrics"] == []
-    assert spark.read.parquet(metrics).count() == len(table)
+    p0 = {0: {("txt", "ok"): [3, 1, 10, 2, 50]}}
+    p1 = {1: {("txt", "ok"): [2, 0, 4, 1, 20], ("mobi", "unknown_format"): [1, 1, 0, 0, 5]}}
+    param = _PartitionTally()
+    once, twice = param.zero({}), param.zero({})
+    for update in (p0, p1):
+        once = param.addInPlace(once, update)
+    for update in (p0, p1, p0, p1, p0):
+        twice = param.addInPlace(twice, update)
+    assert once == twice
 
-    # Without a metrics sink the summary is collected, and is the same.
-    no_sink = run_extraction_job(spark, df, str(tmp_path / "out_no_sink"))
-    assert as_set(no_sink["metrics"], run_id=False) == as_set(summary["metrics"], run_id=False)
+    metrics, lineage = _tally_rows(twice, "r1")
+    assert metrics == [
+        dict(fmt="mobi", status="unknown_format", docs=1, docs_empty=1, spans_out=0,
+             media_spans=0, run_id="r1"),
+        dict(fmt="txt", status="ok", docs=5, docs_empty=1, spans_out=14, media_spans=3,
+             run_id="r1"),
+    ]
+    assert lineage == [
+        dict(partition_id=0, doc_count=3, span_count=10, cpu_us=50, status="committed",
+             run_id="r1"),
+        dict(partition_id=1, doc_count=3, span_count=4, cpu_us=25, status="committed",
+             run_id="r1"),
+    ]
+    assert _tally_rows(param.zero({}), "r2") == ([], [])
+
+
+def test_extraction_job_runs_three_jobs(spark, tmp_path):
+    """One pass: with both sinks a call runs exactly three Spark jobs (the
+    output append, which runs the fold, then the metrics and lineage
+    appends); with no sinks it runs one. The driver keeps no tally rows
+    after a call."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        _PartitionTally,
+        run_extraction_job,
+    )
+
+    sc = spark.sparkContext
+    df = spans_df(spark, fx.random_corpus(20, seed=8))
+
+    def jobs(group, **sinks):
+        sc.setJobGroup(group, group)
+        try:
+            run_extraction_job(spark, df, str(tmp_path / group / "out"), **sinks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(
+        "both_sinks",
+        lineage_path=str(tmp_path / "lineage"),
+        metrics_path=str(tmp_path / "metrics"),
+    ) == 3
+    assert jobs("no_sinks") == 1
+    tallies = [
+        a._value for a in _accumulatorRegistry.values()
+        if isinstance(a.accum_param, _PartitionTally)
+    ]
+    assert len(tallies) >= 2 and not any(tallies)
 
 
 def test_documents_adapter_smoke(spark):
