@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
+    fingerprint_col,
+    guarded_quality_x10k_col,
     tokens_col,
 )
 
@@ -44,6 +46,19 @@ def scrub_text_col(text: Column) -> Column:
     )
 
 
+def pii_count_cols(text: Column) -> list[Column]:
+    """``n_urls``, ``n_emails``, ``n_phones``: match counts of each
+    redaction pattern in ``text`` (bigint)."""
+    return [
+        F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("long").alias(name)
+        for name, pattern in (
+            ("n_urls", URL_PATTERN),
+            ("n_emails", EMAIL_PATTERN),
+            ("n_phones", PHONE_PATTERN),
+        )
+    ]
+
+
 def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Redact URLs, emails, and phone-number-shaped runs; count each kind.
 
@@ -53,13 +68,8 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     phone order.
     """
     text = F.col(text_col)
-    scrubbed = scrub_text_col(text)
     return df.select(
-        "doc_id",
-        scrubbed.alias("scrubbed_text"),
-        F.size(F.regexp_extract_all(text, F.lit(URL_PATTERN), 0)).cast("long").alias("n_urls"),
-        F.size(F.regexp_extract_all(text, F.lit(EMAIL_PATTERN), 0)).cast("long").alias("n_emails"),
-        F.size(F.regexp_extract_all(text, F.lit(PHONE_PATTERN), 0)).cast("long").alias("n_phones"),
+        "doc_id", scrub_text_col(text).alias("scrubbed_text"), *pii_count_cols(text)
     )
 
 
@@ -494,21 +504,12 @@ def source_mix_stats(
     Returns (source, n_docs, n_tokens, mean_quality_x10k, n_unique,
     dup_rate_x10k, token_share_x10k).
     """
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
-        quality_score_x10k_col,
-    )
-
     text = F.col(text_col)
-    toks = tokens_col(text)
-    q10k = (
-        F.when(F.size(toks) > 0, quality_score_x10k_col(text)).otherwise(F.lit(0.0))
-    ).cast("long")
-    fp = F.md5(F.regexp_replace(F.trim(F.lower(text)), " +", " "))
     per_doc = df.select(
         F.col(source_col).alias("source"),
-        F.size(toks).cast("long").alias("_n_tokens"),
-        q10k.alias("_q10k"),
-        fp.alias("_fp"),
+        F.size(tokens_col(text)).cast("long").alias("_n_tokens"),
+        guarded_quality_x10k_col(text).cast("long").alias("_q10k"),
+        fingerprint_col(text).alias("_fp"),
     )
     agg = per_doc.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),

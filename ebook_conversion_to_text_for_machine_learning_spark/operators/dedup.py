@@ -413,19 +413,11 @@ def repeated_passages(
     documents: (passage_hash, n_docs, n_occurrences, first_doc).
     Occurrences within one document all count toward ``n_occurrences``.
     """
-    toks = tokens_col(F.col(text_col))
-    wins = F.when(
-        F.size(toks) >= width,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (width - 1)),
-            lambda i: F.array_join(F.slice(toks, i, width), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     # The window array is built INSIDE the explode argument — never
     # projected next to an aggregate of itself (the size()-beside-explode
     # Catalyst re-inlining trap documented in ``decontaminate``).
     exploded = df.select(
-        "doc_id", F.explode(wins).alias("_w")
+        "doc_id", F.explode(ngrams_col(F.col(text_col), width)).alias("_w")
     ).select("doc_id", F.md5("_w").alias("passage_hash"))
     return (
         exploded.groupBy("passage_hash")

@@ -28,10 +28,9 @@ may be replayed (at-least-once), and the replay guards — the index's
 ``exclude_batch_id=N`` and the sidecar's ``batch_id != N`` read — only
 work while batch N's rows still live in their own partition: folding an
 uncommitted batch into the base would make a replay flag its docs as
-dups of their own half-appended copies and drop them.
-``index_batch_offset`` maps micro-batch ids to index batch ids
-(``stream_near_dedup`` appends micro-batch N as index batch N+1; the
-sidecar writes micro-batch N as batch N).
+dups of their own half-appended copies and drop them. Only the MinHash
+index is appended by a stream (``stream_near_dedup``), so only
+``compact_minhash_index`` takes a checkpoint.
 
 Crash protocol (single maintenance writer): the merged base is STAGED
 to a ``_``-prefixed dir first — invisible to parquet readers; a plain
@@ -359,12 +358,9 @@ def _compact_index(
     spark: SparkSession,
     path: str,
     specs: tuple[TableSpec, ...],
-    *,
-    checkpoint_dir: str | None,
-    index_batch_offset: int,
+    committed_max: int | None = None,
 ) -> int:
     base = path.rstrip("/")
-    committed_max = _commit_horizon(spark, checkpoint_dir, index_batch_offset)
     folded = 0
     for spec in specs:
         folded = max(
@@ -382,11 +378,7 @@ def _compact_index(
 
 
 def compact_minhash_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    checkpoint_dir: str | None = None,
-    index_batch_offset: int = 1,
+    spark: SparkSession, path: str, *, checkpoint_dir: str | None = None
 ) -> int:
     """Fold a ``write_minhash_index`` index's accumulated batch
     partitions into the ``batch_id=-1`` base. Probe decisions
@@ -394,48 +386,24 @@ def compact_minhash_index(
     is unchanged, dedup keys make the merge idempotent, and probe-side
     partition pruning on ``pfx`` is untouched (the sub-partitioning
     survives inside the compacted partition). Returns the number of
-    batch partitions folded (max across the three tables)."""
-    return _compact_index(
-        spark,
-        path,
-        MINHASH_TABLES,
-        checkpoint_dir=checkpoint_dir,
-        index_batch_offset=index_batch_offset,
-    )
+    batch partitions folded (max across the three tables).
+
+    ``checkpoint_dir`` is the checkpoint of the ``stream_near_dedup``
+    stream that appends to the index. That stream appends micro-batch N
+    as index batch N+1 (index batch 0 is the initial build), so index
+    batches up to the last committed micro-batch + 1 fold."""
+    committed_max = _commit_horizon(spark, checkpoint_dir, 1)
+    return _compact_index(spark, path, MINHASH_TABLES, committed_max)
 
 
-def compact_ann_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    checkpoint_dir: str | None = None,
-    index_batch_offset: int = 1,
-) -> int:
+def compact_ann_index(spark: SparkSession, path: str) -> int:
     """Fold a ``write_ann_index`` index's batch partitions into the
     base. ``codebook``/``meta`` are frozen at build time and untouched —
     compaction never re-derives centroids (cell ids would shift)."""
-    return _compact_index(
-        spark,
-        path,
-        (ANN_BANDS, ANN_CELLS),
-        checkpoint_dir=checkpoint_dir,
-        index_batch_offset=index_batch_offset,
-    )
+    return _compact_index(spark, path, (ANN_BANDS, ANN_CELLS))
 
 
-def compact_pq_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    checkpoint_dir: str | None = None,
-    index_batch_offset: int = 1,
-) -> int:
+def compact_pq_index(spark: SparkSession, path: str) -> int:
     """Fold a ``write_pq_index`` code table's batch partitions into the
     base. ``codebooks/`` is frozen and untouched."""
-    return _compact_index(
-        spark,
-        path,
-        (PQ_CODES,),
-        checkpoint_dir=checkpoint_dir,
-        index_batch_offset=index_batch_offset,
-    )
+    return _compact_index(spark, path, (PQ_CODES,))

@@ -38,24 +38,37 @@ def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _x10k(col: Column) -> Column:
+    """``floor(x·10⁴ + 0.5)``: ``x`` floor-rounded to 4 decimals, in units
+    of 1e-4. floor instead of round(): identical double ops in every
+    engine, so the SQL oracle reproduces it bit-for-bit (round()
+    implementations differ at representation boundaries)."""
+    return F.floor(col * F.lit(10000.0) + F.lit(0.5))
+
+
+def _quality_ratios(toks: Column) -> tuple[Column, Column, Column]:
+    """(n_tokens, distinct_ratio, stop_ratio) as doubles over ``toks``."""
+    n = F.size(toks).cast("double")
+    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
+    stop_ratio = (
+        F.size(F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS))).cast("double") / n
+    )
+    return n, distinct_ratio, stop_ratio
+
+
 def quality_score_x10k_col(text: Column) -> Column:
     """The quality score scaled to an exact integer (units of 1e-4) —
     ``floor(score·10⁴ + 0.5)`` BEFORE any division, so aggregations can
     sum it losslessly. (Dividing by 10⁴ and re-multiplying round-trips
     through an inexact double whose double→int cast then disagrees
     between engines: Spark truncates, DuckDB rounds.)"""
-    toks = tokens_col(text)
-    n = F.size(toks).cast("double")
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    stop_ratio = (
-        F.size(F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS))).cast("double") / n
-    )
+    n, distinct_ratio, stop_ratio = _quality_ratios(tokens_col(text))
     score = (
         F.lit(0.4) * F.least(F.lit(1.0), n / F.lit(50.0))
         + F.lit(0.3) * distinct_ratio
         + F.lit(0.3) * stop_ratio
     )
-    return F.floor(score * F.lit(10000.0) + F.lit(0.5))
+    return _x10k(score)
 
 
 def quality_score_col(text: Column) -> Column:
@@ -65,29 +78,25 @@ def quality_score_col(text: Column) -> Column:
     return quality_score_x10k_col(text) / F.lit(10000.0)
 
 
+def guarded_quality_x10k_col(text: Column) -> Column:
+    """``quality_score_x10k_col``, or 0 for a text with no tokens: ANSI
+    mode makes the unguarded ratios throw on zero tokens."""
+    return F.when(
+        F.size(tokens_col(text)) > 0, quality_score_x10k_col(text)
+    ).otherwise(F.lit(0.0))
+
+
 def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic quality score: length, lexical diversity, stopword ratio.
 
     score = 0.4*min(1, n_tokens/50) + 0.3*(distinct/total) + 0.3*stopword_ratio,
     rounded to 4 decimals (double arithmetic, portable to the SQL oracle).
     """
-    toks = tokens_col(F.col(text_col))
-    n = F.size(toks).cast("double")
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    stop_ratio = (
-        F.size(F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS))).cast("double") / n
-    )
-
-    def _round4(col):
-        # floor(x*1e4 + 0.5)/1e4 instead of round(): identical double ops in
-        # every engine, so the SQL oracle reproduces it bit-for-bit (round()
-        # implementations differ at representation boundaries).
-        return F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-
+    _, distinct_ratio, stop_ratio = _quality_ratios(tokens_col(F.col(text_col)))
     return df.select(
         "doc_id",
-        _round4(distinct_ratio).alias("distinct_ratio"),
-        _round4(stop_ratio).alias("stopword_ratio"),
+        (_x10k(distinct_ratio) / F.lit(10000.0)).alias("distinct_ratio"),
+        (_x10k(stop_ratio) / F.lit(10000.0)).alias("stopword_ratio"),
         quality_score_col(F.col(text_col)).alias("quality_score"),
     )
 
@@ -101,19 +110,23 @@ LANG_MARKERS = {
 }
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Marker-word language heuristic.
+def language_score_cols(text: Column) -> dict[str, Column]:
+    """``score_<lang>`` → marker-token hits (int) for each language.
 
-    Picks the language with the most marker-token hits; ties and zero hits
-    resolve to 'und' (deterministic; the real decision logic matters less
-    than exact Spark/SQL agreement for the correctness gate).
-    """
-    toks = tokens_col(F.lower(F.col(text_col)))
-    scores = [
-        F.size(F.filter(toks, lambda t: t.isin(*markers))).alias(f"score_{lang}")
+    The scores are interpreted higher-order functions with no
+    common-subexpression elimination: project each ONCE, then derive
+    ``predicted_lang_col`` from the projected columns in a second select
+    (inlining them would re-tokenize the text ~12x per row)."""
+    toks = tokens_col(F.lower(text))
+    return {
+        f"score_{lang}": F.size(F.filter(toks, lambda t: t.isin(*markers)))
         for lang, markers in LANG_MARKERS.items()
-    ]
-    scored = df.select("doc_id", F.col("lang").alias("actual_lang"), *scores)
+    }
+
+
+def predicted_lang_col() -> Column:
+    """The language with the most marker hits, over already-projected
+    ``score_<lang>`` columns; ties and zero hits resolve to 'und'."""
     best = F.greatest(*[F.col(f"score_{lang}") for lang in LANG_MARKERS])
     predicted = F.lit("und")
     # Deterministic priority: first language (in fixed order) achieving max.
@@ -121,18 +134,31 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         predicted = F.when(
             (F.col(f"score_{lang}") == best) & (best > 0), F.lit(lang)
         ).otherwise(predicted)
-    return scored.select(
-        "doc_id",
-        "actual_lang",
-        predicted.alias("predicted_lang"),
-        *[F.col(f"score_{lang}") for lang in LANG_MARKERS],
-    )
+    return predicted
+
+
+def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Marker-word language heuristic.
+
+    Picks the language with the most marker-token hits; ties and zero hits
+    resolve to 'und' (deterministic; the real decision logic matters less
+    than exact Spark/SQL agreement for the correctness gate).
+    """
+    scores = language_score_cols(F.col(text_col))
+    named = [score.alias(name) for name, score in scores.items()]
+    scored = df.select("doc_id", F.col("lang").alias("actual_lang"), *named)
+    predicted = predicted_lang_col().alias("predicted_lang")
+    return scored.select("doc_id", "actual_lang", predicted, *scores.keys())
+
+
+def fingerprint_col(text: Column) -> Column:
+    """md5 over the whitespace-normalized lowercase text."""
+    return F.md5(F.regexp_replace(F.trim(F.lower(text)), " +", " "))
 
 
 def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Document fingerprint: md5 over the whitespace-normalized lowercase text."""
-    normalized = F.regexp_replace(F.trim(F.lower(F.col(text_col))), " +", " ")
-    return df.select("doc_id", F.md5(normalized).alias("fingerprint"))
+    return df.select("doc_id", fingerprint_col(F.col(text_col)).alias("fingerprint"))
 
 
 def tfidf_top_terms(
@@ -273,13 +299,11 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
             ).cast("long").alias(f"dup_{tag}gram_cnt"),
         )
 
-    def _round4(col: Column) -> Column:
-        return F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-
     def _frac(num: str, den: str) -> Column:
         return F.when(
             F.col(den) > 0,
-            _round4(F.col(num).cast("double") / F.col(den).cast("double")),
+            _x10k(F.col(num).cast("double") / F.col(den).cast("double"))
+            / F.lit(10000.0),
         ).otherwise(F.lit(0.0))
 
     base = df.select("doc_id")
@@ -363,10 +387,6 @@ def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     partial-aggregation summation order and break oracle parity.
     """
     text = F.col(text_col)
-    toks = tokens_col(text)
-    q10k = (
-        F.when(F.size(toks) > 0, quality_score_x10k_col(text)).otherwise(F.lit(0.0))
-    ).cast("long")
     # The repetition flag joins in from the explode+aggregate path: the
     # per-row twin is ~30× the CPU (see document_features), and this
     # whole operator is an aggregate anyway.
@@ -374,8 +394,8 @@ def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     per_doc = df.select(
         "doc_id",
         "lang",
-        F.size(toks).cast("long").alias("_n_tokens"),
-        q10k.alias("_q10k"),
+        F.size(tokens_col(text)).cast("long").alias("_n_tokens"),
+        guarded_quality_x10k_col(text).cast("long").alias("_q10k"),
     ).join(flags, "doc_id")
     return per_doc.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),

@@ -804,6 +804,11 @@ class _PdfFile:
             value = self._parse_scalar(value.num)
         return value
 
+    def resolve_body(self, value):
+        """``resolve``, with a stream object read as its dict alone."""
+        value = self.resolve(value)
+        return value[0] if isinstance(value, tuple) else value
+
     def _parse_scalar(self, num: int):
         # Offsets come from the stream-skipping scan — a raw finditer here
         # could match fake "N G obj" bytes inside an earlier stream body
@@ -828,9 +833,7 @@ class _PdfFile:
         for fi, f in enumerate(filters):
             if f is None:
                 continue
-            p = self.resolve(parms_list[fi]) if fi < len(parms_list) else None
-            if isinstance(p, tuple):
-                p = p[0]
+            p = self.resolve_body(parms_list[fi]) if fi < len(parms_list) else None
             if not isinstance(p, dict):
                 p = {}
             name = str(f)
@@ -1156,22 +1159,16 @@ def _cid_ordering(pdf: "_PdfFile", font: dict) -> str:
     try:
         desc = font.get("DescendantFonts")
         if isinstance(desc, _Ref):
-            desc = pdf.resolve(desc)
-            if isinstance(desc, tuple):
-                desc = desc[0]
+            desc = pdf.resolve_body(desc)
         if isinstance(desc, list) and desc:
             desc = desc[0]
         if isinstance(desc, _Ref):
-            desc = pdf.resolve(desc)
-            if isinstance(desc, tuple):
-                desc = desc[0]
+            desc = pdf.resolve_body(desc)
         if not isinstance(desc, dict):
             return ""
         info = desc.get("CIDSystemInfo")
         if isinstance(info, _Ref):
-            info = pdf.resolve(info)
-            if isinstance(info, tuple):
-                info = info[0]
+            info = pdf.resolve_body(info)
         if isinstance(info, dict):
             ordering = info.get("Ordering")
             if isinstance(ordering, bytes):
@@ -1199,9 +1196,7 @@ def _font_decoder(pdf: "_PdfFile", font: dict):
             return dec
     enc = font.get("Encoding")
     if isinstance(enc, _Ref):
-        enc = pdf.resolve(enc)
-        if isinstance(enc, tuple):
-            enc = enc[0]
+        enc = pdf.resolve_body(enc)
     if isinstance(enc, _Name) and str(enc) in ("Identity-H", "Identity-V"):
         return _identity_cid_decoder(
             _cid_ordering(pdf, font).upper() in ("UCS", "UCS2")
@@ -1414,29 +1409,21 @@ def pdf_bytes_to_rows(data: bytes) -> List[Tuple[str, str, str]]:
 
         image_xobjects: Dict[str, int] = {}
         fonts: Dict[str, object] = {}
-        resources = pdf.resolve(body.get("Resources"))
-        if isinstance(resources, tuple):
-            resources = resources[0]
+        resources = pdf.resolve_body(body.get("Resources"))
         if isinstance(resources, dict):
-            xobjects = pdf.resolve(resources.get("XObject"))
-            if isinstance(xobjects, tuple):
-                xobjects = xobjects[0]
+            xobjects = pdf.resolve_body(resources.get("XObject"))
             if isinstance(xobjects, dict):
                 for name, ref in xobjects.items():
                     if isinstance(ref, _Ref) and ref.num in pdf.objects:
                         xbody, _xs = pdf.objects[ref.num]
                         if str(xbody.get("Subtype")) == "Image":
                             image_xobjects[name] = ref.num
-            font_res = pdf.resolve(resources.get("Font"))
-            if isinstance(font_res, tuple):
-                font_res = font_res[0]
+            font_res = pdf.resolve_body(resources.get("Font"))
             if isinstance(font_res, dict):
                 for name, ref in font_res.items():
                     if isinstance(ref, _Ref):
                         if ref.num not in pdf._font_decoders:
-                            fbody = pdf.resolve(ref)
-                            if isinstance(fbody, tuple):
-                                fbody = fbody[0]
+                            fbody = pdf.resolve_body(ref)
                             try:
                                 pdf._font_decoders[ref.num] = (
                                     _font_decoder(pdf, fbody)

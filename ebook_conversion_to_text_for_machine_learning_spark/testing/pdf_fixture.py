@@ -240,108 +240,20 @@ def _fx_rc4(key: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-def _fx_gf_mul(a: int, b: int) -> int:
-    out = 0
-    for _ in range(8):
-        if b & 1:
-            out ^= a
-        b >>= 1
-        a <<= 1
-        if a & 0x100:
-            a ^= 0x11B
-    return out
+def _fx_aes_cbc(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """AES-CBC encryption of whole blocks (128- or 256-bit key), run
+    through ``cryptography`` rather than the reader's helper."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
 
 
-def _fx_sbox() -> bytes:
-    exp = [0] * 510
-    log = [0] * 256
-    x = 1
-    for i in range(255):
-        exp[i] = x
-        log[x] = i
-        x = _fx_gf_mul(x, 3)
-    for i in range(255, 510):
-        exp[i] = exp[i - 255]
-    box = [0] * 256
-    for a in range(256):
-        v = 0 if a == 0 else exp[255 - log[a]]
-        b = 0
-        for i in range(8):
-            bit = (
-                (v >> i)
-                ^ (v >> ((i + 4) % 8))
-                ^ (v >> ((i + 5) % 8))
-                ^ (v >> ((i + 6) % 8))
-                ^ (v >> ((i + 7) % 8))
-                ^ (0x63 >> i)
-            ) & 1
-            b |= bit << i
-        box[a] = b
-    return bytes(box)
-
-
-_FX_SBOX = _fx_sbox()
-
-
-def _fx_aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
-    """FIPS-197 forward Cipher for 128- AND 256-bit keys — the fixture's
-    own implementation (the reader carries the InvCipher; both are
-    pinned against the official C.1/C.3 known-answer vectors, so they
-    cross-check rather than cancel)."""
-    nk = len(key) // 4
-    nr = 10 if nk == 4 else 14
-    words = [key[i : i + 4] for i in range(0, len(key), 4)]
-    rcon = 1
-    for i in range(nk, 4 * (nr + 1)):
-        t = words[i - 1]
-        if i % nk == 0:
-            t = bytes(
-                (
-                    _FX_SBOX[t[1]] ^ rcon,
-                    _FX_SBOX[t[2]],
-                    _FX_SBOX[t[3]],
-                    _FX_SBOX[t[0]],
-                )
-            )
-            rcon = _fx_gf_mul(rcon, 2)
-        elif nk > 6 and i % nk == 4:
-            t = bytes(_FX_SBOX[b] for b in t)
-        words.append(bytes(a ^ b for a, b in zip(words[i - nk], t)))
-    rk = [b"".join(words[4 * r : 4 * r + 4]) for r in range(nr + 1)]
-
-    def sub_shift(st: bytes) -> bytearray:
-        out = bytearray(16)
-        for c in range(4):
-            for r in range(4):
-                # ShiftRows: row r rotates LEFT by r columns.
-                out[c * 4 + r] = _FX_SBOX[st[((c + r) % 4) * 4 + r]]
-        return out
-
-    s = bytes(a ^ b for a, b in zip(block, rk[0]))
-    for rnd in range(1, nr):
-        s = sub_shift(s)
-        out = bytearray(16)
-        for c in range(4):
-            col = s[c * 4 : c * 4 + 4]
-            out[c * 4 + 0] = _fx_gf_mul(col[0], 2) ^ _fx_gf_mul(col[1], 3) ^ col[2] ^ col[3]
-            out[c * 4 + 1] = col[0] ^ _fx_gf_mul(col[1], 2) ^ _fx_gf_mul(col[2], 3) ^ col[3]
-            out[c * 4 + 2] = col[0] ^ col[1] ^ _fx_gf_mul(col[2], 2) ^ _fx_gf_mul(col[3], 3)
-            out[c * 4 + 3] = _fx_gf_mul(col[0], 3) ^ col[1] ^ col[2] ^ _fx_gf_mul(col[3], 2)
-        s = bytes(a ^ b for a, b in zip(out, rk[rnd]))
-    s = sub_shift(s)
-    return bytes(a ^ b for a, b in zip(s, rk[nr]))
-
-
-def _fx_aes128_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+def _fx_aes_stream(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """AESV2/AESV3 stream layout, built here and not by the reader: the
+    IV prefix, then the CBC body over PKCS#7-padded data."""
     pad = 16 - len(data) % 16
-    data = data + bytes([pad]) * pad
-    out = bytearray(iv)
-    prev = iv
-    for i in range(0, len(data), 16):
-        block = bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        prev = _fx_aes128_encrypt_block(key, block)
-        out += prev
-    return bytes(out)
+    return iv + _fx_aes_cbc(key, iv, data + bytes([pad]) * pad)
 
 
 def _fx_crypt_setup(mode: str):
@@ -405,7 +317,7 @@ def _fx_crypt_setup(mode: str):
         ).digest()[: min(length + 5, 16)]
         if aes:
             iv = hashlib.md5(b"fixture-iv-%d" % num).digest()
-            return _fx_aes128_cbc_encrypt(ok, iv, data)
+            return _fx_aes_stream(ok, iv, data)
         return _fx_rc4(ok, data)
 
     if aes:
@@ -424,38 +336,20 @@ def _fx_crypt_setup(mode: str):
 
 
 def _fx_hash_2b(pwd: bytes, salt: bytes, udata: bytes = b"") -> bytes:
-    """Fixture twin of the ISO 32000-2 algorithm 2.B hardened hash. Its
-    ≥64 rounds of AES-128-CBC over ≥64 blocks run through
-    ``cryptography``: a cipher independent of the reader's, hundreds of
-    times faster than the fixture's byte-wise one, and equal to it on a
-    64-block input (``test_fixture_cbc_matches_cryptography``)."""
+    """Fixture twin of the ISO 32000-2 algorithm 2.B hardened hash:
+    ≥64 rounds of AES-128-CBC over ≥64 blocks."""
     import hashlib
-
-    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
     k = hashlib.sha256(pwd + salt + udata).digest()
     rnd = 0
     while True:
-        k1 = (pwd + k + udata) * 64
-        enc = Cipher(algorithms.AES(k[:16]), modes.CBC(k[16:32])).encryptor()
-        e = enc.update(k1) + enc.finalize()
+        e = _fx_aes_cbc(k[:16], k[16:32], (pwd + k + udata) * 64)
         k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[sum(e[:16]) % 3](
             e
         ).digest()
         rnd += 1
         if rnd >= 64 and e[-1] <= rnd - 32:
             return k[:32]
-
-
-def _fx_aes128_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        prev = _fx_aes128_encrypt_block(
-            key, bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        )
-        out += prev
-    return bytes(out)
 
 
 def _fx_r6_material(locked: bool):
@@ -468,13 +362,9 @@ def _fx_r6_material(locked: bool):
     vsalt, ksalt = b"VSALT001", b"KSALT001"
     ovsalt, oksalt = b"OVSALT01", b"OKSALT01"
     u = _fx_hash_2b(user_pwd, vsalt) + vsalt + ksalt
-    ue = _fx_aes128_cbc_encrypt_nopad(
-        _fx_hash_2b(user_pwd, ksalt), bytes(16), file_key
-    )
+    ue = _fx_aes_cbc(_fx_hash_2b(user_pwd, ksalt), bytes(16), file_key)
     o = _fx_hash_2b(owner_pwd, ovsalt, u) + ovsalt + oksalt
-    oe = _fx_aes128_cbc_encrypt_nopad(
-        _fx_hash_2b(owner_pwd, oksalt, u), bytes(16), file_key
-    )
+    oe = _fx_aes_cbc(_fx_hash_2b(owner_pwd, oksalt, u), bytes(16), file_key)
     return file_key, u, ue, o, oe
 
 
@@ -498,11 +388,11 @@ def _fx_crypt_setup_r6(*, locked: bool):
     )
     # Single 16-byte block: CBC with a zero IV == the ECB block the spec
     # specifies for /Perms.
-    perms = _fx_aes128_cbc_encrypt_nopad(file_key, bytes(16), perms_rec)
+    perms = _fx_aes_cbc(file_key, bytes(16), perms_rec)
 
     def encrypt_stream(num: int, data: bytes) -> bytes:
         iv = hashlib.md5(b"fixture-iv-%d" % num).digest()
-        return _fx_aes128_cbc_encrypt(file_key, iv, data)
+        return _fx_aes_stream(file_key, iv, data)
 
     enc_body = (
         f"<< /Filter /Standard /V 5 /R 6 /Length 256 "

@@ -148,6 +148,18 @@ def main() -> None:
         "map-side sets) groups them corpus-wide — no joins, no windows.",
     )
     add(
+        "Document features (one projection plus a narrow flag join)",
+        queries["document_features"](spark, sf_dir),
+        "Every per-row signal (token counts, guarded quality, marker "
+        "scores, PII counts, fingerprint) is one codegen'd Project over "
+        "the scan, each built by the builder its own operator projects; "
+        "predicted_lang is a second Project over the projected scores. "
+        "The Gopher repetition flag joins in as narrow (doc_id, flag) "
+        "rows from repetition_signals' gram aggregates: the four "
+        "hashpartitioning Exchanges are those aggregates, and at this "
+        "scale the flag rows are broadcast into the join. No Python.",
+    )
+    add(
         "Quality filter funnel (one scan, one single-row exchange)",
         queries["quality_filter_funnel"](spark, sf_dir),
         "Cumulative-survival booleans evaluate per row in a partial "

@@ -614,14 +614,12 @@ def test_encrypted_pdf_round_trips(tmp_path, mode):
     (owner-restricted — the common real-shelf case) must extract the
     SAME spans as the unencrypted serialization of the same document,
     across RC4 40/128 (V1-2/R2-3), AESV2 (V4/R4) and AESV3 (V5/R6). The
-    fixture's crypto (key derivation, /O, /U, per-object keys, forward
-    AES) is an independent implementation of the spec, so agreement here
-    checks the reader's derivation, not a shared helper. Each side's AES
-    is pinned on its own (``test_aes128_fips197_known_answer``): the
-    reader's ``cryptography`` CBC helper meets the FIPS-197 C.1 and C.3
-    vectors and the fixture's byte-wise cipher the C.1 vector; the
-    fixture's CBC also equals ``cryptography``'s
-    (``test_fixture_cbc_matches_cryptography``)."""
+    fixture's crypto (key derivation, /O, /U, per-object keys, stream
+    layout and padding) is an independent implementation of the spec, so
+    agreement here checks the reader's derivation, not a shared helper.
+    Both sides run the AES block cipher through ``cryptography``, whose
+    CBC the reader's helper pins to the FIPS-197 C.1 and C.3 vectors
+    (``test_aes128_fips197_known_answer``)."""
     from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
         build_pdf,
     )
@@ -665,22 +663,18 @@ def test_encrypted_objstm_pdf_round_trips(tmp_path, mode):
 
 
 def test_aes128_fips197_known_answer():
-    """The fixture's forward Cipher must match the official FIPS-197
-    Appendix C.1 (AES-128) vector, and the reader's AES-CBC helper C.1
-    and C.3 (AES-256) — the absolute pin that keeps the independent pair from
-    agreeing on a shared misunderstanding. One CBC block under a zero IV
-    is the bare block cipher."""
+    """The reader's AES-CBC helper must match the official FIPS-197
+    Appendix C.1 (AES-128) and C.3 (AES-256) vectors — the absolute pin
+    that keeps the reader and the fixture from agreeing on a shared
+    misunderstanding. One CBC block under a zero IV is the bare block
+    cipher."""
     from ebook_conversion_to_text_for_machine_learning_spark.sources.pdf_text import (
         _aes_cbc,
-    )
-    from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
-        _fx_aes128_encrypt_block,
     )
 
     key = bytes(range(16))
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     ct = bytes.fromhex("69c4e0d86a7b0430d8cdb78070b4c55a")
-    assert _fx_aes128_encrypt_block(key, pt) == ct
     iv = bytes(16)
     assert _aes_cbc(key, iv, ct, decrypt=True) == pt
     assert _aes_cbc(key, iv, pt, decrypt=False) == ct
@@ -768,26 +762,6 @@ def test_one_pdf_path_no_import_selected_fork():
                 if caught & {"ImportError", "ModuleNotFoundError"}:
                     offenders.append((str(p.relative_to(pkg)), n.lineno, "except"))
     assert offenders == []
-
-
-def test_fixture_cbc_matches_cryptography():
-    """The fixture's own AES-128-CBC (stream encryption, /UE, /OE,
-    /Perms) and the ``cryptography`` CBC its 2.B hash loop runs agree
-    on a 64-block input — the loop's shape."""
-    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
-
-    from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
-        _fx_aes128_cbc_encrypt,
-        _fx_aes128_cbc_encrypt_nopad,
-    )
-
-    key, iv = bytes(range(16)), bytes(range(16, 32))
-    data = bytes(i * 7 % 256 for i in range(64 * 16))
-    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
-    ct = enc.update(data) + enc.finalize()
-    assert _fx_aes128_cbc_encrypt_nopad(key, iv, data) == ct
-    # The padded stream cipher: IV || the same blocks || one pad block.
-    assert _fx_aes128_cbc_encrypt(key, iv, data)[: 16 + len(ct)] == iv + ct
 
 
 def test_password_protected_pdf_still_quarantines(tmp_path):

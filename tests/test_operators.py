@@ -1316,6 +1316,68 @@ def test_source_mix_stats_exact_integers(spark):
     assert 0 < a.mean_quality_x10k <= 10000
 
 
+def test_empty_and_blank_docs_score_zero_through_the_shared_guard(spark):
+    """An empty and a whitespace-only text have no tokens, and under the
+    session's ANSI setting the unguarded quality ratios throw on them.
+    ``document_features``, ``corpus_stats`` and ``source_mix_stats``
+    score them 0, predict 'und' and fingerprint them as md5(""); a normal
+    text gets the values the per-signal operators give the same row."""
+    import hashlib
+
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.curation import (
+        scrub_pii,
+        source_mix_stats,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.features import (
+        document_features,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
+        LANG_MARKERS,
+        corpus_stats,
+        fingerprints,
+        language_id,
+        quality_scores,
+    )
+
+    text = BASE + " mail a.b@example.com or see https://example.org/x"
+    rows = [(1, "en", "S", ""), (2, "en", "S", "   "), (3, "en", "S", text)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, lang string, source string, text string"
+    )
+    feats = {r.doc_id: r for r in document_features(df).collect()}
+    assert set(feats) == {1, 2, 3}
+    empty_md5 = hashlib.md5(b"").hexdigest()
+    for d in (1, 2):
+        f = feats[d]
+        assert (f.quality_score, f.predicted_lang, f.fingerprint) == (
+            0.0,
+            "und",
+            empty_md5,
+        )
+    normal = df.where(F.col("doc_id") == 3)
+    f = feats[3]
+    q = quality_scores(normal).first()
+    lang = language_id(normal).first()
+    pii = scrub_pii(normal).first()
+    assert 0 < f.quality_score == q.quality_score
+    assert f.predicted_lang == lang.predicted_lang == "en"
+    scores = [f"score_{code}" for code in LANG_MARKERS]
+    assert [f[c] for c in scores] == [lang[c] for c in scores]
+    assert f.fingerprint == fingerprints(normal).first().fingerprint
+    assert (f.n_urls, f.n_emails, f.n_phones) == (
+        pii.n_urls,
+        pii.n_emails,
+        pii.n_phones,
+    )
+    assert (f.n_urls, f.n_emails) == (1, 1)
+    # The two rollups average the empty docs in at quality 0.
+    mean_x10k = round(q.quality_score * 10000) // 3
+    (stats,) = corpus_stats(df).collect()
+    assert (stats.n_docs, stats.mean_quality_x10k) == (3, mean_x10k)
+    (mix,) = source_mix_stats(df).collect()
+    assert (mix.n_docs, mix.n_unique, mix.mean_quality_x10k) == (3, 2, mean_x10k)
+
+
 def test_knn_label_vote_majority_and_tie_break(spark):
     """Hand-built 2-D corpus: probe 100 sits among three label-7 vectors
     and two label-3 vectors -> majority 7. Probe 200's top-4 split 2-2 ->
