@@ -695,9 +695,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         docs = read_table(spark, sf_dir, "documents")
-        out = C.stratified_sample(
-            docs, {"en": 0.5, "es": 0.25}, group_col="lang", default_rate=0.125
-        )
+        out = C.stratified_sample(docs, {"en": 0.5, "es": 0.25}, default_rate=0.125)
         return out.select("doc_id", "lang", "sample_bucket")
 
     q["stratified_sample"] = stratified_sample
@@ -1223,21 +1221,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- multimodal plumbing -------------------------------------------------
     def media_features(spark, sf_dir):
         docs = read_table(spark, sf_dir, "documents")
-        payloads = M.attach_payloads(docs, "doc_id", "text", "image")
+        payloads = M.attach_payloads(docs, "image")
         return M.extract_media_features(payloads)
 
     q["media_features"] = media_features
 
     def frame_samples(spark, sf_dir):
         docs = read_table(spark, sf_dir, "documents")
-        payloads = M.attach_payloads(docs, "doc_id", "text", "image")
+        payloads = M.attach_payloads(docs, "image")
         return M.sample_frames(payloads)
 
     q["frame_samples"] = frame_samples
 
     def resize_media(spark, sf_dir):
         docs = read_table(spark, sf_dir, "documents")
-        payloads = M.attach_payloads(docs, "doc_id", "text", "image")
+        payloads = M.attach_payloads(docs, "image")
         out = M.resize_media_stub(payloads, target_w=8, target_h=8)
         return out.select(
             "media_id",

@@ -107,14 +107,14 @@ def bpe_display_col(enc: Column) -> Column:
     return F.replace(out, F.lit(SYM_CLOSE), F.lit(""))
 
 
-def bpe_encode(df: DataFrame, merges, *, text_col: str = "text") -> DataFrame:
+def bpe_encode(df: DataFrame, merges) -> DataFrame:
     """Encode a corpus against a fixed merge list.
 
     Returns (doc_id, n_bpe_tokens, encoded) — the real token count and
     the display form of the symbol sequence. Pure map: no shuffle, no
     Python, M+constant literal replaces per row in codegen.
     """
-    enc = bpe_apply_col(bpe_wrap_col(F.col(text_col)), merges)
+    enc = bpe_apply_col(bpe_wrap_col(F.col("text")), merges)
     return df.select(
         "doc_id",
         (F.size(F.split(enc, SYM_OPEN)) - 1).cast("long").alias("n_bpe_tokens"),
@@ -131,13 +131,13 @@ _PAIR_PATTERN = (
 )
 
 
-def bpe_symbol_pair_counts(encoded: DataFrame, *, enc_col: str = "enc") -> DataFrame:
+def bpe_symbol_pair_counts(encoded: DataFrame) -> DataFrame:
     """Corpus-wide adjacent-symbol pair counts over a wrapped encoding —
     the generalized ``bpe_pair_counts`` that stays correct after merges
     (symbols are no longer single chars). Same scale shape: explode to
     narrow pair strings, one partial-agg hash aggregate."""
     pairs = encoded.select(
-        F.explode(F.regexp_extract_all(F.col(enc_col), F.lit(_PAIR_PATTERN), 1)).alias(
+        F.explode(F.regexp_extract_all(F.col("enc"), F.lit(_PAIR_PATTERN), 1)).alias(
             "pair"
         )
     )
@@ -145,11 +145,7 @@ def bpe_symbol_pair_counts(encoded: DataFrame, *, enc_col: str = "enc") -> DataF
 
 
 def train_bpe_merges(
-    df: DataFrame,
-    *,
-    n_merges: int = 48,
-    min_count: int = 2,
-    text_col: str = "text",
+    df: DataFrame, *, n_merges: int = 48, min_count: int = 2
 ) -> list[tuple[str, str]]:
     """Greedy BPE vocab induction: ``n_merges`` rounds of corpus-wide
     pair counting (distributed, partial-agg) + driver argmax (one row).
@@ -164,7 +160,7 @@ def train_bpe_merges(
     This is the offline trainer; ship its output as a frozen constant
     (``DEFAULT_BPE_MERGES``) and apply with ``bpe_apply_col``.
     """
-    cur = df.select(bpe_wrap_col(F.col(text_col)).alias("enc")).localCheckpoint()
+    cur = df.select(bpe_wrap_col(F.col("text")).alias("enc")).localCheckpoint()
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         top = (

@@ -14,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
+    hex_digit,
+    shingles_col,
+)
 from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats import (
     fingerprint_col,
     guarded_quality_x10k_col,
@@ -59,7 +63,7 @@ def pii_count_cols(text: Column) -> list[Column]:
     ]
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """Redact URLs, emails, and phone-number-shaped runs; count each kind.
 
     Counts are taken on the ORIGINAL text (so a URL containing an ``@``
@@ -67,7 +71,7 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     as the oracle sees it); replacements are applied in URL → email →
     phone order.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     return df.select(
         "doc_id", scrub_text_col(text).alias("scrubbed_text"), *pii_count_cols(text)
     )
@@ -76,7 +80,6 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 def chunk_documents(
     df: DataFrame,
     *,
-    text_col: str = "text",
     chunk_tokens: int = 128,
     overlap: int = 16,
     carry_cols: tuple = (),
@@ -103,7 +106,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("require 0 <= overlap < chunk_tokens")
     step = chunk_tokens - overlap
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     n = F.size(toks)
     # Last start is (ceil(n/step)-1)*step, strictly below n by construction,
     # so sequence's closed upper bound never emits an empty trailing chunk.
@@ -145,22 +148,24 @@ VAL_UPPER = 230
 #: The values ``split_col`` assigns.
 SPLITS = ("train", "val", "test")
 
-_HEX = "0123456789abcdef"
 
-
-def _hex_bucket(id_col: Column) -> Column:
-    """0..255 bucket from the first two md5 hex chars — strpos arithmetic
-    only, so the SQL oracle computes the identical bucket."""
+def _hex_bucket(id_col: Column, n_chars: int) -> Column:
+    """0..16^n_chars−1 bucket from the first ``n_chars`` md5 hex chars of
+    the id — strpos arithmetic only (``dedup.hex_digit``), so the SQL
+    oracle computes the identical bucket. Two chars (0..255) place
+    splits and shards; four (0..65535) give sampling rates a precision
+    of 1/65536."""
     h = F.md5(id_col.cast("string"))
-    c1 = F.instr(F.lit(_HEX), F.substring(h, 1, 1)) - 1
-    c2 = F.instr(F.lit(_HEX), F.substring(h, 2, 1)) - 1
-    return c1 * 16 + c2
+    bucket = hex_digit(h, 1)
+    for pos in range(2, n_chars + 1):
+        bucket = bucket * 16 + hex_digit(h, pos)
+    return bucket
 
 
 def split_col(id_col: Column) -> Column:
     """train/val/test as a pure column expression over the id — composable
     into any plan without a join (an id's split never changes)."""
-    bucket = _hex_bucket(id_col)
+    bucket = _hex_bucket(id_col, 2)
     train, val, test = SPLITS
     return (
         F.when(bucket < TRAIN_UPPER, F.lit(train))
@@ -169,7 +174,7 @@ def split_col(id_col: Column) -> Column:
     )
 
 
-def split_assign(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def split_assign(df: DataFrame) -> DataFrame:
     """Deterministic, rerun-stable train/val/test assignment by id hash.
 
     Hash-based (not random) so resumed/incremental runs assign every
@@ -177,30 +182,14 @@ def split_assign(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     matters when the corpus arrives over months.
     """
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        _hex_bucket(F.col(id_col)).cast("int").alias("bucket"),
-        split_col(F.col(id_col)).alias("split"),
+        "doc_id",
+        _hex_bucket(F.col("doc_id"), 2).cast("int").alias("bucket"),
+        split_col(F.col("doc_id")).alias("split"),
     )
 
 
-def _hex_bucket16(id_col: Column) -> Column:
-    """0..65535 bucket from the first four md5 hex chars — same strpos
-    arithmetic as ``_hex_bucket`` but 16-bit, for sampling-rate precision
-    of 1/65536."""
-    h = F.md5(id_col.cast("string"))
-    b = F.lit(0)
-    for pos in range(1, 5):
-        b = b * 16 + (F.instr(F.lit(_HEX), F.substring(h, pos, 1)) - 1)
-    return b
-
-
 def stratified_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    *,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    default_rate: float = 0.0,
+    df: DataFrame, rates: dict[str, float], *, default_rate: float = 0.0
 ) -> DataFrame:
     """Deterministic hash-based stratified sampling: keep each row with its
     group's rate, decided by the row id's 16-bit md5 bucket.
@@ -213,10 +202,10 @@ def stratified_sample(
     1/65536 (``floor(rate * 65536)`` buckets kept) so the decision is
     exact integer arithmetic in any engine.
     """
-    bucket = _hex_bucket16(F.col(id_col))
+    bucket = _hex_bucket(F.col("doc_id"), 4)
     cutoff = F.lit(None).cast("int")
     for group, rate in sorted(rates.items()):
-        cutoff = F.when(F.col(group_col) == group, F.lit(int(rate * 65536))).otherwise(cutoff)
+        cutoff = F.when(F.col("lang") == group, F.lit(int(rate * 65536))).otherwise(cutoff)
     cutoff = F.coalesce(cutoff, F.lit(int(default_rate * 65536)))
     return (
         df.withColumn("sample_bucket", bucket.cast("int"))
@@ -230,7 +219,6 @@ def pack_sequences(
     budget: int = 512,
     n_shards: int = 64,
     count_col: str = "n_chunk_tokens",
-    split_col_name: str = "split",
     shard_col: str | None = None,
     carry_cols: tuple = (),
 ) -> DataFrame:
@@ -265,13 +253,13 @@ def pack_sequences(
     else:
         with_shard = chunks.withColumn("shard", F.col(shard_col).cast("long"))
     w = (
-        Window.partitionBy(split_col_name, "shard")
+        Window.partitionBy("split", "shard")
         .orderBy("doc_id", "chunk_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     offset = F.sum(F.col(count_col)).over(w) - F.col(count_col)
     return with_shard.select(
-        split_col_name,
+        "split",
         "shard",
         "doc_id",
         "chunk_idx",
@@ -282,13 +270,7 @@ def pack_sequences(
     )
 
 
-def domain_affinity(
-    corpus: DataFrame,
-    target: DataFrame,
-    *,
-    n: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def domain_affinity(corpus: DataFrame, target: DataFrame, *, n: int = 2) -> DataFrame:
     """DSIR-style domain-affinity scoring (Xie et al. 2023, importance
     resampling): rank corpus documents by how much their n-gram profile
     resembles a TARGET domain, so a pretraining mix can upsample
@@ -314,19 +296,15 @@ def domain_affinity(
     Returns (doc_id, n_grams, affinity_x10k) for every corpus document;
     gram-less documents score 0.
     """
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.dedup import (
-        shingles_col,
-    )
-
     grams = corpus.select(
-        "doc_id", F.explode_outer(shingles_col(F.col(text_col), n)).alias("_g")
+        "doc_id", F.explode_outer(shingles_col(F.col("text"), n)).alias("_g")
     ).select("doc_id", F.md5("_g").alias("gram_hash"))
     corpus_tf = grams.where(F.col("gram_hash").isNotNull()).groupBy(
         "gram_hash"
     ).agg(F.count("*").cast("long").alias("_tfc"))
     target_tf = (
         target.select(
-            F.explode(shingles_col(F.col(text_col), n)).alias("_g")
+            F.explode(shingles_col(F.col("text"), n)).alias("_g")
         )
         .select(F.md5("_g").alias("gram_hash"))
         .groupBy("gram_hash")
@@ -364,12 +342,7 @@ _MIX_TEMPERATURES = (1.0, 0.5, 0.25)
 
 
 def temperature_mix_plan(
-    df: DataFrame,
-    *,
-    token_budget: int,
-    temperature: float = 0.5,
-    text_col: str = "text",
-    source_col: str = "source",
+    df: DataFrame, *, token_budget: int, temperature: float = 0.5
 ) -> DataFrame:
     """Per-source sampling plan under temperature reweighting — the
     standard multi-source LLM mix rule (weight ∝ n_tokens^T, T < 1
@@ -392,9 +365,9 @@ def temperature_mix_plan(
             f"temperature_mix_plan: temperature must be one of "
             f"{_MIX_TEMPERATURES} (repeated-sqrt exactness), got {temperature}"
         )
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     per_source = (
-        df.select(F.col(source_col).alias("source"), F.size(toks).cast("long").alias("_n"))
+        df.select("source", F.size(toks).cast("long").alias("_n"))
         .groupBy("source")
         .agg(F.sum("_n").alias("n_tokens"))
     )
@@ -486,9 +459,7 @@ def filter_funnel(
     return counters.select(F.explode(rows).alias("s")).select("s.*")
 
 
-def source_mix_stats(
-    df: DataFrame, *, text_col: str = "text", source_col: str = "source"
-) -> DataFrame:
+def source_mix_stats(df: DataFrame) -> DataFrame:
     """Per-source curation rollup — the table a mixing decision reads.
 
     For each source: document and token counts, exact-integer mean
@@ -504,9 +475,9 @@ def source_mix_stats(
     Returns (source, n_docs, n_tokens, mean_quality_x10k, n_unique,
     dup_rate_x10k, token_share_x10k).
     """
-    text = F.col(text_col)
+    text = F.col("text")
     per_doc = df.select(
-        F.col(source_col).alias("source"),
+        "source",
         F.size(tokens_col(text)).cast("long").alias("_n_tokens"),
         guarded_quality_x10k_col(text).cast("long").alias("_q10k"),
         fingerprint_col(text).alias("_fp"),

@@ -46,9 +46,11 @@ from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats im
 #: planted mutations, moving K from 8 to 16 lifted recall 65%→83% with
 #: zero spurious candidates (random docs never share a band). The
 #: verifier prunes false positives cheaply, so lean toward recall; for
-#: even lower-J recall run (K=128, BAND_SIZE=4). Both knobs flow through
-#: every function here and the oracle builders derive from the same
-#: constants.
+#: even lower-J recall run (K=128, BAND_SIZE=4). Only ``_sketch`` and
+#: ``minhash_signatures`` (``k``) and ``minhash_bands`` (both) take the
+#: knobs as parameters; ``_candidate_pairs``, the verifiers,
+#: ``_write_index`` and ``_probe_index`` run at these module constants,
+#: and the oracle builders derive from the same constants.
 MINHASH_K = 16
 BAND_SIZE = 2
 
@@ -63,10 +65,16 @@ SIMHASH_BITS = 64
 _HEX = "0123456789abcdef"
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
+def hex_digit(hx: Column, pos: int) -> Column:
+    """0..15 value of char ``pos`` (1-based) of md5-hex column ``hx`` —
+    strpos arithmetic, identical in Spark and DuckDB."""
+    return F.instr(F.lit(_HEX), F.substring(hx, pos, 1)) - 1
+
+
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup: one keeper (min doc_id) per distinct text hash."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), "doc_id")
+        df.select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("n_copies"))
     )
@@ -79,7 +87,7 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     return F.array_distinct(ngrams_col(text, n))
 
 
-def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
+def _sketch(df: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """Per-document near-dup sketch: (doc_id, sig_0..sig_{k-1}, grams).
 
     The ONE definition of a document's MinHash signature and of its
@@ -120,7 +128,7 @@ def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFr
     multi-MB shingle sets with many candidate partners inflates per-row
     memory and shuffle payload; no per-doc gram-count bound is enforced.
     """
-    exploded = df.select("doc_id", F.explode_outer(shingles_col(F.col(text_col))).alias("g"))
+    exploded = df.select("doc_id", F.explode_outer(shingles_col(F.col("text"))).alias("g"))
     n_digests = (k + 3) // 4
     digests = exploded.select(
         "doc_id",
@@ -140,11 +148,11 @@ def _sketch(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFr
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
+def minhash_signatures(df: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """Per-document MinHash signature from k independent hash slots:
     ``_sketch`` without its gram array (null signatures for gram-less
     docs)."""
-    return _sketch(df, text_col, k).drop("grams")
+    return _sketch(df, k).drop("grams")
 
 
 def minhash_bands(signatures: DataFrame, k: int = MINHASH_K, band_size: int = BAND_SIZE) -> DataFrame:
@@ -192,9 +200,9 @@ def _candidate_pairs(signatures: DataFrame) -> DataFrame:
     )
 
 
-def minhash_candidate_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
+def minhash_candidate_pairs(df: DataFrame) -> DataFrame:
     """Distinct candidate pairs that collide in at least one LSH band."""
-    return _candidate_pairs(minhash_signatures(df, text_col))
+    return _candidate_pairs(minhash_signatures(df))
 
 
 def _verified_pairs(sketch: DataFrame) -> DataFrame:
@@ -223,7 +231,7 @@ def _verified_pairs(sketch: DataFrame) -> DataFrame:
     )
 
 
-def minhash_verified_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
+def minhash_verified_pairs(df: DataFrame) -> DataFrame:
     """LSH candidates + exact-Jaccard verification within ONE frame.
 
     The self-join twin of ``dedup_against_index``'s batch-vs-index
@@ -252,7 +260,7 @@ def minhash_verified_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Returns (doc_a, doc_b, n_common, n_union) with ``doc_a < doc_b``.
     """
-    return _verified_pairs(_sketch(df, text_col))
+    return _verified_pairs(_sketch(df))
 
 
 def size_bucket_keys(n_grams: Column, threshold: float) -> Column:
@@ -295,7 +303,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     *,
     block_col: str,
-    text_col: str = "text",
     n: int = 1,
     threshold: float = 0.5,
     size_bucketed: bool = True,
@@ -321,8 +328,8 @@ def ngram_jaccard_pairs(
     feeding empty/whitespace-only docs who relied on that drop should
     filter ``n_grams > 0`` upstream.
     """
-    sh = F.array_distinct(shingles_col(F.col(text_col), n)) if n > 1 else F.array_distinct(
-        tokens_col(F.col(text_col))
+    sh = F.array_distinct(shingles_col(F.col("text"), n)) if n > 1 else F.array_distinct(
+        tokens_col(F.col("text"))
     )
     base = df.select(
         "doc_id",
@@ -379,13 +386,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def repeated_passages(
-    df: DataFrame,
-    *,
-    width: int = 8,
-    min_docs: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def repeated_passages(df: DataFrame, *, width: int = 8, min_docs: int = 2) -> DataFrame:
     """Cross-document repeated-passage detection: token windows of
     ``width`` consecutive tokens, hashed at stride 1, grouped corpus-wide.
 
@@ -417,7 +418,7 @@ def repeated_passages(
     # projected next to an aggregate of itself (the size()-beside-explode
     # Catalyst re-inlining trap documented in ``decontaminate``).
     exploded = df.select(
-        "doc_id", F.explode(ngrams_col(F.col(text_col), width)).alias("_w")
+        "doc_id", F.explode(ngrams_col(F.col("text"), width)).alias("_w")
     ).select("doc_id", F.md5("_w").alias("passage_hash"))
     return (
         exploded.groupBy("passage_hash")
@@ -446,7 +447,7 @@ def _write_index(sketch: DataFrame, path: str, batch_id: int) -> None:
         write_batch(frame, path, spec, batch_id)
 
 
-def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> None:
+def write_minhash_index(df: DataFrame, path: str) -> None:
     """Persist a corpus's near-dup index for INCREMENTAL dedup.
 
     Three narrow parquet tables under ``path``: ``bands/`` — the LSH
@@ -468,12 +469,10 @@ def write_minhash_index(df: DataFrame, path: str, *, text_col: str = "text") -> 
     partition instead of scanning the corpus-scale tables.
     Overwrite-idempotent: a full rebuild is a plain re-run.
     """
-    _write_index(_sketch(df, text_col).localCheckpoint(), path, FULL_BUILD_BATCH_ID)
+    _write_index(_sketch(df).localCheckpoint(), path, FULL_BUILD_BATCH_ID)
 
 
-def append_to_minhash_index(
-    df: DataFrame, path: str, *, batch_id: int, text_col: str = "text"
-) -> None:
+def append_to_minhash_index(df: DataFrame, path: str, *, batch_id: int) -> None:
     """Grow a ``write_minhash_index`` index by one batch — O(batch).
 
     Writes the batch's bands/grams/counts rows into ``batch_id=<id>``
@@ -493,7 +492,7 @@ def append_to_minhash_index(
     correctly.
     """
     check_append_batch_id(batch_id)
-    _write_index(_sketch(df, text_col).localCheckpoint(), path, batch_id)
+    _write_index(_sketch(df).localCheckpoint(), path, batch_id)
 
 
 def dedup_against_index(
@@ -501,7 +500,6 @@ def dedup_against_index(
     batch: DataFrame,
     path: str,
     *,
-    text_col: str = "text",
     exclude_batch_id: int | None = None,
 ) -> DataFrame:
     """Near-dup flag a NEW batch against a ``write_minhash_index`` corpus.
@@ -539,9 +537,7 @@ def dedup_against_index(
     Returns (doc_id, dup_of, n_common, n_union) — one row per verified
     (batch, indexed) pair; batch docs with no row are novel.
     """
-    return _probe_index(
-        spark, _sketch(batch, text_col).localCheckpoint(), path, exclude_batch_id
-    )
+    return _probe_index(spark, _sketch(batch).localCheckpoint(), path, exclude_batch_id)
 
 
 def _probe_index(
@@ -638,7 +634,6 @@ def ingest_batch_against_index(
     path: str,
     *,
     batch_id: int,
-    text_col: str = "text",
 ) -> DataFrame:
     """One incremental-ingest step: dedup a batch, then GROW the index.
 
@@ -681,7 +676,7 @@ def ingest_batch_against_index(
     doc_id tie-break) when duplicated.
     """
     check_append_batch_id(batch_id)
-    sketch = _sketch(batch, text_col).localCheckpoint()
+    sketch = _sketch(batch).localCheckpoint()
     intra = _best_match(_verified_pairs(sketch), "doc_b", "doc_a")
     base = path.rstrip("/")
     if all(has_landed(spark, f"{base}/{t.name}") for t in MINHASH_TABLES):
@@ -710,12 +705,12 @@ def simhash_vote(hx: Column, j: int) -> Column:
     nibble's 8-bit, odd bits its 4-bit — 64 independent bits from 32
     nibbles, identical arithmetic in Spark and DuckDB.
     """
-    nibble = F.instr(F.lit(_HEX), F.substring(hx, j // 2 + 1, 1)) - 1
+    nibble = hex_digit(hx, j // 2 + 1)
     mask = 8 if j % 2 == 0 else 4
     return F.when(nibble.bitwiseAND(F.lit(mask)) != 0, F.lit(1)).otherwise(F.lit(-1))
 
 
-def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash over distinct lowercase whitespace tokens.
 
     Bit j is the sign of the sum over distinct tokens of ±1 votes derived
@@ -733,7 +728,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     character-based formulation. Documents with no tokens get signature 0
     (every vote sum is empty ⇒ every bit 0), restored via a left join.
     """
-    toks = F.array_distinct(tokens_col(F.lower(F.col(text_col))))
+    toks = F.array_distinct(tokens_col(F.lower(F.col("text"))))
     words = df.select("doc_id", F.explode(toks).alias("tok")).select(
         "doc_id",
         *[
@@ -767,7 +762,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int = 2) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 2) -> DataFrame:
     """Near-dup pairs by SimHash with a pigeonhole block join.
 
     The signature is split into ``max_hamming + 1`` disjoint bit blocks; two
@@ -778,7 +773,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
     """
     n_blocks = max_hamming + 1
     width = SIMHASH_BITS // n_blocks
-    sigs = simhash_signatures(df, text_col)
+    sigs = simhash_signatures(df)
     blocks = []
     for b in range(n_blocks):
         lo = b * width
@@ -811,7 +806,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
     )
 
 
-def line_dedup(df: DataFrame, text_col: str = "text", delim: str = "\n") -> DataFrame:
+def line_dedup(df: DataFrame, delim: str = "\n") -> DataFrame:
     """Corpus-level exact line dedup (C4-style): keep each distinct line
     only at its first occurrence, ordered by ``(doc_id, line_idx)``, and
     reassemble every document from its surviving lines.
@@ -845,7 +840,7 @@ def line_dedup(df: DataFrame, text_col: str = "text", delim: str = "\n") -> Data
     lines = df.select(
         "doc_id",
         F.posexplode(
-            F.split(F.col(text_col), re.escape(delim), -1)
+            F.split(F.col("text"), re.escape(delim), -1)
         ).alias("line_idx", "line"),
     ).withColumn("line_hash", F.md5(F.col("line")))
     # min(struct) compares (doc_id, line_idx) lexicographically — identical
@@ -876,14 +871,7 @@ def line_dedup(df: DataFrame, text_col: str = "text", delim: str = "\n") -> Data
     )
 
 
-def source_pair_matrix(
-    docs: DataFrame,
-    pairs: DataFrame,
-    *,
-    source_col: str = "source",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
+def source_pair_matrix(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Cross-source near-duplicate matrix: count verified pairs per
     UNORDERED source pair — the mixing diagnostic that shows which
     sources duplicate each other (crawl snapshot vs curated dump overlap
@@ -897,13 +885,13 @@ def source_pair_matrix(
     space is |sources|² — tiny. The pair table is the big side and it
     arrives already deduplicated; nothing here touches text.
     """
-    src = docs.select("doc_id", F.col(source_col).alias("_s"))
+    src = docs.select("doc_id", F.col("source").alias("_s"))
     return (
         pairs.join(
-            src.select(F.col("doc_id").alias(a_col), F.col("_s").alias("_sa")), a_col
+            src.select(F.col("doc_id").alias("doc_a"), F.col("_s").alias("_sa")), "doc_a"
         )
         .join(
-            src.select(F.col("doc_id").alias(b_col), F.col("_s").alias("_sb")), b_col
+            src.select(F.col("doc_id").alias("doc_b"), F.col("_s").alias("_sb")), "doc_b"
         )
         .groupBy(
             F.least("_sa", "_sb").alias("source_a"),
@@ -913,7 +901,7 @@ def source_pair_matrix(
     )
 
 
-def gram_novelty(df: DataFrame, *, n: int = 3, text_col: str = "text") -> DataFrame:
+def gram_novelty(df: DataFrame, *, n: int = 3) -> DataFrame:
     """Per-document novelty: the fraction of a document's distinct word
     ``n``-gram shingles whose FIRST corpus occurrence (by ascending
     doc_id) is this document — the diversity/data-valuation signal a
@@ -935,7 +923,7 @@ def gram_novelty(df: DataFrame, *, n: int = 3, text_col: str = "text") -> DataFr
     gram-less docs (< ``n`` tokens) report 0/0/0.
     """
     exploded = df.select(
-        "doc_id", F.explode_outer(shingles_col(F.col(text_col), n)).alias("_g")
+        "doc_id", F.explode_outer(shingles_col(F.col("text"), n)).alias("_g")
     ).select("doc_id", F.md5("_g").alias("gram_hash"))
     first_owner = (
         exploded.where(F.col("gram_hash").isNotNull())
@@ -967,7 +955,6 @@ def decontaminate(
     *,
     n: int = 3,
     threshold_pct: int = 10,
-    text_col: str = "text",
     broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents whose word
@@ -998,10 +985,10 @@ def decontaminate(
     exact in any engine); gram-less documents (< ``n`` tokens) are never
     flagged.
     """
-    grams = shingles_col(F.col(text_col), n)
+    grams = shingles_col(F.col("text"), n)
     if broadcast_eval:
         eval_set = (
-            eval_df.select(F.explode(shingles_col(F.col(text_col), n)).alias("g"))
+            eval_df.select(F.explode(shingles_col(F.col("text"), n)).alias("g"))
             .agg(F.array_sort(F.collect_set("g")).alias("_eval_grams"))
         )
         counted = corpus.crossJoin(F.broadcast(eval_set)).select(
@@ -1026,7 +1013,7 @@ def decontaminate(
         ).select("doc_id", F.md5("_g").alias("gram_hash"))
         eval_grams = (
             eval_df.select(
-                F.explode(shingles_col(F.col(text_col), n)).alias("_g")
+                F.explode(shingles_col(F.col("text"), n)).alias("_g")
             )
             .select(F.md5("_g").alias("gram_hash"))
             .distinct()
@@ -1049,15 +1036,7 @@ def decontaminate(
     )
 
 
-def dedup_components(
-    ids: DataFrame,
-    pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 25,
-) -> DataFrame:
+def dedup_components(ids: DataFrame, pairs: DataFrame, *, max_iterations: int = 25) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every
     document gets the minimum id reachable through the pairs as its
     ``component``, and ``is_keeper`` marks the one representative per
@@ -1084,12 +1063,12 @@ def dedup_components(
     unknown ids are silently ignored (they have no label row to join).
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     )
     edges.persist()
     labels = ids.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("component")
+        F.col("doc_id").alias("node"), F.col("doc_id").alias("component")
     ).localCheckpoint()
     try:
         for _ in range(max_iterations):
@@ -1120,7 +1099,7 @@ def dedup_components(
                 # sf0.1 graph — so the extra join per round costs more
                 # than the saved rounds; it only pays on long chains.)
                 return labels.select(
-                    F.col("node").alias(id_col),
+                    F.col("node").alias("doc_id"),
                     "component",
                     (F.col("component") == F.col("node")).alias("is_keeper"),
                 )

@@ -33,7 +33,7 @@ from ebook_conversion_to_text_for_machine_learning_spark.operators.text_stats im
 )
 
 
-def document_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def document_features(df: DataFrame) -> DataFrame:
     """doc_id plus the full per-row signal set.
 
     Columns: token counts (whitespace / distinct / BPE-ish), length,
@@ -49,7 +49,7 @@ def document_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     At corpus scale CPU dominates a narrow (doc_id, flag) shuffle, so
     the join is the right call — measured 14.3s → ~4s at sf0.1.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens_col(text)
     scores = language_score_cols(text)
     # Two-stage select, like language_id: each marker score is projected
@@ -80,7 +80,4 @@ def document_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         "n_emails",
         "n_phones",
         "fingerprint",
-    ).join(
-        repetition_signals(df, text_col=text_col).select("doc_id", "repetitive"),
-        "doc_id",
-    )
+    ).join(repetition_signals(df).select("doc_id", "repetitive"), "doc_id")

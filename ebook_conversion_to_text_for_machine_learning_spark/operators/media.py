@@ -3,11 +3,10 @@
 Images/audio/video ride through the engine as ``binary`` columns with a
 metadata struct; decode / feature-extraction runs as ``mapInArrow`` over
 Arrow record batches so payload bytes cross the JVM↔Python boundary
-exactly once per batch. The actual codec step is STUBBED in this sandbox (no
-Pillow/av/librosa): ``decode_stub=True`` (default) computes deterministic
-byte-level features so the Spark plumbing — schema, batching, partitioning,
-UDF signature — is real and testable; ``decode_stub=False`` raises
-``NotImplementedError`` where the codec call would go.
+exactly once per batch. The codec step is stubbed (no Pillow/av/librosa):
+the operators compute deterministic byte-level features, so the Spark
+plumbing — schema, batching, partitioning, UDF signature — is real and
+testable.
 """
 
 from __future__ import annotations
@@ -38,38 +37,24 @@ MEDIA_FEATURE_SCHEMA = StructType(
 )
 
 
-def attach_payloads(df: DataFrame, id_col: str, payload_text_col: str, media_type: str) -> DataFrame:
-    """Demo adapter: wrap a text column as an opaque binary payload column.
+def attach_payloads(df: DataFrame, media_type: str) -> DataFrame:
+    """Demo adapter: wrap a documents table's ``text`` as an opaque binary
+    payload keyed by its ``doc_id``.
 
     In production the payload comes from the lake (Iceberg binary column or
     object-store reference); here we UTF-8-encode existing data so the
     downstream binary plumbing is exercised with real bytes.
     """
     return df.select(
-        F.col(id_col).cast("string").alias("media_id"),
+        F.col("doc_id").cast("string").alias("media_id"),
         F.lit(media_type).alias("media_type"),
-        F.encode(F.col(payload_text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
 
 
-def _decode_real(payload: bytes, media_type: str):
-    """Where the codec would run (Pillow / pyav / soundfile). Not available
-    in this container — the call site is kept so the scale plumbing and the
-    production diff stay obvious."""
-    raise NotImplementedError(
-        f"media decode for {media_type!r} requires codec libraries not "
-        "present in this environment (Pillow/av); run with decode_stub=True"
-    )
-
-
-def _stub_decode(batch: pa.RecordBatch, decode_stub: bool) -> list[bytes]:
-    """Each row's payload bytes (NULL → ``b""``); with ``decode_stub``
-    False, the codec call site."""
-    data = [p or b"" for p in batch.column("payload").to_pylist()]
-    if not decode_stub:
-        for payload, mtype in zip(data, batch.column("media_type").to_pylist()):
-            _decode_real(payload, mtype)
-    return data
+def _stub_decode(batch: pa.RecordBatch) -> list[bytes]:
+    """Each row's payload bytes (NULL → ``b""``): the stubbed codec step."""
+    return [p or b"" for p in batch.column("payload").to_pylist()]
 
 
 FRAME_SIZE = 16
@@ -144,15 +129,12 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_media_stub(
-    df: DataFrame, *, target_w: int = 64, target_h: int = 64, decode_stub: bool = True
-) -> DataFrame:
+def resize_media_stub(df: DataFrame, *, target_w: int = 64, target_h: int = 64) -> DataFrame:
     """Resize plumbing: Arrow-batched, deterministic stub for the codec step.
 
     The stub "resize" keeps the first ``target_w * target_h`` payload bytes
     (or zero-pads) so output size, schema, and batch shape match what a
-    Pillow-backed resize would produce; ``decode_stub=False`` raises at the
-    exact call site where the codec belongs. ``resized_md5`` fingerprints
+    Pillow-backed resize would produce. ``resized_md5`` fingerprints
     the hex encoding of the bytes (same portability rule as
     ``sample_frames``: SQL oracles lack a BLOB md5).
     """
@@ -163,7 +145,7 @@ def resize_media_stub(
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            resized = [d[:target].ljust(target, b"\x00") for d in _stub_decode(batch, decode_stub)]
+            resized = [d[:target].ljust(target, b"\x00") for d in _stub_decode(batch)]
             n = len(resized)
             yield pa.RecordBatch.from_pydict(
                 {
@@ -184,7 +166,7 @@ def resize_media_stub(
     )
 
 
-def extract_media_features(df: DataFrame, *, decode_stub: bool = True) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     The stub features are pure byte arithmetic (length, first byte, sum mod
@@ -195,7 +177,7 @@ def extract_media_features(df: DataFrame, *, decode_stub: bool = True) -> DataFr
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            data = _stub_decode(batch, decode_stub)
+            data = _stub_decode(batch)
             yield pa.RecordBatch.from_pydict(
                 {
                     "media_id": batch.column("media_id"),

@@ -182,21 +182,14 @@ def _matrix(arr, dtype):
     return flat.to_numpy(zero_copy_only=False).astype(dtype, copy=False).reshape(len(arr), d)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    *,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, probes: DataFrame, *, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors per probe (self-match excluded).
 
     Ranking key is ``(round(cosine, 4) DESC, id)`` — rounding first makes
     the ordering robust to last-ulp float differences across engines.
     """
-    c = corpus.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"))
-    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec"))
+    c = corpus.select(F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec"))
+    p = probes.select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec"))
     scored = (
         c.join(F.broadcast(p), F.col("probe_id") != F.col("item_id"))
         .select("probe_id", "item_id", _cosine())
@@ -209,9 +202,6 @@ def knn_label_vote(
     probes: DataFrame,
     *,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
     topk: DataFrame | None = None,
 ) -> DataFrame:
     """kNN classification: majority label over the top-``k`` neighbors.
@@ -234,9 +224,9 @@ def knn_label_vote(
     """
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
     if topk is None:
-        topk = cosine_topk(corpus, probes, k=k, vec_col=vec_col, id_col=id_col)
+        topk = cosine_topk(corpus, probes, k=k)
     labels = corpus.select(
-        F.col(id_col).alias("item_id"), F.col(label_col).alias("_label")
+        F.col("vec_id").alias("item_id"), F.col("label").alias("_label")
     )
     votes = (
         topk.join(labels, "item_id")
@@ -248,7 +238,7 @@ def knn_label_vote(
     )
     pred = F.col("_label")
     if isinstance(
-        corpus.schema[label_col].dataType,
+        corpus.schema["label"].dataType,
         (ByteType, ShortType, IntegerType, LongType),
     ):
         pred = pred.cast("long")
@@ -260,23 +250,15 @@ def knn_label_vote(
 
 
 # Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
-def lsh_bucket_signatures(
-    df: DataFrame,
-    dim: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = N_PLANES,
-) -> DataFrame:
+def lsh_bucket_signatures(df: DataFrame, dim: int, *, n_planes: int = N_PLANES) -> DataFrame:
     """Sign-projection signature per vector: one bit per hyperplane."""
     planes = hyperplanes(dim, n_planes)
     bits = []
+    vec = F.col("embedding")
     for plane in planes:
         lit_plane = F.array(*[F.lit(float(w)) for w in plane])
-        bits.append(F.when(_dot(F.col(vec_col), lit_plane) > 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.concat(*bits).alias("bucket")
-    )
+        bits.append(F.when(_dot(vec, lit_plane) > 0, F.lit("1")).otherwise(F.lit("0")))
+    return df.select("vec_id", F.concat(*bits).alias("bucket"))
 
 
 # Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
@@ -284,8 +266,6 @@ def lsh_banded_signatures(
     df: DataFrame,
     dim: int,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
 ) -> DataFrame:
@@ -303,20 +283,18 @@ def lsh_banded_signatures(
         for plane in planes[b * band_planes : (b + 1) * band_planes]:
             lit_plane = F.array(*[F.lit(float(w)) for w in plane])
             bits.append(
-                F.when(_dot(F.col(vec_col), lit_plane) > 0, F.lit("1")).otherwise(F.lit("0"))
+                F.when(_dot(F.col("embedding"), lit_plane) > 0, F.lit("1")).otherwise(F.lit("0"))
             )
         bands.append(F.struct(F.lit(b).alias("band_id"), F.concat(*bits).alias("bucket")))
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.explode(F.array(*bands)).alias("band")
-    ).select("vec_id", "band.band_id", "band.bucket")
+    return df.select("vec_id", F.explode(F.array(*bands)).alias("band")).select(
+        "vec_id", "band.band_id", "band.bucket"
+    )
 
 
 def lsh_banded_signatures_arrow(
     df: DataFrame,
     dim: int,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
 ) -> DataFrame:
@@ -357,8 +335,8 @@ def lsh_banded_signatures_arrow(
                 }
             )
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, vec_col).mapInArrow(
+    id_type = dict(df.dtypes)["vec_id"]
+    return df.select("vec_id", "embedding").mapInArrow(
         batches, schema=f"vec_id {id_type}, band_id int, bucket string"
     )
 
@@ -377,8 +355,6 @@ def ivf_centroids(
     *,
     target_cells: int = IVF_TARGET_CELLS,
     stride: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list:
     """Collect the IVF codebook to the driver — bounded, never O(N).
 
@@ -410,24 +386,22 @@ def ivf_centroids(
                 "corpora; the 65536-cell default is a lake-scale setting.",
                 stacklevel=2,
             )
-    return _stride_sample(corpus, stride, "ivf_centroids", vec_col=vec_col, id_col=id_col)
+    return _stride_sample(corpus, stride, "ivf_centroids")
 
 
-def _stride_sample(
-    corpus: DataFrame, stride: int, where: str, *, vec_col: str, id_col: str
-) -> list:
+def _stride_sample(corpus: DataFrame, stride: int, where: str) -> list:
     """The one codebook sample of the IVF and PQ trainers: the
     ``(id, vector)`` rows of every ``stride``-th id, collected to the
     driver and sorted by id. Raises ``ValueError`` on an empty sample
     instead of handing the kernels a zero-entry codebook."""
     rows = (
-        corpus.where(F.col(id_col) % stride == 0)
-        .select(F.col(id_col).cast("long").alias("sid"), F.col(vec_col).alias("svec"))
+        corpus.where(F.col("vec_id") % stride == 0)
+        .select(F.col("vec_id").cast("long").alias("sid"), F.col("embedding").alias("svec"))
         .collect()
     )
     if not rows:
         raise ValueError(
-            f"{where}: empty codebook (no {id_col} divisible by stride "
+            f"{where}: empty codebook (no vec_id divisible by stride "
             f"{stride}); pass a smaller stride or target size, or remap ids"
         )
     return sorted((int(r.sid), [float(x) for x in r.svec]) for r in rows)
@@ -451,29 +425,15 @@ def _cell_ranking(vec: Column, centroids: list) -> Column:
 
 
 # Kept: numpy's float sum order may differ from the oracle's left fold; this is the reference.
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: list) -> DataFrame:
     """Nearest-centroid cell per vector — per-row expressions, no shuffle."""
-    ranking = _cell_ranking(F.col(vec_col), centroids)
+    ranking = _cell_ranking(F.col("embedding"), centroids)
     return corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.element_at(ranking, 1)["centroid_id"].alias("cell_id"),
+        "vec_id", F.element_at(ranking, 1)["centroid_id"].alias("cell_id")
     )
 
 
-def ivf_assign_arrow(
-    corpus: DataFrame,
-    centroids: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    keep_vec: bool = False,
-) -> DataFrame:
+def ivf_assign_arrow(corpus: DataFrame, centroids: list, *, keep_vec: bool = False) -> DataFrame:
     """Production-rate cell assignment: one numpy matmul per Arrow batch.
 
     ``ivf_assign`` (expression-based) is the oracle-parity twin — its
@@ -493,33 +453,28 @@ def ivf_assign_arrow(
 
     ids, mat = _centroid_matrix(centroids)
 
-    vec_type = dict(corpus.dtypes)[vec_col]
+    vec_type = dict(corpus.dtypes)["embedding"]
     schema = "vec_id long, cell_id long"
     if keep_vec:
         # Pass the vector through the Arrow batch so downstream scoring
         # (ivf_ann_topk) needs no corpus self-join to refetch it.
-        schema += f", {vec_col} {vec_type}"
+        schema += f", embedding {vec_type}"
 
     def batches(it):
         for batch in it:
             best = np.argmax(_rounded_cos(_matrix(batch.column(1), np.float64), mat), axis=1)
             out = {"vec_id": batch.column(0), "cell_id": ids[best]}
             if keep_vec:
-                out[vec_col] = batch.column(1)
+                out["embedding"] = batch.column(1)
             yield pa.RecordBatch.from_pydict(out)
 
-    return corpus.select(F.col(id_col).cast("long"), vec_col).mapInArrow(
+    return corpus.select(F.col("vec_id").cast("long"), "embedding").mapInArrow(
         batches, schema=schema
     )
 
 
 def ivf_probe_cells_arrow(
-    probes: DataFrame,
-    centroids: list,
-    *,
-    nprobe: int = IVF_NPROBE,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    probes: DataFrame, centroids: list, *, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
     """Top-``nprobe`` cells per probe — one numpy matmul per Arrow batch.
 
@@ -539,8 +494,8 @@ def ivf_probe_cells_arrow(
 
     ids, mat = _centroid_matrix(centroids)
 
-    vec_type = dict(probes.dtypes)[vec_col]
-    id_type = dict(probes.dtypes)[id_col]
+    vec_type = dict(probes.dtypes)["embedding"]
+    id_type = dict(probes.dtypes)["vec_id"]
 
     def batches(it):
         for batch in it:
@@ -554,7 +509,7 @@ def ivf_probe_cells_arrow(
                 }
             )
 
-    return probes.select(id_col, vec_col).mapInArrow(
+    return probes.select("vec_id", "embedding").mapInArrow(
         batches, schema=f"probe_id {id_type}, probe_vec {vec_type}, probe_cell long"
     )
 
@@ -640,8 +595,6 @@ def ivf_kmeans_centroids(
     iters: int = 2,
     target_cells: int = IVF_TARGET_CELLS,
     stride: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list:
     """Spherical Lloyd refinement of the stride-sampled codebook — the
     "swap in k-means in production" that ``ivf_centroids`` advertises,
@@ -672,16 +625,13 @@ def ivf_kmeans_centroids(
     """
     import numpy as np
 
-    cents = ivf_centroids(
-        corpus, target_cells=target_cells, stride=stride,
-        vec_col=vec_col, id_col=id_col,
-    )
+    cents = ivf_centroids(corpus, target_cells=target_cells, stride=stride)
 
     def assign(x, mat):
         return np.argmax(_rounded_cos(x, _unit_rows(mat)), axis=1), _unit_rows(x)
 
     init = np.array([v for _, v in cents], dtype=np.float64)
-    mat = _lloyd(corpus.select(vec_col), init, assign, iters)
+    mat = _lloyd(corpus.select("embedding"), init, assign, iters)
     return [(cid, vec) for (cid, _), vec in zip(cents, mat.tolist())]
 
 
@@ -693,8 +643,6 @@ def ivf_ann_topk(
     nprobe: int = IVF_NPROBE,
     target_cells: int = IVF_TARGET_CELLS,
     stride: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine over the probe's ``nprobe`` cells.
@@ -713,19 +661,14 @@ def ivf_ann_topk(
     """
     # iters=0 runs no Lloyd pass and returns the stride codebook as-is
     centroids = ivf_kmeans_centroids(
-        corpus, iters=kmeans_iters, target_cells=target_cells,
-        stride=stride, vec_col=vec_col, id_col=id_col,
+        corpus, iters=kmeans_iters, target_cells=target_cells, stride=stride
     )
-    c = ivf_assign_arrow(
-        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
-    ).select(
+    c = ivf_assign_arrow(corpus, centroids, keep_vec=True).select(
         F.col("vec_id").alias("item_id"),
-        F.col(vec_col).alias("item_vec"),
+        F.col("embedding").alias("item_vec"),
         "cell_id",
     )
-    probe_cells = ivf_probe_cells_arrow(
-        probes, centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-    )
+    probe_cells = ivf_probe_cells_arrow(probes, centroids, nprobe=nprobe)
     return _ivf_topk_from_cells(c, probe_cells, k)
 
 
@@ -748,8 +691,6 @@ def embedding_near_dup(
     dim: int,
     *,
     threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
 ) -> DataFrame:
@@ -765,9 +706,7 @@ def embedding_near_dup(
     replaces degenerated at scale. Bucket bits come from one numpy matmul
     per Arrow batch (``lsh_banded_signatures_arrow``).
     """
-    bands = lsh_banded_signatures_arrow(
-        df, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
-    )
+    bands = lsh_banded_signatures_arrow(df, dim, n_bands=n_bands, band_planes=band_planes)
     left, right = bands.alias("l"), bands.alias("r")
     candidates = (
         left.join(
@@ -779,8 +718,8 @@ def embedding_near_dup(
         .select(F.col("l.vec_id").alias("vec_a"), F.col("r.vec_id").alias("vec_b"))
         .distinct()
     )
-    va = df.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
+    va = df.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
+    vb = df.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
     return (
         candidates.join(va, "vec_a")
         .join(vb, "vec_b")
@@ -822,8 +761,6 @@ def lsh_ann_topk(
     dim: int,
     *,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
 ) -> DataFrame:
@@ -840,14 +777,14 @@ def lsh_ann_topk(
     ``lsh_ann_topk_indexed``.
     """
     c_bands = lsh_banded_signatures_arrow(
-        corpus, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
+        corpus, dim, n_bands=n_bands, band_planes=band_planes
     ).select(F.col("vec_id").alias("item_id"), "band_id", "bucket")
     p_bands = lsh_banded_signatures_arrow(
-        probes, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
+        probes, dim, n_bands=n_bands, band_planes=band_planes
     ).select(F.col("vec_id").alias("probe_id"), "band_id", "bucket")
-    items = corpus.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"))
+    items = corpus.select(F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec"))
     probe_vecs = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     return _lsh_topk_from_bands(c_bands, items, p_bands, probe_vecs, k)
 
@@ -887,8 +824,6 @@ def write_ann_index(
     dim: int,
     path: str,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
     target_cells: int = IVF_TARGET_CELLS,
@@ -922,13 +857,9 @@ def write_ann_index(
     import pyarrow as pa
 
     if centroids is None:
-        centroids = ivf_centroids(
-            corpus, target_cells=target_cells, stride=stride,
-            vec_col=vec_col, id_col=id_col,
-        )
+        centroids = ivf_centroids(corpus, target_cells=target_cells, stride=stride)
     _write_ann_batch(
         corpus, dim, path, FULL_BUILD_BATCH_ID, centroids,
-        vec_col=vec_col, id_col=id_col,
         n_bands=n_bands, band_planes=band_planes,
     )
     spark = corpus.sparkSession
@@ -949,37 +880,22 @@ def _write_ann_batch(
     batch_id: int,
     centroids: list,
     *,
-    vec_col: str,
-    id_col: str,
     n_bands: int,
     band_planes: int,
 ) -> None:
-    bands = (
-        lsh_banded_signatures_arrow(
-            corpus, dim, vec_col=vec_col, id_col=id_col,
-            n_bands=n_bands, band_planes=band_planes,
-        )
-        .withColumnRenamed("vec_id", "item_id")
-    )
-    cells = ivf_assign_arrow(
-        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
-    ).select(
+    bands = lsh_banded_signatures_arrow(
+        corpus, dim, n_bands=n_bands, band_planes=band_planes
+    ).withColumnRenamed("vec_id", "item_id")
+    cells = ivf_assign_arrow(corpus, centroids, keep_vec=True).select(
         F.col("vec_id").alias("item_id"),
-        F.col(vec_col).alias("item_vec"),
+        F.col("embedding").alias("item_vec"),
         "cell_id",
     )
     write_batch(bands, path, ANN_BANDS, batch_id)
     write_batch(cells, path, ANN_CELLS, batch_id)
 
 
-def append_to_ann_index(
-    corpus_batch: DataFrame,
-    path: str,
-    *,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
+def append_to_ann_index(corpus_batch: DataFrame, path: str, *, batch_id: int) -> None:
     """Grow a ``write_ann_index`` index by one batch — O(batch).
 
     The embedding-lake sibling of ``dedup.append_to_minhash_index``: a
@@ -1001,7 +917,6 @@ def append_to_ann_index(
     idx = read_ann_index(spark, path)
     _write_ann_batch(
         corpus_batch, idx.dim, path, batch_id, idx.centroids,
-        vec_col=vec_col, id_col=id_col,
         n_bands=idx.n_bands, band_planes=idx.band_planes,
     )
 
@@ -1022,14 +937,7 @@ def read_ann_index(spark, path: str) -> AnnIndex:
     )
 
 
-def lsh_ann_topk_indexed(
-    index: AnnIndex,
-    probes: DataFrame,
-    *,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def lsh_ann_topk_indexed(index: AnnIndex, probes: DataFrame, *, k: int = 5) -> DataFrame:
     """``lsh_ann_topk`` against a persisted index: only the (small) probe
     side is banded; the corpus-side signatures and vectors come from the
     index tables. Identical results to the live path by construction —
@@ -1044,15 +952,14 @@ def lsh_ann_topk_indexed(
     """
     p_bands = (
         lsh_banded_signatures_arrow(
-            probes, index.dim, vec_col=vec_col, id_col=id_col,
-            n_bands=index.n_bands, band_planes=index.band_planes,
+            probes, index.dim, n_bands=index.n_bands, band_planes=index.band_planes
         )
         .select(F.col("vec_id").alias("probe_id"), "band_id", "bucket")
         .localCheckpoint()
     )
     (c_bands,) = prune_to_probe_keys((index.bands, ANN_BANDS, p_bands))
     probe_vecs = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     items = index.cells.select("item_id", "item_vec")
     return _lsh_topk_from_bands(c_bands, items, p_bands, probe_vecs, k)
@@ -1070,8 +977,6 @@ def semantic_dedup(
     tau: float = SEMANTIC_TAU,
     target_cells: int = IVF_TARGET_CELLS,
     stride: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """SemDeDup: IVF-cluster embeddings, mark within-cell semantic dups.
@@ -1103,19 +1008,16 @@ def semantic_dedup(
     keeps the stride codebook.
     """
     centroids = ivf_kmeans_centroids(
-        corpus, iters=kmeans_iters, target_cells=target_cells,
-        stride=stride, vec_col=vec_col, id_col=id_col,
+        corpus, iters=kmeans_iters, target_cells=target_cells, stride=stride
     )
     import numpy as np
     import pyarrow as pa
 
-    assign = ivf_assign_arrow(
-        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
-    )
+    assign = ivf_assign_arrow(corpus, centroids, keep_vec=True)
 
     def mark(cell):
         cell = cell.sort_by("vec_id")
-        unit = _unit_rows(_matrix(cell.column(vec_col), np.float64))
+        unit = _unit_rows(_matrix(cell.column("embedding"), np.float64))
         cos = np.round(unit @ unit.T, 4)
         # dup[i] = any strictly-lower-id row within tau: strict lower
         # triangle of the thresholded gram matrix, any per row.
@@ -1139,8 +1041,6 @@ def ivf_ann_topk_indexed(
     *,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """``ivf_ann_topk`` against a persisted index: cell assignment comes
     from the index; only probe→cell ranking runs per query batch.
@@ -1150,9 +1050,7 @@ def ivf_ann_topk_indexed(
     65536-cell setting a probe batch reads only the cell groups it
     actually ranks, not the corpus-scale table.
     """
-    probe_cells = ivf_probe_cells_arrow(
-        probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-    ).localCheckpoint()
+    probe_cells = ivf_probe_cells_arrow(probes, index.centroids, nprobe=nprobe).localCheckpoint()
     (cells,) = prune_to_probe_keys(
         (index.cells, ANN_CELLS, probe_cells.select(F.col("probe_cell").alias("cell_id")))
     )
@@ -1179,8 +1077,6 @@ def pq_codebooks(
     m: int = PQ_M,
     target_codes: int = PQ_TARGET_CODES,
     stride: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list:
     """Per-subspace PQ codebooks from ONE strided sample — bounded collect.
 
@@ -1197,7 +1093,7 @@ def pq_codebooks(
     """
     if stride is None:
         stride = max(1, corpus.count() // target_codes)
-    sample = _stride_sample(corpus, stride, "pq_codebooks", vec_col=vec_col, id_col=id_col)
+    sample = _stride_sample(corpus, stride, "pq_codebooks")
     dim = len(sample[0][1])
     if dim % m:
         raise ValueError(f"pq_codebooks: dim {dim} not divisible by m={m}")
@@ -1215,8 +1111,6 @@ def pq_kmeans_codebooks(
     m: int = PQ_M,
     target_codes: int = PQ_TARGET_CODES,
     stride: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list:
     """Per-subspace Lloyd training of the PQ codebooks — the actual PQ
     recipe (Jégou et al.: k-means per subquantizer), with the same
@@ -1244,10 +1138,7 @@ def pq_kmeans_codebooks(
     """
     import numpy as np
 
-    books = pq_codebooks(
-        corpus, m=m, target_codes=target_codes, stride=stride,
-        vec_col=vec_col, id_col=id_col,
-    )
+    books = pq_codebooks(corpus, m=m, target_codes=target_codes, stride=stride)
     cb = _codebook_tensor(books)  # (m, k, d0)
     _, k, d0 = cb.shape
 
@@ -1255,7 +1146,7 @@ def pq_kmeans_codebooks(
         codes = _pq_nearest_codes(x, flat.reshape(m, k, d0))
         return (codes + np.arange(m) * k).ravel(), x.reshape(len(x) * m, d0)
 
-    flat = _lloyd(corpus.select(vec_col), cb.reshape(m * k, d0), assign, iters)
+    flat = _lloyd(corpus.select("embedding"), cb.reshape(m * k, d0), assign, iters)
     return [list(enumerate(book)) for book in flat.reshape(m, k, d0).tolist()]
 
 
@@ -1291,7 +1182,7 @@ def _pq_nearest_codes(x, cb):
     return np.argmin(q, axis=2)
 
 
-def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
+def _adc_lut(probes: DataFrame, cb):
     """(id-sorted probe ids, their float64 vector matrix, probes × m × k
     LUT) for the ADC kernel: the probe batch reaches the driver
     through ONE ``toArrow()`` collect, bounded by the probe batch by
@@ -1307,7 +1198,7 @@ def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
     import numpy as np
 
     m, k, d0 = cb.shape
-    t = probes.select(id_col, vec_col).toArrow()
+    t = probes.select("vec_id", "embedding").toArrow()
     probe_ids = t.column(0).to_numpy().astype(np.int64)
     order = np.argsort(probe_ids)
     probe_ids = probe_ids[order]
@@ -1334,13 +1225,7 @@ def _adc_lut(probes: DataFrame, cb, *, vec_col: str, id_col: str):
     return probe_ids, vecs, lut
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks: list) -> DataFrame:
     """Production PQ encoder: one numpy pass per Arrow batch, plan size
     constant in the codebook (the round-2 IVF literal-expression lesson,
     applied from the start). Emits (vec_id, codes array<int>).
@@ -1367,7 +1252,7 @@ def pq_encode(
                 }
             )
 
-    return corpus.select(F.col(id_col).cast("long"), vec_col).mapInArrow(
+    return corpus.select(F.col("vec_id").cast("long"), "embedding").mapInArrow(
         batches, schema="vec_id long, codes array<int>"
     )
 
@@ -1450,8 +1335,6 @@ def pq_adc_cell_scan_arrow(
     *,
     nprobe: int,
     per_probe_r: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """The one ADC scan kernel — IVFADC scoring the way inverted-list
     engines actually run it: each corpus code row ships ONCE with its
@@ -1492,11 +1375,11 @@ def pq_adc_cell_scan_arrow(
     """
     import numpy as np
 
-    _require_integral_id(probes, id_col, "pq_adc_cell_scan_arrow")
+    _require_integral_id(probes, "vec_id", "pq_adc_cell_scan_arrow")
     _require_integral_id(codes_with_cells, "item_id", "pq_adc_cell_scan_arrow")
     cb = _codebook_tensor(codebooks)
     m = cb.shape[0]
-    pids, vecs, lut = _adc_lut(probes, cb, vec_col=vec_col, id_col=id_col)
+    pids, vecs, lut = _adc_lut(probes, cb)
     assign = _probe_cell_assign(vecs, *_centroid_matrix(centroids), nprobe)
     cell_map: dict = {}
     for pos, row_cells in enumerate(assign):
@@ -1570,7 +1453,7 @@ def pq_adc_cell_scan_arrow(
     return _score_chunks(
         codes_with_cells.select("item_id", "cell_id", "codes"),
         score,
-        p_type=dict(probes.dtypes)[id_col],
+        p_type=dict(probes.dtypes)["vec_id"],
         i_type=dict(codes_with_cells.dtypes)["item_id"],
     )
 
@@ -1581,8 +1464,6 @@ def pq_adc_topk(
     codebooks: list,
     *,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes — the scan that reads
@@ -1605,14 +1486,13 @@ def pq_adc_topk(
     Returns (probe_id, item_id, adc_x10k, rank).
     """
     if codes is None:
-        codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
+        codes = pq_encode(corpus, codebooks)
     one_cell = codes.select(
         F.col("vec_id").alias("item_id"), F.lit(0).cast("long").alias("cell_id"), "codes"
     )
     dim = sum(len(book[0][1]) for book in codebooks)
     cand = pq_adc_cell_scan_arrow(
-        one_cell, probes, [(0, [0.0] * dim)], codebooks,
-        nprobe=1, per_probe_r=k, vec_col=vec_col, id_col=id_col,
+        one_cell, probes, [(0, [0.0] * dim)], codebooks, nprobe=1, per_probe_r=k
     )
     return _top_k_per_probe(cand, k, score="adc_x10k", ascending=True)
 
@@ -1624,8 +1504,6 @@ def pq_adc_rerank_topk(
     *,
     k: int = 5,
     shortlist: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """ADC shortlist → exact cosine re-rank: the production PQ search
@@ -1650,22 +1528,13 @@ def pq_adc_rerank_topk(
     ``cosine_topk``, ranking (round(cos,4) DESC, item_id ASC).
     """
     r = shortlist if shortlist is not None else 5 * k
-    sl = pq_adc_topk(
-        corpus, probes, codebooks, k=r, vec_col=vec_col, id_col=id_col,
-        codes=codes,
-    ).select("probe_id", "item_id")
-    return _exact_rerank(corpus, probes, sl, k, vec_col=vec_col, id_col=id_col)
+    sl = pq_adc_topk(corpus, probes, codebooks, k=r, codes=codes).select(
+        "probe_id", "item_id"
+    )
+    return _exact_rerank(corpus, probes, sl, k)
 
 
-def _exact_rerank(
-    corpus: DataFrame,
-    probes: DataFrame,
-    sl: DataFrame,
-    k: int,
-    *,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
+def _exact_rerank(corpus: DataFrame, probes: DataFrame, sl: DataFrame, k: int) -> DataFrame:
     """Exact cosine re-rank of a (probe_id, item_id) shortlist: candidate
     vectors fetched with ONE broadcast join (the raw-vector table is
     scanned column-pruned, never shuffled, never crossed with the probe
@@ -1686,11 +1555,11 @@ def _exact_rerank(
     subtree needs neither the barrier nor the dedup.
     """
     p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     scored = (
         corpus.select(
-            F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec")
+            F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec")
         )
         .join(F.broadcast(sl), "item_id")
         .join(F.broadcast(p), "probe_id")
@@ -1707,8 +1576,6 @@ def write_pq_index(
     target_codes: int = PQ_TARGET_CODES,
     stride: int | None = None,
     kmeans_iters: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Persist a PQ index: ``codebooks/`` (one (subspace, code, cvec) row
     per entry — m × k rows, broadcast-trivial) and ``codes/`` (the
@@ -1728,14 +1595,10 @@ def write_pq_index(
     base = path.rstrip("/")
     if kmeans_iters > 0:
         books = pq_kmeans_codebooks(
-            corpus, iters=kmeans_iters, m=m, target_codes=target_codes,
-            stride=stride, vec_col=vec_col, id_col=id_col,
+            corpus, iters=kmeans_iters, m=m, target_codes=target_codes, stride=stride
         )
     else:
-        books = pq_codebooks(
-            corpus, m=m, target_codes=target_codes, stride=stride,
-            vec_col=vec_col, id_col=id_col,
-        )
+        books = pq_codebooks(corpus, m=m, target_codes=target_codes, stride=stride)
     entries = pa.table(
         {
             "subspace": [s for s, book in enumerate(books) for _ in book],
@@ -1746,20 +1609,10 @@ def write_pq_index(
     corpus.sparkSession.createDataFrame(
         entries, "subspace int, code int, cvec array<double>"
     ).write.mode("overwrite").parquet(f"{base}/codebooks")
-    write_batch(
-        pq_encode(corpus, books, vec_col=vec_col, id_col=id_col),
-        base, PQ_CODES, FULL_BUILD_BATCH_ID,
-    )
+    write_batch(pq_encode(corpus, books), base, PQ_CODES, FULL_BUILD_BATCH_ID)
 
 
-def append_to_pq_index(
-    corpus_batch: DataFrame,
-    path: str,
-    *,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
+def append_to_pq_index(corpus_batch: DataFrame, path: str, *, batch_id: int) -> None:
     """Grow a ``write_pq_index`` code table by one batch — O(batch).
 
     Encodes against the index's FROZEN codebooks (read back exactly;
@@ -1771,10 +1624,7 @@ def append_to_pq_index(
     """
     check_append_batch_id(batch_id)
     books, _ = read_pq_index(corpus_batch.sparkSession, path)
-    write_batch(
-        pq_encode(corpus_batch, books, vec_col=vec_col, id_col=id_col),
-        path, PQ_CODES, batch_id,
-    )
+    write_batch(pq_encode(corpus_batch, books), path, PQ_CODES, batch_id)
 
 
 def read_pq_index(spark, path: str) -> tuple:
@@ -1800,8 +1650,6 @@ def ivfpq_topk(
     k: int = 5,
     nprobe: int = IVF_NPROBE,
     shortlist: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cells: DataFrame | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
@@ -1832,18 +1680,15 @@ def ivfpq_topk(
     """
     r = shortlist if shortlist is not None else 5 * k
     if cells is None:
-        cells = ivf_assign_arrow(corpus, centroids, vec_col=vec_col, id_col=id_col)
+        cells = ivf_assign_arrow(corpus, centroids)
     if codes is None:
-        codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
+        codes = pq_encode(corpus, codebooks)
     cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
         cells.select(F.col("vec_id").alias("item_id"), "cell_id"),
         "item_id",
     )
-    adc = pq_adc_cell_scan_arrow(
-        cwc, probes, centroids, codebooks,
-        nprobe=nprobe, per_probe_r=r, vec_col=vec_col, id_col=id_col,
-    )
+    adc = pq_adc_cell_scan_arrow(cwc, probes, centroids, codebooks, nprobe=nprobe, per_probe_r=r)
     sl = _top_k_per_probe(adc, r, score="adc_x10k", ascending=True, rank="_r").select(
         "probe_id", "item_id"
     )
-    return _exact_rerank(corpus, probes, sl, k, vec_col=vec_col, id_col=id_col)
+    return _exact_rerank(corpus, probes, sl, k)

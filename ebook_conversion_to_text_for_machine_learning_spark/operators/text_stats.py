@@ -27,14 +27,14 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, TOKEN_SPLIT), lambda t: t != "")
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token counting: whitespace tokens, distinct tokens, BPE-ish count."""
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     return df.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        F.regexp_count(F.lower(F.col(text_col)), F.lit(BPE_PATTERN)).alias("n_bpe_tokens"),
+        F.regexp_count(F.lower(F.col("text")), F.lit(BPE_PATTERN)).alias("n_bpe_tokens"),
     )
 
 
@@ -86,18 +86,18 @@ def guarded_quality_x10k_col(text: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Heuristic quality score: length, lexical diversity, stopword ratio.
 
     score = 0.4*min(1, n_tokens/50) + 0.3*(distinct/total) + 0.3*stopword_ratio,
     rounded to 4 decimals (double arithmetic, portable to the SQL oracle).
     """
-    _, distinct_ratio, stop_ratio = _quality_ratios(tokens_col(F.col(text_col)))
+    _, distinct_ratio, stop_ratio = _quality_ratios(tokens_col(F.col("text")))
     return df.select(
         "doc_id",
         (_x10k(distinct_ratio) / F.lit(10000.0)).alias("distinct_ratio"),
         (_x10k(stop_ratio) / F.lit(10000.0)).alias("stopword_ratio"),
-        quality_score_col(F.col(text_col)).alias("quality_score"),
+        quality_score_col(F.col("text")).alias("quality_score"),
     )
 
 
@@ -137,14 +137,14 @@ def predicted_lang_col() -> Column:
     return predicted
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Marker-word language heuristic.
 
     Picks the language with the most marker-token hits; ties and zero hits
     resolve to 'und' (deterministic; the real decision logic matters less
     than exact Spark/SQL agreement for the correctness gate).
     """
-    scores = language_score_cols(F.col(text_col))
+    scores = language_score_cols(F.col("text"))
     named = [score.alias(name) for name, score in scores.items()]
     scored = df.select("doc_id", F.col("lang").alias("actual_lang"), *named)
     predicted = predicted_lang_col().alias("predicted_lang")
@@ -156,14 +156,12 @@ def fingerprint_col(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.trim(F.lower(text)), " +", " "))
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over the whitespace-normalized lowercase text."""
-    return df.select("doc_id", fingerprint_col(F.col(text_col)).alias("fingerprint"))
+    return df.select("doc_id", fingerprint_col(F.col("text")).alias("fingerprint"))
 
 
-def tfidf_top_terms(
-    df: DataFrame, *, k: int = 5, text_col: str = "text"
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, *, k: int = 5) -> DataFrame:
     """Per-document top-``k`` terms by smoothed tf-idf.
 
     ``score = tf * (ln((N + 1) / (df + 1)) + 1)`` — the scikit-learn
@@ -185,7 +183,7 @@ def tfidf_top_terms(
     from pyspark.sql.window import Window
 
     words = df.select(
-        "doc_id", F.explode(tokens_col(F.col(text_col))).alias("term")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     )
     tf = words.groupBy("doc_id", "term").agg(
         F.count("*").cast("long").alias("tf")
@@ -217,9 +215,7 @@ def tfidf_top_terms(
     )
 
 
-def bpe_pair_counts(
-    df: DataFrame, *, min_count: int = 2, text_col: str = "text"
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, *, min_count: int = 2) -> DataFrame:
     """One distributed iteration of BPE vocabulary induction: count
     adjacent character pairs INSIDE whitespace tokens, corpus-wide. The
     pair-count table is the object every BPE trainer iterates on — at
@@ -234,7 +230,7 @@ def bpe_pair_counts(
     least ``min_count`` corpus occurrences.
     """
     toks = df.select(
-        F.explode(tokens_col(F.col(text_col))).alias("tok")
+        F.explode(tokens_col(F.col("text"))).alias("tok")
     ).where(F.length("tok") >= 2)
     pairs = toks.select(
         F.explode(
@@ -271,7 +267,7 @@ TOP_2GRAM_PCT = 20
 DUP_3GRAM_PCT = 18
 
 
-def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals per document.
 
     For n in (2, 3): total n-grams, the top n-gram's count, and the count
@@ -288,7 +284,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     def _per_n(n: int, tag: str) -> DataFrame:
         grams = df.select(
-            "doc_id", F.explode(ngrams_col(F.col(text_col), n)).alias("g")
+            "doc_id", F.explode(ngrams_col(F.col("text"), n)).alias("g")
         )
         counts = grams.groupBy("doc_id", "g").agg(F.count("*").alias("cnt"))
         return counts.groupBy("doc_id").agg(
@@ -337,9 +333,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def line_repetition_signals(
-    df: DataFrame, text_col: str = "text", delim: str = "\n"
-) -> DataFrame:
+def line_repetition_signals(df: DataFrame, delim: str = "\n") -> DataFrame:
     """Gopher-style LINE-level repetition: per document, the fraction of
     lines (and of line characters) belonging to a line value that occurs
     more than once within the document.
@@ -358,7 +352,7 @@ def line_repetition_signals(
     lines = df.select(
         "doc_id",
         F.posexplode(
-            F.split(F.col(text_col), re.escape(delim), -1)
+            F.split(F.col("text"), re.escape(delim), -1)
         ).alias("line_idx", "line"),
     )
     per_value = lines.groupBy("doc_id", F.md5("line").alias("h")).agg(
@@ -376,7 +370,7 @@ def line_repetition_signals(
     )
 
 
-def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_stats(df: DataFrame) -> DataFrame:
     """Per-language corpus rollup: documents, tokens, mean quality, and
     repetitive-document count — the summary table a curation run reports.
 
@@ -386,11 +380,11 @@ def corpus_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     count is EXACT in any engine — float ``avg()`` would depend on the
     partial-aggregation summation order and break oracle parity.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     # The repetition flag joins in from the explode+aggregate path: the
     # per-row twin is ~30× the CPU (see document_features), and this
     # whole operator is an aggregate anyway.
-    flags = repetition_signals(df, text_col=text_col).select("doc_id", "repetitive")
+    flags = repetition_signals(df).select("doc_id", "repetitive")
     per_doc = df.select(
         "doc_id",
         "lang",

@@ -257,7 +257,7 @@ def prepare_training_mix(
         "chunk_text",
         "n_chunk_tokens",
         split_col(F.col("doc_id")).alias("split"),
-        (_hex_bucket(F.col("doc_id")) % n_shards).alias("doc_shard"),
+        (_hex_bucket(F.col("doc_id"), 2) % n_shards).alias("doc_shard"),
     )
     return pack_sequences(
         ready,

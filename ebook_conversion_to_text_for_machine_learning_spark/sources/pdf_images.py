@@ -15,12 +15,10 @@ reference's full control flow (pdf_image_extractor.py:86-280):
 - ``ImageTooLargeError`` (full-page scan) and every other failure → ""
   (:212-219).
 
-The two Pillow call sites are the ONLY stubbed steps (this container has
-no Pillow): ``decode_stub=True`` base64-encodes the fully-prepared bytes
-(post filter-decode, post bit-expansion — everything up to the codec is
-real); ``decode_stub=False`` raises NotImplementedError exactly where
-``Image.frombytes`` / ``Image.open`` would run, keeping the production
-diff obvious.
+The two Pillow call sites (``Image.frombytes`` / ``Image.open``) are the
+ONLY stubbed steps (no Pillow): the stub base64-encodes the
+fully-prepared bytes (post filter-decode, post bit-expansion —
+everything up to the codec is real).
 
 At lake scale this runs pre-ingest (fixture generation resolving
 ``media_ref`` payloads), batched per file inside ``mapInArrow`` like
@@ -47,19 +45,12 @@ from ebook_conversion_to_text_for_machine_learning_spark.sources.pdf_text import
 )
 
 
-def _transcode_jpeg(jpeg_data: bytes, decode_stub: bool) -> str:
+def _transcode_jpeg(jpeg_data: bytes) -> str:
     """Reference ``_transcode_to_png`` (:150-166) — Pillow step stubbed."""
-    if not decode_stub:
-        raise NotImplementedError(
-            "JPEG→PNG transcode requires Pillow (Image.open/save), not "
-            "available in this container; run with decode_stub=True"
-        )
     return base64.b64encode(jpeg_data).decode("utf-8")
 
 
-def _image_from_binary(
-    data: bytes, width: int, height: int, mode: str, decode_stub: bool
-) -> str:
+def _image_from_binary(data: bytes, width: int, height: int, mode: str) -> str:
     """Reference ``_create_image_from_binary`` (:113-148) — Pillow stubbed.
 
     The reference returns "" when Pillow rejects the buffer (ValueError,
@@ -67,11 +58,6 @@ def _image_from_binary(
     with the exact frombytes size arithmetic so truncated streams fail
     the same way they would in production.
     """
-    if not decode_stub:
-        raise NotImplementedError(
-            "raster decode requires Pillow (Image.frombytes), not available "
-            "in this container; run with decode_stub=True"
-        )
     bytes_per_pixel = {"1": 1, "L": 1, "RGB": 3, "CMYK": 4}.get(mode, 3)
     if len(data) < width * height * bytes_per_pixel:
         return ""  # Image.frombytes raises ValueError → reference returns ""
@@ -102,7 +88,7 @@ def _find_next_image(pdf: _PdfFile, obj_num: int, attempt: int):
     return obj_num, 100
 
 
-def _get_image(pdf: _PdfFile, obj_num: int, attempt: int, decode_stub: bool) -> str:
+def _get_image(pdf: _PdfFile, obj_num: int, attempt: int) -> str:
     if attempt > 1:
         return ""
     try:
@@ -116,27 +102,23 @@ def _get_image(pdf: _PdfFile, obj_num: int, attempt: int, decode_stub: bool) -> 
         if isinstance(filt, list) and filt:
             filt = filt[0]
         if psliteral_to_str(filt) == "DCTDecode":
-            return _transcode_jpeg(_raw, decode_stub)
+            return _transcode_jpeg(_raw)
         width, height, mode, data = _parse_image_data(pdf, obj_num, body)
-        return _image_from_binary(data, width, height, mode, decode_stub)
+        return _image_from_binary(data, width, height, mode)
     except (ValueError, AttributeError, TypeError):
         return ""
     except ImageTooSmallError:
         new_num, next_attempt = _find_next_image(pdf, obj_num, attempt)
-        return _get_image(pdf, new_num, next_attempt, decode_stub)
+        return _get_image(pdf, new_num, next_attempt)
     except ImageTooLargeError:
         return ""
-    except NotImplementedError:
-        raise  # decode_stub=False must surface the missing codec
     except Exception:  # noqa: BLE001 — reference maps any failure to ""
         return ""
 
 
-def extract_images(
-    pdf_bytes: bytes, obj_nums: List[int], *, decode_stub: bool = True
-) -> List[str]:
+def extract_images(pdf_bytes: bytes, obj_nums: List[int]) -> List[str]:
     """Base64 images for the given object ids; failures drop out (reference
     ``extract_images`` filters falsy results, :104-112)."""
     pdf = _PdfFile(pdf_bytes)
-    images = [_get_image(pdf, num, 0, decode_stub) for num in obj_nums]
+    images = [_get_image(pdf, num, 0) for num in obj_nums]
     return [image for image in images if image]

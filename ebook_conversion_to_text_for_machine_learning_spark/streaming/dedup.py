@@ -34,18 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
-def streaming_exact_dedup(
-    stream: DataFrame,
-    *,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def streaming_exact_dedup(stream: DataFrame, *, watermark: str = "10 minutes") -> DataFrame:
     """First-arrival-wins dedup on content hash with bounded state."""
-    hashed = stream.withColumn("text_hash", F.md5(F.col(text_col))).withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
+    hashed = stream.withColumn("text_hash", F.md5(F.col("text"))).withColumn(
+        "ts", F.col("ts").cast("timestamp")
     )
-    return hashed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return hashed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["text_hash"]
     )
 
@@ -58,7 +52,6 @@ def stream_near_dedup(
     index_path: str,
     *,
     schema,
-    text_col: str = "text",
     max_files_per_trigger: int = 16,
     available_now: bool = False,
     compact_every: int | None = None,
@@ -101,8 +94,7 @@ def stream_near_dedup(
     def _process(batch_df, batch_id: int) -> None:
         session = batch_df.sparkSession
         annotated = ingest_batch_against_index(
-            session, batch_df, index_path, batch_id=int(batch_id) + 1,
-            text_col=text_col,
+            session, batch_df, index_path, batch_id=int(batch_id) + 1
         )
         annotated.write.mode("overwrite").parquet(
             f"{output_dir}/batch_id={batch_id}"

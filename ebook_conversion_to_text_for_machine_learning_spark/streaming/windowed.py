@@ -17,30 +17,26 @@ from pyspark.sql.streaming import StreamingQuery
 def windowed_event_counts(
     stream: DataFrame,
     *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
     watermark: str = "10 minutes",
     window: str = "5 minutes",
 ) -> DataFrame:
-    """Streaming tumbling-window counts with late-data tolerance.
-
-    ``value_col`` names the summed measure (parameterized like the other
-    columns — a stream without it would otherwise fail analysis)."""
+    """Streaming tumbling-window counts with late-data tolerance over an
+    ``events(ts, event_type, value)`` stream: events and summed
+    ``value`` per (window, event_type)."""
     # Watermarks require TIMESTAMP (session-TZ); parquet NTZ columns are
     # reinterpreted in the session TZ (pinned to UTC in session.py).
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), F.col(key_col))
+        stream.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
+            F.sum("value").alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
-            key_col,
+            "event_type",
             "n_events",
             "sum_value",
         )

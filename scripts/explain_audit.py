@@ -236,9 +236,7 @@ def main() -> None:
     add(
         "Frame sampling (JVM-side bounded explode)",
         M.sample_frames(
-            M.attach_payloads(
-                spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id", "text", "image"
-            )
+            M.attach_payloads(spark.read.parquet(f"{sf_dir}/documents.parquet"), "image")
         ),
         "Generate + binary substring/md5 inside codegen; no Python, no "
         "shuffle, explode factor capped at MAX_FRAMES.",

@@ -765,15 +765,12 @@ def test_media_stub_and_error_path(spark):
     )
 
     df = spark.createDataFrame([(1, "abc"), (2, "")], "doc_id long, text string")
-    payloads = attach_payloads(df, "doc_id", "text", "image")
+    payloads = attach_payloads(df, "image")
     rows = {r.media_id: r for r in extract_media_features(payloads).collect()}
     assert rows["1"].n_bytes == 3
     assert rows["1"].first_byte == ord("a")
     assert rows["1"].byte_sum_mod == ord("a") + ord("b") + ord("c")
     assert rows["2"].n_bytes == 0 and rows["2"].first_byte is None
-
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        extract_media_features(payloads, decode_stub=False).collect()
 
 
 def _emb_df(spark, rows):
@@ -1200,7 +1197,7 @@ def test_sample_frames_offsets_and_cap(spark):
         [(1, long_text), (2, "short"), (3, ""), (4, "é" * 40)],
         "doc_id long, text string",
     )
-    payloads = attach_payloads(df, "doc_id", "text", "image")
+    payloads = attach_payloads(df, "image")
     frames = sample_frames(payloads, frame_size=16, stride=64, max_frames=4)
     by_doc = {}
     for r in frames.collect():
@@ -1229,7 +1226,7 @@ def test_resize_media_stub_pads_and_truncates(spark):
     )
 
     df = spark.createDataFrame([(1, "abc"), (2, "z" * 100)], "doc_id long, text string")
-    payloads = attach_payloads(df, "doc_id", "text", "image")
+    payloads = attach_payloads(df, "image")
     def hex_md5(data):
         return hashlib.md5(data.hex().upper().encode()).hexdigest()
 
@@ -1237,9 +1234,6 @@ def test_resize_media_stub_pads_and_truncates(spark):
     assert rows["1"].resized_bytes == 16
     assert rows["1"].resized_md5 == hex_md5(b"abc".ljust(16, b"\x00"))
     assert rows["2"].resized_md5 == hex_md5(b"z" * 16)
-
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        resize_media_stub(payloads, decode_stub=False).collect()
 
 
 def test_ivf_assign_arrow_matches_expression_path(spark):
@@ -2593,3 +2587,38 @@ def test_ann_and_pq_index_append_matches_frozen_rebuild(spark, tmp_path):
     assert got == want
     with pytest.raises(ValueError):
         append_to_pq_index(batch, pqp, batch_id=0)
+
+
+def test_operators_read_the_tables_own_column_names():
+    """Operators read the fixed ``documents``/``embeddings``/``events``
+    columns by name: no library function takes a ``str`` column-name
+    parameter (``*_col``) except the three callers set to other values —
+    ``block_col``, ``count_col``, ``shard_col`` — and none takes a
+    ``decode_stub`` switch. ``Column``-typed parameters are expressions,
+    not names, and stay. JVM-free (AST only)."""
+    import ast
+    from pathlib import Path
+
+    import ebook_conversion_to_text_for_machine_learning_spark as engine
+
+    def is_str(annotation, default):
+        if annotation is None:
+            return isinstance(default, ast.Constant) and isinstance(default.value, str)
+        return any(isinstance(t, ast.Name) and t.id == "str" for t in ast.walk(annotation))
+
+    pkg = Path(engine.__file__).parent
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            defaults = [None] * (len(pos) - len(a.defaults)) + list(a.defaults)
+            for arg, d in [*zip(pos, defaults), *zip(a.kwonlyargs, a.kw_defaults)]:
+                named_col = arg.arg.endswith("_col") and is_str(arg.annotation, d)
+                if (named_col and arg.arg not in {"block_col", "count_col", "shard_col"}) or (
+                    arg.arg == "decode_stub"
+                ):
+                    offenders.append((str(p.relative_to(pkg)), fn.name, arg.arg))
+    assert offenders == []

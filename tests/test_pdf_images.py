@@ -5,8 +5,6 @@ Pillow call sites stubbed deterministically."""
 import base64
 import zlib
 
-import pytest
-
 from ebook_conversion_to_text_for_machine_learning_spark.sources.pdf_images import (
     extract_images,
 )
@@ -86,13 +84,3 @@ def test_non_stream_object_and_unknown_id_yield_nothing():
     pdf, obj = _one_image_pdf({"width": 8, "height": 8, "data": b"\x00" * 64})
     assert extract_images(pdf, [1]) == []      # catalog: not a stream
     assert extract_images(pdf, [9999]) == []   # missing object
-
-
-def test_decode_stub_false_raises_at_codec_call_site():
-    pixels = bytes(64)
-    pdf, obj = _one_image_pdf(
-        {"width": 8, "height": 8, "color_space": "DeviceGray",
-         "filter": "FlateDecode", "data": pixels}
-    )
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        extract_images(pdf, [obj], decode_stub=False)

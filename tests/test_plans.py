@@ -140,7 +140,7 @@ def test_sample_frames_stays_jvm_side(spark):
     from ebook_conversion_to_text_for_machine_learning_spark.operators import media as M
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = plan_of(M.sample_frames(M.attach_payloads(docs, "doc_id", "text", "image")))
+    plan = plan_of(M.sample_frames(M.attach_payloads(docs, "image")))
     assert "Generate" in plan  # bounded explode
     assert "Python" not in plan and "Exchange" not in plan
 
@@ -452,8 +452,9 @@ def test_document_features_projection_plus_narrow_flag_join(spark):
     """Every signal except the repetition flag is one codegen'd
     projection; the flag joins in from the explode+aggregate path (per-row
     HOF aggregates interpret at ~30× the CPU — see the operator
-    docstring). Exchanges are limited to the four narrow gram/doc
-    aggregations; the join reuses the doc_id partitioning; no Python."""
+    docstring). Exactly four hash-partitioned Exchanges (the narrow
+    gram/doc aggregations) and no Python; how the flag join itself is
+    planned (broadcast or shuffled) is left to the planner."""
     plan = plan_of(entrymod.queries()["document_features"](spark, SF_DIR))
     assert "BatchEvalPython" not in plan
     assert plan.count("Arguments: hashpartitioning") == 4
